@@ -23,4 +23,16 @@ public map-projection / Hilbert-curve / computational-geometry formulas,
 and the observable behavior of the reference repo.
 """
 
+import sys as _sys
+
 __version__ = "0.1.0"
+
+# Inside a PySpark Python worker (the worker sets this flag before it
+# unpickles any UDF of this package), stop every task re-reading every
+# cached zip archive; see _worker.py.
+_files = _sys.modules.get("pyspark.core.files")
+if _files is not None and _files.SparkFiles._is_running_on_worker:
+    from . import _worker
+
+    _worker.install()
+del _files

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 GEO5J: dict = {}
@@ -174,19 +174,25 @@ def _q_modularity_score(spark, sf_dir):
         F.count(F.lit(1)).alias("n_communities"),
         F.sum(F.col("dsum") * F.col("dsum")).alias("sum_deg2"),
     )
+    return _modularity_row(sums, within, two_m)
+
+
+def _modularity_row(sums: DataFrame, within: int, two_m: int) -> DataFrame:
+    """The final modularity row over ``sums(n_communities, sum_deg2)``.
+    Python int literals infer int32, so the operands of every product
+    are cast to long first (the oracle emits BIGINT): casting the
+    product instead wraps it for two_m >= 46341."""
+    w, m = F.lit(within).cast("long"), F.lit(two_m).cast("long")
+    q_num = w * m - F.col("sum_deg2")
     return sums.select(
-        F.lit(two_m).cast("long").alias("two_m"),
-        F.lit(within).cast("long").alias("within_edges"),
+        m.alias("two_m"),
+        w.alias("within_edges"),
         "n_communities",
         "sum_deg2",
-        (F.lit(within) * F.lit(two_m) - F.col("sum_deg2")).alias("q_num"),
-        # long cast: python int literals infer int32 while the oracle
-        # emits CAST(... AS BIGINT) — dtype-strict hash parity
-        (F.lit(two_m) * F.lit(two_m)).cast("long").alias("q_den"),
+        q_num.alias("q_num"),
+        (m * m).alias("q_den"),
         F.floor(
-            F.lit(1000000.0)
-            * (F.lit(within) * F.lit(two_m) - F.col("sum_deg2")).cast("double")
-            / (F.lit(two_m) * F.lit(two_m)).cast("double")
+            F.lit(1000000.0) * q_num.cast("double") / (m * m).cast("double")
         ).cast("long").alias("q_micro"),
     )
 

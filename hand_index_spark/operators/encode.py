@@ -28,6 +28,7 @@ from pyspark.sql.types import LongType
 from ..geo import cells as h3lite
 from ..geo import s2lite
 from ..tables import tilegrid as tg
+from .assign import _BATCH_CHUNK
 
 DEFAULT_RESOLUTIONS = (5, 6, 7, 8, 9)
 PARTITION_RES = 7  # the engine's h3_index analogue (load.py:314 knob)
@@ -73,8 +74,8 @@ def s2_cell_udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
     # cache blocking (operators/assign._BATCH_CHUNK rationale): keep
     # the fold's temporaries L2-resident instead of streaming the whole
     # Arrow batch through every vector pass; bit-identical per row
-    for a in range(0, len(la), 32768):
-        b = min(a + 32768, len(la))
+    for a in range(0, len(la), _BATCH_CHUNK):
+        b = min(a + _BATCH_CHUNK, len(la))
         out[a:b] = s2lite.encode(la[a:b], lo[a:b], S2_LEVEL)
     return pd.Series(out)
 

@@ -20,7 +20,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 
@@ -112,17 +112,24 @@ def refine_overlap(
     return df.mapInPandas(run, schema=out_schema)
 
 
-def threshold_filter(df: DataFrame, threshold_pct: float = 10.0) -> DataFrame:
+def threshold_mask(threshold_pct: float = 10.0) -> Column:
     """The reference's selection mask (query_geojson.py:213-219)."""
-    return df.filter(
+    return (
         F.col("contains_query")
         | F.col("within_query")
         | (F.col("overlap_pct") >= F.lit(threshold_pct))
     )
 
 
-def overlap_stats(df: DataFrame) -> dict:
-    """The reference's stats dict (query_geojson.py:206-211,236-246)."""
+def threshold_filter(df: DataFrame, threshold_pct: float = 10.0) -> DataFrame:
+    """Rows passing :func:`threshold_mask`."""
+    return df.filter(threshold_mask(threshold_pct))
+
+
+def overlap_stats(df: DataFrame, threshold_pct: float = 10.0) -> dict:
+    """The reference's stats dict (query_geojson.py:206-211,236-246),
+    with ``final`` — the rows :func:`threshold_filter` keeps — from the
+    same aggregate."""
     row = df.agg(
         F.count(F.lit(1)).alias("initial"),
         F.sum(F.col("contains_query").cast("long")).alias("contains_count"),
@@ -134,5 +141,6 @@ def overlap_stats(df: DataFrame) -> dict:
                 & (F.col("overlap_pct") > 0)
             ).cast("long")
         ).alias("overlap_only_count"),
+        F.sum(threshold_mask(threshold_pct).cast("long")).alias("final"),
     ).collect()[0]
     return {k: (0 if row[k] is None else int(row[k])) for k in row.asDict()}

@@ -15,8 +15,8 @@ on its h3 partition column, so partition pruning never fires
 3. exact phase: operators.overlap.refine_overlap (vectorized
    intersects + overlap% + contains/within) on the surviving
    candidates only;
-4. threshold mask + left joins to the satellite tables + left-semi
-   keep-set filter, then a per-catchment partitioned write (S8).
+4. threshold mask + left joins to the satellite tables, both reading
+   the one refine of step 3, then a per-catchment partitioned write (S8).
 
 Candidates never collect to the driver (the reference materializes all
 candidates into pandas at query_geojson.py:118 — the thing this engine
@@ -113,14 +113,14 @@ def roi_query(
     hits = refined.filter(F.col("intersects"))
     kept = threshold_filter(hits, overlap_threshold_pct)
     if collect_stats:
-        stats = overlap_stats(hits)
-        stats["final"] = kept.count()
+        stats = overlap_stats(hits, overlap_threshold_pct)
         stats["removed"] = stats["initial"] - stats["final"]
     else:
         stats = {}
 
-    # 4. attribute assembly: 3-way LEFT join + left-semi keep filter
-    keep_ids = kept.select("catchment_id")
+    # 4. attribute assembly: 3-way LEFT join onto kept. Left joins never
+    # drop a kept row; attrs must not join kept again, since each
+    # reference to kept plans the scan and the refine once more.
     attrs = kept.select("catchment_id", "branch_path", "overlap_pct")
     for sat, col in (
         (hydrotables, "csv_path"),
@@ -132,7 +132,7 @@ def roi_query(
             attrs = attrs.join(
                 sat.withColumnRenamed(col, uniq), "catchment_id", "left"
             )
-    attrs = attrs.join(keep_ids, "catchment_id", "left_semi")
+    attrs = attrs.filter(F.col("catchment_id").isNotNull())
     return kept, attrs, stats
 
 

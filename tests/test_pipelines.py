@@ -86,6 +86,45 @@ def _roi(spark, index_root, kind, threshold=10.0):
     )
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_roi_query_plan_pins(spark, index_root):
+    """attrs reads the one refine of kept (a single Python stage), and
+    kept's scan still prunes on the partition column."""
+    kept, attrs, _ = _roi(spark, index_root, "within")
+    assert _executed_plan(attrs).count("MapInPandas") == 1
+    assert "PartitionFilters: [h3_index" in _executed_plan(kept)
+
+
+@pytest.mark.parametrize("kind", ["within", "partial"])
+def test_roi_attrs_and_stats_match_keep_set(spark, index_root, kind):
+    """attrs equals the left-semi keep-set construction it replaced, and
+    the one-pass stats agree with kept."""
+    root, _ = index_root
+    kept, attrs, stats = _roi(spark, index_root, kind)
+    n_kept = kept.count()
+    assert stats["final"] == n_kept > 0
+    assert stats["removed"] == stats["initial"] - stats["final"]
+
+    old = kept.select("catchment_id", "branch_path", "overlap_pct")
+    sats = [
+        (IceliteTable(root, "hydrotables").read(spark), "csv_path", "csv_path"),
+        (IceliteTable(root, "rem_rasters").read(spark), "raster_path", "raster_path_rem"),
+        (IceliteTable(root, "catchment_rasters").read(spark), "raster_path", "raster_path_cat"),
+    ]
+    for sat, col, uniq in sats:
+        old = old.join(sat.withColumnRenamed(col, uniq), "catchment_id", "left")
+    old = old.join(kept.select("catchment_id"), "catchment_id", "left_semi")
+    assert attrs.columns == old.columns
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    assert rows(attrs) == rows(old)
+
+
 def test_roi_contains(spark, index_root):
     """Tiny ROI inside one tile: exactly that catchment, contains flag."""
     kept, attrs, stats = _roi(spark, index_root, "contains")

@@ -125,6 +125,29 @@ def test_modularity_python_replay(spark, con):
     assert row.q_micro == math.floor(1e6 * (within * two_m - sum_deg2) / (two_m * two_m))
 
 
+def test_modularity_row_no_int32_overflow(spark):
+    """At two_m = 46341 the int32 product two_m^2 wraps; the long
+    operands must give the exact integers and the oracle's dtypes."""
+    from hand_index_spark.entry_queries_r5j import _modularity_row
+
+    two_m, within, sum_deg2 = 46341, 46000, 123456789
+    sums = spark.createDataFrame(
+        [(7, sum_deg2)], "n_communities long, sum_deg2 long"
+    )
+    out = _modularity_row(sums, within, two_m)
+    assert dict(out.dtypes) == {
+        "two_m": "bigint", "within_edges": "bigint", "n_communities": "bigint",
+        "sum_deg2": "bigint", "q_num": "bigint", "q_den": "bigint",
+        "q_micro": "bigint",
+    }
+    row = out.collect()[0]
+    assert row.q_den == two_m * two_m == 2147488281
+    assert row.q_num == within * two_m - sum_deg2
+    assert row.q_micro == math.floor(
+        1e6 * float(within * two_m - sum_deg2) / float(two_m * two_m)
+    )
+
+
 # ------------------------------------------------------------ waypoints
 
 

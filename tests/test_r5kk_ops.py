@@ -96,9 +96,11 @@ print("FIXED" if small == big5 else "STILL_BUGGY")
     proc = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, timeout=300
     )
-    if proc.returncode != 0:
-        # native crash inside the buggy lambda path — certainly not fixed
+    if proc.returncode < 0:
+        # killed by a signal: a native crash inside the buggy lambda
+        # path — certainly not fixed
         return
+    assert proc.returncode == 0, proc.stderr
     if "FIXED" in proc.stdout:
         pytest.fail(
             "DuckDB list_reduce chunk bug appears FIXED — the "
