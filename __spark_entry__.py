@@ -8,10 +8,11 @@ arithmetic, tables/tilegrid.py), the trig-bearing transforms (via
 discretization-safe comparisons), iterative graph clustering (via a
 recursive-CTE closure), stateful streaming (via batch parity), the
 no-broadcast join paths, temporal joins, sketches, and the icelite
-maintenance surface. Registry batches: entry_queries.py,
-entry_queries_ext.py, entry_queries_r2.py, entry_queries_r4.py,
-entry_queries_r5.py, entry_queries_r5b.py through entry_queries_r5zz.py;
-see COVERAGE.md for the operator -> query map.
+maintenance surface. Every query is one ``register(...)`` call in a
+registry module (hand_index_spark/registry.py); entry_queries.MODULES
+lists those modules, entry_queries.py and entry_queries_ext.py through
+entry_queries_r5ccc.py, in driver order. See COVERAGE.md for the
+operator -> query map.
 
 Session requirements: NONE. Every query runs green under a bare
 ``SparkSession.builder.getOrCreate()`` — no Arrow coercion, default

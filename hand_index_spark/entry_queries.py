@@ -16,6 +16,8 @@ Determinism rules used throughout:
 
 from __future__ import annotations
 
+from importlib import import_module
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -24,29 +26,14 @@ from .geo import cells as h3lite
 from .operators import assign as A
 from .operators import encode as E
 from .pipelines.assign_tiles import assignments, web_pages_from_documents
+from .registry import GEO, REL, TEXT, entries, read_table as _t, register
 
 # --------------------------------------------------------------------------
 # helpers
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def _pts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return E.with_geotag(web_pages_from_documents(spark, sf_dir))
-
-
-GEO_QUERIES: dict = {}
-RELATIONAL: dict = {}
-TEXTOPS: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(registry: dict, name: str, fn, oracle: str | None) -> None:
-    registry[name] = fn
-    if oracle is not None:
-        ORACLES[name] = oracle
 
 
 # --------------------------------------------------------------------------
@@ -58,7 +45,7 @@ def _q_tile_assign(spark, sf_dir):
     return assignments(spark, sf_dir)
 
 
-_register(GEO_QUERIES, "tile_assign", _q_tile_assign, oracles.tile_assign_sql())
+register(GEO, "tile_assign", _q_tile_assign, oracles.tile_assign_sql())
 
 
 def _q_tile_histogram(spark, sf_dir):
@@ -70,7 +57,7 @@ def _q_tile_histogram(spark, sf_dir):
     )
 
 
-_register(GEO_QUERIES, "tile_histogram", _q_tile_histogram, oracles.tile_histogram_sql())
+register(GEO, "tile_histogram", _q_tile_histogram, oracles.tile_histogram_sql())
 
 
 def _q_cells_encode(spark, sf_dir):
@@ -80,7 +67,7 @@ def _q_cells_encode(spark, sf_dir):
     return pts.select("url", "h3_r5", "h3_r6", "h3_r7", "h3_r8", "h3_r9")
 
 
-_register(GEO_QUERIES, "cells_encode", _q_cells_encode, oracles.cells_encode_sql())
+register(GEO, "cells_encode", _q_cells_encode, oracles.cells_encode_sql())
 
 
 def _q_cell_parent(spark, sf_dir):
@@ -94,7 +81,7 @@ def _q_cell_parent(spark, sf_dir):
     return pts.select("url", "h3_r9", "h3_r5")
 
 
-_register(GEO_QUERIES, "cell_parent", _q_cell_parent, oracles.cell_parent_sql())
+register(GEO, "cell_parent", _q_cell_parent, oracles.cell_parent_sql())
 
 
 def _q_text_invariant(spark, sf_dir):
@@ -108,7 +95,7 @@ def _q_text_invariant(spark, sf_dir):
     )
 
 
-_register(GEO_QUERIES, "text_invariant", _q_text_invariant, oracles.text_invariant_sql())
+register(GEO, "text_invariant", _q_text_invariant, oracles.text_invariant_sql())
 
 
 def _q_knn_fallback(spark, sf_dir):
@@ -118,8 +105,8 @@ def _q_knn_fallback(spark, sf_dir):
     )
 
 
-_register(
-    GEO_QUERIES,
+register(
+    GEO,
     "knn_fallback",
     _q_knn_fallback,
     f"""
@@ -140,8 +127,8 @@ def _q_bbox_filter(spark, sf_dir):
     ).select("url", "lat", "lon")
 
 
-_register(
-    GEO_QUERIES,
+register(
+    GEO,
     "bbox_filter",
     _q_bbox_filter,
     f"""
@@ -162,8 +149,8 @@ def _q_s2_cells(spark, sf_dir):
 
 from .geo import s2lite as _s2  # noqa: E402
 
-_register(
-    GEO_QUERIES,
+register(
+    GEO,
     "s2_cells",
     _q_s2_cells,
     _s2.encode_sql_query(oracles.pts_cte(), keys=("url",), level=E.S2_LEVEL),
@@ -193,8 +180,8 @@ def _q_pricing_summary(spark, sf_dir):
     )
 
 
-_register(
-    RELATIONAL,
+register(
+    REL,
     "pricing_summary",
     _q_pricing_summary,
     """
@@ -225,8 +212,8 @@ def _q_join_left_3way(spark, sf_dir):
     )
 
 
-_register(
-    RELATIONAL,
+register(
+    REL,
     "join_left_3way",
     _q_join_left_3way,
     """
@@ -250,8 +237,8 @@ def _q_window_dedup(spark, sf_dir):
     )
 
 
-_register(
-    RELATIONAL,
+register(
+    REL,
     "window_dedup",
     _q_window_dedup,
     """
@@ -275,8 +262,8 @@ def _q_semi_filter(spark, sf_dir):
     )
 
 
-_register(
-    RELATIONAL,
+register(
+    REL,
     "semi_filter",
     _q_semi_filter,
     """
@@ -298,8 +285,8 @@ def _q_anti_orphans(spark, sf_dir):
     )
 
 
-_register(
-    RELATIONAL,
+register(
+    REL,
     "anti_orphans",
     _q_anti_orphans,
     """
@@ -319,8 +306,8 @@ def _q_topk_orders(spark, sf_dir):
     )
 
 
-_register(
-    RELATIONAL,
+register(
+    REL,
     "topk_orders",
     _q_topk_orders,
     """
@@ -343,8 +330,8 @@ def _q_topn_per_group(spark, sf_dir):
     )
 
 
-_register(
-    RELATIONAL,
+register(
+    REL,
     "topn_per_group",
     _q_topn_per_group,
     """
@@ -365,8 +352,8 @@ def _q_distinct_pairs(spark, sf_dir):
     return li.select("l_returnflag", "l_linestatus").distinct()
 
 
-_register(
-    RELATIONAL,
+register(
+    REL,
     "distinct_pairs",
     _q_distinct_pairs,
     "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
@@ -381,8 +368,8 @@ def _q_union_all(spark, sf_dir):
     return small.unionByName(big)
 
 
-_register(
-    RELATIONAL,
+register(
+    REL,
     "union_all",
     _q_union_all,
     """
@@ -426,8 +413,8 @@ def _q_regexp_path_join(spark, sf_dir):
     )
 
 
-_register(
-    RELATIONAL,
+register(
+    REL,
     "regexp_path_join",
     _q_regexp_path_join,
     """
@@ -459,8 +446,8 @@ def _q_upsert_dedup(spark, sf_dir):
     )
 
 
-_register(
-    RELATIONAL,
+register(
+    REL,
     "upsert_dedup",
     _q_upsert_dedup,
     """
@@ -482,8 +469,8 @@ def _q_threshold_mask(spark, sf_dir):
     ).select("l_orderkey", "l_linenumber", "l_quantity")
 
 
-_register(
-    RELATIONAL,
+register(
+    REL,
     "threshold_mask",
     _q_threshold_mask,
     """
@@ -503,8 +490,8 @@ def _q_bool_sum_stats(spark, sf_dir):
     )
 
 
-_register(
-    RELATIONAL,
+register(
+    REL,
     "bool_sum_stats",
     _q_bool_sum_stats,
     """
@@ -532,8 +519,8 @@ def _q_events_windowed(spark, sf_dir):
     )
 
 
-_register(
-    RELATIONAL,
+register(
+    REL,
     "events_windowed",
     _q_events_windowed,
     """
@@ -557,8 +544,8 @@ def _q_token_count(spark, sf_dir):
     )
 
 
-_register(
-    TEXTOPS,
+register(
+    TEXT,
     "token_count",
     _q_token_count,
     "SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens FROM documents",
@@ -578,8 +565,8 @@ def _q_exact_dedup(spark, sf_dir):
     )
 
 
-_register(
-    TEXTOPS,
+register(
+    TEXT,
     "exact_dedup",
     _q_exact_dedup,
     """
@@ -613,8 +600,8 @@ def _q_quality_score(spark, sf_dir):
     )
 
 
-_register(
-    TEXTOPS,
+register(
+    TEXT,
     "quality_score",
     _q_quality_score,
     f"""
@@ -655,8 +642,8 @@ def _q_langid(spark, sf_dir):
 
 _en_list = ", ".join(f"'{w}'" for w in _EN)
 _es_list = ", ".join(f"'{w}'" for w in _ES)
-_register(
-    TEXTOPS,
+register(
+    TEXT,
     "langid",
     _q_langid,
     f"""
@@ -676,486 +663,40 @@ _register(
 
 
 # --------------------------------------------------------------------------
-# batch 2: near-dup / similarity / multimodal / sessionization registry
-
-from .entry_queries_ext import GEO2, ORACLES2, TEXT2  # noqa: E402
-
-GEO_QUERIES.update(GEO2)
-TEXTOPS.update(TEXT2)
-ORACLES.update(ORACLES2)
-
-# batch 3 (round 2): oracles for the formerly pytest-only operators
-from .entry_queries_r2 import GEO3, ORACLES3, TEXT3  # noqa: E402
-
-GEO_QUERIES.update(GEO3)
-TEXTOPS.update(TEXT3)
-ORACLES.update(ORACLES3)
-
-# batch 4 (round 4): large-dim join assignment + persisted ANN pipeline
-from .entry_queries_r4 import GEO4, ORACLES4, TEXT4  # noqa: E402
-
-GEO_QUERIES.update(GEO4)
-TEXTOPS.update(TEXT4)
-ORACLES.update(ORACLES4)
-
-# batch 5 (round 5): Douglas-Peucker driver surface + additions
-from .entry_queries_r5 import GEO5, ORACLES5, TEXT5  # noqa: E402
-
-GEO_QUERIES.update(GEO5)
-TEXTOPS.update(TEXT5)
-ORACLES.update(ORACLES5)
-
-# batch 5b (round 5): distance-band join, segment overlay, convex hull,
-# BPE encode, time-series gap fill
-from .entry_queries_r5b import GEO5B, ORACLES5B, TEXT5B  # noqa: E402
-
-GEO_QUERIES.update(GEO5B)
-TEXTOPS.update(TEXT5B)
-ORACLES.update(ORACLES5B)
-
-# batch 5c (round 5): geodesic band join, quadkeys, triangle counts,
-# weighted SSSP, IDW interpolation, Moran's I, sitemap extraction
-from .entry_queries_r5c import GEO5C, ORACLES5C, TEXT5C  # noqa: E402
-
-GEO_QUERIES.update(GEO5C)
-TEXTOPS.update(TEXT5C)
-ORACLES.update(ORACLES5C)
-
-# batch 5d (round 5): terrain rasters (hillshade, overview pyramid,
-# marching-squares contours) + KN LM scoring, weighted corpus-mix
-# sampling, RAG chunking
-from .entry_queries_r5d import GEO5D, ORACLES5D, TEXT5D  # noqa: E402
-
-GEO_QUERIES.update(GEO5D)
-TEXTOPS.update(TEXT5D)
-ORACLES.update(ORACLES5D)
-
-
-from .entry_queries_r5e import GEO5E, ORACLES5E, TEXT5E  # noqa: E402
-
-GEO_QUERIES.update(GEO5E)
-TEXTOPS.update(TEXT5E)
-ORACLES.update(ORACLES5E)
-
-
-from .entry_queries_r5f import GEO5F, ORACLES5F, TEXT5F  # noqa: E402
-
-GEO_QUERIES.update(GEO5F)
-TEXTOPS.update(TEXT5F)
-ORACLES.update(ORACLES5F)
-
-
-# batch 5g (round 5): HITS link analysis, CUSUM change detection,
-# blocked fuzzy entity resolution, stream-static enrichment join
-from .entry_queries_r5g import GEO5G, ORACLES5G, TEXT5G  # noqa: E402
-
-GEO_QUERIES.update(GEO5G)
-TEXTOPS.update(TEXT5G)
-ORACLES.update(ORACLES5G)
-
-
-# batch 5h (round 5): Sutherland-Hodgman tile clipping, Minkowski
-# buffer, DSIR importance weights, label-propagation communities
-from .entry_queries_r5h import GEO5H, ORACLES5H, TEXT5H  # noqa: E402
-
-GEO_QUERIES.update(GEO5H)
-TEXTOPS.update(TEXT5H)
-ORACLES.update(ORACLES5H)
-
-
-# batch 5i (round 5): concat-and-chunk sequence packing (two-phase
-# distributed prefix sum), lagged autocorrelation, fan triangulation
-from .entry_queries_r5i import GEO5I, ORACLES5I, TEXT5I  # noqa: E402
-
-GEO_QUERIES.update(GEO5I)
-TEXTOPS.update(TEXT5I)
-ORACLES.update(ORACLES5I)
-
-
-# batch 5j (round 5): per-lang token budgeting, Newman modularity of
-# the LPA partition, great-circle slerp waypoints
-from .entry_queries_r5j import GEO5J, ORACLES5J, TEXT5J  # noqa: E402
-
-GEO_QUERIES.update(GEO5J)
-TEXTOPS.update(TEXT5J)
-ORACLES.update(ORACLES5J)
-
-
-# batch 5k (round 5): inverted-index postings build, per-lang Merkle
-# corpus root, golden-record survivorship
-from .entry_queries_r5k import GEO5K, ORACLES5K, TEXT5K  # noqa: E402
-
-GEO_QUERIES.update(GEO5K)
-TEXTOPS.update(TEXT5K)
-ORACLES.update(ORACLES5K)
-
-
-# batch 5l (round 5): LTTB downsampling, storage-encoding advisor
-# (two-phase run detection), last-touch attribution
-from .entry_queries_r5l import GEO5L, ORACLES5L, TEXT5L  # noqa: E402
-
-GEO_QUERIES.update(GEO5L)
-TEXTOPS.update(TEXT5L)
-ORACLES.update(ORACLES5L)
-
-
-# batch 5m (round 5): bitmap-index set algebra, JSONL roundtrip,
-# Pareto skyline
-from .entry_queries_r5m import GEO5M, ORACLES5M, TEXT5M  # noqa: E402
-
-GEO_QUERIES.update(GEO5M)
-TEXTOPS.update(TEXT5M)
-ORACLES.update(ORACLES5M)
-
-
-# batch 5n (round 5): k-anonymity audit, A/B two-proportion z-test,
-# Heaps-law vocabulary growth
-from .entry_queries_r5n import GEO5N, ORACLES5N, TEXT5N  # noqa: E402
-
-GEO_QUERIES.update(GEO5N)
-TEXTOPS.update(TEXT5N)
-ORACLES.update(ORACLES5N)
-
-
-# batch 5o (round 5): event-bigram sequence mining, exact equi-width
-# value histogram
-from .entry_queries_r5o import GEO5O, ORACLES5O, TEXT5O  # noqa: E402
-
-GEO_QUERIES.update(GEO5O)
-TEXTOPS.update(TEXT5O)
-ORACLES.update(ORACLES5O)
-
-
-# batch 5p (round 5): model evaluation — langid confusion matrix,
-# bbox IoU report, calibration reliability bins
-from .entry_queries_r5p import GEO5P, ORACLES5P, TEXT5P  # noqa: E402
-
-GEO_QUERIES.update(GEO5P)
-TEXTOPS.update(TEXT5P)
-ORACLES.update(ORACLES5P)
-
-
-# batch 5q (round 5): declarative data-quality checks, column entropy
-# profiling
-from .entry_queries_r5q import GEO5Q, ORACLES5Q, TEXT5Q  # noqa: E402
-
-GEO_QUERIES.update(GEO5Q)
-TEXTOPS.update(TEXT5Q)
-ORACLES.update(ORACLES5Q)
-
-
-# batch 5r (round 5): market-basket lift, concentration metrics
-from .entry_queries_r5r import GEO5R, ORACLES5R, TEXT5R  # noqa: E402
-
-GEO_QUERIES.update(GEO5R)
-TEXTOPS.update(TEXT5R)
-ORACLES.update(ORACLES5R)
-
-
-# batch 5s (round 5): mergeable fixed-bin quantile sketch with
-# carried error, time-to-convert survival metrics
-from .entry_queries_r5s import GEO5S, ORACLES5S, TEXT5S  # noqa: E402
-
-GEO_QUERIES.update(GEO5S)
-TEXTOPS.update(TEXT5S)
-ORACLES.update(ORACLES5S)
-
-
-# batch 5t (round 5): Flesch readability, BPE tokenizer fertility
-from .entry_queries_r5t import GEO5T, ORACLES5T, TEXT5T  # noqa: E402
-
-GEO_QUERIES.update(GEO5T)
-TEXTOPS.update(TEXT5T)
-ORACLES.update(ORACLES5T)
-
-
-# batch 5u (round 5): per-group OLS linear trend, Benford first-digit
-# audit
-from .entry_queries_r5u import GEO5U, ORACLES5U, TEXT5U  # noqa: E402
-
-GEO_QUERIES.update(GEO5U)
-TEXTOPS.update(TEXT5U)
-ORACLES.update(ORACLES5U)
-
-
-# batch 5v (round 5): gaps-and-islands longest streak, chi-square
-# independence grid
-from .entry_queries_r5v import GEO5V, ORACLES5V, TEXT5V  # noqa: E402
-
-GEO_QUERIES.update(GEO5V)
-TEXTOPS.update(TEXT5V)
-ORACLES.update(ORACLES5V)
-
-
-# batch 5w (round 5): Kendall tau rank agreement, Holt double
-# exponential smoothing forecast
-from .entry_queries_r5w import GEO5W, ORACLES5W, TEXT5W  # noqa: E402
-
-GEO_QUERIES.update(GEO5W)
-TEXTOPS.update(TEXT5W)
-ORACLES.update(ORACLES5W)
-
-
-# batch 5x (round 5): DTW series similarity (nested-fold DP), z-score
-# feature scaling
-from .entry_queries_r5x import GEO5X, ORACLES5X, TEXT5X  # noqa: E402
-
-GEO_QUERIES.update(GEO5X)
-TEXTOPS.update(TEXT5X)
-ORACLES.update(ORACLES5X)
-
-
-# batch 5y (round 5): areal interpolation onto the tile grid,
-# discrete Frechet trajectory distance
-from .entry_queries_r5y import GEO5Y, ORACLES5Y, TEXT5Y  # noqa: E402
-
-GEO_QUERIES.update(GEO5Y)
-TEXTOPS.update(TEXT5Y)
-ORACLES.update(ORACLES5Y)
-
-
-# batch 5z (round 5): DAG topological layering, PSI distribution drift
-from .entry_queries_r5z import GEO5Z, ORACLES5Z, TEXT5Z  # noqa: E402
-
-GEO_QUERIES.update(GEO5Z)
-TEXTOPS.update(TEXT5Z)
-ORACLES.update(ORACLES5Z)
-
-
-# batch 5aa (round 5): reciprocal-rank fusion, exact midrank ROC AUC
-from .entry_queries_r5aa import GEO5AA, ORACLES5AA, TEXT5AA  # noqa: E402
-
-GEO_QUERIES.update(GEO5AA)
-TEXTOPS.update(TEXT5AA)
-ORACLES.update(ORACLES5AA)
-
-
-# batch 5bb (round 5): URL path-prefix rollup, Theil-Sen robust slope
-from .entry_queries_r5bb import GEO5BB, ORACLES5BB, TEXT5BB  # noqa: E402
-
-GEO_QUERIES.update(GEO5BB)
-TEXTOPS.update(TEXT5BB)
-ORACLES.update(ORACLES5BB)
-
-
-# batch 5cc (round 5): NDCG@10 graded ranking eval, seasonal-naive
-# MASE backtest
-from .entry_queries_r5cc import GEO5CC, ORACLES5CC, TEXT5CC  # noqa: E402
-
-GEO_QUERIES.update(GEO5CC)
-TEXTOPS.update(TEXT5CC)
-ORACLES.update(ORACLES5CC)
-
-
-# batch 5dd (round 5): icelite partition-spec evolution, l-diversity
-# privacy audit
-from .entry_queries_r5dd import GEO5DD, ORACLES5DD, TEXT5DD  # noqa: E402
-
-GEO_QUERIES.update(GEO5DD)
-TEXTOPS.update(TEXT5DD)
-ORACLES.update(ORACLES5DD)
-
-
-# batch 5ee (round 5): int8 scalar quantization, exact weighted median
-from .entry_queries_r5ee import GEO5EE, ORACLES5EE, TEXT5EE  # noqa: E402
-
-GEO_QUERIES.update(GEO5EE)
-TEXTOPS.update(TEXT5EE)
-ORACLES.update(ORACLES5EE)
-
-
-# batch 5ff (round 5): point-set diameter, time-weighted average
-from .entry_queries_r5ff import GEO5FF, ORACLES5FF, TEXT5FF  # noqa: E402
-
-GEO_QUERIES.update(GEO5FF)
-TEXTOPS.update(TEXT5FF)
-ORACLES.update(ORACLES5FF)
-
-
-# batch 5gg (round 5): geohash neighbor cells, Markov transition
-# matrix
-from .entry_queries_r5gg import GEO5GG, ORACLES5GG, TEXT5GG  # noqa: E402
-
-GEO_QUERIES.update(GEO5GG)
-TEXTOPS.update(TEXT5GG)
-ORACLES.update(ORACLES5GG)
-
-
-# batch 5hh (round 5): Spearman rank correlation, Benjamini-Hochberg
-# FDR selection
-from .entry_queries_r5hh import GEO5HH, ORACLES5HH, TEXT5HH  # noqa: E402
-
-GEO_QUERIES.update(GEO5HH)
-TEXTOPS.update(TEXT5HH)
-ORACLES.update(ORACLES5HH)
-
-
-# batch 5ii (round 5): 1-D Earth Mover's distance, mutual information
-from .entry_queries_r5ii import GEO5II, ORACLES5II, TEXT5II  # noqa: E402
-
-GEO_QUERIES.update(GEO5II)
-TEXTOPS.update(TEXT5II)
-ORACLES.update(ORACLES5II)
-
-
-# batch 5jj (round 5): bearing rose, clamped running balance
-from .entry_queries_r5jj import GEO5JJ, ORACLES5JJ, TEXT5JJ  # noqa: E402
-
-GEO_QUERIES.update(GEO5JJ)
-TEXTOPS.update(TEXT5JJ)
-ORACLES.update(ORACLES5JJ)
-
-
-# batch 5kk (round 5): rendezvous hashing, zonemap overlap audit
-from .entry_queries_r5kk import GEO5KK, ORACLES5KK, TEXT5KK  # noqa: E402
-
-GEO_QUERIES.update(GEO5KK)
-TEXTOPS.update(TEXT5KK)
-ORACLES.update(ORACLES5KK)
-
-
-# batch 5ll (round 5): cross-track deviation, Cohen's kappa
-from .entry_queries_r5ll import GEO5LL, ORACLES5LL, TEXT5LL  # noqa: E402
-
-GEO_QUERIES.update(GEO5LL)
-TEXTOPS.update(TEXT5LL)
-ORACLES.update(ORACLES5LL)
-
-
-# batch 5mm (round 5): degree power-law fit, group-mode imputation
-from .entry_queries_r5mm import GEO5MM, ORACLES5MM, TEXT5MM  # noqa: E402
-
-GEO_QUERIES.update(GEO5MM)
-TEXTOPS.update(TEXT5MM)
-ORACLES.update(ORACLES5MM)
-
-
-# batch 5nn (round 5): sweep-line max concurrency, SPRT barrier
-# crossing
-from .entry_queries_r5nn import GEO5NN, ORACLES5NN, TEXT5NN  # noqa: E402
-
-GEO_QUERIES.update(GEO5NN)
-TEXTOPS.update(TEXT5NN)
-ORACLES.update(ORACLES5NN)
-
-
-# batch 5oo (round 5): KMV distinct sketch, audience overlap algebra
-from .entry_queries_r5oo import GEO5OO, ORACLES5OO, TEXT5OO  # noqa: E402
-
-GEO_QUERIES.update(GEO5OO)
-TEXTOPS.update(TEXT5OO)
-ORACLES.update(ORACLES5OO)
-
-
-# batch 5pp (round 5): spatial coverage gaps, mix-shift decomposition
-from .entry_queries_r5pp import GEO5PP, ORACLES5PP, TEXT5PP  # noqa: E402
-
-GEO_QUERIES.update(GEO5PP)
-TEXTOPS.update(TEXT5PP)
-ORACLES.update(ORACLES5PP)
-
-
-# batch 5qq (round 5): hexagonal binning, log2 latency histogram
-from .entry_queries_r5qq import GEO5QQ, ORACLES5QQ, TEXT5QQ  # noqa: E402
-
-GEO_QUERIES.update(GEO5QQ)
-TEXTOPS.update(TEXT5QQ)
-ORACLES.update(ORACLES5QQ)
-
-
-# batch 5rr (round 5): KWIC concordance, feature hashing
-from .entry_queries_r5rr import GEO5RR, ORACLES5RR, TEXT5RR  # noqa: E402
-
-GEO_QUERIES.update(GEO5RR)
-TEXTOPS.update(TEXT5RR)
-ORACLES.update(ORACLES5RR)
-
-
-# batch 5ss (round 5): GDPR forget-user via icelite DELETE, star
-# revenue rollup
-from .entry_queries_r5ss import GEO5SS, ORACLES5SS, TEXT5SS  # noqa: E402
-
-GEO_QUERIES.update(GEO5SS)
-TEXTOPS.update(TEXT5SS)
-ORACLES.update(ORACLES5SS)
-
-
-# batch 5tt (round 5): business-day arithmetic, dow x hour heatmap
-from .entry_queries_r5tt import GEO5TT, ORACLES5TT, TEXT5TT  # noqa: E402
-
-GEO_QUERIES.update(GEO5TT)
-TEXTOPS.update(TEXT5TT)
-ORACLES.update(ORACLES5TT)
-
-
-# batch 5uu (round 5): X-bar control chart, winsorized mean
-from .entry_queries_r5uu import GEO5UU, ORACLES5UU, TEXT5UU  # noqa: E402
-
-GEO_QUERIES.update(GEO5UU)
-TEXTOPS.update(TEXT5UU)
-ORACLES.update(ORACLES5UU)
-
-
-# batch 5vv (round 5): CIDR longest-prefix match, ABC Pareto classes
-from .entry_queries_r5vv import GEO5VV, ORACLES5VV, TEXT5VV  # noqa: E402
-
-GEO_QUERIES.update(GEO5VV)
-TEXTOPS.update(TEXT5VV)
-ORACLES.update(ORACLES5VV)
-
-
-# batch 5ww (round 5): spatiotemporal co-presence, quantile transform
-from .entry_queries_r5ww import GEO5WW, ORACLES5WW, TEXT5WW  # noqa: E402
-
-GEO_QUERIES.update(GEO5WW)
-TEXTOPS.update(TEXT5WW)
-ORACLES.update(ORACLES5WW)
-
-
-# batch 5xx (round 5): route-corridor membership, new-vs-returning
-from .entry_queries_r5xx import GEO5XX, ORACLES5XX, TEXT5XX  # noqa: E402
-
-GEO_QUERIES.update(GEO5XX)
-TEXTOPS.update(TEXT5XX)
-ORACLES.update(ORACLES5XX)
-
-
-# batch 5yy (round 5): OHLC candles with VWAP, top movers
-from .entry_queries_r5yy import GEO5YY, ORACLES5YY, TEXT5YY  # noqa: E402
-
-GEO_QUERIES.update(GEO5YY)
-TEXTOPS.update(TEXT5YY)
-ORACLES.update(ORACLES5YY)
-
-
-# batch 5zz (round 5, session closer): assignment-path parity,
-# method share
-from .entry_queries_r5zz import GEO5ZZ, ORACLES5ZZ, TEXT5ZZ  # noqa: E402
-
-GEO_QUERIES.update(GEO5ZZ)
-TEXTOPS.update(TEXT5ZZ)
-ORACLES.update(ORACLES5ZZ)
-
-
-# batch 5aaa (round 5): Kaplan-Meier survival, RFM segmentation
-from .entry_queries_r5aaa import GEO5AAA, ORACLES5AAA, TEXT5AAA  # noqa: E402
-
-GEO_QUERIES.update(GEO5AAA)
-TEXTOPS.update(TEXT5AAA)
-ORACLES.update(ORACLES5AAA)
-
-
-# batch 5bbb (round 5): item-item collaborative filtering, FIFO lots
-from .entry_queries_r5bbb import GEO5BBB, ORACLES5BBB, TEXT5BBB  # noqa: E402
-
-GEO_QUERIES.update(GEO5BBB)
-TEXTOPS.update(TEXT5BBB)
-ORACLES.update(ORACLES5BBB)
-
-
-# batch 5ccc (round 5): H3-style cover compaction, link prediction
-from .entry_queries_r5ccc import GEO5CCC, ORACLES5CCC, TEXT5CCC  # noqa: E402
-
-GEO_QUERIES.update(GEO5CCC)
-TEXTOPS.update(TEXT5CCC)
-ORACLES.update(ORACLES5CCC)
+# Every registry module, in driver order: this module's own queries, then
+# each batch. A new query is one register(...) call in its module; a new
+# module is one more name here. The family dicts fill in (module position,
+# registration order), never in import order.
+
+MODULES = (
+    "entry_queries", "entry_queries_ext", "entry_queries_r2", "entry_queries_r4",
+    "entry_queries_r5", "entry_queries_r5b", "entry_queries_r5c", "entry_queries_r5d",
+    "entry_queries_r5e", "entry_queries_r5f", "entry_queries_r5g", "entry_queries_r5h",
+    "entry_queries_r5i", "entry_queries_r5j", "entry_queries_r5k", "entry_queries_r5l",
+    "entry_queries_r5m", "entry_queries_r5n", "entry_queries_r5o", "entry_queries_r5p",
+    "entry_queries_r5q", "entry_queries_r5r", "entry_queries_r5s", "entry_queries_r5t",
+    "entry_queries_r5u", "entry_queries_r5v", "entry_queries_r5w", "entry_queries_r5x",
+    "entry_queries_r5y", "entry_queries_r5z", "entry_queries_r5aa",
+    "entry_queries_r5bb", "entry_queries_r5cc", "entry_queries_r5dd",
+    "entry_queries_r5ee", "entry_queries_r5ff", "entry_queries_r5gg",
+    "entry_queries_r5hh", "entry_queries_r5ii", "entry_queries_r5jj",
+    "entry_queries_r5kk", "entry_queries_r5ll", "entry_queries_r5mm",
+    "entry_queries_r5nn", "entry_queries_r5oo", "entry_queries_r5pp",
+    "entry_queries_r5qq", "entry_queries_r5rr", "entry_queries_r5ss",
+    "entry_queries_r5tt", "entry_queries_r5uu", "entry_queries_r5vv",
+    "entry_queries_r5ww", "entry_queries_r5xx", "entry_queries_r5yy",
+    "entry_queries_r5zz", "entry_queries_r5aaa", "entry_queries_r5bbb",
+    "entry_queries_r5ccc",
+)
+
+GEO_QUERIES: dict = {}
+RELATIONAL: dict = {}
+TEXTOPS: dict = {}
+ORACLES: dict[str, str] = {}
+
+_BY_FAMILY = {GEO: GEO_QUERIES, REL: RELATIONAL, TEXT: TEXTOPS}
+for _module in MODULES:
+    _qualified = import_module(f".{_module}", __package__).__name__
+    for _family, _name, _fn, _oracle in entries(_qualified):
+        _BY_FAMILY[_family][_name] = _fn
+        ORACLES[_name] = _oracle

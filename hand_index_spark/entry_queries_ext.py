@@ -12,22 +12,10 @@ LSH/banding mechanics are identical either way.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO2: dict = {}
-TEXT2: dict = {}
-ORACLES2: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES2[name] = oracle
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -71,8 +59,8 @@ _mh_sql_terms = ",\n           ".join(
     f"min(({a} * {_HASH_SQL.format(t='tok')} + {b}) % {_MINHASH_P}) AS mh{i}"
     for i, (a, b) in enumerate(_PERMS)
 )
-_register(
-    TEXT2,
+register(
+    TEXT,
     "minhash_signatures",
     _q_minhash_lsh,
     f"""
@@ -105,8 +93,8 @@ def _q_lsh_dup_pairs(spark, sf_dir):
     return pairs.distinct()
 
 
-_register(
-    TEXT2,
+register(
+    TEXT,
     "lsh_dup_pairs",
     _q_lsh_dup_pairs,
     f"""
@@ -159,8 +147,8 @@ _sim_sql_sums = ",\n           ".join(
 _sim_sql_combine = " + ".join(
     f"(CASE WHEN s{b} >= 0 THEN {1 << b} ELSE 0 END)" for b in range(16)
 )
-_register(
-    TEXT2,
+register(
+    TEXT,
     "simhash16",
     _q_simhash16,
     f"""
@@ -237,16 +225,13 @@ LSH_CAND_CTE_SQL = f"""
         SELECT doc_id, list_distinct(string_split(text, ' ')) AS ws FROM documents
     )"""
 
-_register(
-    TEXT2,
-    "jaccard_pairs",
-    _q_jaccard_pairs,
-    f"""{LSH_CAND_CTE_SQL}
+JACCARD_PAIRS_SQL = f"""{LSH_CAND_CTE_SQL}
     SELECT id_a, id_b, {_JAC_EXPR} AS jac
     FROM cand JOIN s a ON a.doc_id = cand.id_a JOIN s b ON b.doc_id = cand.id_b
     WHERE {_JAC_EXPR} >= 0.2
-    """,
-)
+    """
+
+register(TEXT, "jaccard_pairs", _q_jaccard_pairs, JACCARD_PAIRS_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -263,8 +248,8 @@ def _q_doc_fingerprint(spark, sf_dir):
     return d.select("doc_id", fp.alias("fingerprint"))
 
 
-_register(
-    TEXT2,
+register(
+    TEXT,
     "doc_fingerprint",
     _q_doc_fingerprint,
     f"""
@@ -310,8 +295,8 @@ def _q_embedding_topk(spark, sf_dir):
     )
 
 
-_register(
-    TEXT2,
+register(
+    TEXT,
     "embedding_topk",
     _q_embedding_topk,
     """
@@ -357,8 +342,8 @@ def _q_binary_meta(spark, sf_dir):
     )
 
 
-_register(
-    TEXT2,
+register(
+    TEXT,
     "binary_meta",
     _q_binary_meta,
     """
@@ -410,7 +395,7 @@ SESSIONIZE_ORACLE_SQL = """
     FROM g GROUP BY user_id
     """
 
-_register(TEXT2, "sessionize", _q_sessionize, SESSIONIZE_ORACLE_SQL)
+register(TEXT, "sessionize", _q_sessionize, SESSIONIZE_ORACLE_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -441,8 +426,8 @@ def _q_drop_columns(spark, sf_dir):
 def _register_geo2():
     from .oracles import pts_cte
 
-    _register(
-        GEO2,
+    register(
+        GEO,
         "total_bounds",
         _q_total_bounds,
         f"""
@@ -452,8 +437,8 @@ def _register_geo2():
         FROM pts
         """,
     )
-    _register(
-        TEXT2,
+    register(
+        TEXT,
         "drop_columns",
         _q_drop_columns,
         """
@@ -477,8 +462,8 @@ def _q_proj_select(spark, sf_dir):
     return o.select("o_orderkey", "o_custkey", "o_orderstatus")
 
 
-_register(
-    TEXT2,
+register(
+    TEXT,
     "proj_select",
     _q_proj_select,
     "SELECT o_orderkey, o_custkey, o_orderstatus FROM orders",
@@ -490,8 +475,8 @@ def _q_limit0_schema(spark, sf_dir):
     return _t(spark, sf_dir, "nation").limit(0).select("n_nationkey", "n_name")
 
 
-_register(
-    TEXT2,
+register(
+    TEXT,
     "limit0_schema",
     _q_limit0_schema,
     "SELECT n_nationkey, n_name FROM nation LIMIT 0",
@@ -531,8 +516,8 @@ def _q_raster_corners(spark, sf_dir):
     )
 
 
-_register(
-    TEXT2,
+register(
+    TEXT,
     "raster_corners",
     _q_raster_corners,
     """
@@ -587,8 +572,8 @@ def _q_multimodal_meta(spark, sf_dir):
 
 _HTML_LEN_SQL = "octet_length(encode(concat('<html><body>', text, '</body></html>')))"
 
-_register(
-    TEXT2,
+register(
+    TEXT,
     "multimodal_meta",
     _q_multimodal_meta,
     f"""
@@ -637,7 +622,7 @@ def _decode_oracle_sql() -> str:
     """
 
 
-_register(TEXT2, "multimodal_decode", _q_multimodal_decode, _decode_oracle_sql())
+register(TEXT, "multimodal_decode", _q_multimodal_decode, _decode_oracle_sql())
 
 
 # --------------------------------------------------------------------------
@@ -688,4 +673,4 @@ def _ann_oracle_sql() -> str:
     """
 
 
-_register(TEXT2, "ann_lsh_topk", _q_ann_lsh_topk, _ann_oracle_sql())
+register(TEXT, "ann_lsh_topk", _q_ann_lsh_topk, _ann_oracle_sql())

@@ -21,13 +21,12 @@ Cross-engine float rules used here (see also tables/tilegrid.py):
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 import uuid
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BinaryType, BooleanType, DoubleType
@@ -37,35 +36,7 @@ from .geo import cells as h3lite
 from .geo import polygon as P
 from .geo import wkb
 from .tables import tilegrid as tg
-
-GEO3: dict = {}
-TEXT3: dict = {}
-ORACLES3: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES3[name] = oracle
-
-
-def _fresh_dir(prefix: str) -> str:
-    """A fresh scratch dir for side-effecting driver queries, garbage-
-    collecting earlier same-prefix dirs first (each invocation must see
-    a clean icelite root for deterministic snapshot counts, but repeated
-    driver/verify loops must not accumulate unbounded /tmp copies)."""
-    import shutil
-
-    base = os.path.join(tempfile.gettempdir(), "hand_index_spark_q")
-    os.makedirs(base, exist_ok=True)
-    for d in os.listdir(base):
-        if d.startswith(prefix):
-            shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, fresh_dir as _fresh_dir, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -114,8 +85,8 @@ def _q_wkb_roundtrip(spark, sf_dir):
     return df.mapInPandas(run, schema=_RT_SCHEMA)
 
 
-_register(
-    GEO3,
+register(
+    GEO,
     "wkb_roundtrip",
     _q_wkb_roundtrip,
     f"""
@@ -167,7 +138,7 @@ def _albers_forward_sql() -> str:
     """
 
 
-_register(GEO3, "albers_forward", _q_albers_forward, _albers_forward_sql())
+register(GEO, "albers_forward", _q_albers_forward, _albers_forward_sql())
 
 
 # --------------------------------------------------------------------------
@@ -256,7 +227,7 @@ def _union_catchments_sql() -> str:
     """
 
 
-_register(GEO3, "union_catchments", _q_union_catchments, _union_catchments_sql())
+register(GEO, "union_catchments", _q_union_catchments, _union_catchments_sql())
 
 
 # --------------------------------------------------------------------------
@@ -336,7 +307,7 @@ def _overlap_refine_sql() -> str:
     """
 
 
-_register(GEO3, "overlap_refine", _q_overlap_refine, _overlap_refine_sql())
+register(GEO, "overlap_refine", _q_overlap_refine, _overlap_refine_sql())
 
 
 # --------------------------------------------------------------------------
@@ -383,7 +354,7 @@ def _roi_pip_sql() -> str:
     """
 
 
-_register(GEO3, "roi_pip_filter", _q_roi_pip_filter, _roi_pip_sql())
+register(GEO, "roi_pip_filter", _q_roi_pip_filter, _roi_pip_sql())
 
 
 # --------------------------------------------------------------------------
@@ -431,7 +402,7 @@ def _lineage_counts_sql() -> str:
     """
 
 
-_register(TEXT3, "lineage_counts", _q_lineage_counts, _lineage_counts_sql())
+register(TEXT, "lineage_counts", _q_lineage_counts, _lineage_counts_sql())
 
 
 def _q_atomic_publish(spark, sf_dir):
@@ -453,8 +424,8 @@ def _q_atomic_publish(spark, sf_dir):
     ).withColumn("n_snapshots", F.lit(len(t.snapshots())).cast("long"))
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "atomic_publish",
     _q_atomic_publish,
     """
@@ -498,8 +469,8 @@ def _q_stream_windowed(spark, sf_dir):
     return spark.table(name)
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "stream_windowed",
     _q_stream_windowed,
     """
@@ -543,7 +514,7 @@ def _partitioned_roundtrip_sql() -> str:
     """
 
 
-_register(GEO3, "partitioned_roundtrip", _q_partitioned_roundtrip, _partitioned_roundtrip_sql())
+register(GEO, "partitioned_roundtrip", _q_partitioned_roundtrip, _partitioned_roundtrip_sql())
 
 
 # --------------------------------------------------------------------------
@@ -560,15 +531,14 @@ def _q_dedup_clusters(spark, sf_dir):
 
 
 def _dedup_clusters_sql() -> str:
-    from .entry_queries_ext import ORACLES2
+    from .entry_queries_ext import JACCARD_PAIRS_SQL
 
-    pairs_sql = ORACLES2["jaccard_pairs"]
     # edges exist only among exact-dedup representatives; every doc then
     # inherits its sha256 representative's cluster label (rm join), so
     # byte-identical duplicates land in the rep's cluster — mirrors
     # operators/dedup.py dedup_clusters (ADVICE r2 medium)
     return f"""
-    WITH RECURSIVE p AS ({pairs_sql}),
+    WITH RECURSIVE p AS ({JACCARD_PAIRS_SQL}),
     edges AS (
         SELECT id_a AS a, id_b AS b FROM p
         UNION
@@ -598,7 +568,7 @@ def _dedup_clusters_sql() -> str:
     """
 
 
-_register(TEXT3, "dedup_clusters", _q_dedup_clusters, _dedup_clusters_sql())
+register(TEXT, "dedup_clusters", _q_dedup_clusters, _dedup_clusters_sql())
 
 
 def _q_dedup_keep(spark, sf_dir):
@@ -626,7 +596,7 @@ def _dedup_keep_sql() -> str:
     """
 
 
-_register(TEXT3, "dedup_keep", _q_dedup_keep, _dedup_keep_sql())
+register(TEXT, "dedup_keep", _q_dedup_keep, _dedup_keep_sql())
 
 
 # --------------------------------------------------------------------------
@@ -644,8 +614,8 @@ def _q_quantiles(spark, sf_dir):
     )
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "quantiles",
     _q_quantiles,
     """
@@ -671,8 +641,8 @@ def _q_ntile_buckets(spark, sf_dir):
     )
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "ntile_buckets",
     _q_ntile_buckets,
     """
@@ -712,7 +682,7 @@ def _url_parse_sql() -> str:
     """
 
 
-_register(TEXT3, "url_parse", _q_url_parse, _url_parse_sql())
+register(TEXT, "url_parse", _q_url_parse, _url_parse_sql())
 
 
 # --------------------------------------------------------------------------
@@ -730,8 +700,8 @@ def _q_intersect_keys(spark, sf_dir):
     return o.intersect(c)
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "intersect_keys",
     _q_intersect_keys,
     """
@@ -748,8 +718,8 @@ def _q_except_keys(spark, sf_dir):
     return c.subtract(o)  # set EXCEPT (dedups), matching SQL EXCEPT
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "except_keys",
     _q_except_keys,
     """
@@ -771,8 +741,8 @@ def _q_edit_distance(spark, sf_dir):
     )
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "edit_distance",
     _q_edit_distance,
     """
@@ -808,8 +778,8 @@ def _q_path_filter(spark, sf_dir):
     )
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "path_filter",
     _q_path_filter,
     """
@@ -846,8 +816,8 @@ def _q_token_count_bpe(spark, sf_dir):
     )
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "token_count_bpe",
     _q_token_count_bpe,
     f"""
@@ -892,7 +862,7 @@ def _resize_oracle_sql() -> str:
     """
 
 
-_register(TEXT3, "multimodal_resize", _q_multimodal_resize, _resize_oracle_sql())
+register(TEXT, "multimodal_resize", _q_multimodal_resize, _resize_oracle_sql())
 
 
 def _q_multimodal_frames(spark, sf_dir):
@@ -902,8 +872,8 @@ def _q_multimodal_frames(spark, sf_dir):
     return sample_frames(d, n_frames=4, fake=True)
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "multimodal_frames",
     _q_multimodal_frames,
     f"""
@@ -963,7 +933,7 @@ def _cosine_dup_sql() -> str:
     """
 
 
-_register(TEXT3, "cosine_dup_pairs", _q_cosine_dup_pairs, _cosine_dup_sql())
+register(TEXT, "cosine_dup_pairs", _q_cosine_dup_pairs, _cosine_dup_sql())
 
 
 # --------------------------------------------------------------------------
@@ -1015,7 +985,7 @@ def _sessionize_oracle() -> str:
     return SESSIONIZE_ORACLE_SQL
 
 
-_register(TEXT3, "stream_sessionize", _q_stream_sessionize, _sessionize_oracle())
+register(TEXT, "stream_sessionize", _q_stream_sessionize, _sessionize_oracle())
 
 
 # --------------------------------------------------------------------------
@@ -1045,8 +1015,8 @@ def _q_ann_ivf_topk(spark, sf_dir):
 
 from .operators.ann import ivf_oracle_sql as _ivf_oracle_sql  # noqa: E402
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "ann_ivf_topk",
     _q_ann_ivf_topk,
     _ivf_oracle_sql(
@@ -1078,8 +1048,8 @@ def _q_rolling_avg(spark, sf_dir):
     )
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "rolling_avg",
     _q_rolling_avg,
     """
@@ -1100,8 +1070,8 @@ def _q_rollup_counts(spark, sf_dir):
     )
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "rollup_counts",
     _q_rollup_counts,
     """
@@ -1138,7 +1108,7 @@ def _salted_histogram_sql() -> str:
     """
 
 
-_register(GEO3, "salted_histogram", _q_salted_histogram, _salted_histogram_sql())
+register(GEO, "salted_histogram", _q_salted_histogram, _salted_histogram_sql())
 
 
 # --------------------------------------------------------------------------
@@ -1206,8 +1176,8 @@ def _q_stream_late_drop(spark, sf_dir):
     )
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "stream_late_drop",
     _q_stream_late_drop,
     f"""
@@ -1244,8 +1214,8 @@ def _q_cube_counts(spark, sf_dir):
     )
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "cube_counts",
     _q_cube_counts,
     """
@@ -1282,8 +1252,8 @@ _pivot_cols = ",\n           ".join(
     f"CAST(count(*) FILTER (WHERE event_type = '{t}') AS BIGINT) AS n_{t}"
     for t in _EVENT_TYPES
 )
-_register(
-    TEXT3,
+register(
+    TEXT,
     "pivot_user_events",
     _q_pivot_user_events,
     f"""
@@ -1350,7 +1320,7 @@ def _stream_icelite_sql() -> str:
     """
 
 
-_register(TEXT3, "stream_icelite_ingest", _q_stream_icelite_ingest, _stream_icelite_sql())
+register(TEXT, "stream_icelite_ingest", _q_stream_icelite_ingest, _stream_icelite_sql())
 
 
 # --------------------------------------------------------------------------
@@ -1409,8 +1379,8 @@ def _q_png_decode_stats(spark, sf_dir):
     return out.select("doc_id", "width", "height", "mean_intensity")
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "png_decode_stats",
     _q_png_decode_stats,
     """
@@ -1441,8 +1411,8 @@ def _q_png_resize_stats(spark, sf_dir):
     return resize_image(_png_payloads(d), binary_col="payload", factor=2, fake=False)
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "png_resize_stats",
     _q_png_resize_stats,
     """
@@ -1481,8 +1451,8 @@ def _q_png_frames_stats(spark, sf_dir):
     )
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "png_frames_stats",
     _q_png_frames_stats,
     """
@@ -1551,8 +1521,8 @@ def _q_wav_decode_stats(spark, sf_dir):
     )
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "wav_decode_stats",
     _q_wav_decode_stats,
     f"""
@@ -1608,8 +1578,8 @@ def _q_jpeg_decode_stats(spark, sf_dir):
     return out.select("doc_id", "width", "height", "mean_intensity")
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "jpeg_decode_stats",
     _q_jpeg_decode_stats,
     """
@@ -1667,8 +1637,8 @@ def _q_datetime_functions(spark, sf_dir):
     )
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "datetime_functions",
     _q_datetime_functions,
     """
@@ -1722,8 +1692,8 @@ def _q_json_extract(spark, sf_dir):
     )
 
 
-_register(
-    TEXT3,
+register(
+    TEXT,
     "json_extract",
     _q_json_extract,
     """

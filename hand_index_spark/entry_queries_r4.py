@@ -3,7 +3,7 @@ persisted-ANN pipeline surface (VERDICT r3 items 5 and 7).
 
 Same contract as every other batch: each query is (a) an idiomatic
 Spark program and (b) a DuckDB oracle with identical column names and
-arithmetic, registered via the shared _register helper into GEO4/TEXT4.
+arithmetic, registered through registry.register.
 """
 
 from __future__ import annotations
@@ -14,16 +14,7 @@ from pyspark.sql import functions as F
 from . import oracles
 from .operators import assign as A
 from .operators import encode as E
-
-GEO4: dict = {}
-TEXT4: dict = {}
-ORACLES4: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES4[name] = oracle
+from .registry import GEO, TEXT, fresh_dir as _fresh_dir, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -47,7 +38,7 @@ def _q_tile_assign_joined(spark, sf_dir):
     return assigned.select("url", "tile_id", "method", "dist2", "cell_id")
 
 
-_register(GEO4, "tile_assign_joined", _q_tile_assign_joined, oracles.tile_assign_sql())
+register(GEO, "tile_assign_joined", _q_tile_assign_joined, oracles.tile_assign_sql())
 
 
 # --------------------------------------------------------------------------
@@ -63,8 +54,6 @@ def _q_ann_ivf_indexed(spark, sf_dir):
     """IVF top-k served from the persisted index: the corpus is scanned
     once at build, queries read only the materialized tables."""
     from pyspark.sql import functions as F
-
-    from .entry_queries_r2 import _fresh_dir
     from .pipelines.ann_index import build_ann_index, ivf_topk_indexed
 
     root = _fresh_dir("annidx_")
@@ -80,8 +69,8 @@ def _q_ann_ivf_indexed(spark, sf_dir):
 
 from .operators.ann import ivf_oracle_sql as _ivf_oracle_sql  # noqa: E402
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "ann_ivf_indexed",
     _q_ann_ivf_indexed,
     _ivf_oracle_sql(
@@ -97,10 +86,6 @@ _register(
 # ops (no UDF). The oracles are the brute-force inequality forms; the
 # engine runs the one-shuffle union-timeline / bucketed-equi-join
 # shapes and must agree exactly.
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _q_asof_join(spark, sf_dir):
@@ -126,8 +111,8 @@ def _q_asof_join(spark, sf_dir):
     )
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "asof_join_latest_order",
     _q_asof_join,
     """
@@ -158,7 +143,6 @@ _register(
 
 
 def _q_schema_evolution(spark, sf_dir):
-    from .entry_queries_r2 import _fresh_dir
     from .tables.icelite import IceliteTable
 
     root = _fresh_dir("schevo_")
@@ -181,8 +165,8 @@ def _q_schema_evolution(spark, sf_dir):
     )
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "schema_evolution",
     _q_schema_evolution,
     """
@@ -205,8 +189,6 @@ _register(
 def _q_stream_dedup(spark, sf_dir):
     import os
     import uuid
-
-    from .entry_queries_r2 import _fresh_dir
 
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
@@ -234,8 +216,8 @@ def _q_stream_dedup(spark, sf_dir):
     return spark.table(name)
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "stream_dedup",
     _q_stream_dedup,
     """
@@ -293,8 +275,8 @@ def _q_lm_score(spark, sf_dir):
     )
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "lm_score",
     _q_lm_score,
     """
@@ -361,8 +343,8 @@ def _q_lang_centroids(spark, sf_dir):
     )
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "lang_centroids",
     _q_lang_centroids,
     f"""
@@ -429,8 +411,8 @@ def _q_decontam_exact(spark, sf_dir):
     )
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "decontam_exact",
     _q_decontam_exact,
     """
@@ -464,8 +446,8 @@ def _q_decontam_ngram(spark, sf_dir):
     )
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "decontam_ngram",
     _q_decontam_ngram,
     """
@@ -561,8 +543,8 @@ def _q_dem_slope_stats(spark, sf_dir):
     )
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "dem_slope_stats",
     _q_dem_slope_stats,
     """
@@ -635,8 +617,8 @@ def _q_funnel_conversion(spark, sf_dir):
     )
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "funnel_conversion",
     _q_funnel_conversion,
     """
@@ -770,7 +752,7 @@ def _bm25_sql() -> str:
     """
 
 
-_register(TEXT4, "bm25_search", _q_bm25_search, _bm25_sql())
+register(TEXT, "bm25_search", _q_bm25_search, _bm25_sql())
 
 
 # --------------------------------------------------------------------------
@@ -790,8 +772,8 @@ def _q_stratified_sample(spark, sf_dir):
     )
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "stratified_sample",
     _q_stratified_sample,
     """
@@ -835,8 +817,8 @@ def _q_sql_text_surface(spark, sf_dir):
     )
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "sql_text_surface",
     _q_sql_text_surface,
     """
@@ -908,8 +890,8 @@ def _q_spatial_join_generic(spark, sf_dir):
     return out.select("url", "tile_id")
 
 
-_register(
-    GEO4,
+register(
+    GEO,
     "spatial_join_generic",
     _q_spatial_join_generic,
     f"""
@@ -936,7 +918,7 @@ def _q_hll_distinct(spark, sf_dir):
 
 from .operators.sketch import hll_estimate_sql as _hll_sql  # noqa: E402
 
-_register(TEXT4, "hll_distinct", _q_hll_distinct, _hll_sql("documents", "doc_id"))
+register(TEXT, "hll_distinct", _q_hll_distinct, _hll_sql("documents", "doc_id"))
 
 
 # --------------------------------------------------------------------------
@@ -947,7 +929,6 @@ _register(TEXT4, "hll_distinct", _q_hll_distinct, _hll_sql("documents", "doc_id"
 
 
 def _q_icelite_merge(spark, sf_dir):
-    from .entry_queries_r2 import _fresh_dir
     from .tables.icelite import IceliteTable
 
     root = _fresh_dir("merge_")
@@ -965,8 +946,8 @@ def _q_icelite_merge(spark, sf_dir):
     )
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "icelite_merge",
     _q_icelite_merge,
     """
@@ -986,7 +967,6 @@ _register(
 
 
 def _q_icelite_compact(spark, sf_dir):
-    from .entry_queries_r2 import _fresh_dir
     from .tables.icelite import IceliteTable
 
     root = _fresh_dir("compact_")
@@ -1013,8 +993,8 @@ def _q_icelite_compact(spark, sf_dir):
     )
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "icelite_compact",
     _q_icelite_compact,
     """
@@ -1040,8 +1020,6 @@ _register(
 def _q_stream_stream_join(spark, sf_dir):
     import os
     import uuid
-
-    from .entry_queries_r2 import _fresh_dir
 
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
@@ -1090,8 +1068,8 @@ def _q_stream_stream_join(spark, sf_dir):
     return spark.table(name)
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "stream_stream_join",
     _q_stream_stream_join,
     """
@@ -1126,8 +1104,8 @@ def _q_html_extract_text(spark, sf_dir):
     )
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "html_extract_text",
     _q_html_extract_text,
     """
@@ -1175,8 +1153,8 @@ def _q_range_join(spark, sf_dir):
     )
 
 
-_register(
-    TEXT4,
+register(
+    TEXT,
     "range_join_followers",
     _q_range_join,
     f"""

@@ -2,26 +2,14 @@
 
 Same contract as every other batch: each query is (a) an idiomatic
 Spark program and (b) a DuckDB oracle with identical column names and
-arithmetic, registered via the shared _register helper into GEO5/TEXT5.
+arithmetic, registered through registry.register.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-GEO5: dict = {}
-TEXT5: dict = {}
-ORACLES5: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, fresh_dir as _fresh_dir, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -103,8 +91,8 @@ def _q_simplify_ring(spark, sf_dir):
     )
 
 
-_register(
-    GEO5,
+register(
+    GEO,
     "simplify_ring",
     _q_simplify_ring,
     f"""
@@ -177,8 +165,8 @@ def _q_union_overlap(spark, sf_dir):
     )
 
 
-_register(
-    GEO5,
+register(
+    GEO,
     "union_overlap",
     _q_union_overlap,
     f"""
@@ -249,8 +237,8 @@ def _q_line_dedup(spark, sf_dir):
     return rows
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "line_dedup",
     _q_line_dedup,
     f"""
@@ -314,8 +302,8 @@ def _q_asof_tolerance(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "asof_join_tolerance",
     _q_asof_tolerance,
     f"""
@@ -376,8 +364,8 @@ def _q_repetition_stats(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "repetition_stats",
     _q_repetition_stats,
     """
@@ -443,8 +431,8 @@ def _q_pii_scrub(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "pii_scrub",
     _q_pii_scrub,
     f"""
@@ -486,8 +474,8 @@ def _q_ann_pq_adc(spark, sf_dir):
 
 from .operators.ann import pq_oracle_sql as _pq_oracle_sql  # noqa: E402
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "ann_pq_adc",
     _q_ann_pq_adc,
     _pq_oracle_sql("vec_id < 5", k=3, dim=64),
@@ -502,7 +490,6 @@ _register(
 
 
 def _q_ann_pq_indexed(spark, sf_dir):
-    from .entry_queries_r2 import _fresh_dir
     from .pipelines.ann_index import build_pq_index, pq_adc_indexed
 
     root = _fresh_dir("pqidx_")
@@ -511,8 +498,8 @@ def _q_ann_pq_indexed(spark, sf_dir):
     return pq_adc_indexed(spark, root, F.col("vec_id") < 5, k=3)
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "ann_pq_indexed",
     _q_ann_pq_indexed,
     _pq_oracle_sql("vec_id < 5", k=3, dim=64),
@@ -537,8 +524,8 @@ def _q_ann_ivfpq(spark, sf_dir):
 
 from .operators.ann import ivfpq_oracle_sql as _ivfpq_oracle_sql  # noqa: E402
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "ann_ivfpq",
     _q_ann_ivfpq,
     _ivfpq_oracle_sql("vec_id < 5", k=3, dim=64),
@@ -569,8 +556,8 @@ def _q_ann_ivf_filtered(spark, sf_dir):
 
 from .operators.ann import ivf_oracle_sql as _ivf_oracle_sql  # noqa: E402
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "ann_ivf_filtered",
     _q_ann_ivf_filtered,
     _ivf_oracle_sql(
@@ -676,8 +663,8 @@ _sh_sql_sums = ",\n           ".join(
 _sh_sql_combine = " + ".join(
     f"(CASE WHEN s{b} >= 0 THEN {1 << b} ELSE 0 END)" for b in range(16)
 )
-_register(
-    TEXT5,
+register(
+    TEXT,
     "simhash_dup_pairs",
     _q_simhash_dup_pairs,
     f"""
@@ -783,8 +770,8 @@ def _q_quality_filter(spark, sf_dir):
     return out.withColumn("keep", keep)
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "quality_filter",
     _q_quality_filter,
     f"""
@@ -863,8 +850,8 @@ def _q_tfidf_topterms(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "tfidf_topterms",
     _q_tfidf_topterms,
     f"""
@@ -953,8 +940,8 @@ def _q_pmi_bigrams(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "pmi_bigrams",
     _q_pmi_bigrams,
     f"""
@@ -1032,7 +1019,7 @@ def _containment_sql() -> str:
     """
 
 
-_register(TEXT5, "containment_pairs", _q_containment_pairs, _containment_sql())
+register(TEXT, "containment_pairs", _q_containment_pairs, _containment_sql())
 
 
 # --------------------------------------------------------------------------
@@ -1140,7 +1127,7 @@ def _pagerank_sql() -> str:
     )
 
 
-_register(TEXT5, "pagerank_links", _q_pagerank_links, _pagerank_sql())
+register(TEXT, "pagerank_links", _q_pagerank_links, _pagerank_sql())
 
 
 # --------------------------------------------------------------------------
@@ -1183,7 +1170,7 @@ def _cms_heavy_hitters_sql() -> str:
     )
 
 
-_register(TEXT5, "cms_heavy_hitters", _q_cms_heavy_hitters, _cms_heavy_hitters_sql())
+register(TEXT, "cms_heavy_hitters", _q_cms_heavy_hitters, _cms_heavy_hitters_sql())
 
 
 # --------------------------------------------------------------------------
@@ -1198,7 +1185,6 @@ _register(TEXT5, "cms_heavy_hitters", _q_cms_heavy_hitters, _cms_heavy_hitters_s
 
 
 def _q_warc_roundtrip(spark, sf_dir):
-    from .entry_queries_r2 import _fresh_dir
     from .operators.multimodal import attach_html_binary
     from .pipelines.assign_tiles import web_pages_from_documents
     from .sources.warc import read_warc, write_warc_files
@@ -1254,7 +1240,7 @@ FROM documents
 """
 
 
-_register(TEXT5, "warc_roundtrip", _q_warc_roundtrip, _WARC_SQL)
+register(TEXT, "warc_roundtrip", _q_warc_roundtrip, _WARC_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -1324,7 +1310,7 @@ def _phrase_search_sql() -> str:
     """
 
 
-_register(TEXT5, "phrase_search", _q_phrase_search, _phrase_search_sql())
+register(TEXT, "phrase_search", _q_phrase_search, _phrase_search_sql())
 
 
 # --------------------------------------------------------------------------
@@ -1418,7 +1404,7 @@ FROM j GROUP BY status
 """
 
 
-_register(TEXT5, "crawl_delta", _q_crawl_delta, _CRAWL_DELTA_SQL)
+register(TEXT, "crawl_delta", _q_crawl_delta, _CRAWL_DELTA_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -1511,7 +1497,7 @@ SELECT url, rule AS verdict, prefix AS matched_prefix FROM m WHERE rn = 1
 """
 
 
-_register(TEXT5, "robots_filter", _q_robots_filter, _ROBOTS_SQL)
+register(TEXT, "robots_filter", _q_robots_filter, _ROBOTS_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -1593,7 +1579,7 @@ GROUP BY dst
 """
 
 
-_register(TEXT5, "anchor_agg", _q_anchor_agg, _ANCHOR_SQL)
+register(TEXT, "anchor_agg", _q_anchor_agg, _ANCHOR_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -1674,7 +1660,7 @@ def _url_canonicalize_sql() -> str:
     """
 
 
-_register(TEXT5, "url_canonicalize", _q_url_canonicalize, _url_canonicalize_sql())
+register(TEXT, "url_canonicalize", _q_url_canonicalize, _url_canonicalize_sql())
 
 
 # --------------------------------------------------------------------------
@@ -1735,7 +1721,7 @@ FROM pages GROUP BY 1
 """
 
 
-_register(TEXT5, "template_clusters", _q_template_clusters, _TEMPLATE_SQL)
+register(TEXT, "template_clusters", _q_template_clusters, _TEMPLATE_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -1762,7 +1748,7 @@ def _hll_by_group_sql() -> str:
     return hll_estimate_grouped_sql("events", "event_type", "user_id")
 
 
-_register(TEXT5, "hll_by_group", _q_hll_by_group, _hll_by_group_sql())
+register(TEXT, "hll_by_group", _q_hll_by_group, _hll_by_group_sql())
 
 # --------------------------------------------------------------------------
 # Zone maps: per-file min/max column stats written at icelite commit +
@@ -1777,7 +1763,6 @@ _register(TEXT5, "hll_by_group", _q_hll_by_group, _hll_by_group_sql())
 
 
 def _q_zonemap_pruned(spark, sf_dir):
-    from .entry_queries_r2 import _fresh_dir
     from .tables.icelite import IceliteTable
 
     root = _fresh_dir("icelite_zm_")
@@ -1793,8 +1778,8 @@ def _q_zonemap_pruned(spark, sf_dir):
     ).withColumn("pruned", F.lit(len(files) < total))
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "zonemap_pruned_read",
     _q_zonemap_pruned,
     """
@@ -1818,7 +1803,6 @@ _register(
 
 
 def _q_zorder_pruned(spark, sf_dir):
-    from .entry_queries_r2 import _fresh_dir
     from .operators.zorder import cluster_zorder, zorder_key
     from .tables.icelite import IceliteTable
 
@@ -1858,7 +1842,7 @@ def _zorder_pruned_sql() -> str:
     """
 
 
-_register(TEXT5, "zorder_pruned_read", _q_zorder_pruned, _zorder_pruned_sql())
+register(TEXT, "zorder_pruned_read", _q_zorder_pruned, _zorder_pruned_sql())
 
 # --------------------------------------------------------------------------
 # Incremental materialized view: a per-lang stats table over an
@@ -1874,7 +1858,6 @@ _register(TEXT5, "zorder_pruned_read", _q_zorder_pruned, _zorder_pruned_sql())
 
 
 def _q_matview_incremental(spark, sf_dir):
-    from .entry_queries_r2 import _fresh_dir
     from .tables.icelite import IceliteTable
     from .tables.matview import MaterializedAgg
 
@@ -1907,8 +1890,8 @@ def _q_matview_incremental(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "matview_incremental",
     _q_matview_incremental,
     """
@@ -1944,8 +1927,8 @@ def _q_bloom_semi_join(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "bloom_semi_join",
     _q_bloom_semi_join,
     """
@@ -2002,8 +1985,8 @@ def _q_substring_dup_spans(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "substring_dup_spans",
     _q_substring_dup_spans,
     f"""
@@ -2034,7 +2017,6 @@ _register(
 
 
 def _q_snapshot_changes(spark, sf_dir):
-    from .entry_queries_r2 import _fresh_dir
     from .tables.icelite import IceliteTable
 
     root = _fresh_dir("icelite_cdc_")
@@ -2054,8 +2036,8 @@ def _q_snapshot_changes(spark, sf_dir):
     return t.changes(spark, v0, v2).select("_change_type", "doc_id", "n_chars")
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "snapshot_changes",
     _q_snapshot_changes,
     """
@@ -2080,7 +2062,6 @@ _register(
 
 
 def _q_stream_matview(spark, sf_dir):
-    from .entry_queries_r2 import _fresh_dir
     from .tables.icelite import IceliteTable
     from .tables.matview import MaterializedAgg
 
@@ -2133,8 +2114,8 @@ def _q_stream_matview(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "stream_matview",
     _q_stream_matview,
     """
@@ -2177,8 +2158,8 @@ def _q_rasterize_polys(spark, sf_dir):
     return rasterize(polys, cell=1.0, mode="convex")
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "rasterize_polys",
     _q_rasterize_polys,
     f"""
@@ -2235,7 +2216,7 @@ def _bpe_train_sql() -> str:
     return bpe_oracle_sql("documents", "text", _BPE_ROUNDS)
 
 
-_register(TEXT5, "bpe_train", _q_bpe_train, _bpe_train_sql())
+register(TEXT, "bpe_train", _q_bpe_train, _bpe_train_sql())
 
 # --------------------------------------------------------------------------
 # Per-file Bloom point-lookup index (Parquet's column bloom filters
@@ -2247,7 +2228,6 @@ _register(TEXT5, "bpe_train", _q_bpe_train, _bpe_train_sql())
 
 
 def _q_bloom_point_lookup(spark, sf_dir):
-    from .entry_queries_r2 import _fresh_dir
     from .tables.icelite import IceliteTable
 
     root = _fresh_dir("icelite_bloomidx_")
@@ -2264,8 +2244,8 @@ def _q_bloom_point_lookup(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "bloom_point_lookup",
     _q_bloom_point_lookup,
     """
@@ -2311,8 +2291,8 @@ def _q_zonal_stats(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5,
+register(
+    TEXT,
     "zonal_stats",
     _q_zonal_stats,
     f"""

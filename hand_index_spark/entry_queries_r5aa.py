@@ -27,19 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5AA: dict = {}
-TEXT5AA: dict = {}
-ORACLES5AA: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5AA[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 _RRF_K = 60
@@ -127,7 +115,7 @@ _RRF_SQL = f"""
     QUALIFY fused_rank <= {_RRF_OUT}
     """
 
-_register(TEXT5AA, "rrf_fusion", _q_rrf_fusion, _RRF_SQL)
+register(TEXT, "rrf_fusion", _q_rrf_fusion, _RRF_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -214,4 +202,4 @@ _AUC_SQL = """
     FROM agg WHERE n_pos > 0 AND n_neg > 0
     """
 
-_register(TEXT5AA, "roc_auc", _q_roc_auc, _AUC_SQL)
+register(TEXT, "roc_auc", _q_roc_auc, _AUC_SQL)

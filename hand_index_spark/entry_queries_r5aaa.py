@@ -28,19 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5AAA: dict = {}
-TEXT5AAA: dict = {}
-ORACLES5AAA: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5AAA[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 _DAY_US = 86_400_000_000
@@ -207,7 +195,7 @@ _KM_SQL = f"""
     FROM rec
     """
 
-_register(TEXT5AAA, "kaplan_meier", _q_kaplan_meier, _KM_SQL)
+register(TEXT, "kaplan_meier", _q_kaplan_meier, _KM_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -309,4 +297,4 @@ _RFM_SQL = f"""
     FROM scored
     """
 
-_register(TEXT5AAA, "rfm_segments", _q_rfm_segments, _RFM_SQL)
+register(TEXT, "rfm_segments", _q_rfm_segments, _RFM_SQL)

@@ -10,19 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-GEO5B: dict = {}
-TEXT5B: dict = {}
-ORACLES5B: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5B[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -62,7 +50,7 @@ _DISTANCE_BAND_SQL = f"""
         + (a.py - b.py) * (a.py - b.py) <= {_DB_RADIUS * _DB_RADIUS}
     """
 
-_register(GEO5B, "distance_band_join", _q_distance_band, _DISTANCE_BAND_SQL)
+register(GEO, "distance_band_join", _q_distance_band, _DISTANCE_BAND_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -129,7 +117,7 @@ _SEGMENT_SQL = f"""
                   AND by2 BETWEEN least(ay1, ay2) AND greatest(ay1, ay2))
     """
 
-_register(GEO5B, "segment_intersect_join", _q_segment_intersect, _SEGMENT_SQL)
+register(GEO, "segment_intersect_join", _q_segment_intersect, _SEGMENT_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -186,7 +174,7 @@ _CONVEX_HULL_SQL = f"""
     FROM ordered GROUP BY gid
     """
 
-_register(GEO5B, "convex_hull", _q_convex_hull, _CONVEX_HULL_SQL)
+register(GEO, "convex_hull", _q_convex_hull, _CONVEX_HULL_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -281,7 +269,7 @@ def _bpe_encode_sql() -> str:
     """
 
 
-_register(TEXT5B, "bpe_encode", _q_bpe_encode, _bpe_encode_sql())
+register(TEXT, "bpe_encode", _q_bpe_encode, _bpe_encode_sql())
 
 
 # --------------------------------------------------------------------------
@@ -328,7 +316,7 @@ _GAPFILL_SQL = """
     FROM grid
     """
 
-_register(TEXT5B, "gapfill_interpolate", _q_gapfill, _GAPFILL_SQL)
+register(TEXT, "gapfill_interpolate", _q_gapfill, _GAPFILL_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -388,7 +376,7 @@ def _cell_pyramid_sql() -> str:
     """
 
 
-_register(GEO5B, "cell_pyramid", _q_cell_pyramid, _cell_pyramid_sql())
+register(GEO, "cell_pyramid", _q_cell_pyramid, _cell_pyramid_sql())
 
 
 # --------------------------------------------------------------------------
@@ -445,7 +433,7 @@ _KNN_RADIUS_SQL = f"""
     SELECT q_id, s_id, dist2, rnk FROM ranked WHERE rnk <= {_KNN_K}
     """
 
-_register(GEO5B, "knn_radius_join", _q_knn_radius, _KNN_RADIUS_SQL)
+register(GEO, "knn_radius_join", _q_knn_radius, _KNN_RADIUS_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -512,7 +500,7 @@ def _bfs_sql() -> str:
     return "".join(parts)
 
 
-_register(TEXT5B, "bfs_hops", _q_bfs_hops, _bfs_sql())
+register(TEXT, "bfs_hops", _q_bfs_hops, _bfs_sql())
 
 
 # --------------------------------------------------------------------------
@@ -548,7 +536,7 @@ def _geohash_sql() -> str:
     """
 
 
-_register(GEO5B, "geohash_encode", _q_geohash_encode, _geohash_sql())
+register(GEO, "geohash_encode", _q_geohash_encode, _geohash_sql())
 
 
 # --------------------------------------------------------------------------
@@ -638,7 +626,7 @@ def _ring_validity_sql() -> str:
     """
 
 
-_register(GEO5B, "ring_validity", _q_ring_validity, _ring_validity_sql())
+register(GEO, "ring_validity", _q_ring_validity, _ring_validity_sql())
 
 
 # --------------------------------------------------------------------------
@@ -678,7 +666,7 @@ _INTERVAL_SQL = """
       ON a.id < b.id AND a.st < b.en AND b.st < a.en
     """
 
-_register(TEXT5B, "interval_overlap_join", _q_interval_overlap, _INTERVAL_SQL)
+register(TEXT, "interval_overlap_join", _q_interval_overlap, _INTERVAL_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -739,7 +727,7 @@ def _consistent_hash_sql() -> str:
     """
 
 
-_register(TEXT5B, "consistent_hash_assign", _q_consistent_hash, _consistent_hash_sql())
+register(TEXT, "consistent_hash_assign", _q_consistent_hash, _consistent_hash_sql())
 
 
 # --------------------------------------------------------------------------
@@ -787,4 +775,4 @@ _POLITENESS_SQL = """
     FROM q
     """
 
-_register(TEXT5B, "politeness_schedule", _q_politeness, _POLITENESS_SQL)
+register(TEXT, "politeness_schedule", _q_politeness, _POLITENESS_SQL)

@@ -27,19 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5BB: dict = {}
-TEXT5BB: dict = {}
-ORACLES5BB: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5BB[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 _DAY_US = 86_400_000_000
@@ -118,7 +106,7 @@ _PREFIX_SQL = """
     FROM pref GROUP BY host, prefix
     """
 
-_register(TEXT5BB, "path_prefix_rollup", _q_path_prefix_rollup, _PREFIX_SQL)
+register(TEXT, "path_prefix_rollup", _q_path_prefix_rollup, _PREFIX_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -198,4 +186,4 @@ _THEIL_SQL = f"""
     FROM ranked WHERE rn = (n_pairs + 1) // 2
     """
 
-_register(TEXT5BB, "theil_sen_slope", _q_theil_sen_slope, _THEIL_SQL)
+register(TEXT, "theil_sen_slope", _q_theil_sen_slope, _THEIL_SQL)

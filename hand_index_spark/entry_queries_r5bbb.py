@@ -28,19 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5BBB: dict = {}
-TEXT5BBB: dict = {}
-ORACLES5BBB: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5BBB[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -140,7 +128,7 @@ _ITEM_CF_SQL = """
     SELECT item, neighbor, cooc, cos2_ppm, rank FROM rk WHERE rank <= 5
     """
 
-_register(TEXT5BBB, "item_cf", _q_item_cf, _ITEM_CF_SQL)
+register(TEXT, "item_cf", _q_item_cf, _ITEM_CF_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -253,4 +241,4 @@ _FIFO_SQL = """
      AND s.s_lo < d.d_hi AND d.d_lo < s.s_hi
     """
 
-_register(TEXT5BBB, "fifo_allocation", _q_fifo_allocation, _FIFO_SQL)
+register(TEXT, "fifo_allocation", _q_fifo_allocation, _FIFO_SQL)

@@ -15,19 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-GEO5C: dict = {}
-TEXT5C: dict = {}
-ORACLES5C: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5C[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -70,7 +58,7 @@ def _geodesic_band_sql() -> str:
     """
 
 
-_register(GEO5C, "geodesic_band_join", _q_geodesic_band, _geodesic_band_sql())
+register(GEO, "geodesic_band_join", _q_geodesic_band, _geodesic_band_sql())
 
 
 # --------------------------------------------------------------------------
@@ -119,7 +107,7 @@ def _quadkey_sql() -> str:
     """
 
 
-_register(GEO5C, "quadkey_encode", _q_quadkey, _quadkey_sql())
+register(GEO, "quadkey_encode", _q_quadkey, _quadkey_sql())
 
 
 # --------------------------------------------------------------------------
@@ -175,7 +163,7 @@ _TRIANGLES_SQL = """
     GROUP BY node
     """
 
-_register(TEXT5C, "triangle_counts", _q_triangles, _TRIANGLES_SQL)
+register(TEXT, "triangle_counts", _q_triangles, _TRIANGLES_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -247,7 +235,7 @@ def _sssp_sql() -> str:
     return "".join(parts)
 
 
-_register(TEXT5C, "sssp_weighted", _q_sssp, _sssp_sql())
+register(TEXT, "sssp_weighted", _q_sssp, _sssp_sql())
 
 
 # --------------------------------------------------------------------------
@@ -319,7 +307,7 @@ _IDW_SQL = f"""
     SELECT q_id, n_sites, list_sum(nums) / list_sum(dens) AS idw FROM agg
     """
 
-_register(GEO5C, "idw_interpolate", _q_idw, _IDW_SQL)
+register(GEO, "idw_interpolate", _q_idw, _IDW_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -381,7 +369,7 @@ _MORANS_SQL = """
     FROM st, acc, dd
     """
 
-_register(GEO5C, "morans_i_grid", _q_morans, _MORANS_SQL)
+register(GEO, "morans_i_grid", _q_morans, _MORANS_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -432,7 +420,7 @@ _SITEMAP_SQL = """
     FROM documents, unnest(range(1 + doc_id % 4)) AS u(j)
     """
 
-_register(TEXT5C, "sitemap_extract", _q_sitemap, _SITEMAP_SQL)
+register(TEXT, "sitemap_extract", _q_sitemap, _SITEMAP_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -519,7 +507,7 @@ _D8_SQL = f"""
     SELECT gx, gy, elev, dir, tx, ty FROM flowdir
     """
 
-_register(GEO5C, "d8_flow_dir", _q_d8_flow, _D8_SQL)
+register(GEO, "d8_flow_dir", _q_d8_flow, _D8_SQL)
 
 
 def _q_flow_acc(spark, sf_dir):
@@ -550,7 +538,7 @@ def _flow_acc_sql() -> str:
     return "".join(parts)
 
 
-_register(GEO5C, "flow_accumulation", _q_flow_acc, _flow_acc_sql())
+register(GEO, "flow_accumulation", _q_flow_acc, _flow_acc_sql())
 
 
 def _q_hand(spark, sf_dir):
@@ -586,7 +574,7 @@ def _hand_sql() -> str:
     return "".join(parts)
 
 
-_register(GEO5C, "hand_height", _q_hand, _hand_sql())
+register(GEO, "hand_height", _q_hand, _hand_sql())
 
 
 # --------------------------------------------------------------------------
@@ -658,7 +646,7 @@ _KDE_SQL = f"""
     GROUP BY cx, cy
     """
 
-_register(GEO5C, "kde_heatmap", _q_kde, _KDE_SQL)
+register(GEO, "kde_heatmap", _q_kde, _KDE_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -700,7 +688,7 @@ _COHORT_SQL = """
     GROUP BY f.cohort, w.week - f.cohort
     """
 
-_register(TEXT5C, "cohort_retention", _q_cohort, _COHORT_SQL)
+register(TEXT, "cohort_retention", _q_cohort, _COHORT_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -768,7 +756,7 @@ def _trajectory_sql() -> str:
     """
 
 
-_register(GEO5C, "trajectory_length", _q_trajectory, _trajectory_sql())
+register(GEO, "trajectory_length", _q_trajectory, _trajectory_sql())
 
 
 # --------------------------------------------------------------------------
@@ -873,7 +861,7 @@ def _winnow_sql() -> str:
     """
 
 
-_register(TEXT5C, "winnow_fingerprints", _q_winnow, _winnow_sql())
+register(TEXT, "winnow_fingerprints", _q_winnow, _winnow_sql())
 
 
 # --------------------------------------------------------------------------
@@ -977,7 +965,7 @@ def _cdc_sql() -> str:
     """
 
 
-_register(TEXT5C, "cdc_chunks", _q_cdc_chunks, _cdc_sql())
+register(TEXT, "cdc_chunks", _q_cdc_chunks, _cdc_sql())
 
 
 # --------------------------------------------------------------------------
@@ -1070,7 +1058,7 @@ _TFIDF_SQL = f"""
           >= 9 * CAST(na.n2 AS HUGEINT) * CAST(nb.n2 AS HUGEINT)
     """
 
-_register(TEXT5C, "tfidf_cosine_pairs", _q_tfidf_pairs, _TFIDF_SQL)
+register(TEXT, "tfidf_cosine_pairs", _q_tfidf_pairs, _TFIDF_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -1153,7 +1141,7 @@ def _kcore_sql() -> str:
     return "".join(parts)
 
 
-_register(TEXT5C, "kcore_nodes", _q_kcore, _kcore_sql())
+register(TEXT, "kcore_nodes", _q_kcore, _kcore_sql())
 
 
 # --------------------------------------------------------------------------
@@ -1228,7 +1216,7 @@ _DBSCAN_SQL = f"""
     FROM borders b JOIN lbl l ON l.id = b.attach
     """
 
-_register(GEO5C, "dbscan_clusters", _q_dbscan, _DBSCAN_SQL)
+register(GEO, "dbscan_clusters", _q_dbscan, _DBSCAN_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -1302,4 +1290,4 @@ def _geofence_sql() -> str:
     """
 
 
-_register(GEO5C, "stream_geofence", _q_stream_geofence, _geofence_sql())
+register(GEO, "stream_geofence", _q_stream_geofence, _geofence_sql())

@@ -28,19 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5CC: dict = {}
-TEXT5CC: dict = {}
-ORACLES5CC: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5CC[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 _NDCG_K = 10
@@ -154,7 +142,7 @@ _NDCG_SQL = f"""
     FROM agg
     """
 
-_register(TEXT5CC, "ndcg_at_k", _q_ndcg_at_k, _NDCG_SQL)
+register(TEXT, "ndcg_at_k", _q_ndcg_at_k, _NDCG_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -243,4 +231,4 @@ _MASE_SQL = f"""
     FROM agg WHERE n1 > 0 AND n7 > 0 AND sae1 > 0
     """
 
-_register(TEXT5CC, "backtest_mase", _q_backtest_mase, _MASE_SQL)
+register(TEXT, "backtest_mase", _q_backtest_mase, _MASE_SQL)

@@ -29,20 +29,7 @@ from pyspark.sql import functions as F
 from .geo import cells as h3lite
 from .operators import encode as E
 from .pipelines.assign_tiles import web_pages_from_documents
-
-GEO5CCC: dict = {}
-TEXT5CCC: dict = {}
-ORACLES5CCC: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5CCC[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -135,7 +122,7 @@ def _cells_compact_sql() -> str:
     return "\n".join(body)
 
 
-_register(GEO5CCC, "cells_compact", _q_cells_compact, _cells_compact_sql())
+register(GEO, "cells_compact", _q_cells_compact, _cells_compact_sql())
 
 
 # --------------------------------------------------------------------------
@@ -253,4 +240,4 @@ _LINK_PREDICT_SQL = f"""
     SELECT a, b, cn, ra_micro, rank FROM rk WHERE rank <= {_LP_TOPK}
     """
 
-_register(TEXT5CCC, "link_predict", _q_link_predict, _LINK_PREDICT_SQL)
+register(TEXT, "link_predict", _q_link_predict, _LINK_PREDICT_SQL)

@@ -17,19 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-GEO5D: dict = {}
-TEXT5D: dict = {}
-ORACLES5D: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5D[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, fresh_dir as _fresh_dir, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -111,7 +99,7 @@ def _hillshade_sql() -> str:
     """
 
 
-_register(GEO5D, "hillshade_stats", _q_hillshade, _hillshade_sql())
+register(GEO, "hillshade_stats", _q_hillshade, _hillshade_sql())
 
 
 # --------------------------------------------------------------------------
@@ -138,8 +126,8 @@ _OVR_LEVEL_SQL = """
         FROM cells GROUP BY gx // {blk}, gy // {blk}
 """
 
-_register(
-    GEO5D,
+register(
+    GEO,
     "raster_overviews",
     _q_overviews,
     f"""
@@ -248,7 +236,7 @@ def _contour_sql() -> str:
     """
 
 
-_register(GEO5D, "contour_segments", _q_contours, _contour_sql())
+register(GEO, "contour_segments", _q_contours, _contour_sql())
 
 
 # --------------------------------------------------------------------------
@@ -301,8 +289,8 @@ def _q_kneser_ney(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5D,
+register(
+    TEXT,
     "kneser_ney_score",
     _q_kneser_ney,
     """
@@ -385,8 +373,8 @@ def _q_weighted_sample(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5D,
+register(
+    TEXT,
     "weighted_sample_mix",
     _q_weighted_sample,
     f"""
@@ -438,8 +426,8 @@ def _q_text_chunks(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5D,
+register(
+    TEXT,
     "text_chunks",
     _q_text_chunks,
     f"""
@@ -500,8 +488,8 @@ def _q_snap_points(spark, sf_dir):
     return snap_to_segments(pts, _snap_segments(spark), _SNAP_R)
 
 
-_register(
-    GEO5D,
+register(
+    GEO,
     "snap_points",
     _q_snap_points,
     f"""
@@ -636,7 +624,7 @@ def _geodesic_area_sql() -> str:
     """
 
 
-_register(GEO5D, "geodesic_area", _q_geodesic_area, _geodesic_area_sql())
+register(GEO, "geodesic_area", _q_geodesic_area, _geodesic_area_sql())
 
 
 # --------------------------------------------------------------------------
@@ -653,8 +641,6 @@ def _q_stream_topk(spark, sf_dir):
     import uuid
 
     from pyspark.sql import Window
-
-    from .entry_queries_r2 import _fresh_dir
 
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
@@ -684,8 +670,8 @@ def _q_stream_topk(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5D,
+register(
+    TEXT,
     "stream_topk",
     _q_stream_topk,
     """
@@ -813,7 +799,7 @@ def _dem_hillshade_sql() -> str:
     """
 
 
-_register(TEXT5D, "dem_hillshade_stats", _q_dem_hillshade_stats,
+register(TEXT, "dem_hillshade_stats", _q_dem_hillshade_stats,
           _dem_hillshade_sql())
 
 
@@ -897,7 +883,7 @@ def _resample_sql() -> str:
     """
 
 
-_register(GEO5D, "resample_traj", _q_resample_traj, _resample_sql())
+register(GEO, "resample_traj", _q_resample_traj, _resample_sql())
 
 
 # --------------------------------------------------------------------------
@@ -1002,7 +988,7 @@ def _contour_loops_sql() -> str:
     """
 
 
-_register(GEO5D, "contour_loops", _q_contour_loops, _contour_loops_sql())
+register(GEO, "contour_loops", _q_contour_loops, _contour_loops_sql())
 
 
 # --------------------------------------------------------------------------
@@ -1022,8 +1008,8 @@ def _q_viewshed(spark, sf_dir):
     return ray_viewshed(_dem_cells(spark, sf_dir), _VS_OX, _VS_OY)
 
 
-_register(
-    GEO5D,
+register(
+    GEO,
     "ray_viewshed",
     _q_viewshed,
     f"""

@@ -25,37 +25,9 @@ as first-class (table format, governance).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
-GEO5DD: dict = {}
-TEXT5DD: dict = {}
-ORACLES5DD: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5DD[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _fresh_dir(prefix: str) -> str:
-    """Scratch dir for side-effecting driver queries (the
-    entry_queries_r2 idiom: clean same-prefix leftovers first)."""
-    import shutil
-
-    base = os.path.join(tempfile.gettempdir(), "hand_index_spark_q")
-    os.makedirs(base, exist_ok=True)
-    for d in os.listdir(base):
-        if d.startswith(prefix):
-            shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+from .registry import GEO, TEXT, fresh_dir as _fresh_dir, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -95,7 +67,7 @@ _EVO_SQL = """
     FROM documents GROUP BY lang, source
     """
 
-_register(GEO5DD, "partition_evolution", _q_partition_evolution, _EVO_SQL)
+register(GEO, "partition_evolution", _q_partition_evolution, _EVO_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -137,4 +109,4 @@ _LDIV_SQL = f"""
     FROM d GROUP BY lang, source
     """
 
-_register(TEXT5DD, "l_diversity_audit", _q_l_diversity_audit, _LDIV_SQL)
+register(TEXT, "l_diversity_audit", _q_l_diversity_audit, _LDIV_SQL)

@@ -16,19 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5E: dict = {}
-TEXT5E: dict = {}
-ORACLES5E: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5E[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, fresh_dir as _fresh_dir, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -66,7 +54,7 @@ def _hilbert_oracle() -> str:
     )
 
 
-_register(GEO5E, "hilbert_encode", _q_hilbert, _hilbert_oracle())
+register(GEO, "hilbert_encode", _q_hilbert, _hilbert_oracle())
 
 
 # --------------------------------------------------------------------------
@@ -122,7 +110,7 @@ def _strahler_sql() -> str:
     return "".join(parts)
 
 
-_register(GEO5E, "strahler_order", _q_strahler, _strahler_sql())
+register(GEO, "strahler_order", _q_strahler, _strahler_sql())
 
 
 # --------------------------------------------------------------------------
@@ -169,7 +157,7 @@ def _watershed_sql() -> str:
     return "".join(parts)
 
 
-_register(GEO5E, "watershed_label", _q_watershed, _watershed_sql())
+register(GEO, "watershed_label", _q_watershed, _watershed_sql())
 
 
 # --------------------------------------------------------------------------
@@ -186,7 +174,6 @@ _register(GEO5E, "watershed_label", _q_watershed, _watershed_sql())
 
 
 def _q_hilbert_pruned(spark, sf_dir):
-    from .entry_queries_r2 import _fresh_dir
     from .operators.hilbert import cluster_hilbert, with_hilbert
     from .tables.icelite import IceliteTable
 
@@ -228,7 +215,7 @@ def _hilbert_pruned_sql() -> str:
     """
 
 
-_register(GEO5E, "hilbert_pruned_read", _q_hilbert_pruned, _hilbert_pruned_sql())
+register(GEO, "hilbert_pruned_read", _q_hilbert_pruned, _hilbert_pruned_sql())
 
 
 # --------------------------------------------------------------------------
@@ -338,7 +325,7 @@ _STAYPOINT_SQL = f"""
     HAVING count(*) >= {_SP_MIN_STEPS}
     """
 
-_register(GEO5E, "staypoint_detect", _q_staypoints, _STAYPOINT_SQL)
+register(GEO, "staypoint_detect", _q_staypoints, _STAYPOINT_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -425,7 +412,7 @@ _INTERVAL_SQL = """
     FROM islands GROUP BY user_id
     """
 
-_register(TEXT5E, "interval_coverage", _q_interval_coverage, _INTERVAL_SQL)
+register(TEXT, "interval_coverage", _q_interval_coverage, _INTERVAL_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -475,7 +462,7 @@ _MAD_SQL = """
     WHERE abs(d.v_cents - d.med) > 3 * md.mad
     """
 
-_register(TEXT5E, "mad_outliers", _q_mad_outliers, _MAD_SQL)
+register(TEXT, "mad_outliers", _q_mad_outliers, _MAD_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -533,4 +520,4 @@ _CELL_DILATE_SQL = """
     GROUP BY c.gx + o.dx, c.gy + o.dy
     """
 
-_register(GEO5E, "cell_dilate_cover", _q_cell_dilate, _CELL_DILATE_SQL)
+register(GEO, "cell_dilate_cover", _q_cell_dilate, _CELL_DILATE_SQL)

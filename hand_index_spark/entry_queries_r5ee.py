@@ -27,19 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5EE: dict = {}
-TEXT5EE: dict = {}
-ORACLES5EE: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5EE[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -127,7 +115,7 @@ def _sq8_sql() -> str:
     """
 
 
-_register(TEXT5EE, "sq8_quantize", _q_sq8_quantize, _sq8_sql())
+register(TEXT, "sq8_quantize", _q_sq8_quantize, _sq8_sql())
 
 
 # --------------------------------------------------------------------------
@@ -194,4 +182,4 @@ _WMED_SQL = """
     FROM hit WHERE rn = 1
     """
 
-_register(TEXT5EE, "weighted_median", _q_weighted_median, _WMED_SQL)
+register(TEXT, "weighted_median", _q_weighted_median, _WMED_SQL)

@@ -16,19 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5F: dict = {}
-TEXT5F: dict = {}
-ORACLES5F: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5F[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 _US = "epoch_us(ts)"  # DuckDB twin of Spark's unix_micros(cast) idiom
@@ -86,7 +74,7 @@ _SCD2_SQL = f"""
     FROM chg WHERE prev IS NULL OR prev <> attr
     """
 
-_register(TEXT5F, "scd2_intervals", _q_scd2, _SCD2_SQL)
+register(TEXT, "scd2_intervals", _q_scd2, _SCD2_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -170,7 +158,7 @@ _PRORATE_SQL = """
     FROM d
     """
 
-_register(TEXT5F, "prorate_cents", _q_prorate, _PRORATE_SQL)
+register(TEXT, "prorate_cents", _q_prorate, _PRORATE_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -226,7 +214,7 @@ _EWMA_SQL = f"""
     FROM v GROUP BY user_id
     """
 
-_register(TEXT5F, "ewma_smooth", _q_ewma, _EWMA_SQL)
+register(TEXT, "ewma_smooth", _q_ewma, _EWMA_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -315,4 +303,4 @@ _OD_SQL = f"""
     FROM trips GROUP BY ocx, ocy, dcx, dcy
     """
 
-_register(GEO5F, "od_matrix", _q_od_matrix, _OD_SQL)
+register(GEO, "od_matrix", _q_od_matrix, _OD_SQL)

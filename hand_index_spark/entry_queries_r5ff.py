@@ -28,19 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5FF: dict = {}
-TEXT5FF: dict = {}
-ORACLES5FF: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5FF[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 _DIAM_CAP = 48
@@ -120,7 +108,7 @@ _DIAM_SQL = f"""
     FROM ranked WHERE rk = 1
     """
 
-_register(GEO5FF, "point_diameter", _q_point_diameter, _DIAM_SQL)
+register(GEO, "point_diameter", _q_point_diameter, _DIAM_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -193,4 +181,4 @@ _TWAP_SQL = """
     FROM agg WHERE t1 > t0
     """
 
-_register(TEXT5FF, "twap_value", _q_twap_value, _TWAP_SQL)
+register(TEXT, "twap_value", _q_twap_value, _TWAP_SQL)

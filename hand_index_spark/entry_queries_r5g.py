@@ -36,25 +36,7 @@ import uuid
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5G: dict = {}
-TEXT5G: dict = {}
-ORACLES5G: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5G[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _fresh_dir(prefix: str) -> str:
-    import tempfile
-
-    return tempfile.mkdtemp(prefix=prefix)
+from .registry import TEXT, fresh_dir as _fresh_dir, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -171,7 +153,7 @@ def _hits_sql() -> str:
     )
 
 
-_register(TEXT5G, "hits_scores", _q_hits_scores, _hits_sql())
+register(TEXT, "hits_scores", _q_hits_scores, _hits_sql())
 
 
 # --------------------------------------------------------------------------
@@ -246,7 +228,7 @@ _CUSUM_SQL = f"""
     FROM st GROUP BY user_id
     """
 
-_register(TEXT5G, "cusum_changepoints", _q_cusum_changepoints, _CUSUM_SQL)
+register(TEXT, "cusum_changepoints", _q_cusum_changepoints, _CUSUM_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -334,7 +316,7 @@ _FUZZY_SQL = """
     WHERE levenshtein(var.v_name, canon.c_name) <= 1
     """
 
-_register(TEXT5G, "fuzzy_name_join", _q_fuzzy_name_join, _FUZZY_SQL)
+register(TEXT, "fuzzy_name_join", _q_fuzzy_name_join, _FUZZY_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -377,8 +359,8 @@ def _q_stream_enrich(spark, sf_dir):
     return spark.table(name)
 
 
-_register(
-    TEXT5G,
+register(
+    TEXT,
     "stream_enrich",
     _q_stream_enrich,
     """
@@ -440,8 +422,8 @@ def _q_wap_publish(spark, sf_dir):
     )
 
 
-_register(
-    TEXT5G,
+register(
+    TEXT,
     "wap_publish",
     _q_wap_publish,
     """

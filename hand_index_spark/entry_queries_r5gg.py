@@ -26,19 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5GG: dict = {}
-TEXT5GG: dict = {}
-ORACLES5GG: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5GG[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 _NBR_MOD = 20  # sample every 20th page to keep the 9x fan-out bounded
@@ -137,7 +125,7 @@ def _neighbors_sql() -> str:
     """
 
 
-_register(GEO5GG, "geohash_neighbors", _q_geohash_neighbors, _neighbors_sql())
+register(GEO, "geohash_neighbors", _q_geohash_neighbors, _neighbors_sql())
 
 
 # --------------------------------------------------------------------------
@@ -195,4 +183,4 @@ _MARKOV_SQL = """
     FROM counts
     """
 
-_register(TEXT5GG, "markov_transitions", _q_markov_transitions, _MARKOV_SQL)
+register(TEXT, "markov_transitions", _q_markov_transitions, _MARKOV_SQL)

@@ -35,19 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-GEO5H: dict = {}
-TEXT5H: dict = {}
-ORACLES5H: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5H[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -159,7 +147,7 @@ _CLIP_SQL = f"""
     GROUP BY tx, ty
     """
 
-_register(GEO5H, "clip_to_tiles", _q_clip_to_tiles, _CLIP_SQL)
+register(GEO, "clip_to_tiles", _q_clip_to_tiles, _CLIP_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -235,7 +223,7 @@ _BUFFER_SQL = f"""
     FROM ordered GROUP BY gid
     """
 
-_register(GEO5H, "buffer_area", _q_buffer_area, _BUFFER_SQL)
+register(GEO, "buffer_area", _q_buffer_area, _BUFFER_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -323,7 +311,7 @@ _DSIR_SQL = f"""
     GROUP BY doc_id
     """
 
-_register(TEXT5H, "dsir_weights", _q_dsir_weights, _DSIR_SQL)
+register(TEXT, "dsir_weights", _q_dsir_weights, _DSIR_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -430,4 +418,4 @@ def _lpa_sql() -> str:
     )
 
 
-_register(TEXT5H, "label_prop_communities", _q_label_prop, _lpa_sql())
+register(TEXT, "label_prop_communities", _q_label_prop, _lpa_sql())

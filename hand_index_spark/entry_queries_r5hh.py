@@ -28,19 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5HH: dict = {}
-TEXT5HH: dict = {}
-ORACLES5HH: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5HH[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -102,7 +90,7 @@ _SPEARMAN_SQL = """
     FROM agg WHERE n > 1
     """
 
-_register(TEXT5HH, "spearman_rho", _q_spearman_rho, _SPEARMAN_SQL)
+register(TEXT, "spearman_rho", _q_spearman_rho, _SPEARMAN_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -192,4 +180,4 @@ _FDR_SQL = f"""
     FROM cut
     """
 
-_register(TEXT5HH, "fdr_bh", _q_fdr_bh, _FDR_SQL)
+register(TEXT, "fdr_bh", _q_fdr_bh, _FDR_SQL)

@@ -36,19 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5I: dict = {}
-TEXT5I: dict = {}
-ORACLES5I: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5I[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -143,7 +131,7 @@ _PACK_SQL = f"""
     FROM spans GROUP BY chunk_id
     """
 
-_register(TEXT5I, "pack_chunks", _q_pack_chunks, _PACK_SQL)
+register(TEXT, "pack_chunks", _q_pack_chunks, _PACK_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -232,7 +220,7 @@ def _acf_sql() -> str:
     return " UNION ALL ".join(parts)
 
 
-_register(TEXT5I, "acf_lags", _q_acf_lags, _acf_sql())
+register(TEXT, "acf_lags", _q_acf_lags, _acf_sql())
 
 
 # --------------------------------------------------------------------------
@@ -297,4 +285,4 @@ _TRI_SQL = f"""
     FROM tris
     """
 
-_register(GEO5I, "triangulate_mesh", _q_triangulate_mesh, _TRI_SQL)
+register(GEO, "triangulate_mesh", _q_triangulate_mesh, _TRI_SQL)

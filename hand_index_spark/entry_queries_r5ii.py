@@ -26,19 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5II: dict = {}
-TEXT5II: dict = {}
-ORACLES5II: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5II[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 _EMD_BIN = 2500  # cents per bin (values run 1..49002 cents -> ~20 bins)
@@ -133,7 +121,7 @@ _EMD_SQL = f"""
     FROM c
     """
 
-_register(TEXT5II, "emd_1d", _q_emd_1d, _EMD_SQL)
+register(TEXT, "emd_1d", _q_emd_1d, _EMD_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -209,4 +197,4 @@ _MI_SQL = """
     FROM terms
     """
 
-_register(TEXT5II, "mutual_information", _q_mutual_information, _MI_SQL)
+register(TEXT, "mutual_information", _q_mutual_information, _MI_SQL)

@@ -38,19 +38,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-GEO5J: dict = {}
-TEXT5J: dict = {}
-ORACLES5J: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5J[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -119,7 +107,7 @@ _BUDGET_SQL = f"""
     FROM j GROUP BY lang
     """
 
-_register(TEXT5J, "token_budget_mix", _q_token_budget_mix, _BUDGET_SQL)
+register(TEXT, "token_budget_mix", _q_token_budget_mix, _BUDGET_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -249,7 +237,7 @@ def _modularity_sql() -> str:
     """
 
 
-_register(TEXT5J, "modularity_score", _q_modularity_score, _modularity_sql())
+register(TEXT, "modularity_score", _q_modularity_score, _modularity_sql())
 
 
 # --------------------------------------------------------------------------
@@ -336,4 +324,4 @@ def _gc_sql() -> str:
     """
 
 
-_register(GEO5J, "gc_waypoints", _q_gc_waypoints, _gc_sql())
+register(GEO, "gc_waypoints", _q_gc_waypoints, _gc_sql())

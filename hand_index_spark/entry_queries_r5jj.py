@@ -27,19 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5JJ: dict = {}
-TEXT5JJ: dict = {}
-ORACLES5JJ: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5JJ[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -134,7 +122,7 @@ _ROSE_SQL = f"""
     FROM counts GROUP BY user_id
     """
 
-_register(GEO5JJ, "bearing_rose", _q_bearing_rose, _ROSE_SQL)
+register(GEO, "bearing_rose", _q_bearing_rose, _ROSE_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -215,4 +203,4 @@ _BAL_SQL = """
     FROM g
     """
 
-_register(TEXT5JJ, "clamped_balance", _q_clamped_balance, _BAL_SQL)
+register(TEXT, "clamped_balance", _q_clamped_balance, _BAL_SQL)

@@ -32,19 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-GEO5K: dict = {}
-TEXT5K: dict = {}
-ORACLES5K: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5K[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -88,7 +76,7 @@ _POSTINGS_SQL = f"""
     FROM pairs GROUP BY term HAVING count(*) >= {_POST_MIN_DF}
     """
 
-_register(TEXT5K, "postings_build", _q_postings_build, _POSTINGS_SQL)
+register(TEXT, "postings_build", _q_postings_build, _POSTINGS_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -174,7 +162,7 @@ def _merkle_sql() -> str:
     )
 
 
-_register(TEXT5K, "merkle_root", _q_merkle_root, _merkle_sql())
+register(TEXT, "merkle_root", _q_merkle_root, _merkle_sql())
 
 
 # --------------------------------------------------------------------------
@@ -231,4 +219,4 @@ _SURV_SQL = """
     ) b JOIN gl USING (cluster_id)
     """
 
-_register(TEXT5K, "survivorship_golden", _q_survivorship_golden, _SURV_SQL)
+register(TEXT, "survivorship_golden", _q_survivorship_golden, _SURV_SQL)

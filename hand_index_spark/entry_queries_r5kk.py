@@ -28,24 +28,9 @@ first-class.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
-GEO5KK: dict = {}
-TEXT5KK: dict = {}
-ORACLES5KK: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5KK[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, fresh_dir as _fresh_dir, read_table as _t, register
 
 
 _HRW_NODES = 16
@@ -122,22 +107,11 @@ def _hrw_sql() -> str:
     """
 
 
-_register(TEXT5KK, "rendezvous_assign", _q_rendezvous_assign, _hrw_sql())
+register(TEXT, "rendezvous_assign", _q_rendezvous_assign, _hrw_sql())
 
 
 # --------------------------------------------------------------------------
 # zonemap_overlap_audit.
-
-
-def _fresh_dir(prefix: str) -> str:
-    import shutil
-
-    base = os.path.join(tempfile.gettempdir(), "hand_index_spark_q")
-    os.makedirs(base, exist_ok=True)
-    for d in os.listdir(base):
-        if d.startswith(prefix):
-            shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
 def _q_zonemap_overlap_audit(spark, sf_dir):
@@ -193,4 +167,4 @@ _ZM_SQL = """
     GROUP BY a.lang, a.file_min, a.file_max
     """
 
-_register(GEO5KK, "zonemap_overlap_audit", _q_zonemap_overlap_audit, _ZM_SQL)
+register(GEO, "zonemap_overlap_audit", _q_zonemap_overlap_audit, _ZM_SQL)

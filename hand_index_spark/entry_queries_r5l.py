@@ -35,19 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5L: dict = {}
-TEXT5L: dict = {}
-ORACLES5L: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5L[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -160,7 +148,7 @@ _LTTB_SQL = f"""
                                ORDER BY k1 DESC, k2 ASC) = 1
     """
 
-_register(TEXT5L, "lttb_downsample", _q_lttb_downsample, _LTTB_SQL)
+register(TEXT, "lttb_downsample", _q_lttb_downsample, _LTTB_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -266,7 +254,7 @@ _ENC_SQL = f"""
     FROM s GROUP BY col_name
     """
 
-_register(TEXT5L, "encoding_advisor", _q_encoding_advisor, _ENC_SQL)
+register(TEXT, "encoding_advisor", _q_encoding_advisor, _ENC_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -338,4 +326,4 @@ _ATTR_SQL = f"""
     FROM purch GROUP BY user_id
     """
 
-_register(TEXT5L, "attribution_last_touch", _q_attribution_last_touch, _ATTR_SQL)
+register(TEXT, "attribution_last_touch", _q_attribution_last_touch, _ATTR_SQL)

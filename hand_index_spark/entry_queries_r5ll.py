@@ -29,19 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5LL: dict = {}
-TEXT5LL: dict = {}
-ORACLES5LL: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5LL[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -160,7 +148,7 @@ _XTRACK_SQL = """
     FROM ranked WHERE rk = 1
     """
 
-_register(GEO5LL, "cross_track_dev", _q_cross_track_dev, _XTRACK_SQL)
+register(GEO, "cross_track_dev", _q_cross_track_dev, _XTRACK_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -248,4 +236,4 @@ _KAPPA_SQL = """
     FROM agg
     """
 
-_register(TEXT5LL, "cohens_kappa", _q_cohens_kappa, _KAPPA_SQL)
+register(TEXT, "cohens_kappa", _q_cohens_kappa, _KAPPA_SQL)

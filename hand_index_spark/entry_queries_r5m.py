@@ -37,19 +37,7 @@ import os
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5M: dict = {}
-TEXT5M: dict = {}
-ORACLES5M: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5M[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -124,7 +112,7 @@ _BITMAP_SQL = """
     JOIN cards cb ON cb.source = p.src_b
     """
 
-_register(TEXT5M, "bitmap_index_ops", _q_bitmap_index_ops, _BITMAP_SQL)
+register(TEXT, "bitmap_index_ops", _q_bitmap_index_ops, _BITMAP_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -158,7 +146,7 @@ _JSONL_SQL = """
     FROM documents GROUP BY lang
     """
 
-_register(TEXT5M, "jsonl_roundtrip", _q_jsonl_roundtrip, _JSONL_SQL)
+register(TEXT, "jsonl_roundtrip", _q_jsonl_roundtrip, _JSONL_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -223,4 +211,4 @@ _SKYLINE_SQL = """
     WHERE best_above IS NULL OR n_tok > best_above
     """
 
-_register(TEXT5M, "dominance_skyline", _q_dominance_skyline, _SKYLINE_SQL)
+register(TEXT, "dominance_skyline", _q_dominance_skyline, _SKYLINE_SQL)

@@ -27,19 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5MM: dict = {}
-TEXT5MM: dict = {}
-ORACLES5MM: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5MM[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -139,7 +127,7 @@ def _powerlaw_sql() -> str:
     """
 
 
-_register(TEXT5MM, "degree_powerlaw", _q_degree_powerlaw, _powerlaw_sql())
+register(TEXT, "degree_powerlaw", _q_degree_powerlaw, _powerlaw_sql())
 
 
 # --------------------------------------------------------------------------
@@ -217,4 +205,4 @@ _IMPUTE_SQL = """
     FROM repaired GROUP BY source, mode_lang
     """
 
-_register(TEXT5MM, "mode_impute", _q_mode_impute, _IMPUTE_SQL)
+register(TEXT, "mode_impute", _q_mode_impute, _IMPUTE_SQL)

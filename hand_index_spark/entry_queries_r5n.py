@@ -30,19 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-GEO5N: dict = {}
-TEXT5N: dict = {}
-ORACLES5N: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5N[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -106,7 +94,7 @@ _KANON_SQL = f"""
     FROM ks GROUP BY k
     """
 
-_register(TEXT5N, "k_anonymity_audit", _q_k_anonymity_audit, _KANON_SQL)
+register(TEXT, "k_anonymity_audit", _q_k_anonymity_audit, _KANON_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -184,7 +172,7 @@ _AB_SQL = f"""
          (SELECT n, x FROM arms WHERE arm = 1) a1
     """
 
-_register(TEXT5N, "ab_test_ztest", _q_ab_test_ztest, _AB_SQL)
+register(TEXT, "ab_test_ztest", _q_ab_test_ztest, _AB_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -247,4 +235,4 @@ _GROWTH_SQL = f"""
     FROM vocab JOIN toks USING (k)
     """
 
-_register(TEXT5N, "zipf_vocab_growth", _q_zipf_vocab_growth, _GROWTH_SQL)
+register(TEXT, "zipf_vocab_growth", _q_zipf_vocab_growth, _GROWTH_SQL)

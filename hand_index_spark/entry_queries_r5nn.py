@@ -29,19 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5NN: dict = {}
-TEXT5NN: dict = {}
-ORACLES5NN: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5NN[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 _SESSION_US = 30 * 60 * 1_000_000  # 30-minute sessions
@@ -124,7 +112,7 @@ _CONC_SQL = f"""
     FROM ranked WHERE rk = 1
     """
 
-_register(TEXT5NN, "max_concurrency", _q_max_concurrency, _CONC_SQL)
+register(TEXT, "max_concurrency", _q_max_concurrency, _CONC_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -215,4 +203,4 @@ _SPRT_SQL = f"""
     FROM totals t LEFT JOIN first f ON t.user_id = f.user_id
     """
 
-_register(TEXT5NN, "sprt_crossing", _q_sprt_crossing, _SPRT_SQL)
+register(TEXT, "sprt_crossing", _q_sprt_crossing, _SPRT_SQL)

@@ -23,19 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5O: dict = {}
-TEXT5O: dict = {}
-ORACLES5O: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5O[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -77,7 +65,7 @@ _MINE_SQL = f"""
     GROUP BY a, b HAVING count(DISTINCT user_id) >= {_MINE_MIN_SUPPORT}
     """
 
-_register(TEXT5O, "event_bigram_mining", _q_event_bigram_mining, _MINE_SQL)
+register(TEXT, "event_bigram_mining", _q_event_bigram_mining, _MINE_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -117,4 +105,4 @@ _HIST_SQL = f"""
     FROM e GROUP BY event_type, cents // {_HIST_W}
     """
 
-_register(TEXT5O, "value_histogram", _q_value_histogram, _HIST_SQL)
+register(TEXT, "value_histogram", _q_value_histogram, _HIST_SQL)

@@ -26,19 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5OO: dict = {}
-TEXT5OO: dict = {}
-ORACLES5OO: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5OO[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 _KMV_K = 64
@@ -133,7 +121,7 @@ _KMV_SQL = f"""
     FROM est
     """
 
-_register(TEXT5OO, "kmv_distinct", _q_kmv_distinct, _KMV_SQL)
+register(TEXT, "kmv_distinct", _q_kmv_distinct, _KMV_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -229,4 +217,4 @@ def _overlap_sql() -> str:
     """
 
 
-_register(TEXT5OO, "audience_overlap", _q_audience_overlap, _overlap_sql())
+register(TEXT, "audience_overlap", _q_audience_overlap, _overlap_sql())

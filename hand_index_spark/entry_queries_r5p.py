@@ -30,19 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-GEO5P: dict = {}
-TEXT5P: dict = {}
-ORACLES5P: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5P[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -120,7 +108,7 @@ def _confusion_sql() -> str:
     """
 
 
-_register(TEXT5P, "langid_confusion", _q_langid_confusion, _confusion_sql())
+register(TEXT, "langid_confusion", _q_langid_confusion, _confusion_sql())
 
 
 # --------------------------------------------------------------------------
@@ -200,7 +188,7 @@ _IOU_SQL = """
     FROM agg
     """
 
-_register(GEO5P, "iou_eval", _q_iou_eval, _IOU_SQL)
+register(GEO, "iou_eval", _q_iou_eval, _IOU_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -252,4 +240,4 @@ _CAL_SQL = f"""
     FROM b GROUP BY bin
     """
 
-_register(TEXT5P, "calibration_bins", _q_calibration_bins, _CAL_SQL)
+register(TEXT, "calibration_bins", _q_calibration_bins, _CAL_SQL)

@@ -28,19 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-GEO5PP: dict = {}
-TEXT5PP: dict = {}
-ORACLES5PP: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5PP[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 _GAP_CELL = 250  # milli-degree cell size
@@ -114,7 +102,7 @@ _GAPS_SQL = f"""
     ANTI JOIN dilated d ON u.cy = d.cy AND u.cx = d.cx
     """
 
-_register(GEO5PP, "coverage_gaps", _q_coverage_gaps, _GAPS_SQL)
+register(GEO, "coverage_gaps", _q_coverage_gaps, _GAPS_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -199,4 +187,4 @@ _MIX_SQL = """
     WHERE n1 > 0 AND n2 > 0
     """
 
-_register(TEXT5PP, "mix_shift", _q_mix_shift, _MIX_SQL)
+register(TEXT, "mix_shift", _q_mix_shift, _MIX_SQL)

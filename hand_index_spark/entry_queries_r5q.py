@@ -25,19 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-GEO5Q: dict = {}
-TEXT5Q: dict = {}
-ORACLES5Q: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5Q[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -144,7 +132,7 @@ _DQ_SQL = f"""
     FROM checks
     """
 
-_register(TEXT5Q, "data_quality_checks", _q_data_quality_checks, _DQ_SQL)
+register(TEXT, "data_quality_checks", _q_data_quality_checks, _DQ_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -218,4 +206,4 @@ def _entropy_sql() -> str:
     return " UNION ALL ".join(parts)
 
 
-_register(TEXT5Q, "column_entropy", _q_column_entropy, _entropy_sql())
+register(TEXT, "column_entropy", _q_column_entropy, _entropy_sql())

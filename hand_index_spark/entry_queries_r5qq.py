@@ -29,19 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5QQ: dict = {}
-TEXT5QQ: dict = {}
-ORACLES5QQ: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5QQ[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 _HEX_W = 400  # lattice column spacing (milli-degrees)
@@ -133,7 +121,7 @@ _HEX_SQL = f"""
     GROUP BY cx, cy
     """
 
-_register(GEO5QQ, "hex_bin", _q_hex_bin, _HEX_SQL)
+register(GEO, "hex_bin", _q_hex_bin, _HEX_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -230,4 +218,4 @@ _LAT_SQL = """
     FROM c
     """
 
-_register(TEXT5QQ, "latency_histogram", _q_latency_histogram, _LAT_SQL)
+register(TEXT, "latency_histogram", _q_latency_histogram, _LAT_SQL)

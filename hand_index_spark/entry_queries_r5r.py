@@ -25,19 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5R: dict = {}
-TEXT5R: dict = {}
-ORACLES5R: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5R[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -107,7 +95,7 @@ _BASKET_SQL = """
     JOIN singles sb ON sb.event_type = p.b
     """
 
-_register(TEXT5R, "basket_lift", _q_basket_lift, _BASKET_SQL)
+register(TEXT, "basket_lift", _q_basket_lift, _BASKET_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -157,4 +145,4 @@ _CONC_SQL = """
     FROM ranked
     """
 
-_register(TEXT5R, "concentration_metrics", _q_concentration_metrics, _CONC_SQL)
+register(TEXT, "concentration_metrics", _q_concentration_metrics, _CONC_SQL)

@@ -26,19 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-GEO5RR: dict = {}
-TEXT5RR: dict = {}
-ORACLES5RR: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5RR[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 _KWIC_TERM = "the"
@@ -128,7 +116,7 @@ _KWIC_SQL = f"""
     FROM occs
     """
 
-_register(TEXT5RR, "kwic_concordance", _q_kwic_concordance, _KWIC_SQL)
+register(TEXT, "kwic_concordance", _q_kwic_concordance, _KWIC_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -184,4 +172,4 @@ _FH_SQL = f"""
     FROM per_doc p JOIN stats s ON p.dim = s.dim
     """
 
-_register(TEXT5RR, "feature_hashing", _q_feature_hashing, _FH_SQL)
+register(TEXT, "feature_hashing", _q_feature_hashing, _FH_SQL)

@@ -27,19 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5S: dict = {}
-TEXT5S: dict = {}
-ORACLES5S: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5S[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -146,7 +134,7 @@ _QS_SQL = f"""
     FROM exact x JOIN est USING (event_type, pct)
     """
 
-_register(TEXT5S, "quantile_sketch", _q_quantile_sketch, _QS_SQL)
+register(TEXT, "quantile_sketch", _q_quantile_sketch, _QS_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -212,4 +200,4 @@ _TTC_SQL = """
     FROM ranked
     """
 
-_register(TEXT5S, "time_to_convert", _q_time_to_convert, _TTC_SQL)
+register(TEXT, "time_to_convert", _q_time_to_convert, _TTC_SQL)

@@ -23,35 +23,9 @@ and OLAP axes the brief names as first-class.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
-GEO5SS: dict = {}
-TEXT5SS: dict = {}
-ORACLES5SS: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5SS[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _fresh_dir(prefix: str) -> str:
-    import shutil
-
-    base = os.path.join(tempfile.gettempdir(), "hand_index_spark_q")
-    os.makedirs(base, exist_ok=True)
-    for d in os.listdir(base):
-        if d.startswith(prefix):
-            shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+from .registry import GEO, TEXT, fresh_dir as _fresh_dir, read_table as _t, register
 
 
 _FORGET_USER = 42
@@ -106,7 +80,7 @@ _GDPR_SQL = f"""
     FROM after, del
     """
 
-_register(GEO5SS, "gdpr_forget", _q_gdpr_forget, _GDPR_SQL)
+register(GEO, "gdpr_forget", _q_gdpr_forget, _GDPR_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -160,4 +134,4 @@ _STAR_SQL = """
     GROUP BY r.r_name, n.n_name
     """
 
-_register(TEXT5SS, "star_revenue_rollup", _q_star_revenue_rollup, _STAR_SQL)
+register(TEXT, "star_revenue_rollup", _q_star_revenue_rollup, _STAR_SQL)

@@ -24,19 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-GEO5T: dict = {}
-TEXT5T: dict = {}
-ORACLES5T: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5T[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -94,7 +82,7 @@ _READ_SQL = f"""
     FROM base
     """
 
-_register(TEXT5T, "readability_scores", _q_readability_scores, _READ_SQL)
+register(TEXT, "readability_scores", _q_readability_scores, _READ_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -159,4 +147,4 @@ def _fertility_sql() -> str:
     """
 
 
-_register(TEXT5T, "tokenizer_fertility", _q_tokenizer_fertility, _fertility_sql())
+register(TEXT, "tokenizer_fertility", _q_tokenizer_fertility, _fertility_sql())

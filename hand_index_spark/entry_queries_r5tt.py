@@ -25,19 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5TT: dict = {}
-TEXT5TT: dict = {}
-ORACLES5TT: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5TT[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 _DAY_US = 86_400_000_000
@@ -116,7 +104,7 @@ _BDAYS_SQL = f"""
     FROM j GROUP BY l_orderkey
     """
 
-_register(TEXT5TT, "business_days", _q_business_days, _BDAYS_SQL)
+register(TEXT, "business_days", _q_business_days, _BDAYS_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -163,4 +151,4 @@ _HEAT_SQL = f"""
     FROM counts
     """
 
-_register(TEXT5TT, "dow_hour_heatmap", _q_dow_hour_heatmap, _HEAT_SQL)
+register(TEXT, "dow_hour_heatmap", _q_dow_hour_heatmap, _HEAT_SQL)

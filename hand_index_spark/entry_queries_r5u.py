@@ -25,19 +25,7 @@ import math
 
 from pyspark.sql import functions as F
 
-GEO5U: dict = {}
-TEXT5U: dict = {}
-ORACLES5U: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5U[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -134,7 +122,7 @@ def _trend_sql() -> str:
     """
 
 
-_register(TEXT5U, "linear_trend", _q_linear_trend, _trend_sql())
+register(TEXT, "linear_trend", _q_linear_trend, _trend_sql())
 
 
 # --------------------------------------------------------------------------
@@ -234,4 +222,4 @@ def _benford_sql() -> str:
     """
 
 
-_register(TEXT5U, "benford_digits", _q_benford_digits, _benford_sql())
+register(TEXT, "benford_digits", _q_benford_digits, _benford_sql())

@@ -24,19 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5UU: dict = {}
-TEXT5UU: dict = {}
-ORACLES5UU: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5UU[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 _DAY_US = 86_400_000_000
@@ -129,7 +117,7 @@ _SPC_SQL = f"""
     FROM daily d JOIN overall o ON d.event_type = o.event_type
     """
 
-_register(TEXT5UU, "control_chart", _q_control_chart, _SPC_SQL)
+register(TEXT, "control_chart", _q_control_chart, _SPC_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -207,4 +195,4 @@ _WINSOR_SQL = """
     FROM clipped GROUP BY event_type
     """
 
-_register(TEXT5UU, "winsorized_mean", _q_winsorized_mean, _WINSOR_SQL)
+register(TEXT, "winsorized_mean", _q_winsorized_mean, _WINSOR_SQL)

@@ -26,19 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5V: dict = {}
-TEXT5V: dict = {}
-ORACLES5V: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5V[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 _DAY_US = 86_400_000_000
@@ -109,7 +97,7 @@ _STREAK_SQL = f"""
     FROM runs GROUP BY user_id
     """
 
-_register(TEXT5V, "longest_streak", _q_longest_streak, _STREAK_SQL)
+register(TEXT, "longest_streak", _q_longest_streak, _STREAK_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -188,4 +176,4 @@ _CHISQ_SQL = f"""
     FROM grid
     """
 
-_register(TEXT5V, "chisq_independence", _q_chisq_independence, _CHISQ_SQL)
+register(TEXT, "chisq_independence", _q_chisq_independence, _CHISQ_SQL)

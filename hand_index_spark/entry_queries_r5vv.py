@@ -26,19 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5VV: dict = {}
-TEXT5VV: dict = {}
-ORACLES5VV: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5VV[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 # --------------------------------------------------------------------------
@@ -120,7 +108,7 @@ def _cidr_sql() -> str:
     """
 
 
-_register(TEXT5VV, "cidr_match", _q_cidr_match, _cidr_sql())
+register(TEXT, "cidr_match", _q_cidr_match, _cidr_sql())
 
 
 # --------------------------------------------------------------------------
@@ -185,4 +173,4 @@ _ABC_SQL = """
     FROM c
     """
 
-_register(TEXT5VV, "abc_classification", _q_abc_classification, _ABC_SQL)
+register(TEXT, "abc_classification", _q_abc_classification, _ABC_SQL)

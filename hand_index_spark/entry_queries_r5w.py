@@ -33,19 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5W: dict = {}
-TEXT5W: dict = {}
-ORACLES5W: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5W[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 _DAY_US = 86_400_000_000
@@ -144,7 +132,7 @@ _TAU_SQL = f"""
     FROM agg
     """
 
-_register(TEXT5W, "kendall_tau", _q_kendall_tau, _TAU_SQL)
+register(TEXT, "kendall_tau", _q_kendall_tau, _TAU_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -245,4 +233,4 @@ _HOLT_SQL = f"""
     FROM rec WHERE rn = n_days
     """
 
-_register(TEXT5W, "holt_forecast", _q_holt_forecast, _HOLT_SQL)
+register(TEXT, "holt_forecast", _q_holt_forecast, _HOLT_SQL)

@@ -25,19 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5WW: dict = {}
-TEXT5WW: dict = {}
-ORACLES5WW: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5WW[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 _CP_CELL = 500  # milli-degree cell
@@ -89,7 +77,7 @@ _CP_SQL = f"""
     FROM g WHERE n_users >= 2
     """
 
-_register(GEO5WW, "copresence_pairs", _q_copresence_pairs, _CP_SQL)
+register(GEO, "copresence_pairs", _q_copresence_pairs, _CP_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -139,4 +127,4 @@ _QT_SQL = """
     FROM r WHERE n > 1
     """
 
-_register(TEXT5WW, "quantile_transform", _q_quantile_transform, _QT_SQL)
+register(TEXT, "quantile_transform", _q_quantile_transform, _QT_SQL)

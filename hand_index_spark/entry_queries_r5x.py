@@ -29,23 +29,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-GEO5X: dict = {}
-TEXT5X: dict = {}
-ORACLES5X: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5X[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
+from .operators.dtw import BIG as _DTW_BIG, dtw_dp_last
+from .registry import TEXT, read_table as _t, register
 
 _DAY_US = 86_400_000_000
-_DTW_BIG = 1_000_000_000_000_000  # unreachable sentinel, overflow-safe
 
 
 # --------------------------------------------------------------------------
@@ -53,10 +40,10 @@ _DTW_BIG = 1_000_000_000_000_000  # unreachable sentinel, overflow-safe
 # per-day fleet total div number of users (exact integer division —
 # identical `div`/`//` on both engines). dp[i][j] = |a_i − b_j| +
 # min(dp[i−1][j], dp[i][j−1], dp[i−1][j−1]); row 0 is [0, BIG, …],
-# each later row starts BIG. At 100 TB the per-key series stays
-# bounded (days per window), so the fold is O(n·m) per key with no
-# shuffle beyond the two aggregates; a Sakoe-Chiba band would cap m
-# per step if windows ever grew unbounded.
+# each later row starts BIG — the exact fold of operators/dtw.py. At
+# 100 TB the per-key series stays bounded (days per window), so the
+# fold is O(n·m) per key with no shuffle beyond the two aggregates; its
+# Sakoe-Chiba band would cap m per step if windows ever grew unbounded.
 
 
 def _q_dtw_distance(spark, sf_dir):
@@ -95,35 +82,11 @@ def _q_dtw_distance(spark, sf_dir):
         F.expr("transform(arr, p -> p.s)").alias("a"),
     )
     j = per_user.crossJoin(F.broadcast(ref))  # 1-row reference attach
-    dp = F.aggregate(
-        F.col("a"),
-        # row 0: dp[0][0] = 0, dp[0][j] = BIG
-        F.expr(
-            f"concat(array(CAST(0 AS BIGINT)),"
-            f" transform(sequence(1, size(b)),"
-            f" j -> CAST({_DTW_BIG} AS BIGINT)))"
-        ),
-        lambda prev, av: F.aggregate(
-            F.expr("sequence(1, size(b))"),
-            F.expr(f"array(CAST({_DTW_BIG} AS BIGINT))"),
-            lambda newrow, jj: F.concat(
-                newrow,
-                F.array(
-                    F.abs(av - F.element_at(F.col("b"), jj.cast("int")))
-                    + F.least(
-                        F.element_at(prev, (jj + 1).cast("int")),
-                        F.element_at(newrow, F.size(newrow)),
-                        F.element_at(prev, jj.cast("int")),
-                    )
-                ),
-            ),
-        ),
-    )
     return j.select(
         "user_id",
         F.size("a").cast("long").alias("n_a"),
         F.size("b").cast("long").alias("n_b"),
-        F.element_at(dp, F.size("b") + 1).alias("dtw_cents"),
+        dtw_dp_last("a", "b").alias("dtw_cents"),
     )
 
 
@@ -172,7 +135,7 @@ _DTW_SQL = f"""
     FROM folded
     """
 
-_register(TEXT5X, "dtw_distance", _q_dtw_distance, _DTW_SQL)
+register(TEXT, "dtw_distance", _q_dtw_distance, _DTW_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -231,4 +194,4 @@ _ZSCORE_SQL = """
     WHERE n * syy - sy * sy > 0
     """
 
-_register(TEXT5X, "zscore_normalize", _q_zscore_normalize, _ZSCORE_SQL)
+register(TEXT, "zscore_normalize", _q_zscore_normalize, _ZSCORE_SQL)

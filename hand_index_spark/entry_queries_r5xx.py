@@ -27,19 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5XX: dict = {}
-TEXT5XX: dict = {}
-ORACLES5XX: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5XX[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, TEXT, read_table as _t, register
 
 
 _COR_M = 24          # polyline vertices (23 segments)
@@ -145,7 +133,7 @@ _COR_SQL = f"""
     FROM inside GROUP BY doc_id
     """
 
-_register(GEO5XX, "corridor_membership", _q_corridor_membership, _COR_SQL)
+register(GEO, "corridor_membership", _q_corridor_membership, _COR_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -202,4 +190,4 @@ _NVR_SQL = f"""
     FROM daily
     """
 
-_register(TEXT5XX, "new_vs_returning", _q_new_vs_returning, _NVR_SQL)
+register(TEXT, "new_vs_returning", _q_new_vs_returning, _NVR_SQL)

@@ -30,19 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5Y: dict = {}
-TEXT5Y: dict = {}
-ORACLES5Y: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5Y[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import GEO, read_table as _t, register
 
 
 _TILE = 64
@@ -155,7 +143,7 @@ _AREAL_SQL = f"""
     GROUP BY tx, ty
     """
 
-_register(GEO5Y, "areal_interpolate", _q_areal_interpolate, _AREAL_SQL)
+register(GEO, "areal_interpolate", _q_areal_interpolate, _AREAL_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -288,4 +276,4 @@ _FRECHET_SQL = f"""
     FROM folded
     """
 
-_register(GEO5Y, "frechet_distance", _q_frechet_distance, _FRECHET_SQL)
+register(GEO, "frechet_distance", _q_frechet_distance, _FRECHET_SQL)

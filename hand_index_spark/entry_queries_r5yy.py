@@ -24,19 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-GEO5YY: dict = {}
-TEXT5YY: dict = {}
-ORACLES5YY: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5YY[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 _DAY_US = 86_400_000_000
@@ -96,7 +84,7 @@ _OHLC_SQL = f"""
     FROM base GROUP BY event_type, day
     """
 
-_register(TEXT5YY, "ohlc_candles", _q_ohlc_candles, _OHLC_SQL)
+register(TEXT, "ohlc_candles", _q_ohlc_candles, _OHLC_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -168,4 +156,4 @@ _MOVERS_SQL = f"""
     QUALIFY rk <= {_MOVERS_K}
     """
 
-_register(TEXT5YY, "top_movers", _q_top_movers, _MOVERS_SQL)
+register(TEXT, "top_movers", _q_top_movers, _MOVERS_SQL)

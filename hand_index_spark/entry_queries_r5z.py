@@ -28,19 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-GEO5Z: dict = {}
-TEXT5Z: dict = {}
-ORACLES5Z: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5Z[name] = oracle
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .registry import TEXT, read_table as _t, register
 
 
 _TOPO_LEVELS = 8
@@ -134,7 +122,7 @@ def _topo_sql() -> str:
     return "".join(parts)
 
 
-_register(TEXT5Z, "toposort_layers", _q_toposort_layers, _topo_sql())
+register(TEXT, "toposort_layers", _q_toposort_layers, _topo_sql())
 
 
 # --------------------------------------------------------------------------
@@ -244,4 +232,4 @@ _PSI_SQL = """
     FROM counts, tot
     """
 
-_register(TEXT5Z, "psi_drift", _q_psi_drift, _PSI_SQL)
+register(TEXT, "psi_drift", _q_psi_drift, _PSI_SQL)

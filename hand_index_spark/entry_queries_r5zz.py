@@ -25,15 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-GEO5ZZ: dict = {}
-TEXT5ZZ: dict = {}
-ORACLES5ZZ: dict[str, str] = {}
-
-
-def _register(reg: dict, name: str, fn, oracle: str | None) -> None:
-    reg[name] = fn
-    if oracle is not None:
-        ORACLES5ZZ[name] = oracle
+from .registry import GEO, register
 
 
 # --------------------------------------------------------------------------
@@ -83,7 +75,7 @@ def _parity_sql() -> str:
     """
 
 
-_register(GEO5ZZ, "assign_path_parity", _q_assign_path_parity, _parity_sql())
+register(GEO, "assign_path_parity", _q_assign_path_parity, _parity_sql())
 
 
 # --------------------------------------------------------------------------
@@ -137,4 +129,4 @@ def _share_sql() -> str:
     """
 
 
-_register(GEO5ZZ, "method_share", _q_method_share, _share_sql())
+register(GEO, "method_share", _q_method_share, _share_sql())

@@ -527,20 +527,9 @@ def assign_tiles_joined(
     r0, c0 = _cell_rc_cols(lat, lon)
     pts = df.withColumn("__ck", (r0 * F.lit(tg.NC) + c0).cast("long"))
     if with_s2:
-        from ..geo import s2lite
-        from .encode import S2_LEVEL
+        from .encode import with_s2 as _with_s2
 
-        @pandas_udf(LongType())
-        def _s2(la: pd.Series, lo: pd.Series) -> pd.Series:
-            return pd.Series(
-                s2lite.encode(
-                    la.to_numpy(dtype=np.float64),
-                    lo.to_numpy(dtype=np.float64),
-                    S2_LEVEL,
-                )
-            )
-
-        pts = pts.withColumn("s2_cell", _s2(lat, lon))
+        pts = _with_s2(pts, lat_col, lon_col)
     if key_col is None:
         pts = pts.withColumn("__rid", F.monotonically_increasing_id())
         pts = pts.localCheckpoint(eager=True)

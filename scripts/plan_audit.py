@@ -98,7 +98,7 @@ def main() -> None:
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython", "Scan parquet"),
     )
-    from hand_index_spark.entry_queries_r2 import TEXT3 as _TEXT3
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT3
 
     audit(
         "dedup_clusters",
@@ -161,7 +161,7 @@ def main() -> None:
     )
     # round-4: IVF from the persisted index — same broadcast-NLJ-only-
     # for-centroids contract as ann_ivf_topk, reading icelite tables
-    from hand_index_spark.entry_queries_r4 import TEXT4 as _TEXT4
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT4
 
     audit(
         "ann_ivf_indexed",
@@ -189,7 +189,7 @@ def main() -> None:
     # round-5: line-level dedup — two keyed shuffles (chunk counts +
     # doc reassembly) with map-side partial aggregation, no Python, and
     # the chunk-count join must never degrade to a nested loop
-    from hand_index_spark.entry_queries_r5 import GEO5 as _GEO5, TEXT5 as _TEXT5
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5, TEXTOPS as _TEXT5
 
     audit(
         "line_dedup",
@@ -397,9 +397,9 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5b import (  # noqa: E402
-        GEO5B as _GEO5B,
-        TEXT5B as _TEXT5B,
+    from hand_index_spark.entry_queries import (  # noqa: E402
+        GEO_QUERIES as _GEO5B,
+        TEXTOPS as _TEXT5B,
     )
 
     # distance-band join: ONE cell-key equi-join, exact integer refine —
@@ -490,9 +490,9 @@ def main() -> None:
         forbid=("Exchange", "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5c import (  # noqa: E402
-        GEO5C as _GEO5C,
-        TEXT5C as _TEXT5C,
+    from hand_index_spark.entry_queries import (  # noqa: E402
+        GEO_QUERIES as _GEO5C,
+        TEXTOPS as _TEXT5C,
     )
 
     # geodesic band join: lat/lon grid candidates through ONE shuffled
@@ -675,9 +675,9 @@ def main() -> None:
     )
 
     # round-5d terrain + text stages
-    from hand_index_spark.entry_queries_r5d import (  # noqa: E402
-        GEO5D as _GEO5D,
-        TEXT5D as _TEXT5D,
+    from hand_index_spark.entry_queries import (  # noqa: E402
+        GEO_QUERIES as _GEO5D,
+        TEXTOPS as _TEXT5D,
     )
 
     # hillshade: ONE neighbor-key shuffled hash join + kernel-folded
@@ -780,8 +780,8 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5e import GEO5E as _GEO5E
-    from hand_index_spark.entry_queries_r5e import TEXT5E as _TEXT5E
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5E
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5E
 
     # hilbert encode: pure chained projections — a codec, so NO
     # shuffle, NO join, NO Python anywhere in the plan
@@ -854,8 +854,8 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5f import GEO5F as _GEO5F
-    from hand_index_spark.entry_queries_r5f import TEXT5F as _TEXT5F
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5F
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5F
 
     # SCD2 + OD matrix: pure window pipelines, zero joins
     audit(
@@ -890,7 +890,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5g import TEXT5G as _TEXT5G
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5G
 
     # HITS: the final authority/hub join reads the CHECKPOINTED
     # iterates (never re-derives the edge subtree from parquet);
@@ -922,8 +922,8 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5h import GEO5H as _GEO5H
-    from hand_index_spark.entry_queries_r5h import TEXT5H as _TEXT5H
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5H
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5H
 
     # Sutherland-Hodgman tile clip: the whole 4-pass clip is ONE
     # codegen'd projection (the aggregate-fold form — the naive chained
@@ -970,8 +970,8 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5i import GEO5I as _GEO5I
-    from hand_index_spark.entry_queries_r5i import TEXT5I as _TEXT5I
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5I
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5I
 
     # sequence packing: the corpus-scale running sum must be the
     # BUCKET-partitioned window (windowspecdefinition(bucket...)), the
@@ -1007,8 +1007,8 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5j import GEO5J as _GEO5J
-    from hand_index_spark.entry_queries_r5j import TEXT5J as _TEXT5J
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5J
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5J
 
     # token budgeting: the running sum partitions on lang (parallel),
     # totals attach via broadcast — no corpus-scale single-partition
@@ -1040,7 +1040,7 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5k import TEXT5K as _TEXT5K
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5K
 
     # postings build: explode + distinct + ONE term-keyed aggregate
     # (sort_array inside the agg keeps it order-free) — no joins, no
@@ -1072,7 +1072,7 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5l import TEXT5L as _TEXT5L
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5L
 
     # LTTB: user-partitioned windows + keyed join + struct-max argmax
     # — never all-pairs, no Python
@@ -1103,7 +1103,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5m import TEXT5M as _TEXT5M
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5M
 
     # bitmap algebra: word-keyed equi-join of the tiny word tables +
     # popcount aggregates; cardinalities attach via broadcast — never
@@ -1126,7 +1126,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5n import TEXT5N as _TEXT5N
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5N
 
     # k-anonymity: two hash aggregates + a 1-row broadcast total +
     # bounded k explode — no nested loops beyond the 1-row scalar
@@ -1156,7 +1156,7 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5o import TEXT5O as _TEXT5O
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5O
 
     # sequence mining: one keyed lead window + one hash aggregate —
     # zero joins, no Python
@@ -1176,8 +1176,8 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5p import GEO5P as _GEO5P
-    from hand_index_spark.entry_queries_r5p import TEXT5P as _TEXT5P
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5P
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5P
 
     # confusion matrix: aggregates + one tiny per-class keyed join —
     # the voting rule stays in codegen (HOF filter), no Python
@@ -1206,7 +1206,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5q import TEXT5Q as _TEXT5Q
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5Q
 
     # data contracts: one aggregate per check + the RI left join —
     # never all-pairs, no Python, no collect-driven loops
@@ -1227,7 +1227,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5r import TEXT5R as _TEXT5R
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5R
 
     # basket lift: distinct + user-keyed self-join (bounded: <=
     # |event types| rows per user) + aggregate + broadcast singles —
@@ -1249,7 +1249,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5s import TEXT5S as _TEXT5S
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5S
 
     # quantile sketch: type-partitioned rank window + tiny bin-frame
     # cumsum + keyed joins of the 15-row target/estimate frames —
@@ -1271,7 +1271,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5t import TEXT5T as _TEXT5T
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5T
 
     # readability: pure per-row projection — no joins, no windows
     audit(
@@ -1290,7 +1290,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5u import TEXT5U as _TEXT5U
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5U
 
     # linear trend: one event_type aggregate over exact BIGINT moments
     # (map-side partial agg) — no joins, no windows, no Python
@@ -1311,7 +1311,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5v import TEXT5V as _TEXT5V
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5V
 
     # longest streak: user-keyed window + two hash aggregates — the
     # window never partitions wider than one user
@@ -1332,7 +1332,7 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5w import TEXT5W as _TEXT5W
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5W
 
     # kendall tau: lang-keyed self-join over the 20-per-lang frame —
     # equi-keyed on lang (bounded 20x20 per group), never all-pairs
@@ -1353,7 +1353,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5x import TEXT5X as _TEXT5X
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5X
 
     # dtw: keyed aggregates + the 1-row reference-series broadcast;
     # the DP fold itself is pure Catalyst HOF — no Python anywhere
@@ -1373,7 +1373,7 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5y import GEO5Y as _GEO5Y
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5Y
 
     # areal interpolation: bounded 3x3 explode + one tile-keyed
     # aggregate — no joins at all, pure integers
@@ -1394,7 +1394,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5z import TEXT5Z as _TEXT5Z
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5Z
 
     # toposort: checkpointed equi-join + max-agg rounds only (the bfs
     # shape); the visible plan is the final checkpointed state — the
@@ -1416,7 +1416,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5aa import TEXT5AA as _TEXT5AA
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5AA
 
     # rrf: lang-partitioned rank windows + top-10 window — no joins
     # at all (both rankings come from one frame)
@@ -1437,7 +1437,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5bb import TEXT5BB as _TEXT5BB
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5BB
 
     # prefix rollup: bounded <=3 explode + one prefix aggregate — no
     # joins at all
@@ -1458,7 +1458,7 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5cc import TEXT5CC as _TEXT5CC
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5CC
 
     # ndcg: two lang rank windows + one aggregate with ordered folds
     # — no joins
@@ -1479,10 +1479,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5dd import (
-        GEO5DD as _GEO5DD,
-        TEXT5DD as _TEXT5DD,
-    )
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5DD, TEXTOPS as _TEXT5DD
 
     # partition evolution: the readback is parquet scans + one
     # aggregate — no Python, no cross product (the union of the two
@@ -1503,7 +1500,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5ee import TEXT5EE as _TEXT5EE
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5EE
 
     # sq8: posexplode + the 64-row per-dim stats broadcast back onto
     # the elements — the element stream never shuffles for the join
@@ -1524,10 +1521,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5ff import (
-        GEO5FF as _GEO5FF,
-        TEXT5FF as _TEXT5FF,
-    )
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5FF, TEXTOPS as _TEXT5FF
 
     # diameter: user-keyed self-join over <=48 capped points (bounded
     # 48x48 per group) + rank window — never corpus all-pairs
@@ -1547,10 +1541,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5gg import (
-        GEO5GG as _GEO5GG,
-        TEXT5GG as _TEXT5GG,
-    )
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5GG, TEXTOPS as _TEXT5GG
 
     # neighbors: bounded 8-way explode over literal-shift bit sums —
     # whole-stage codegen ("codegen id" in the formatted plan), no
@@ -1572,7 +1563,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5hh import TEXT5HH as _TEXT5HH
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5HH
 
     # spearman: two lang rank windows + one aggregate — O(n) per
     # group (vs kendall's bounded pairwise), no joins
@@ -1593,7 +1584,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5ii import TEXT5II as _TEXT5II
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5II
 
     # emd: one bin aggregate + ~20-row cumsum windows + final scalar
     # — no joins, pure integers
@@ -1614,10 +1605,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5jj import (
-        GEO5JJ as _GEO5JJ,
-        TEXT5JJ as _TEXT5JJ,
-    )
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5JJ, TEXTOPS as _TEXT5JJ
 
     # rose: lag window + integer sector CASE + two aggregates — no
     # joins, no transcendentals
@@ -1638,10 +1626,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5kk import (
-        GEO5KK as _GEO5KK,
-        TEXT5KK as _TEXT5KK,
-    )
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5KK, TEXTOPS as _TEXT5KK
 
     # hrw: per-row bounded 16-node fold, pure projection — no joins,
     # no windows, no Python
@@ -1662,10 +1647,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5ll import (
-        GEO5LL as _GEO5LL,
-        TEXT5LL as _TEXT5LL,
-    )
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5LL, TEXTOPS as _TEXT5LL
 
     # cross-track: user-keyed anchor windows + rank window — no
     # joins, pure integers
@@ -1686,7 +1668,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5mm import TEXT5MM as _TEXT5MM
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5MM
 
     # power-law: bounded explode + two aggregates + one 13-row
     # ordered fold — no joins
@@ -1707,7 +1689,7 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5nn import TEXT5NN as _TEXT5NN
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5NN
 
     # concurrency: endpoint union + type-keyed cumsum + rank window —
     # no joins
@@ -1728,7 +1710,7 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5oo import TEXT5OO as _TEXT5OO
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5OO
 
     # kmv: bounded explode + lang rank window + the tiny kth/exact
     # frames joined — no corpus self-join, no Python
@@ -1749,10 +1731,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5pp import (
-        GEO5PP as _GEO5PP,
-        TEXT5PP as _TEXT5PP,
-    )
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5PP, TEXTOPS as _TEXT5PP
 
     # coverage gaps: closed-form universe + broadcast LEFT ANTI against
     # the dilated cell set — never universe x corpus
@@ -1772,10 +1751,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5qq import (
-        GEO5QQ as _GEO5QQ,
-        TEXT5QQ as _TEXT5QQ,
-    )
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5QQ, TEXTOPS as _TEXT5QQ
 
     # hex: bounded 9-way candidate explode + per-point argmin window
     # + one bin aggregate — no joins, pure integers
@@ -1796,7 +1772,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5rr import TEXT5RR as _TEXT5RR2
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5RR2
 
     # kwic: pure instr/substr projection + a 2-way union — no joins,
     # no windows, no regex backtracking
@@ -1817,10 +1793,7 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5ss import (
-        GEO5SS as _GEO5SS,
-        TEXT5SS as _TEXT5SS,
-    )
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5SS, TEXTOPS as _TEXT5SS
 
     # gdpr: post-delete readback aggregate + the 1-row changelog
     # scalar broadcast; exceptAll inside changes() is keyed hash aggs
@@ -1840,7 +1813,7 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5tt import TEXT5TT as _TEXT5TT
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5TT
 
     # business days: one equi-join + order aggregate, closed-form
     # weekday CASE — no windows, no Python
@@ -1860,7 +1833,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5uu import TEXT5UU as _TEXT5UU
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5UU
 
     # control chart: daily + overall aggregates, overall broadcast
     # back onto the ~150 daily rows
@@ -1881,7 +1854,7 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5vv import TEXT5VV as _TEXT5VV
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5VV
 
     # cidr: the 16-row block table broadcasts (the cross is the
     # deliberate bounded prefix probe) + longest-prefix rank window
@@ -1902,10 +1875,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5ww import (
-        GEO5WW as _GEO5WW,
-        TEXT5WW as _TEXT5WW,
-    )
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5WW, TEXTOPS as _TEXT5WW
 
     # copresence: distinct + one cell aggregate, NO pair join — the
     # count shortcut is the whole point
@@ -1925,10 +1895,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5xx import (
-        GEO5XX as _GEO5XX,
-        TEXT5XX as _TEXT5XX,
-    )
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5XX, TEXTOPS as _TEXT5XX
 
     # corridor: bounded 23-segment explode per sampled point + one
     # aggregate — no joins, division-free integer predicates
@@ -1949,7 +1916,7 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5yy import TEXT5YY as _TEXT5YY
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5YY
 
     # ohlc: ONE aggregate with min_by/max_by on the packed order key
     # — no windows, no joins
@@ -1970,7 +1937,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5zz import GEO5ZZ as _GEO5ZZ
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5ZZ
 
     # parity: both assignment plans + one url equi-join + method agg;
     # the Arrow stage is the deliberate kernel path
@@ -1988,7 +1955,7 @@ def main() -> None:
         forbid=("SortMergeJoin", "CartesianProduct", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5aaa import TEXT5AAA as _TEXT5AAA
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5AAA
 
     # kaplan-meier: one user-keyed aggregate, the 1-row horizon
     # broadcast back, then calendar-bounded window + one-group fold —
@@ -2010,7 +1977,7 @@ def main() -> None:
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5bbb import TEXT5BBB as _TEXT5BBB
+    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5BBB
 
     # item_cf: one basket shuffle + HOF pair expansion (no corpus
     # self-join), support joins on the parts dim, top-5 window —
@@ -2032,10 +1999,7 @@ def main() -> None:
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries_r5ccc import (
-        GEO5CCC as _GEO5CCC,
-        TEXT5CCC as _TEXT5CCC,
-    )
+    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5CCC, TEXTOPS as _TEXT5CCC
 
     # cells_compact: one corpus distinct + 4 cover-sized window rounds,
     # all Catalyst bit arithmetic — no joins, no Python

@@ -2,9 +2,10 @@
 
 The mandated execution surface stays the Arrow pandas UDF
 (operators/assign.py — BASELINE.json:15 requires the vectorized-UDF
-form). This module is the engine's alternative physical strategy: the
-whole PIP + kNN + S2 pipeline expressed as Catalyst column expressions
-(whole-stage codegen, JVM-side), verified bit-equal to the UDF path in
+form). This test-support module is the alternative physical strategy
+that lost its measurement: the whole PIP + kNN + S2 pipeline expressed
+as Catalyst column expressions (whole-stage codegen, JVM-side), kept as
+an independent reference and verified bit-equal to the UDF path in
 tests/test_assign_catalyst.py.
 
 MEASURED OUTCOME (recorded so the design choice is evidence, not
@@ -44,8 +45,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..geo import s2lite
-from ..tables import tilegrid as tg
+from hand_index_spark.geo import s2lite
+from hand_index_spark.tables import tilegrid as tg
 
 _INF = float("inf")
 

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from hand_index_spark.operators import assign as A
 from hand_index_spark.operators import encode as E
-from hand_index_spark.operators.assign_catalyst import (
+from tests.assign_catalyst import (
     assign_tiles_catalyst,
     with_s2_catalyst,
 )

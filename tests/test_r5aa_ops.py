@@ -18,7 +18,7 @@ def con():
 
 
 def test_rrf_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5aa import ORACLES5AA, TEXT5AA
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5AA, TEXTOPS as TEXT5AA
 
     assert_match(
         TEXT5AA["rrf_fusion"](spark, SF),
@@ -29,11 +29,8 @@ def test_rrf_oracle(spark, con):
 
 
 def test_rrf_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5aa import (
-        _RRF_OUT,
-        _RRF_TOP,
-        TEXT5AA,
-    )
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5AA
+    from hand_index_spark.entry_queries_r5aa import _RRF_OUT, _RRF_TOP
 
     docs: dict = {}
     for lang, doc_id, text in con.sql(
@@ -67,7 +64,7 @@ def test_rrf_python_replay(spark, con):
 
 
 def test_roc_auc_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5aa import ORACLES5AA, TEXT5AA
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5AA, TEXTOPS as TEXT5AA
 
     assert_match(
         TEXT5AA["roc_auc"](spark, SF),
@@ -78,7 +75,7 @@ def test_roc_auc_oracle(spark, con):
 
 
 def test_roc_auc_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5aa import TEXT5AA
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5AA
 
     by_lang: dict = {}
     for lang, doc_id in con.sql(

@@ -23,7 +23,7 @@ def con():
 
 
 def test_km_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5aaa import ORACLES5AAA, TEXT5AAA
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5AAA, TEXTOPS as TEXT5AAA
 
     assert_match(
         TEXT5AAA["kaplan_meier"](spark, SF),
@@ -34,7 +34,7 @@ def test_km_oracle(spark, con):
 
 
 def test_km_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5aaa import TEXT5AAA
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5AAA
 
     spans: dict = {}
     for uid, us in con.sql(
@@ -79,7 +79,7 @@ def test_km_python_replay(spark, con):
 
 
 def test_rfm_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5aaa import ORACLES5AAA, TEXT5AAA
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5AAA, TEXTOPS as TEXT5AAA
 
     assert_match(
         TEXT5AAA["rfm_segments"](spark, SF),
@@ -90,7 +90,7 @@ def test_rfm_oracle(spark, con):
 
 
 def test_rfm_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5aaa import TEXT5AAA
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5AAA
 
     per: dict = {}
     for ck, us, tp in con.sql(

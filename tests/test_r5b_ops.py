@@ -291,7 +291,11 @@ def test_consistent_hash_minimal_movement(spark):
     ],
 )
 def test_oracle_parity(spark, con, key):
-    from hand_index_spark.entry_queries_r5b import GEO5B, ORACLES5B, TEXT5B
+    from hand_index_spark.entry_queries import (
+        GEO_QUERIES as GEO5B,
+        ORACLES as ORACLES5B,
+        TEXTOPS as TEXT5B,
+    )
 
     fn = GEO5B.get(key) or TEXT5B[key]
     assert_match(fn(spark, SF), ORACLES5B[key], con, key)

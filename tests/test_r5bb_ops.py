@@ -20,7 +20,7 @@ def con():
 
 
 def test_prefix_rollup_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5bb import ORACLES5BB, TEXT5BB
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5BB, TEXTOPS as TEXT5BB
 
     assert_match(
         TEXT5BB["path_prefix_rollup"](spark, SF),
@@ -31,7 +31,7 @@ def test_prefix_rollup_oracle(spark, con):
 
 
 def test_prefix_rollup_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5bb import TEXT5BB
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5BB
 
     agg: dict = {}
     n_docs = 0
@@ -57,7 +57,7 @@ def test_prefix_rollup_python_replay(spark, con):
 
 
 def test_theil_sen_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5bb import ORACLES5BB, TEXT5BB
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5BB, TEXTOPS as TEXT5BB
 
     assert_match(
         TEXT5BB["theil_sen_slope"](spark, SF),
@@ -68,7 +68,7 @@ def test_theil_sen_oracle(spark, con):
 
 
 def test_theil_sen_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5bb import TEXT5BB
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5BB
 
     daily: dict = {}
     for et, us, v in con.sql(

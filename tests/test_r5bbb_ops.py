@@ -20,7 +20,7 @@ def con():
 
 
 def test_item_cf_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5bbb import ORACLES5BBB, TEXT5BBB
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5BBB, TEXTOPS as TEXT5BBB
 
     assert_match(
         TEXT5BBB["item_cf"](spark, SF),
@@ -31,7 +31,7 @@ def test_item_cf_oracle(spark, con):
 
 
 def test_item_cf_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5bbb import TEXT5BBB
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5BBB
 
     baskets = defaultdict(set)
     for ok, pk in con.sql(
@@ -71,7 +71,7 @@ def test_item_cf_python_replay(spark, con):
 
 
 def test_fifo_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5bbb import ORACLES5BBB, TEXT5BBB
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5BBB, TEXTOPS as TEXT5BBB
 
     assert_match(
         TEXT5BBB["fifo_allocation"](spark, SF),
@@ -82,7 +82,7 @@ def test_fifo_oracle(spark, con):
 
 
 def test_fifo_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5bbb import TEXT5BBB
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5BBB
 
     sides: dict = {1: defaultdict(list), 0: defaultdict(list)}
     for pk, qty, us, ok, ln in con.sql(

@@ -228,7 +228,11 @@ def test_morans_i_constant_field_is_null(spark):
     ],
 )
 def test_oracle_parity(spark, con, key):
-    from hand_index_spark.entry_queries_r5c import GEO5C, ORACLES5C, TEXT5C
+    from hand_index_spark.entry_queries import (
+        GEO_QUERIES as GEO5C,
+        ORACLES as ORACLES5C,
+        TEXTOPS as TEXT5C,
+    )
 
     fn = GEO5C.get(key) or TEXT5C[key]
     assert_match(fn(spark, SF), ORACLES5C[key], con, key)
@@ -354,7 +358,7 @@ def test_hand_pit_basins_are_excluded(spark):
     "key", ["d8_flow_dir", "flow_accumulation", "hand_height"]
 )
 def test_hydrology_oracle_parity(spark, con, key):
-    from hand_index_spark.entry_queries_r5c import GEO5C, ORACLES5C
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5C, ORACLES as ORACLES5C
 
     assert_match(GEO5C[key](spark, SF), ORACLES5C[key], con, key)
 
@@ -396,7 +400,11 @@ def test_kde_single_point_kernel_shape(spark):
 
 @pytest.mark.parametrize("key", ["kde_heatmap", "cohort_retention"])
 def test_kde_cohort_oracle_parity(spark, con, key):
-    from hand_index_spark.entry_queries_r5c import GEO5C, ORACLES5C, TEXT5C
+    from hand_index_spark.entry_queries import (
+        GEO_QUERIES as GEO5C,
+        ORACLES as ORACLES5C,
+        TEXTOPS as TEXT5C,
+    )
 
     fn = GEO5C.get(key) or TEXT5C[key]
     assert_match(fn(spark, SF), ORACLES5C[key], con, key)
@@ -458,7 +466,7 @@ def test_winnowing_shared_substring_shares_fingerprint(spark):
 
 
 def test_winnowing_rightmost_min_convention(spark):
-    from hand_index_spark.entry_queries_r5c import TEXT5C
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5C
 
     # every selected pos must be the RIGHTMOST index attaining the min
     # in at least one w-window; verify against a python replay
@@ -495,7 +503,11 @@ def test_winnowing_rightmost_min_convention(spark):
 
 @pytest.mark.parametrize("key", ["trajectory_length", "winnow_fingerprints"])
 def test_traj_winnow_oracle_parity(spark, con, key):
-    from hand_index_spark.entry_queries_r5c import GEO5C, ORACLES5C, TEXT5C
+    from hand_index_spark.entry_queries import (
+        GEO_QUERIES as GEO5C,
+        ORACLES as ORACLES5C,
+        TEXTOPS as TEXT5C,
+    )
 
     fn = GEO5C.get(key) or TEXT5C[key]
     assert_match(fn(spark, SF), ORACLES5C[key], con, key)
@@ -539,7 +551,7 @@ def test_cdc_chunks_resync_after_insert(spark):
 
 
 def test_cdc_oracle_parity(spark, con):
-    from hand_index_spark.entry_queries_r5c import ORACLES5C, TEXT5C
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5C, TEXTOPS as TEXT5C
 
     assert_match(
         TEXT5C["cdc_chunks"](spark, SF), ORACLES5C["cdc_chunks"], con,
@@ -574,7 +586,7 @@ def test_tfidf_pairs_planted_near_duplicates(spark):
 
 
 def test_tfidf_oracle_parity(spark, con):
-    from hand_index_spark.entry_queries_r5c import ORACLES5C, TEXT5C
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5C, TEXTOPS as TEXT5C
 
     assert_match(
         TEXT5C["tfidf_cosine_pairs"](spark, SF),
@@ -602,7 +614,7 @@ def test_k_core_peels_pendant_cascade(spark):
 
 
 def test_registered_kcore_is_ring_only_at_fixpoint(spark, con):
-    from hand_index_spark.entry_queries_r5c import TEXT5C
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5C
 
     rows = TEXT5C["kcore_nodes"](spark, SF).collect()
     n = 500  # sf0.01 documents
@@ -611,7 +623,7 @@ def test_registered_kcore_is_ring_only_at_fixpoint(spark, con):
 
 
 def test_kcore_oracle_parity(spark, con):
-    from hand_index_spark.entry_queries_r5c import ORACLES5C, TEXT5C
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5C, TEXTOPS as TEXT5C
 
     assert_match(
         TEXT5C["kcore_nodes"](spark, SF), ORACLES5C["kcore_nodes"], con,
@@ -658,7 +670,7 @@ def test_dbscan_border_attaches_to_min_core_neighbor(spark):
 
 
 def test_dbscan_oracle_parity(spark, con):
-    from hand_index_spark.entry_queries_r5c import GEO5C, ORACLES5C
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5C, ORACLES as ORACLES5C
 
     assert_match(
         GEO5C["dbscan_clusters"](spark, SF), ORACLES5C["dbscan_clusters"],
@@ -670,7 +682,7 @@ def test_dbscan_oracle_parity(spark, con):
 
 
 def test_stream_geofence_parity_and_nontrivial(spark, con):
-    from hand_index_spark.entry_queries_r5c import GEO5C, ORACLES5C
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5C, ORACLES as ORACLES5C
 
     df = GEO5C["stream_geofence"](spark, SF)
     rows = df.collect()

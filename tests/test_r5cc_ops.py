@@ -20,7 +20,7 @@ def con():
 
 
 def test_ndcg_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5cc import ORACLES5CC, TEXT5CC
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5CC, TEXTOPS as TEXT5CC
 
     assert_match(
         TEXT5CC["ndcg_at_k"](spark, SF),
@@ -31,7 +31,8 @@ def test_ndcg_oracle(spark, con):
 
 
 def test_ndcg_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5cc import _NDCG_K, TEXT5CC
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5CC
+    from hand_index_spark.entry_queries_r5cc import _NDCG_K
 
     docs: dict = {}
     for lang, doc_id in con.sql(
@@ -64,7 +65,7 @@ def test_ndcg_python_replay(spark, con):
 
 
 def test_mase_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5cc import ORACLES5CC, TEXT5CC
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5CC, TEXTOPS as TEXT5CC
 
     assert_match(
         TEXT5CC["backtest_mase"](spark, SF),
@@ -75,7 +76,7 @@ def test_mase_oracle(spark, con):
 
 
 def test_mase_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5cc import TEXT5CC
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5CC
 
     daily: dict = {}
     for et, us, v in con.sql(

@@ -57,7 +57,7 @@ def _compact(leaves: set[int]) -> set[int]:
 
 
 def test_cells_compact_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5ccc import GEO5CCC, ORACLES5CCC
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5CCC, ORACLES as ORACLES5CCC
 
     assert_match(
         GEO5CCC["cells_compact"](spark, SF),
@@ -68,7 +68,7 @@ def test_cells_compact_oracle(spark, con):
 
 
 def test_cells_compact_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5ccc import GEO5CCC
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5CCC
 
     # read the engine's own geotags (covered by the cells_encode and
     # cell_parent oracles) and replay only the COMPACTION here
@@ -104,7 +104,7 @@ def test_cells_compact_python_replay(spark, con):
 
 
 def test_link_predict_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5ccc import ORACLES5CCC, TEXT5CCC
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5CCC, TEXTOPS as TEXT5CCC
 
     assert_match(
         TEXT5CCC["link_predict"](spark, SF),
@@ -115,7 +115,7 @@ def test_link_predict_oracle(spark, con):
 
 
 def test_link_predict_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5ccc import TEXT5CCC
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5CCC
 
     ids = [r[0] for r in con.sql("SELECT doc_id FROM documents").fetchall()]
     n = len(ids)

@@ -18,7 +18,7 @@ def con():
 
 
 def test_partition_evolution_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5dd import GEO5DD, ORACLES5DD
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5DD, ORACLES as ORACLES5DD
 
     assert_match(
         GEO5DD["partition_evolution"](spark, SF),
@@ -34,7 +34,7 @@ def test_partition_evolution_layout(spark, con):
     read sees every row exactly once across both."""
     import os
 
-    from hand_index_spark.entry_queries_r5dd import GEO5DD
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5DD
     from hand_index_spark.tables.icelite import IceliteTable
 
     GEO5DD["partition_evolution"](spark, SF).collect()  # (re)build
@@ -60,7 +60,7 @@ def test_partition_evolution_layout(spark, con):
 
 
 def test_l_diversity_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5dd import ORACLES5DD, TEXT5DD
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5DD, TEXTOPS as TEXT5DD
 
     assert_match(
         TEXT5DD["l_diversity_audit"](spark, SF),
@@ -71,7 +71,8 @@ def test_l_diversity_oracle(spark, con):
 
 
 def test_l_diversity_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5dd import _L_MIN, TEXT5DD
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5DD
+    from hand_index_spark.entry_queries_r5dd import _L_MIN
 
     groups: dict = {}
     for lang, source, doc_id in con.sql(

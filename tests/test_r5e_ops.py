@@ -105,7 +105,7 @@ def test_hilbert_beats_morton_on_clustering_factor():
 
 
 def test_hilbert_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5e import GEO5E, ORACLES5E
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5E, ORACLES as ORACLES5E
 
     assert_match(
         GEO5E["hilbert_encode"](spark, SF),
@@ -176,7 +176,7 @@ def test_strahler_fixpoint_pinned(spark):
 
 
 def test_strahler_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5e import GEO5E, ORACLES5E
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5E, ORACLES as ORACLES5E
 
     assert_match(
         GEO5E["strahler_order"](spark, SF),
@@ -190,7 +190,8 @@ def test_strahler_oracle(spark, con):
 
 
 def test_staypoint_brute_force(spark, con):
-    from hand_index_spark.entry_queries_r5e import _SP_MIN_STEPS, _SP_R2, GEO5E
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5E
+    from hand_index_spark.entry_queries_r5e import _SP_MIN_STEPS, _SP_R2
 
     got = sorted(
         (r.user_id, r.start_us, r.end_us, r.n_steps)
@@ -227,7 +228,7 @@ def test_staypoint_brute_force(spark, con):
 
 
 def test_staypoint_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5e import GEO5E, ORACLES5E
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5E, ORACLES as ORACLES5E
 
     assert_match(
         GEO5E["staypoint_detect"](spark, SF),
@@ -241,7 +242,7 @@ def test_staypoint_oracle(spark, con):
 
 
 def test_interval_coverage_brute_force(spark, con):
-    from hand_index_spark.entry_queries_r5e import TEXT5E
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5E
 
     got = {
         r.user_id: (r.covered_us, r.n_islands, r.n_intervals)
@@ -268,7 +269,7 @@ def test_interval_coverage_brute_force(spark, con):
 
 
 def test_interval_coverage_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5e import ORACLES5E, TEXT5E
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5E, TEXTOPS as TEXT5E
 
     assert_match(
         TEXT5E["interval_coverage"](spark, SF),
@@ -282,7 +283,7 @@ def test_interval_coverage_oracle(spark, con):
 
 
 def test_mad_outliers_closed_form(spark, con):
-    from hand_index_spark.entry_queries_r5e import TEXT5E
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5E
 
     got = TEXT5E["mad_outliers"](spark, SF).toPandas()
     vals = con.sql(
@@ -302,7 +303,7 @@ def test_mad_outliers_closed_form(spark, con):
 
 
 def test_mad_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5e import ORACLES5E, TEXT5E
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5E, TEXTOPS as TEXT5E
 
     assert_match(
         TEXT5E["mad_outliers"](spark, SF),
@@ -316,7 +317,7 @@ def test_mad_oracle(spark, con):
 
 
 def test_cell_dilate_properties(spark, con):
-    from hand_index_spark.entry_queries_r5e import GEO5E
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5E
 
     got = {
         (r.bgx, r.bgy): (r.core, r.n_src)
@@ -339,7 +340,7 @@ def test_cell_dilate_properties(spark, con):
 
 
 def test_cell_dilate_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5e import GEO5E, ORACLES5E
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5E, ORACLES as ORACLES5E
 
     assert_match(
         GEO5E["cell_dilate_cover"](spark, SF),
@@ -378,7 +379,7 @@ def test_watershed_fixpoint_and_totality(spark):
 
 
 def test_watershed_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5e import GEO5E, ORACLES5E
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5E, ORACLES as ORACLES5E
 
     assert_match(
         GEO5E["watershed_label"](spark, SF),
@@ -407,7 +408,7 @@ def test_hilbert_aligned_block_is_contiguous():
 
 
 def test_hilbert_pruned_read_skips_and_matches(spark, con):
-    from hand_index_spark.entry_queries_r5e import GEO5E, ORACLES5E
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5E, ORACLES as ORACLES5E
 
     row = GEO5E["hilbert_pruned_read"](spark, SF).collect()[0]
     assert row.pruned  # files were genuinely skipped

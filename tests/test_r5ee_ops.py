@@ -20,7 +20,7 @@ def con():
 
 
 def test_sq8_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5ee import ORACLES5EE, TEXT5EE
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5EE, TEXTOPS as TEXT5EE
 
     assert_match(
         TEXT5EE["sq8_quantize"](spark, SF),
@@ -31,7 +31,7 @@ def test_sq8_oracle(spark, con):
 
 
 def test_sq8_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5ee import TEXT5EE
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5EE
 
     vecs = con.sql(
         "SELECT vec_id, embedding FROM embeddings ORDER BY vec_id"
@@ -63,7 +63,7 @@ def test_sq8_python_replay(spark, con):
 
 
 def test_weighted_median_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5ee import ORACLES5EE, TEXT5EE
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5EE, TEXTOPS as TEXT5EE
 
     assert_match(
         TEXT5EE["weighted_median"](spark, SF),
@@ -74,7 +74,7 @@ def test_weighted_median_oracle(spark, con):
 
 
 def test_weighted_median_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5ee import TEXT5EE
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5EE
 
     groups: dict = {}
     for lang, doc_id, n_chars in con.sql(

@@ -23,7 +23,8 @@ def con():
 
 
 def test_scd2_intervals_tile(spark, con):
-    from hand_index_spark.entry_queries_r5f import _SCD2_OPEN, TEXT5F
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5F
+    from hand_index_spark.entry_queries_r5f import _SCD2_OPEN
 
     rows = TEXT5F["scd2_intervals"](spark, SF).collect()
     by_user: dict = {}
@@ -46,7 +47,7 @@ def test_scd2_intervals_tile(spark, con):
 
 
 def test_scd2_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5f import ORACLES5F, TEXT5F
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5F, TEXTOPS as TEXT5F
 
     assert_match(
         TEXT5F["scd2_intervals"](spark, SF),
@@ -60,7 +61,7 @@ def test_scd2_oracle(spark, con):
 
 
 def test_prorate_sum_identity(spark, con):
-    from hand_index_spark.entry_queries_r5f import TEXT5F
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5F
 
     got = TEXT5F["prorate_cents"](spark, SF).toPandas()
     totals = dict(
@@ -83,7 +84,7 @@ def test_prorate_matches_python_hamilton(spark, con):
     # Hamilton (largest-remainder) implementation with the same
     # tiebreak. Multisets, because the synthetic lineitem table has
     # duplicate (orderkey, linenumber) keys.
-    from hand_index_spark.entry_queries_r5f import TEXT5F
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5F
 
     got = TEXT5F["prorate_cents"](spark, SF).toPandas()
     rows = con.sql(
@@ -117,7 +118,7 @@ def test_prorate_matches_python_hamilton(spark, con):
 
 
 def test_prorate_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5f import ORACLES5F, TEXT5F
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5F, TEXTOPS as TEXT5F
 
     assert_match(
         TEXT5F["prorate_cents"](spark, SF),
@@ -131,7 +132,7 @@ def test_prorate_oracle(spark, con):
 
 
 def test_ewma_fold_replication(spark, con):
-    from hand_index_spark.entry_queries_r5f import TEXT5F
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5F
 
     got = {r.user_id: (r.n, r.ewma)
            for r in TEXT5F["ewma_smooth"](spark, SF).collect()}
@@ -152,7 +153,7 @@ def test_ewma_fold_replication(spark, con):
 
 
 def test_ewma_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5f import ORACLES5F, TEXT5F
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5F, TEXTOPS as TEXT5F
 
     assert_match(
         TEXT5F["ewma_smooth"](spark, SF),
@@ -166,7 +167,8 @@ def test_ewma_oracle(spark, con):
 
 
 def test_od_matrix_trip_accounting(spark, con):
-    from hand_index_spark.entry_queries_r5f import _OD_GAP_US, GEO5F
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5F
+    from hand_index_spark.entry_queries_r5f import _OD_GAP_US
 
     got = GEO5F["od_matrix"](spark, SF).toPandas()
     # total trips = per user (1 + number of gaps > GAP)
@@ -188,7 +190,7 @@ def test_od_matrix_trip_accounting(spark, con):
 
 
 def test_od_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5f import GEO5F, ORACLES5F
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5F, ORACLES as ORACLES5F
 
     assert_match(
         GEO5F["od_matrix"](spark, SF),

@@ -20,7 +20,7 @@ def con():
 
 
 def test_diameter_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5ff import GEO5FF, ORACLES5FF
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5FF, ORACLES as ORACLES5FF
 
     assert_match(
         GEO5FF["point_diameter"](spark, SF),
@@ -31,7 +31,8 @@ def test_diameter_oracle(spark, con):
 
 
 def test_diameter_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5ff import _DIAM_CAP, GEO5FF
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5FF
+    from hand_index_spark.entry_queries_r5ff import _DIAM_CAP
 
     pts: dict = {}
     for u, eid in con.sql(
@@ -65,7 +66,7 @@ def test_diameter_python_replay(spark, con):
 
 
 def test_twap_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5ff import ORACLES5FF, TEXT5FF
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5FF, TEXTOPS as TEXT5FF
 
     assert_match(
         TEXT5FF["twap_value"](spark, SF),
@@ -76,7 +77,7 @@ def test_twap_oracle(spark, con):
 
 
 def test_twap_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5ff import TEXT5FF
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5FF
 
     evs: dict = {}
     for u, us, v in con.sql(

@@ -24,11 +24,8 @@ def con():
 
 
 def test_hits_matches_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5g import (
-        _HITS_FANOUT,
-        _HITS_ITERS,
-        TEXT5G,
-    )
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5G
+    from hand_index_spark.entry_queries_r5g import _HITS_FANOUT, _HITS_ITERS
 
     n = con.sql("SELECT count(*) FROM documents").fetchone()[0]
     ids = [r[0] for r in con.sql("SELECT doc_id FROM documents").fetchall()]
@@ -55,7 +52,7 @@ def test_hits_matches_python_replay(spark, con):
 
 
 def test_hits_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5g import ORACLES5G, TEXT5G
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5G, TEXTOPS as TEXT5G
 
     assert_match(
         TEXT5G["hits_scores"](spark, SF), ORACLES5G["hits_scores"], con,
@@ -69,11 +66,8 @@ def test_hits_oracle(spark, con):
 def test_cusum_closed_form_equals_recursion(spark, con):
     """The windowed closed form S_i = P_i - min(0, min P_j) must equal
     the textbook per-row recursion S_i = max(0, S_{i-1} + d_i)."""
-    from hand_index_spark.entry_queries_r5g import (
-        _CUSUM_H,
-        _CUSUM_K,
-        TEXT5G,
-    )
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5G
+    from hand_index_spark.entry_queries_r5g import _CUSUM_H, _CUSUM_K
 
     stream = con.sql(
         "SELECT user_id, CAST(floor(value * 100 + 0.5) AS BIGINT) AS x "
@@ -101,7 +95,7 @@ def test_cusum_closed_form_equals_recursion(spark, con):
 
 
 def test_cusum_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5g import ORACLES5G, TEXT5G
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5G, TEXTOPS as TEXT5G
 
     assert_match(
         TEXT5G["cusum_changepoints"](spark, SF),
@@ -120,7 +114,7 @@ def test_fuzzy_blocking_complete_vs_bruteforce(spark, con):
     ends of a 12-char name) — checked against the n^2 brute force."""
     import hashlib
 
-    from hand_index_spark.entry_queries_r5g import TEXT5G
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5G
 
     ids = [r[0] for r in con.sql("SELECT doc_id FROM documents").fetchall()]
     canon = {
@@ -150,7 +144,7 @@ def test_fuzzy_blocking_complete_vs_bruteforce(spark, con):
 
 
 def test_fuzzy_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5g import ORACLES5G, TEXT5G
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5G, TEXTOPS as TEXT5G
 
     assert_match(
         TEXT5G["fuzzy_name_join"](spark, SF),
@@ -166,7 +160,7 @@ def test_fuzzy_oracle(spark, con):
 def test_stream_enrich_equals_batch(spark, con):
     from pyspark.sql import functions as F
 
-    from hand_index_spark.entry_queries_r5g import TEXT5G
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5G
 
     got = {
         (r.day, r.c_mktsegment): (r.n_events, r.sum_value)
@@ -190,7 +184,7 @@ def test_stream_enrich_equals_batch(spark, con):
 
 
 def test_stream_enrich_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5g import ORACLES5G, TEXT5G
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5G, TEXTOPS as TEXT5G
 
     assert_match(
         TEXT5G["stream_enrich"](spark, SF),

@@ -18,7 +18,7 @@ def con():
 
 
 def test_neighbors_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5gg import GEO5GG, ORACLES5GG
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5GG, ORACLES as ORACLES5GG
 
     assert_match(
         GEO5GG["geohash_neighbors"](spark, SF),
@@ -33,7 +33,7 @@ def test_neighbors_properties(spark, con):
     interleave; every neighbor differs from the center by exactly one
     axis step; the 8-neighborhood is symmetric (if B is A's east
     neighbor then A is B's west neighbor)."""
-    from hand_index_spark.entry_queries_r5gg import GEO5GG
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5GG
 
     rows = GEO5GG["geohash_neighbors"](spark, SF).collect()
     assert rows
@@ -74,7 +74,7 @@ def test_neighbors_properties(spark, con):
 
 
 def test_markov_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5gg import ORACLES5GG, TEXT5GG
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5GG, TEXTOPS as TEXT5GG
 
     assert_match(
         TEXT5GG["markov_transitions"](spark, SF),
@@ -85,7 +85,7 @@ def test_markov_oracle(spark, con):
 
 
 def test_markov_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5gg import TEXT5GG
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5GG
 
     seqs: dict = {}
     for u, et in con.sql(

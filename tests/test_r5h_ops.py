@@ -115,7 +115,7 @@ def test_clip_plan_compiles_fast(spark):
 
 
 def test_clip_to_tiles_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5h import GEO5H, ORACLES5H
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5H, ORACLES as ORACLES5H
 
     assert_match(
         GEO5H["clip_to_tiles"](spark, SF), ORACLES5H["clip_to_tiles"], con,
@@ -130,11 +130,8 @@ def test_buffer_area_mixed_area_identity(spark):
     """The Spark side CONSTRUCTS the dilated hull; assert it equals the
     closed-form Minkowski identity computed here in python on the same
     base rings (independent of the DuckDB oracle)."""
-    from hand_index_spark.entry_queries_r5h import (
-        _BUF_GROUPS,
-        _BUF_R,
-        GEO5H,
-    )
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5H
+    from hand_index_spark.entry_queries_r5h import _BUF_GROUPS, _BUF_R
 
     rows = {r.group_id: r for r in GEO5H["buffer_area"](spark, SF).collect()}
     assert len(rows) == _BUF_GROUPS
@@ -157,7 +154,7 @@ def test_buffer_area_mixed_area_identity(spark):
 
 
 def test_buffer_area_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5h import GEO5H, ORACLES5H
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5H, ORACLES as ORACLES5H
 
     assert_match(
         GEO5H["buffer_area"](spark, SF), ORACLES5H["buffer_area"], con,
@@ -169,7 +166,7 @@ def test_buffer_area_oracle(spark, con):
 
 
 def test_dsir_weights_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5h import ORACLES5H, TEXT5H
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5H, TEXTOPS as TEXT5H
 
     assert_match(
         TEXT5H["dsir_weights"](spark, SF), ORACLES5H["dsir_weights"], con,
@@ -180,7 +177,7 @@ def test_dsir_weights_oracle(spark, con):
 def test_dsir_weights_sign_sanity(spark):
     """en docs must average a higher importance weight than the corpus
     at large (the target distribution IS the en slice)."""
-    from hand_index_spark.entry_queries_r5h import TEXT5H
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5H
 
     w = TEXT5H["dsir_weights"](spark, SF)
     d = (
@@ -197,11 +194,8 @@ def test_dsir_weights_sign_sanity(spark):
 
 
 def test_label_prop_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5h import (
-        _LPA_FANOUT,
-        _LPA_ITERS,
-        TEXT5H,
-    )
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5H
+    from hand_index_spark.entry_queries_r5h import _LPA_FANOUT, _LPA_ITERS
 
     n = con.sql("SELECT count(*) FROM documents").fetchone()[0]
     ids = [r[0] for r in con.sql("SELECT doc_id FROM documents").fetchall()]
@@ -234,7 +228,7 @@ def test_label_prop_python_replay(spark, con):
 
 
 def test_label_prop_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5h import ORACLES5H, TEXT5H
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5H, TEXTOPS as TEXT5H
 
     assert_match(
         TEXT5H["label_prop_communities"](spark, SF),

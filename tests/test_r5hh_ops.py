@@ -20,7 +20,7 @@ def con():
 
 
 def test_spearman_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5hh import ORACLES5HH, TEXT5HH
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5HH, TEXTOPS as TEXT5HH
 
     assert_match(
         TEXT5HH["spearman_rho"](spark, SF),
@@ -31,7 +31,7 @@ def test_spearman_oracle(spark, con):
 
 
 def test_spearman_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5hh import TEXT5HH
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5HH
 
     docs: dict = {}
     for lang, doc_id, text in con.sql(
@@ -60,7 +60,7 @@ def test_spearman_python_replay(spark, con):
 
 
 def test_fdr_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5hh import ORACLES5HH, TEXT5HH
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5HH, TEXTOPS as TEXT5HH
 
     assert_match(
         TEXT5HH["fdr_bh"](spark, SF),
@@ -71,7 +71,8 @@ def test_fdr_oracle(spark, con):
 
 
 def test_fdr_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5hh import _FDR_ALPHA_PPM, TEXT5HH
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5HH
+    from hand_index_spark.entry_queries_r5hh import _FDR_ALPHA_PPM
 
     cells: dict = {}
     for lang, source in con.sql(

@@ -28,7 +28,7 @@ def con():
 
 
 def test_pack_chunks_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5i import ORACLES5I, TEXT5I
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5I, TEXTOPS as TEXT5I
 
     assert_match(
         TEXT5I["pack_chunks"](spark, SF), ORACLES5I["pack_chunks"], con,
@@ -40,7 +40,8 @@ def test_pack_chunks_conservation(spark):
     """Token conservation + shape: every chunk but the last is exactly
     full, chunk ids are dense from 0, and the total packed token count
     equals the corpus token count."""
-    from hand_index_spark.entry_queries_r5i import _PACK_C, TEXT5I
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5I
+    from hand_index_spark.entry_queries_r5i import _PACK_C
 
     rows = sorted(
         TEXT5I["pack_chunks"](spark, SF).collect(), key=lambda r: r.chunk_id
@@ -104,7 +105,7 @@ def test_pack_chunks_two_phase_scan_matches_global_window(spark):
 
 
 def test_acf_lags_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5i import ORACLES5I, TEXT5I
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5I, TEXTOPS as TEXT5I
 
     assert_match(
         TEXT5I["acf_lags"](spark, SF), ORACLES5I["acf_lags"], con, "acf_lags"
@@ -114,7 +115,8 @@ def test_acf_lags_oracle(spark, con):
 def test_acf_lags_python_replay(spark, con):
     """Pearson r at each lag, replayed in python over the exact same
     quantized series, matching to the registered 4dp rounding."""
-    from hand_index_spark.entry_queries_r5i import _ACF_LAGS, TEXT5I
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5I
+    from hand_index_spark.entry_queries_r5i import _ACF_LAGS
 
     series: dict = {}
     for uid, x in con.sql(
@@ -182,7 +184,7 @@ def test_acf_constant_series_is_null(spark):
 
 
 def test_triangulate_mesh_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5i import GEO5I, ORACLES5I
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5I, ORACLES as ORACLES5I
 
     assert_match(
         GEO5I["triangulate_mesh"](spark, SF), ORACLES5I["triangulate_mesh"],
@@ -194,7 +196,8 @@ def test_triangulate_fan_sum_equals_shoelace(spark):
     """Mesh validity: per group, the fan triangle areas are all
     positive (convex CCW ring) and sum exactly to the ring's shoelace
     area2 computed independently in python."""
-    from hand_index_spark.entry_queries_r5i import _TRI_GROUPS, GEO5I
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5I
+    from hand_index_spark.entry_queries_r5i import _TRI_GROUPS
 
     rows = GEO5I["triangulate_mesh"](spark, SF).collect()
     by_g: dict = {}

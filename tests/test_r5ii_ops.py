@@ -20,7 +20,7 @@ def con():
 
 
 def test_emd_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5ii import ORACLES5II, TEXT5II
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5II, TEXTOPS as TEXT5II
 
     assert_match(
         TEXT5II["emd_1d"](spark, SF),
@@ -31,7 +31,8 @@ def test_emd_oracle(spark, con):
 
 
 def test_emd_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5ii import _EMD_BIN, TEXT5II
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5II
+    from hand_index_spark.entry_queries_r5ii import _EMD_BIN
 
     p: dict = {}
     q: dict = {}
@@ -61,7 +62,7 @@ def test_emd_python_replay(spark, con):
 
 
 def test_mi_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5ii import ORACLES5II, TEXT5II
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5II, TEXTOPS as TEXT5II
 
     assert_match(
         TEXT5II["mutual_information"](spark, SF),
@@ -72,7 +73,7 @@ def test_mi_oracle(spark, con):
 
 
 def test_mi_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5ii import TEXT5II
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5II
 
     obs: dict = {}
     ni: dict = {}

@@ -25,7 +25,7 @@ def con():
 
 
 def test_token_budget_mix_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5j import ORACLES5J, TEXT5J
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5J, TEXTOPS as TEXT5J
 
     assert_match(
         TEXT5J["token_budget_mix"](spark, SF),
@@ -39,7 +39,8 @@ def test_token_budget_greedy_maximal(spark, con):
     """Per language: the kept set respects the 30% cap AND is maximal
     under the longest-first order (adding the next-ranked doc would
     break the cap)."""
-    from hand_index_spark.entry_queries_r5j import _BUDGET_PCT10, TEXT5J
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5J
+    from hand_index_spark.entry_queries_r5j import _BUDGET_PCT10
 
     rows = {r.lang: r for r in TEXT5J["token_budget_mix"](spark, SF).collect()}
     series: dict = {}
@@ -65,7 +66,7 @@ def test_token_budget_greedy_maximal(spark, con):
 
 
 def test_modularity_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5j import ORACLES5J, TEXT5J
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5J, TEXTOPS as TEXT5J
 
     assert_match(
         TEXT5J["modularity_score"](spark, SF),
@@ -78,8 +79,8 @@ def test_modularity_oracle(spark, con):
 def test_modularity_python_replay(spark, con):
     """Replay LPA + modularity entirely in python; all integer pieces
     must match, and Q must land in [-1/2, 1]."""
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5J
     from hand_index_spark.entry_queries_r5h import _LPA_FANOUT, _LPA_ITERS
-    from hand_index_spark.entry_queries_r5j import TEXT5J
 
     n = con.sql("SELECT count(*) FROM documents").fetchone()[0]
     ids = [r[0] for r in con.sql("SELECT doc_id FROM documents").fetchall()]
@@ -181,7 +182,7 @@ def test_gc_routes_non_degenerate():
 
 
 def test_gc_waypoints_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5j import GEO5J, ORACLES5J
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5J, ORACLES as ORACLES5J
 
     assert_match(
         GEO5J["gc_waypoints"](spark, SF), ORACLES5J["gc_waypoints"], con,
@@ -193,7 +194,7 @@ def test_gc_waypoints_on_great_circle(spark):
     """Geometry: every waypoint is coplanar with the endpoints and the
     sphere center (|triple product| ~ 0) and the t=2 waypoint bisects
     the central angle."""
-    from hand_index_spark.entry_queries_r5j import GEO5J
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5J
 
     rows = GEO5J["gc_waypoints"](spark, SF).collect()
     assert len(rows) == 24 * 3

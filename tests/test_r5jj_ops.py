@@ -38,7 +38,7 @@ def _sector(dx, dy):
 
 
 def test_rose_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5jj import GEO5JJ, ORACLES5JJ
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5JJ, ORACLES as ORACLES5JJ
 
     assert_match(
         GEO5JJ["bearing_rose"](spark, SF),
@@ -49,7 +49,7 @@ def test_rose_oracle(spark, con):
 
 
 def test_rose_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5jj import GEO5JJ
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5JJ
 
     tracks: dict = {}
     for u, eid in con.sql(
@@ -87,7 +87,7 @@ def test_rose_python_replay(spark, con):
 
 
 def test_balance_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5jj import ORACLES5JJ, TEXT5JJ
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5JJ, TEXTOPS as TEXT5JJ
 
     assert_match(
         TEXT5JJ["clamped_balance"](spark, SF),
@@ -98,7 +98,7 @@ def test_balance_oracle(spark, con):
 
 
 def test_balance_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5jj import TEXT5JJ
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5JJ
 
     evs: dict = {}
     for u, us, eid, et, v in con.sql(

@@ -25,7 +25,7 @@ def con():
 
 
 def test_postings_build_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5k import ORACLES5K, TEXT5K
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5K, TEXTOPS as TEXT5K
 
     assert_match(
         TEXT5K["postings_build"](spark, SF), ORACLES5K["postings_build"],
@@ -36,7 +36,8 @@ def test_postings_build_oracle(spark, con):
 def test_postings_head_is_sorted_prefix(spark, con):
     """Every reported head is the ascending prefix of the term's true
     posting list, and df counts distinct docs (replayed in python)."""
-    from hand_index_spark.entry_queries_r5k import _POST_MIN_DF, TEXT5K
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5K
+    from hand_index_spark.entry_queries_r5k import _POST_MIN_DF
 
     truth: dict = {}
     for doc_id, text in con.sql("SELECT doc_id, text FROM documents").fetchall():
@@ -73,7 +74,7 @@ def _python_merkle(leaves: list[str], rounds: int) -> str:
 
 
 def test_merkle_root_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5k import ORACLES5K, TEXT5K
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5K, TEXTOPS as TEXT5K
 
     assert_match(
         TEXT5K["merkle_root"](spark, SF), ORACLES5K["merkle_root"], con,
@@ -82,7 +83,8 @@ def test_merkle_root_oracle(spark, con):
 
 
 def test_merkle_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5k import _MERKLE_ROUNDS, TEXT5K
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5K
+    from hand_index_spark.entry_queries_r5k import _MERKLE_ROUNDS
 
     by_lang: dict = {}
     for lang, text in con.sql(
@@ -113,7 +115,7 @@ def test_merkle_avalanche():
 
 
 def test_survivorship_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5k import ORACLES5K, TEXT5K
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5K, TEXTOPS as TEXT5K
 
     assert_match(
         TEXT5K["survivorship_golden"](spark, SF),
@@ -126,7 +128,7 @@ def test_survivorship_oracle(spark, con):
 def test_survivorship_election_replay(spark, con):
     """Golden-lang election: most frequent lang per cluster, smallest
     string on ties; canonical = min id; replayed in python."""
-    from hand_index_spark.entry_queries_r5k import TEXT5K
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5K
 
     clusters: dict = {}
     for doc_id, lang, n_chars in con.sql(

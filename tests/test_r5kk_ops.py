@@ -18,7 +18,7 @@ def con():
 
 
 def test_hrw_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5kk import ORACLES5KK, TEXT5KK
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5KK, TEXTOPS as TEXT5KK
 
     assert_match(
         TEXT5KK["rendezvous_assign"](spark, SF),
@@ -29,12 +29,8 @@ def test_hrw_oracle(spark, con):
 
 
 def test_hrw_python_replay_and_minimal_disruption(spark, con):
-    from hand_index_spark.entry_queries_r5kk import (
-        _HRW_DROP,
-        _HRW_MOD,
-        _HRW_NODES,
-        TEXT5KK,
-    )
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5KK
+    from hand_index_spark.entry_queries_r5kk import _HRW_DROP, _HRW_MOD, _HRW_NODES
 
     def pick(d, nodes):
         best = None
@@ -111,7 +107,7 @@ print("FIXED" if small == big5 else "STILL_BUGGY")
 
 
 def test_zonemap_audit_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5kk import GEO5KK, ORACLES5KK
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5KK, ORACLES as ORACLES5KK
 
     assert_match(
         GEO5KK["zonemap_overlap_audit"](spark, SF),
@@ -122,7 +118,7 @@ def test_zonemap_audit_oracle(spark, con):
 
 
 def test_zonemap_audit_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5kk import GEO5KK
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5KK
 
     stats: dict = {}
     for lang, n_chars in con.sql(

@@ -23,7 +23,7 @@ def con():
 
 
 def test_lttb_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5l import ORACLES5L, TEXT5L
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5L, TEXTOPS as TEXT5L
 
     assert_match(
         TEXT5L["lttb_downsample"](spark, SF), ORACLES5L["lttb_downsample"],
@@ -35,7 +35,8 @@ def test_lttb_python_replay(spark, con):
     """Replay the bucket-mean LTTB selection in python with the same
     cleared-denominator integer areas; every selected point must
     match, and the endpoint buckets must keep first/last points."""
-    from hand_index_spark.entry_queries_r5l import _LTTB_B, TEXT5L
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5L
+    from hand_index_spark.entry_queries_r5l import _LTTB_B
 
     series: dict = {}
     for uid, y in con.sql(
@@ -87,7 +88,7 @@ def test_lttb_python_replay(spark, con):
 
 
 def test_encoding_advisor_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5l import ORACLES5L, TEXT5L
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5L, TEXTOPS as TEXT5L
 
     assert_match(
         TEXT5L["encoding_advisor"](spark, SF), ORACLES5L["encoding_advisor"],
@@ -99,7 +100,8 @@ def test_encoding_advisor_known_layouts(spark, con):
     """Closed forms on this datagen: o_orderkey is dense (runs = n,
     max_delta = 1 -> DELTA); o_block has runs = ceil(n/512) -> RLE;
     o_custkey is shuffled -> PLAIN."""
-    from hand_index_spark.entry_queries_r5l import _ENC_SPAN, TEXT5L
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5L
+    from hand_index_spark.entry_queries_r5l import _ENC_SPAN
 
     n = con.sql("SELECT count(*) FROM orders").fetchone()[0]
     rows = {r.col_name: r for r in TEXT5L["encoding_advisor"](spark, SF).collect()}
@@ -116,7 +118,7 @@ def test_encoding_advisor_known_layouts(spark, con):
 
 
 def test_attribution_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5l import ORACLES5L, TEXT5L
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5L, TEXTOPS as TEXT5L
 
     assert_match(
         TEXT5L["attribution_last_touch"](spark, SF),
@@ -127,10 +129,8 @@ def test_attribution_oracle(spark, con):
 
 
 def test_attribution_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5l import (
-        _ATTR_HORIZON_US,
-        TEXT5L,
-    )
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5L
+    from hand_index_spark.entry_queries_r5l import _ATTR_HORIZON_US
 
     per_user: dict = {}
     for uid, us, eid, et, cents in con.sql(

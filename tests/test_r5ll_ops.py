@@ -20,7 +20,7 @@ def con():
 
 
 def test_xtrack_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5ll import GEO5LL, ORACLES5LL
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5LL, ORACLES as ORACLES5LL
 
     assert_match(
         GEO5LL["cross_track_dev"](spark, SF),
@@ -31,7 +31,7 @@ def test_xtrack_oracle(spark, con):
 
 
 def test_xtrack_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5ll import GEO5LL
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5LL
 
     tracks: dict = {}
     for u, eid in con.sql(
@@ -68,7 +68,7 @@ def test_xtrack_python_replay(spark, con):
 
 
 def test_kappa_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5ll import ORACLES5LL, TEXT5LL
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5LL, TEXTOPS as TEXT5LL
 
     assert_match(
         TEXT5LL["cohens_kappa"](spark, SF),
@@ -79,7 +79,7 @@ def test_kappa_oracle(spark, con):
 
 
 def test_kappa_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5ll import TEXT5LL
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5LL
 
     cm: dict = {}
     n = 0

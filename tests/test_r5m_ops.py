@@ -24,7 +24,7 @@ def con():
 
 
 def test_bitmap_index_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5m import ORACLES5M, TEXT5M
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5M, TEXTOPS as TEXT5M
 
     assert_match(
         TEXT5M["bitmap_index_ops"](spark, SF), ORACLES5M["bitmap_index_ops"],
@@ -35,7 +35,7 @@ def test_bitmap_index_oracle(spark, con):
 def test_bitmap_index_set_replay(spark, con):
     """The popcount algebra must equal real python set algebra for
     every source pair."""
-    from hand_index_spark.entry_queries_r5m import TEXT5M
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5M
 
     sets: dict = {}
     for doc_id, src in con.sql("SELECT doc_id, source FROM documents").fetchall():
@@ -58,7 +58,7 @@ def test_bitmap_index_set_replay(spark, con):
 
 
 def test_jsonl_roundtrip_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5m import ORACLES5M, TEXT5M
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5M, TEXTOPS as TEXT5M
 
     assert_match(
         TEXT5M["jsonl_roundtrip"](spark, SF), ORACLES5M["jsonl_roundtrip"],
@@ -70,7 +70,8 @@ def test_jsonl_preserves_text_bytes(spark, con):
     """Row-level guarantee behind the checksum: every doc's text comes
     back byte-identical through the JSONL cycle (the brief's
     byte-identical-text-per-url invariant applied to the sink)."""
-    from hand_index_spark.entry_queries_r5m import _JSONL_DIR, TEXT5M
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5M
+    from hand_index_spark.entry_queries_r5m import _JSONL_DIR
     import os
 
     TEXT5M["jsonl_roundtrip"](spark, SF).collect()  # writes the fixture
@@ -92,7 +93,7 @@ def test_jsonl_preserves_text_bytes(spark, con):
 
 
 def test_skyline_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5m import ORACLES5M, TEXT5M
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5M, TEXTOPS as TEXT5M
 
     assert_match(
         TEXT5M["dominance_skyline"](spark, SF),
@@ -105,7 +106,7 @@ def test_skyline_oracle(spark, con):
 def test_skyline_brute_force_replay(spark, con):
     """Brute-force O(n^2) dominance check over the full corpus: the
     returned set must be exactly the undominated docs."""
-    from hand_index_spark.entry_queries_r5m import TEXT5M
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5M
 
     pts = {
         doc_id: (nc, nt)
@@ -151,7 +152,7 @@ def test_skyline_local_pass_is_safe(spark):
         .filter(F.col("best_above").isNull()
                 | (F.col("n_tok") > F.col("best_above")))
     )
-    from hand_index_spark.entry_queries_r5m import TEXT5M
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5M
 
     got = {r.doc_id for r in TEXT5M["dominance_skyline"](spark, SF).collect()}
     want = {r.doc_id for r in naive.collect()}

@@ -20,7 +20,7 @@ def con():
 
 
 def test_powerlaw_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5mm import ORACLES5MM, TEXT5MM
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5MM, TEXTOPS as TEXT5MM
 
     assert_match(
         TEXT5MM["degree_powerlaw"](spark, SF),
@@ -31,7 +31,7 @@ def test_powerlaw_oracle(spark, con):
 
 
 def test_powerlaw_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5mm import TEXT5MM
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5MM
 
     n = con.sql("SELECT count(*) FROM documents").fetchone()[0]
     edges = set()
@@ -63,7 +63,7 @@ def test_powerlaw_python_replay(spark, con):
 
 
 def test_impute_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5mm import ORACLES5MM, TEXT5MM
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5MM, TEXTOPS as TEXT5MM
 
     assert_match(
         TEXT5MM["mode_impute"](spark, SF),
@@ -74,7 +74,7 @@ def test_impute_oracle(spark, con):
 
 
 def test_impute_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5mm import TEXT5MM
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5MM
 
     docs = con.sql("SELECT doc_id, lang, source FROM documents").fetchall()
     counts: dict = {}

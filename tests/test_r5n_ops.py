@@ -25,7 +25,7 @@ def con():
 
 
 def test_k_anonymity_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5n import ORACLES5N, TEXT5N
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5N, TEXTOPS as TEXT5N
 
     assert_match(
         TEXT5N["k_anonymity_audit"](spark, SF),
@@ -36,7 +36,8 @@ def test_k_anonymity_oracle(spark, con):
 
 
 def test_k_anonymity_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5n import _KS, TEXT5N
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5N
+    from hand_index_spark.entry_queries_r5n import _KS
 
     classes: dict = {}
     for lang, src, dec in con.sql(
@@ -63,7 +64,7 @@ def test_k_anonymity_python_replay(spark, con):
 
 
 def test_ab_ztest_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5n import ORACLES5N, TEXT5N
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5N, TEXTOPS as TEXT5N
 
     assert_match(
         TEXT5N["ab_test_ztest"](spark, SF), ORACLES5N["ab_test_ztest"], con,
@@ -72,7 +73,8 @@ def test_ab_ztest_oracle(spark, con):
 
 
 def test_ab_ztest_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5n import _AB_VALUE_MIN, TEXT5N
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5N
+    from hand_index_spark.entry_queries_r5n import _AB_VALUE_MIN
 
     conv: dict = {}
     for uid, et, v in con.sql(
@@ -100,7 +102,7 @@ def test_ab_ztest_python_replay(spark, con):
 
 
 def test_vocab_growth_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5n import ORACLES5N, TEXT5N
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5N, TEXTOPS as TEXT5N
 
     assert_match(
         TEXT5N["zipf_vocab_growth"](spark, SF),
@@ -114,7 +116,8 @@ def test_vocab_growth_python_replay(spark, con):
     """First-occurrence growth: vocab(k) = |{terms first seen in docs
     0..k-1}|; vocab and tokens are both monotone in k and the
     type/token ratio falls (Heaps sublinearity on this corpus)."""
-    from hand_index_spark.entry_queries_r5n import _GROWTH_KS, TEXT5N
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5N
+    from hand_index_spark.entry_queries_r5n import _GROWTH_KS
 
     first: dict = {}
     tokens_at: dict = {k: 0 for k in _GROWTH_KS}

@@ -18,7 +18,7 @@ def con():
 
 
 def test_concurrency_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5nn import ORACLES5NN, TEXT5NN
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5NN, TEXTOPS as TEXT5NN
 
     assert_match(
         TEXT5NN["max_concurrency"](spark, SF),
@@ -29,7 +29,8 @@ def test_concurrency_oracle(spark, con):
 
 
 def test_concurrency_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5nn import _SESSION_US, TEXT5NN
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5NN
+    from hand_index_spark.entry_queries_r5nn import _SESSION_US
 
     sweeps: dict = {}
     for et, us, eid in con.sql(
@@ -59,7 +60,7 @@ def test_concurrency_python_replay(spark, con):
 
 
 def test_sprt_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5nn import ORACLES5NN, TEXT5NN
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5NN, TEXTOPS as TEXT5NN
 
     assert_match(
         TEXT5NN["sprt_crossing"](spark, SF),
@@ -70,11 +71,8 @@ def test_sprt_oracle(spark, con):
 
 
 def test_sprt_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5nn import (
-        _SPRT_DOWN,
-        _SPRT_UP,
-        TEXT5NN,
-    )
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5NN
+    from hand_index_spark.entry_queries_r5nn import _SPRT_DOWN, _SPRT_UP
 
     walks: dict = {}
     for u, eid in con.sql(

@@ -18,7 +18,7 @@ def con():
 
 
 def test_event_bigram_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5o import ORACLES5O, TEXT5O
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5O, TEXTOPS as TEXT5O
 
     assert_match(
         TEXT5O["event_bigram_mining"](spark, SF),
@@ -29,10 +29,8 @@ def test_event_bigram_oracle(spark, con):
 
 
 def test_event_bigram_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5o import (
-        _MINE_MIN_SUPPORT,
-        TEXT5O,
-    )
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5O
+    from hand_index_spark.entry_queries_r5o import _MINE_MIN_SUPPORT
 
     seqs: dict = {}
     for uid, et in con.sql(
@@ -58,7 +56,7 @@ def test_event_bigram_python_replay(spark, con):
 
 
 def test_value_histogram_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5o import ORACLES5O, TEXT5O
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5O, TEXTOPS as TEXT5O
 
     assert_match(
         TEXT5O["value_histogram"](spark, SF), ORACLES5O["value_histogram"],
@@ -69,7 +67,8 @@ def test_value_histogram_oracle(spark, con):
 def test_value_histogram_conservation(spark, con):
     """Bin counts and sums must reconstruct the per-type totals, and
     every bin's min/max must stay inside the bin's bounds."""
-    from hand_index_spark.entry_queries_r5o import _HIST_W, TEXT5O
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5O
+    from hand_index_spark.entry_queries_r5o import _HIST_W
 
     rows = TEXT5O["value_histogram"](spark, SF).collect()
     totals: dict = {}

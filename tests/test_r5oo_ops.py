@@ -18,7 +18,7 @@ def con():
 
 
 def test_kmv_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5oo import ORACLES5OO, TEXT5OO
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5OO, TEXTOPS as TEXT5OO
 
     assert_match(
         TEXT5OO["kmv_distinct"](spark, SF),
@@ -29,7 +29,8 @@ def test_kmv_oracle(spark, con):
 
 
 def test_kmv_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5oo import _KMV_K, _KMV_M, TEXT5OO
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5OO
+    from hand_index_spark.entry_queries_r5oo import _KMV_K, _KMV_M
 
     per_lang: dict = {}
     for lang, doc_id in con.sql(
@@ -61,7 +62,7 @@ def test_kmv_python_replay(spark, con):
 
 
 def test_overlap_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5oo import ORACLES5OO, TEXT5OO
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5OO, TEXTOPS as TEXT5OO
 
     assert_match(
         TEXT5OO["audience_overlap"](spark, SF),
@@ -72,7 +73,8 @@ def test_overlap_oracle(spark, con):
 
 
 def test_overlap_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5oo import _TYPES, TEXT5OO
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5OO
+    from hand_index_spark.entry_queries_r5oo import _TYPES
 
     audiences: dict = {t: set() for t in _TYPES}
     for u, et in con.sql(

@@ -22,7 +22,7 @@ def con():
 
 
 def test_langid_confusion_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5p import ORACLES5P, TEXT5P
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5P, TEXTOPS as TEXT5P
 
     assert_match(
         TEXT5P["langid_confusion"](spark, SF),
@@ -37,7 +37,7 @@ def test_langid_confusion_identities(spark, con):
     recall_ppm is exactly 1e6*tp//support; the matrix agrees with a
     python replay of the voting rule."""
     from hand_index_spark.entry_queries import _EN, _ES
-    from hand_index_spark.entry_queries_r5p import TEXT5P
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5P
 
     truth: dict = {}
     for lang, text in con.sql("SELECT lang, text FROM documents").fetchall():
@@ -73,7 +73,7 @@ def test_langid_confusion_identities(spark, con):
 
 
 def test_iou_eval_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5p import GEO5P, ORACLES5P
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5P, ORACLES as ORACLES5P
 
     assert_match(
         GEO5P["iou_eval"](spark, SF), ORACLES5P["iou_eval"], con, "iou_eval"
@@ -81,7 +81,7 @@ def test_iou_eval_oracle(spark, con):
 
 
 def test_iou_eval_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5p import GEO5P
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5P
 
     n = h50 = h75 = sum_iou = 0
     for (doc_id,) in con.sql("SELECT doc_id FROM documents").fetchall():
@@ -110,7 +110,7 @@ def test_iou_eval_python_replay(spark, con):
 
 
 def test_calibration_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5p import ORACLES5P, TEXT5P
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5P, TEXTOPS as TEXT5P
 
     assert_match(
         TEXT5P["calibration_bins"](spark, SF),
@@ -124,7 +124,8 @@ def test_calibration_tracks_scores(spark):
     """The synthetic model is calibrated by construction: observed
     positive rate must increase with the bin and sit within 15 points
     of the bin's mean score (loose — 500 docs/10 bins is noisy)."""
-    from hand_index_spark.entry_queries_r5p import _CAL_BINS, TEXT5P
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5P
+    from hand_index_spark.entry_queries_r5p import _CAL_BINS
 
     rows = sorted(
         TEXT5P["calibration_bins"](spark, SF).collect(), key=lambda r: r.bin

@@ -20,7 +20,7 @@ def con():
 
 
 def test_gaps_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5pp import GEO5PP, ORACLES5PP
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5PP, ORACLES as ORACLES5PP
 
     assert_match(
         GEO5PP["coverage_gaps"](spark, SF),
@@ -31,7 +31,8 @@ def test_gaps_oracle(spark, con):
 
 
 def test_gaps_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5pp import _GAP_CELL, GEO5PP
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5PP
+    from hand_index_spark.entry_queries_r5pp import _GAP_CELL
 
     def tdiv(a, b):
         # Spark `div` and DuckDB `//` both truncate toward zero
@@ -64,7 +65,7 @@ def test_gaps_python_replay(spark, con):
 
 
 def test_mix_shift_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5pp import ORACLES5PP, TEXT5PP
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5PP, TEXTOPS as TEXT5PP
 
     assert_match(
         TEXT5PP["mix_shift"](spark, SF),
@@ -75,7 +76,7 @@ def test_mix_shift_oracle(spark, con):
 
 
 def test_mix_shift_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5pp import TEXT5PP
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5PP
 
     seg: dict = {}
     for et, day, v in con.sql(

@@ -25,7 +25,7 @@ def con():
 
 
 def test_data_quality_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5q import ORACLES5Q, TEXT5Q
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5Q, TEXTOPS as TEXT5Q
 
     assert_match(
         TEXT5Q["data_quality_checks"](spark, SF),
@@ -37,7 +37,7 @@ def test_data_quality_oracle(spark, con):
 
 def test_data_quality_clean_fixture_passes(spark):
     """The shipped TPC-H-ish data satisfies all five contracts."""
-    from hand_index_spark.entry_queries_r5q import TEXT5Q
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5Q
 
     rows = TEXT5Q["data_quality_checks"](spark, SF).collect()
     assert len(rows) == 5
@@ -82,7 +82,7 @@ def test_data_quality_detects_seeded_violations(spark, tmp_path):
 
 
 def test_column_entropy_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5q import ORACLES5Q, TEXT5Q
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5Q, TEXTOPS as TEXT5Q
 
     assert_match(
         TEXT5Q["column_entropy"](spark, SF), ORACLES5Q["column_entropy"],
@@ -94,7 +94,7 @@ def test_column_entropy_python_replay(spark, con):
     """Replay the quantized-term entropy in python; h_micro must match
     exactly and approximate the true Shannon entropy within the
     quantization error (~1e-6 * n_distinct)."""
-    from hand_index_spark.entry_queries_r5q import TEXT5Q
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5Q
 
     rows = {r.col_name: r for r in TEXT5Q["column_entropy"](spark, SF).collect()}
     for col_name, table, col in (

@@ -18,7 +18,7 @@ def con():
 
 
 def test_hex_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5qq import GEO5QQ, ORACLES5QQ
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5QQ, ORACLES as ORACLES5QQ
 
     assert_match(
         GEO5QQ["hex_bin"](spark, SF),
@@ -29,7 +29,8 @@ def test_hex_oracle(spark, con):
 
 
 def test_hex_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5qq import _HEX_H, _HEX_W, GEO5QQ
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5QQ
+    from hand_index_spark.entry_queries_r5qq import _HEX_H, _HEX_W
 
     def assign(x, y):
         best = None
@@ -69,7 +70,7 @@ def test_hex_python_replay(spark, con):
 
 
 def test_latency_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5qq import ORACLES5QQ, TEXT5QQ
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5QQ, TEXTOPS as TEXT5QQ
 
     assert_match(
         TEXT5QQ["latency_histogram"](spark, SF),
@@ -80,7 +81,7 @@ def test_latency_oracle(spark, con):
 
 
 def test_latency_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5qq import TEXT5QQ
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5QQ
 
     seqs: dict = {}
     for et, us in con.sql(

@@ -18,7 +18,7 @@ def con():
 
 
 def test_basket_lift_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5r import ORACLES5R, TEXT5R
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5R, TEXTOPS as TEXT5R
 
     assert_match(
         TEXT5R["basket_lift"](spark, SF), ORACLES5R["basket_lift"], con,
@@ -27,7 +27,7 @@ def test_basket_lift_oracle(spark, con):
 
 
 def test_basket_lift_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5r import TEXT5R
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5R
 
     baskets: dict = {}
     for uid, et in con.sql(
@@ -58,7 +58,7 @@ def test_basket_lift_python_replay(spark, con):
 
 
 def test_concentration_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5r import ORACLES5R, TEXT5R
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5R, TEXTOPS as TEXT5R
 
     assert_match(
         TEXT5R["concentration_metrics"](spark, SF),
@@ -69,7 +69,7 @@ def test_concentration_oracle(spark, con):
 
 
 def test_concentration_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5r import TEXT5R
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5R
 
     counts = sorted(
         c for (c,) in con.sql(

@@ -18,7 +18,7 @@ def con():
 
 
 def test_kwic_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5rr import ORACLES5RR, TEXT5RR
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5RR, TEXTOPS as TEXT5RR
 
     assert_match(
         TEXT5RR["kwic_concordance"](spark, SF),
@@ -29,11 +29,8 @@ def test_kwic_oracle(spark, con):
 
 
 def test_kwic_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5rr import (
-        _KWIC_CTX,
-        _KWIC_TERM,
-        TEXT5RR,
-    )
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5RR
+    from hand_index_spark.entry_queries_r5rr import _KWIC_CTX, _KWIC_TERM
 
     t, C, L = _KWIC_TERM, _KWIC_CTX, len(_KWIC_TERM)
     expect = {}
@@ -66,7 +63,7 @@ def test_kwic_python_replay(spark, con):
 
 
 def test_feature_hashing_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5rr import ORACLES5RR, TEXT5RR
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5RR, TEXTOPS as TEXT5RR
 
     assert_match(
         TEXT5RR["feature_hashing"](spark, SF),
@@ -77,7 +74,8 @@ def test_feature_hashing_oracle(spark, con):
 
 
 def test_feature_hashing_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5rr import _FH_DIMS, TEXT5RR
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5RR
+    from hand_index_spark.entry_queries_r5rr import _FH_DIMS
 
     def dim(tok):
         return (len(tok) * 31 + ord(tok[0]) * 7 + ord(tok[-1])) % _FH_DIMS

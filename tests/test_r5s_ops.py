@@ -19,7 +19,7 @@ def con():
 
 
 def test_quantile_sketch_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5s import ORACLES5S, TEXT5S
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5S, TEXTOPS as TEXT5S
 
     assert_match(
         TEXT5S["quantile_sketch"](spark, SF), ORACLES5S["quantile_sketch"],
@@ -31,7 +31,8 @@ def test_quantile_sketch_error_bound_and_replay(spark, con):
     """Estimate is an upper bound within one bin width of the exact
     nearest-rank quantile (the sketch's guarantee), and both sides
     replay exactly in python."""
-    from hand_index_spark.entry_queries_r5s import _QS_PCTS, _QS_W, TEXT5S
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5S
+    from hand_index_spark.entry_queries_r5s import _QS_PCTS, _QS_W
 
     series: dict = {}
     for et, cents in con.sql(
@@ -65,7 +66,7 @@ def test_quantile_sketch_error_bound_and_replay(spark, con):
 
 
 def test_time_to_convert_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5s import ORACLES5S, TEXT5S
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5S, TEXTOPS as TEXT5S
 
     assert_match(
         TEXT5S["time_to_convert"](spark, SF), ORACLES5S["time_to_convert"],
@@ -74,7 +75,7 @@ def test_time_to_convert_oracle(spark, con):
 
 
 def test_time_to_convert_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5s import TEXT5S
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5S
 
     firsts: dict = {}
     for uid, et, us in con.sql(

@@ -22,7 +22,7 @@ def con():
 
 
 def test_gdpr_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5ss import GEO5SS, ORACLES5SS
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5SS, ORACLES as ORACLES5SS
 
     assert_match(
         GEO5SS["gdpr_forget"](spark, SF),
@@ -33,7 +33,8 @@ def test_gdpr_oracle(spark, con):
 
 
 def test_gdpr_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5ss import _FORGET_USER, GEO5SS
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5SS
+    from hand_index_spark.entry_queries_r5ss import _FORGET_USER
 
     after: dict = {}
     n_victim = 0
@@ -83,7 +84,7 @@ def test_delete_preserves_column_order(spark, tmp_path):
 
 
 def test_star_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5ss import ORACLES5SS, TEXT5SS
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5SS, TEXTOPS as TEXT5SS
 
     assert_match(
         TEXT5SS["star_revenue_rollup"](spark, SF),
@@ -94,7 +95,7 @@ def test_star_oracle(spark, con):
 
 
 def test_star_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5ss import TEXT5SS
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5SS
 
     rows = {(r.region, r.nation): r
             for r in TEXT5SS["star_revenue_rollup"](spark, SF).collect()}

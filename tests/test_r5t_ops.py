@@ -21,7 +21,7 @@ def con():
 
 
 def test_readability_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5t import ORACLES5T, TEXT5T
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5T, TEXTOPS as TEXT5T
 
     assert_match(
         TEXT5T["readability_scores"](spark, SF),
@@ -32,7 +32,7 @@ def test_readability_oracle(spark, con):
 
 
 def test_readability_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5t import TEXT5T
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5T
 
     rows = {r.doc_id: r for r in TEXT5T["readability_scores"](spark, SF).collect()}
     for doc_id, text in con.sql(
@@ -55,7 +55,7 @@ def test_readability_python_replay(spark, con):
 
 
 def test_fertility_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5t import ORACLES5T, TEXT5T
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5T, TEXTOPS as TEXT5T
 
     assert_match(
         TEXT5T["tokenizer_fertility"](spark, SF),
@@ -70,8 +70,8 @@ def test_fertility_python_replay(spark, con):
     and sit in (0, 1e6] per lang x (BPE can only shrink the initial
     character tokenization, and tokens >= words is NOT guaranteed —
     but tokens >= 1 per doc is, so the ratio is positive)."""
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5T
     from hand_index_spark.entry_queries_r5b import _BPE_MERGES
-    from hand_index_spark.entry_queries_r5t import TEXT5T
 
     OPEN, CLOSE = "\x1e", "\x1f"
     agg: dict = {}

@@ -44,7 +44,7 @@ def test_bdays_kernel():
 
 
 def test_business_days_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5tt import ORACLES5TT, TEXT5TT
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5TT, TEXTOPS as TEXT5TT
 
     assert_match(
         TEXT5TT["business_days"](spark, SF),
@@ -55,7 +55,7 @@ def test_business_days_oracle(spark, con):
 
 
 def test_business_days_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5tt import TEXT5TT
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5TT
 
     od = dict(con.sql(
         "SELECT o_orderkey, epoch_us(o_orderdate) // 86400000000"
@@ -86,7 +86,7 @@ def test_business_days_python_replay(spark, con):
 
 
 def test_heatmap_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5tt import ORACLES5TT, TEXT5TT
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5TT, TEXTOPS as TEXT5TT
 
     assert_match(
         TEXT5TT["dow_hour_heatmap"](spark, SF),
@@ -97,7 +97,7 @@ def test_heatmap_oracle(spark, con):
 
 
 def test_heatmap_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5tt import TEXT5TT
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5TT
 
     counts: dict = {}
     n = 0

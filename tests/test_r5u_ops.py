@@ -20,7 +20,7 @@ def con():
 
 
 def test_linear_trend_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5u import ORACLES5U, TEXT5U
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5U, TEXTOPS as TEXT5U
 
     assert_match(
         TEXT5U["linear_trend"](spark, SF),
@@ -31,7 +31,7 @@ def test_linear_trend_oracle(spark, con):
 
 
 def test_linear_trend_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5u import TEXT5U
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5U
 
     moments: dict = {}
     for et, us, v in con.sql(
@@ -69,7 +69,7 @@ def test_linear_trend_python_replay(spark, con):
 
 
 def test_benford_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5u import ORACLES5U, TEXT5U
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5U, TEXTOPS as TEXT5U
 
     assert_match(
         TEXT5U["benford_digits"](spark, SF),
@@ -80,7 +80,8 @@ def test_benford_oracle(spark, con):
 
 
 def test_benford_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5u import _BENFORD_PPM, TEXT5U
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5U
+    from hand_index_spark.entry_queries_r5u import _BENFORD_PPM
 
     counts = [0] * 10
     total = 0

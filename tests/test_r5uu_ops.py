@@ -20,7 +20,7 @@ def con():
 
 
 def test_spc_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5uu import ORACLES5UU, TEXT5UU
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5UU, TEXTOPS as TEXT5UU
 
     assert_match(
         TEXT5UU["control_chart"](spark, SF),
@@ -31,7 +31,7 @@ def test_spc_oracle(spark, con):
 
 
 def test_spc_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5uu import TEXT5UU
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5UU
 
     daily: dict = {}
     overall: dict = {}
@@ -73,7 +73,7 @@ def test_spc_python_replay(spark, con):
 
 
 def test_winsor_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5uu import ORACLES5UU, TEXT5UU
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5UU, TEXTOPS as TEXT5UU
 
     assert_match(
         TEXT5UU["winsorized_mean"](spark, SF),
@@ -84,7 +84,7 @@ def test_winsor_oracle(spark, con):
 
 
 def test_winsor_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5uu import TEXT5UU
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5UU
 
     vals: dict = {}
     for et, v in con.sql(

@@ -20,7 +20,7 @@ def con():
 
 
 def test_longest_streak_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5v import ORACLES5V, TEXT5V
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5V, TEXTOPS as TEXT5V
 
     assert_match(
         TEXT5V["longest_streak"](spark, SF),
@@ -31,7 +31,7 @@ def test_longest_streak_oracle(spark, con):
 
 
 def test_longest_streak_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5v import TEXT5V
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5V
 
     by_user: dict = {}
     for u, us in con.sql("SELECT user_id, epoch_us(ts) FROM events").fetchall():
@@ -59,7 +59,7 @@ def test_longest_streak_python_replay(spark, con):
 
 
 def test_chisq_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5v import ORACLES5V, TEXT5V
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5V, TEXTOPS as TEXT5V
 
     assert_match(
         TEXT5V["chisq_independence"](spark, SF),
@@ -70,7 +70,7 @@ def test_chisq_oracle(spark, con):
 
 
 def test_chisq_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5v import TEXT5V
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5V
 
     obs: dict = {}
     r_tot: dict = {}

@@ -20,7 +20,7 @@ def con():
 
 
 def test_cidr_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5vv import ORACLES5VV, TEXT5VV
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5VV, TEXTOPS as TEXT5VV
 
     assert_match(
         TEXT5VV["cidr_match"](spark, SF),
@@ -31,7 +31,8 @@ def test_cidr_oracle(spark, con):
 
 
 def test_cidr_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5vv import _cidr_rows, TEXT5VV
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5VV
+    from hand_index_spark.entry_queries_r5vv import _cidr_rows
 
     blocks = _cidr_rows()
     agg: dict = {}
@@ -65,7 +66,7 @@ def test_cidr_python_replay(spark, con):
 
 
 def test_abc_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5vv import ORACLES5VV, TEXT5VV
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5VV, TEXTOPS as TEXT5VV
 
     assert_match(
         TEXT5VV["abc_classification"](spark, SF),
@@ -76,7 +77,7 @@ def test_abc_oracle(spark, con):
 
 
 def test_abc_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5vv import TEXT5VV
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5VV
 
     rev: dict = {}
     for pk, price in con.sql(

@@ -20,7 +20,7 @@ def con():
 
 
 def test_kendall_tau_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5w import ORACLES5W, TEXT5W
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5W, TEXTOPS as TEXT5W
 
     assert_match(
         TEXT5W["kendall_tau"](spark, SF),
@@ -31,7 +31,8 @@ def test_kendall_tau_oracle(spark, con):
 
 
 def test_kendall_tau_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5w import _TAU_K, TEXT5W
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5W
+    from hand_index_spark.entry_queries_r5w import _TAU_K
 
     docs: dict = {}
     for lang, doc_id, text in con.sql(
@@ -66,7 +67,7 @@ def test_kendall_tau_python_replay(spark, con):
 
 
 def test_holt_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5w import ORACLES5W, TEXT5W
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5W, TEXTOPS as TEXT5W
 
     assert_match(
         TEXT5W["holt_forecast"](spark, SF),
@@ -77,7 +78,7 @@ def test_holt_oracle(spark, con):
 
 
 def test_holt_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5w import TEXT5W
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5W
 
     daily: dict = {}
     for et, us, v in con.sql(

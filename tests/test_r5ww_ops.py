@@ -20,7 +20,7 @@ def con():
 
 
 def test_copresence_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5ww import GEO5WW, ORACLES5WW
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5WW, ORACLES as ORACLES5WW
 
     assert_match(
         GEO5WW["copresence_pairs"](spark, SF),
@@ -38,7 +38,8 @@ def _tdiv(a, b):
 
 
 def test_copresence_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5ww import _CP_CELL, GEO5WW
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5WW
+    from hand_index_spark.entry_queries_r5ww import _CP_CELL
 
     cells: dict = {}
     for u, eid, us in con.sql(
@@ -64,7 +65,7 @@ def test_copresence_python_replay(spark, con):
 
 
 def test_qt_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5ww import ORACLES5WW, TEXT5WW
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5WW, TEXTOPS as TEXT5WW
 
     assert_match(
         TEXT5WW["quantile_transform"](spark, SF),
@@ -75,7 +76,7 @@ def test_qt_oracle(spark, con):
 
 
 def test_qt_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5ww import TEXT5WW
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5WW
 
     groups: dict = {}
     for eid, et, v in con.sql(

@@ -42,7 +42,7 @@ def _dtw(a, b):
 
 
 def test_dtw_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5x import ORACLES5X, TEXT5X
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5X, TEXTOPS as TEXT5X
 
     assert_match(
         TEXT5X["dtw_distance"](spark, SF),
@@ -53,7 +53,7 @@ def test_dtw_oracle(spark, con):
 
 
 def test_dtw_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5x import TEXT5X
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5X
 
     daily = _daily(con)
     series: dict = {}
@@ -79,7 +79,7 @@ def test_dtw_python_replay(spark, con):
 
 
 def test_zscore_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5x import ORACLES5X, TEXT5X
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5X, TEXTOPS as TEXT5X
 
     assert_match(
         TEXT5X["zscore_normalize"](spark, SF),
@@ -90,7 +90,7 @@ def test_zscore_oracle(spark, con):
 
 
 def test_zscore_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5x import TEXT5X
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5X
 
     vals: dict = {}
     for eid, et, v in con.sql(

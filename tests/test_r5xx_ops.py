@@ -18,7 +18,7 @@ def con():
 
 
 def test_corridor_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5xx import GEO5XX, ORACLES5XX
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5XX, ORACLES as ORACLES5XX
 
     assert_match(
         GEO5XX["corridor_membership"](spark, SF),
@@ -29,12 +29,8 @@ def test_corridor_oracle(spark, con):
 
 
 def test_corridor_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5xx import (
-        _COR_D2,
-        _COR_M,
-        _COR_MOD,
-        GEO5XX,
-    )
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5XX
+    from hand_index_spark.entry_queries_r5xx import _COR_D2, _COR_M, _COR_MOD
 
     segs = []
     for k in range(1, _COR_M):
@@ -79,7 +75,7 @@ def test_corridor_python_replay(spark, con):
 
 
 def test_nvr_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5xx import ORACLES5XX, TEXT5XX
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5XX, TEXTOPS as TEXT5XX
 
     assert_match(
         TEXT5XX["new_vs_returning"](spark, SF),
@@ -90,7 +86,7 @@ def test_nvr_oracle(spark, con):
 
 
 def test_nvr_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5xx import TEXT5XX
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5XX
 
     by_user: dict = {}
     for u, us in con.sql(

@@ -19,7 +19,7 @@ def con():
 
 
 def test_areal_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5y import GEO5Y, ORACLES5Y
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5Y, ORACLES as ORACLES5Y
 
     assert_match(
         GEO5Y["areal_interpolate"](spark, SF),
@@ -30,7 +30,7 @@ def test_areal_oracle(spark, con):
 
 
 def test_areal_python_replay_and_conservation(spark, con):
-    from hand_index_spark.entry_queries_r5y import GEO5Y
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5Y
 
     tiles: dict = {}
     total_value_milli = 0
@@ -83,7 +83,7 @@ def _frechet(a, b):
 
 
 def test_frechet_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5y import GEO5Y, ORACLES5Y
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5Y, ORACLES as ORACLES5Y
 
     assert_match(
         GEO5Y["frechet_distance"](spark, SF),
@@ -94,7 +94,8 @@ def test_frechet_oracle(spark, con):
 
 
 def test_frechet_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5y import _FR_CAP, _FR_M, GEO5Y
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5Y
+    from hand_index_spark.entry_queries_r5y import _FR_CAP, _FR_M
 
     b = [((40000 + (j * 977) % 3000), ((j * 1409) % 4000 - 2000))
          for j in range(1, _FR_M + 1)]

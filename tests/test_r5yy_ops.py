@@ -20,7 +20,7 @@ def con():
 
 
 def test_ohlc_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5yy import ORACLES5YY, TEXT5YY
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5YY, TEXTOPS as TEXT5YY
 
     assert_match(
         TEXT5YY["ohlc_candles"](spark, SF),
@@ -31,7 +31,7 @@ def test_ohlc_oracle(spark, con):
 
 
 def test_ohlc_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5yy import TEXT5YY
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5YY
 
     candles: dict = {}
     for et, us, eid, v in con.sql(
@@ -63,7 +63,7 @@ def test_ohlc_python_replay(spark, con):
 
 
 def test_movers_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5yy import ORACLES5YY, TEXT5YY
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5YY, TEXTOPS as TEXT5YY
 
     assert_match(
         TEXT5YY["top_movers"](spark, SF),
@@ -74,7 +74,8 @@ def test_movers_oracle(spark, con):
 
 
 def test_movers_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5yy import _MOVERS_K, TEXT5YY
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5YY
+    from hand_index_spark.entry_queries_r5yy import _MOVERS_K
 
     daily: dict = {}
     for et, us, v in con.sql(

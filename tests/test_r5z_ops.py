@@ -20,7 +20,7 @@ def con():
 
 
 def test_toposort_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5z import ORACLES5Z, TEXT5Z
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5Z, TEXTOPS as TEXT5Z
 
     assert_match(
         TEXT5Z["toposort_layers"](spark, SF),
@@ -31,7 +31,8 @@ def test_toposort_oracle(spark, con):
 
 
 def test_toposort_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5z import _TOPO_LEVELS, TEXT5Z
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5Z
+    from hand_index_spark.entry_queries_r5z import _TOPO_LEVELS
 
     L = _TOPO_LEVELS
     n = con.sql("SELECT count(*) FROM documents").fetchone()[0]
@@ -62,7 +63,7 @@ def test_toposort_python_replay(spark, con):
 
 
 def test_psi_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5z import ORACLES5Z, TEXT5Z
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5Z, TEXTOPS as TEXT5Z
 
     assert_match(
         TEXT5Z["psi_drift"](spark, SF),
@@ -73,7 +74,7 @@ def test_psi_oracle(spark, con):
 
 
 def test_psi_python_replay(spark, con):
-    from hand_index_spark.entry_queries_r5z import TEXT5Z
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5Z
 
     vals: dict = {}
     for et, v in con.sql(

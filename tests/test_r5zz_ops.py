@@ -20,7 +20,7 @@ def con():
 
 
 def test_parity_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5zz import GEO5ZZ, ORACLES5ZZ
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5ZZ, ORACLES as ORACLES5ZZ
 
     assert_match(
         GEO5ZZ["assign_path_parity"](spark, SF),
@@ -33,7 +33,7 @@ def test_parity_oracle(spark, con):
 def test_parity_invariant(spark, con):
     """The point of the query: BOTH engine plans agree on every page
     — zero mismatches, and the per-method counts cover the corpus."""
-    from hand_index_spark.entry_queries_r5zz import GEO5ZZ
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5ZZ
 
     rows = GEO5ZZ["assign_path_parity"](spark, SF).collect()
     assert {r.method for r in rows} <= {"pip", "knn"}
@@ -44,7 +44,7 @@ def test_parity_invariant(spark, con):
 
 
 def test_method_share_oracle(spark, con):
-    from hand_index_spark.entry_queries_r5zz import GEO5ZZ, ORACLES5ZZ
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5ZZ, ORACLES as ORACLES5ZZ
 
     assert_match(
         GEO5ZZ["method_share"](spark, SF),
@@ -55,7 +55,7 @@ def test_method_share_oracle(spark, con):
 
 
 def test_method_share_properties(spark, con):
-    from hand_index_spark.entry_queries_r5zz import GEO5ZZ
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5ZZ
 
     rows = {r.method: r for r in GEO5ZZ["method_share"](spark, SF).collect()}
     assert set(rows) == {"pip", "knn"}

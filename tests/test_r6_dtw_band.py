@@ -1,7 +1,7 @@
 """Sakoe-Chiba banded DTW (VERDICT r5 item 6): equals the exact fold
 inside the band's validity regime, and bounds the computed cell count
-so long series stay tractable. The declared dtw_distance query keeps
-the exact inline fold — this operator is the documented scale path."""
+so long series stay tractable. The declared dtw_distance query runs
+this operator's exact fold; the band is the documented scale path."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from hand_index_spark.operators.dtw import dtw_dp_last
+from hand_index_spark.operators.dtw import BIG, dtw_dp_last
 from hand_index_spark.session import get_spark
 
 
@@ -96,3 +96,45 @@ def test_band_bounds_cell_count_at_300(spark):
     # 300*17 vs 300*300 cells per key -> at least a 2x wall win even
     # with per-row overheads (typically ~8-10x; loose bound for CI)
     assert t_band < t_exact / 2, (t_exact, t_band)
+
+
+def _pairs_df(spark, pairs):
+    return spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)],
+        "id INT, a ARRAY<BIGINT>, b ARRAY<BIGINT>",
+    )
+
+
+def test_empty_series(spark):
+    """An empty side has no alignment (BIG); two empty series cost 0.
+    Neither fold may iterate sequence(1, 0) = [1, 0] over an empty side."""
+    pairs = [([], [3, 4]), ([3, 4], []), ([], [])]
+    rows = (
+        _pairs_df(spark, pairs)
+        .select(
+            "id",
+            dtw_dp_last("a", "b").alias("exact"),
+            dtw_dp_last("a", "b", band=1).alias("banded"),
+        )
+        .orderBy("id")
+        .collect()
+    )
+    assert [(r["exact"], r["banded"]) for r in rows] == [(BIG, BIG), (BIG, BIG), (0, 0)]
+    for r, (a, b) in zip(rows, pairs):
+        assert r["exact"] == _dtw_py(a, b) and r["banded"] == _dtw_py(a, b, band=1)
+
+
+def test_band_centre_rounds_half_to_even(spark):
+    """n != m with i*m/n landing on .5: the centre rounds half-to-even as
+    Python's round() does. n=4, m=2, w=0: row 1's centre 0.5 -> 0, an
+    empty corridor (half-up would compute j=1 and give 19). n=4, m=6,
+    w=1: row 3's centre 4.5 -> 4 (half-up gives 21)."""
+    pairs = [([3, 1, 4, 1], [5, 9], 0), ([1, 7, 0, 6], [6, 9, 0, 7, 4, 3], 1)]
+    for a, b, w in pairs:
+        got = (
+            _pairs_df(spark, [(a, b)])
+            .select(dtw_dp_last("a", "b", band=w).alias("d"))
+            .first()["d"]
+        )
+        assert got == _dtw_py(a, b, band=w), (a, b, w)
+    assert [_dtw_py(a, b, band=w) for a, b, w in pairs] == [BIG + 8, 19]

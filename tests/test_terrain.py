@@ -211,7 +211,7 @@ def test_contours_closed_loop_around_peak(spark):
 
 
 def test_terrain_plans_are_scale_safe(spark):
-    from hand_index_spark.entry_queries_r5d import GEO5D, TEXT5D
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5D, TEXTOPS as TEXT5D
 
     for key in ("hillshade_stats", "raster_overviews", "contour_segments",
                 "weighted_sample_mix", "text_chunks"):
@@ -248,7 +248,11 @@ def test_terrain_plans_are_scale_safe(spark):
     ],
 )
 def test_oracle_parity(spark, con, key):
-    from hand_index_spark.entry_queries_r5d import GEO5D, ORACLES5D, TEXT5D
+    from hand_index_spark.entry_queries import (
+        GEO_QUERIES as GEO5D,
+        ORACLES as ORACLES5D,
+        TEXTOPS as TEXT5D,
+    )
 
     fn = GEO5D.get(key) or TEXT5D[key]
     assert_match(fn(spark, SF), ORACLES5D[key], con, key)
@@ -416,14 +420,14 @@ def test_snap_candidate_grid_finds_cross_cell_neighbors(spark):
 
 
 def test_snap_oracle_parity(spark, con):
-    from hand_index_spark.entry_queries_r5d import GEO5D, ORACLES5D
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5D, ORACLES as ORACLES5D
 
     assert_match(GEO5D["snap_points"](spark, SF), ORACLES5D["snap_points"],
                  con, "snap_points")
 
 
 def test_snap_plan_is_scale_safe(spark):
-    from hand_index_spark.entry_queries_r5d import GEO5D
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5D
 
     plan = GEO5D["snap_points"](spark, SF)._jdf.queryExecution() \
         .executedPlan().toString()
@@ -477,14 +481,14 @@ def test_spherical_area_orientation_and_subdivision(spark):
 
 
 def test_geodesic_area_oracle_parity(spark, con):
-    from hand_index_spark.entry_queries_r5d import GEO5D, ORACLES5D
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5D, ORACLES as ORACLES5D
 
     assert_match(GEO5D["geodesic_area"](spark, SF), ORACLES5D["geodesic_area"],
                  con, "geodesic_area")
 
 
 def test_geodesic_area_plan_join_free(spark):
-    from hand_index_spark.entry_queries_r5d import GEO5D
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5D
 
     plan = GEO5D["geodesic_area"](spark, SF)._jdf.queryExecution() \
         .executedPlan().toString()
@@ -497,14 +501,14 @@ def test_geodesic_area_plan_join_free(spark):
 
 
 def test_stream_topk_oracle_parity(spark, con):
-    from hand_index_spark.entry_queries_r5d import ORACLES5D, TEXT5D
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5D, TEXTOPS as TEXT5D
 
     assert_match(TEXT5D["stream_topk"](spark, SF), ORACLES5D["stream_topk"],
                  con, "stream_topk")
 
 
 def test_stream_topk_rank_semantics(spark):
-    from hand_index_spark.entry_queries_r5d import TEXT5D
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5D
 
     rows = TEXT5D["stream_topk"](spark, SF).collect()
     by_day: dict = {}
@@ -523,7 +527,7 @@ def test_stream_topk_rank_semantics(spark):
 
 
 def test_dem_hillshade_oracle_parity(spark, con):
-    from hand_index_spark.entry_queries_r5d import ORACLES5D, TEXT5D
+    from hand_index_spark.entry_queries import ORACLES as ORACLES5D, TEXTOPS as TEXT5D
 
     assert_match(TEXT5D["dem_hillshade_stats"](spark, SF),
                  ORACLES5D["dem_hillshade_stats"], con, "dem_hillshade_stats")
@@ -544,7 +548,7 @@ def test_dem_hillshade_matches_grid_operator(spark):
     max_s2 = max(r["slope_sq"] for r in grid)
     steep = sum(1 for r in grid if r["slope_sq"] >= 512)
 
-    from hand_index_spark.entry_queries_r5d import TEXT5D
+    from hand_index_spark.entry_queries import TEXTOPS as TEXT5D
     out = {r["doc_id"]: r
            for r in TEXT5D["dem_hillshade_stats"](spark, SF).collect()}
     assert out[did]["max_slope_sq"] == max_s2
@@ -606,7 +610,7 @@ def test_resample_polyline_bruteforce(spark):
 
 
 def test_resample_oracle_parity(spark, con):
-    from hand_index_spark.entry_queries_r5d import GEO5D, ORACLES5D
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5D, ORACLES as ORACLES5D
 
     assert_match(GEO5D["resample_traj"](spark, SF), ORACLES5D["resample_traj"],
                  con, "resample_traj")
@@ -672,7 +676,7 @@ def test_contour_loops_ramp_is_open_polyline(spark):
 
 
 def test_contour_loops_oracle_parity(spark, con):
-    from hand_index_spark.entry_queries_r5d import GEO5D, ORACLES5D
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5D, ORACLES as ORACLES5D
 
     assert_match(GEO5D["contour_loops"](spark, SF), ORACLES5D["contour_loops"],
                  con, "contour_loops")
@@ -727,7 +731,7 @@ def test_viewshed_eight_rays_partition(spark):
 
 
 def test_viewshed_oracle_parity(spark, con):
-    from hand_index_spark.entry_queries_r5d import GEO5D, ORACLES5D
+    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5D, ORACLES as ORACLES5D
 
     assert_match(GEO5D["ray_viewshed"](spark, SF), ORACLES5D["ray_viewshed"],
                  con, "ray_viewshed")
