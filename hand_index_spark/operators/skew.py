@@ -22,6 +22,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# fixed sample seed: the same input gives the same hot list, and so
+# the same salted file layout, on every run
+SAMPLE_SEED = 0
+
 
 def detect_hot_cells(
     df: DataFrame,
@@ -29,10 +33,17 @@ def detect_hot_cells(
     quantile: float = 0.99,
     sample_fraction: float | None = None,
 ) -> list[int]:
-    """Cells whose row count exceeds the ``quantile`` of per-cell counts."""
-    src = df.sample(sample_fraction) if sample_fraction else df
+    """Cells whose row count exceeds the ``quantile`` of per-cell counts.
+
+    The sketch's rank error is a tenth of the tail above the cut: Spark
+    answers any quantile >= 1 - error with the maximum, so an error of
+    0.01 at quantile 0.99 cut at the max and flagged no cell at all."""
+    src = df
+    if sample_fraction:
+        # fraction by keyword: PySpark's sample(f, seed=s) drops the seed
+        src = df.sample(fraction=sample_fraction, seed=SAMPLE_SEED)
     counts = src.groupBy(cell_col).agg(F.count(F.lit(1)).alias("n"))
-    cut = counts.approxQuantile("n", [quantile], 0.01)[0]
+    cut = counts.approxQuantile("n", [quantile], (1.0 - quantile) / 10)[0]
     return [
         r[0]
         for r in counts.filter(F.col("n") > F.lit(cut)).select(cell_col).collect()
@@ -48,7 +59,8 @@ def salted_repartition(
     hot_cells: list[int] | None = None,
 ) -> DataFrame:
     """Explicit shuffle on (cell, salt): hot cells fan out over
-    ``salt_buckets`` partitions, cold cells stay co-located (salt 0)."""
+    ``salt_buckets`` partitions, cold cells stay co-located (salt 0).
+    ``hot_cells=None`` salts every cell; ``[]`` salts none."""
     salt = F.pmod(F.xxhash64(F.col(salt_key)), F.lit(salt_buckets))
     if hot_cells is not None:
         salt = F.when(F.col(cell_col).isin(hot_cells), salt).otherwise(F.lit(0))

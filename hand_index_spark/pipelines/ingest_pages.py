@@ -76,7 +76,7 @@ def ingest_pages(
             cell_col=PARTITION_COL,
             salt_key="url",
             salt_buckets=salt_buckets,
-            hot_cells=hot or None,
+            hot_cells=hot,
         )
         snaps["assign"] = asg_table.write(
             df,

@@ -241,8 +241,8 @@ def synth_catchments(spark: SparkSession, n: int, partition_res: int) -> DataFra
     the exact column contract of pipelines/build_index.build_catchments
     (WKB 5070 geometry, coords_flat, bbox struct, h3_index partition
     key, branch_path). mapInPandas generator — scales with the range.
-    Used by scripts/roi_stress.py and bench.py's roi_query_600k
-    headline (datagen, not engine)."""
+    Used by bench.py's roi_query_600k headline (datagen, not
+    engine)."""
     import pandas as pd
 
     from ..geo import cells as h3lite

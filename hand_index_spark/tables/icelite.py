@@ -355,12 +355,22 @@ class IceliteTable:
         paths = (cur or {}).get("data_paths")
         if not paths:  # pre-manifest table or never written: legacy layout
             return spark.read.parquet(self.data_dir)
-        dfs = [
-            spark.read.parquet(os.path.join(self.data_dir, p)) for p in paths
-        ]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
+        return self._read_dirs(spark, paths)
+
+    def _read_dirs(self, spark: SparkSession, dirs, files=None) -> DataFrame:
+        """Union by name (absent columns null) of the manifest write
+        dirs ``dirs``, in order. With ``files`` ({dir: [path]}) only
+        those files of each dir are scanned, the dir pinned as basePath
+        so leaf-file reads keep their hive partition columns."""
+        out = None
+        for d in dirs:
+            base = os.path.join(self.data_dir, d)
+            df = (
+                spark.read.option("basePath", base).parquet(*files[d])
+                if files
+                else spark.read.parquet(base)
+            )
+            out = df if out is None else out.unionByName(df, allowMissingColumns=True)
         return out
 
     def read_branch(self, spark: SparkSession, branch: str) -> DataFrame:
@@ -370,13 +380,7 @@ class IceliteTable:
         paths = (snap or {}).get("data_paths")
         if not paths:
             return spark.read.parquet(self.data_dir)
-        dfs = [
-            spark.read.parquet(os.path.join(self.data_dir, p)) for p in paths
-        ]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        return self._read_dirs(spark, paths)
 
     # -------------------------------------------------- write-audit-publish
 
@@ -472,13 +476,7 @@ class IceliteTable:
         new = [p for p in cur_paths if p not in base_paths]
         if not new:
             return self.read(spark).filter(F.lit(False))
-        dfs = [
-            spark.read.parquet(os.path.join(self.data_dir, p)) for p in new
-        ]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        return self._read_dirs(spark, new)
 
     def lineage(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.lineage_dir)
@@ -548,25 +546,17 @@ class IceliteTable:
         return self._read_files(spark, files, residual)
 
     def _read_files(self, spark: SparkSession, files: list[str], residual):
-        """Scan only ``files`` (+ the residual filter). Leaf-file reads
-        lose hive partition columns unless basePath is pinned, so group
-        by owning write dir and union (dirs are few)."""
+        """Scan only ``files`` (+ the residual filter), grouped by
+        owning write dir (dirs are few)."""
         if not files:
             return self.read(spark).filter(F.lit(False))
         by_dir: dict[str, list[str]] = {}
         for f in files:
             p = f[len("file:"):] if f.startswith("file:") else f
             rel = os.path.relpath(p, self.data_dir)
-            wid = rel.split(os.sep)[0]
-            by_dir.setdefault(wid, []).append(p)
-        parts = []
-        for wid, fs in sorted(by_dir.items()):
-            base = os.path.join(self.data_dir, wid)
-            parts.append(spark.read.option("basePath", base).parquet(*sorted(fs)))
-        out = parts[0]
-        for d in parts[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out.filter(residual)
+            by_dir.setdefault(rel.split(os.sep)[0], []).append(p)
+        by_dir = {d: sorted(fs) for d, fs in by_dir.items()}
+        return self._read_dirs(spark, sorted(by_dir), by_dir).filter(residual)
 
     # --------------------------------------------------------- bloom index
 
@@ -631,11 +621,7 @@ class IceliteTable:
         paths = snap.get("data_paths") or []
         if not paths:
             raise ValueError(f"snapshot {snapshot_id} has no data manifest")
-        dfs = [spark.read.parquet(os.path.join(self.data_dir, p)) for p in paths]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        return self._read_dirs(spark, paths)
 
     # ---------------------------------------------------------------- merge
 

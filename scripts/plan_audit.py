@@ -9,7 +9,9 @@ queries and check the plan properties the engine promises:
   hot path),
 - the ROI query's scan carries the partition-pruning predicate.
 
-Writes PLANS.md at the repo root.
+Writes the checks table (one row per check, no plan text) to PLANS.md
+at the repo root, prints each failing query's formatted plan to stderr,
+and exits 1 when any check fails.
 """
 
 from __future__ import annotations
@@ -40,17 +42,15 @@ def main() -> None:
 
     from hand_index_spark.entry_queries import GEO_QUERIES, RELATIONAL, TEXTOPS
 
-    sections = []
     checks = []
 
     def audit(name, fn, expect=(), forbid=()):
         plan = grab(fn(spark, SF))
-        ok = all(e in plan for e in expect) and not any(f in plan for f in forbid)
-        for e in expect:
-            checks.append((name, f"expect {e}", e in plan))
-        for f in forbid:
-            checks.append((name, f"forbid {f}", f not in plan))
-        sections.append((name, plan, ok))
+        rows = [(name, f"expect {e}", e in plan) for e in expect]
+        rows += [(name, f"forbid {f}", f not in plan) for f in forbid]
+        checks.extend(rows)
+        if not all(ok for _, _, ok in rows):
+            print(f"\n== {name}\n{plan}", file=sys.stderr)
 
     # cells encode: must be pure codegen ("[codegen id :" markers in
     # formatted mode), no Python eval
@@ -98,11 +98,10 @@ def main() -> None:
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython", "Scan parquet"),
     )
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT3
 
     audit(
         "dedup_clusters",
-        _TEXT3["dedup_clusters"],
+        TEXTOPS["dedup_clusters"],
         expect=("Scan ExistingRDD",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython", "Scan parquet"),
@@ -161,11 +160,10 @@ def main() -> None:
     )
     # round-4: IVF from the persisted index — same broadcast-NLJ-only-
     # for-centroids contract as ann_ivf_topk, reading icelite tables
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT4
 
     audit(
         "ann_ivf_indexed",
-        _TEXT4["ann_ivf_indexed"],
+        TEXTOPS["ann_ivf_indexed"],
         expect=("BroadcastNestedLoopJoin",),
         forbid=("CartesianProduct", "ArrowEvalPython", "BatchEvalPython"),
     )
@@ -181,7 +179,7 @@ def main() -> None:
     # round-4: HLL sketch — one scan + one tiny groupBy, all codegen
     audit(
         "hll_distinct",
-        _TEXT4["hll_distinct"],
+        TEXTOPS["hll_distinct"],
         expect=("HashAggregate",),
         forbid=("ArrowEvalPython", "BatchEvalPython", "CartesianProduct"),
     )
@@ -189,11 +187,10 @@ def main() -> None:
     # round-5: line-level dedup — two keyed shuffles (chunk counts +
     # doc reassembly) with map-side partial aggregation, no Python, and
     # the chunk-count join must never degrade to a nested loop
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5, TEXTOPS as _TEXT5
 
     audit(
         "line_dedup",
-        _TEXT5["line_dedup"],
+        TEXTOPS["line_dedup"],
         expect=("HashAggregate", "Generate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -202,7 +199,7 @@ def main() -> None:
     # pure Catalyst
     audit(
         "repetition_stats",
-        _TEXT5["repetition_stats"],
+        TEXTOPS["repetition_stats"],
         expect=("Generate", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -210,7 +207,7 @@ def main() -> None:
     # round-5: PII scrub — regex surface stays inside codegen entirely
     audit(
         "pii_scrub",
-        _TEXT5["pii_scrub"],
+        TEXTOPS["pii_scrub"],
         expect=("[codegen id :",),
         forbid=("ArrowEvalPython", "BatchEvalPython"),
     )
@@ -218,7 +215,7 @@ def main() -> None:
     # stage (MapInPandas), stats JVM-side, no shuffle at all
     audit(
         "simplify_ring",
-        _GEO5["simplify_ring"],
+        GEO_QUERIES["simplify_ring"],
         expect=("MapInPandas",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin", "Exchange"),
     )
@@ -226,7 +223,7 @@ def main() -> None:
     # group column (the union aggregate is not decomposable), no joins
     audit(
         "union_overlap",
-        _GEO5["union_overlap"],
+        GEO_QUERIES["union_overlap"],
         expect=("FlatMapGroupsInPandas",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "SortMergeJoin", "ShuffledHashJoin"),
@@ -234,7 +231,7 @@ def main() -> None:
     # round-5: asof with tolerance keeps the no-join union-timeline plan
     audit(
         "asof_join_tolerance",
-        _TEXT5["asof_join_tolerance"],
+        TEXTOPS["asof_join_tolerance"],
         expect=("Window",),
         forbid=("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin",
                 "CartesianProduct", "BroadcastNestedLoopJoin",
@@ -247,14 +244,14 @@ def main() -> None:
     # Python anywhere
     audit(
         "ann_ivfpq",
-        _TEXT5["ann_ivfpq"],
+        TEXTOPS["ann_ivfpq"],
         expect=("BroadcastNestedLoopJoin",),
         forbid=("CartesianProduct", "ArrowEvalPython", "BatchEvalPython"),
     )
     # round-5: PQ/ADC — same contract
     audit(
         "ann_pq_adc",
-        _TEXT5["ann_pq_adc"],
+        TEXTOPS["ann_pq_adc"],
         expect=("HashAggregate",),
         forbid=("CartesianProduct", "ArrowEvalPython", "BatchEvalPython"),
     )
@@ -265,19 +262,19 @@ def main() -> None:
     # contract (checkpointed base, bounded bucket self-join)
     audit(
         "tfidf_topterms",
-        _TEXT5["tfidf_topterms"],
+        TEXTOPS["tfidf_topterms"],
         expect=("Generate", "HashAggregate", "Window"),
         forbid=("CartesianProduct", "ArrowEvalPython", "BatchEvalPython"),
     )
     audit(
         "pmi_bigrams",
-        _TEXT5["pmi_bigrams"],
+        TEXTOPS["pmi_bigrams"],
         expect=("Generate", "HashAggregate", "Window"),
         forbid=("CartesianProduct", "ArrowEvalPython", "BatchEvalPython"),
     )
     audit(
         "containment_pairs",
-        _TEXT5["containment_pairs"],
+        TEXTOPS["containment_pairs"],
         expect=("HashAggregate", "Scan ExistingRDD"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython", "Scan parquet"),
@@ -290,7 +287,7 @@ def main() -> None:
     # queries and the zero-Python/zero-cross forbids still apply here)
     audit(
         "pagerank_links",
-        _TEXT5["pagerank_links"],
+        TEXTOPS["pagerank_links"],
         expect=("Scan ExistingRDD",),
         forbid=("CartesianProduct", "ArrowEvalPython", "BatchEvalPython",
                 "Scan parquet"),
@@ -299,7 +296,7 @@ def main() -> None:
     # sketch (<= d*w rows by construction); no cross joins, no Python
     audit(
         "cms_heavy_hitters",
-        _TEXT5["cms_heavy_hitters"],
+        TEXTOPS["cms_heavy_hitters"],
         expect=("BroadcastHashJoin", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "SortMergeJoin", "ArrowEvalPython", "BatchEvalPython"),
@@ -309,7 +306,7 @@ def main() -> None:
     # on (doc_id, pos+k); term filters must stay pushed, no cross join
     audit(
         "phrase_search",
-        _TEXT5["phrase_search"],
+        TEXTOPS["phrase_search"],
         expect=("Generate", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -318,7 +315,7 @@ def main() -> None:
     # round-5: crawl delta — ONE shuffle join on url, no cross, no Python
     audit(
         "crawl_delta",
-        _TEXT5["crawl_delta"],
+        TEXTOPS["crawl_delta"],
         expect=("HashAggregate",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -327,7 +324,7 @@ def main() -> None:
     # equi-key + startswith residual); longest-prefix pick is one window
     audit(
         "robots_filter",
-        _TEXT5["robots_filter"],
+        TEXTOPS["robots_filter"],
         expect=("BroadcastHashJoin", "Window"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "SortMergeJoin", "ArrowEvalPython", "BatchEvalPython"),
@@ -337,7 +334,7 @@ def main() -> None:
     # + one groupBy; no join at all, no Python
     audit(
         "url_canonicalize",
-        _TEXT5["url_canonicalize"],
+        TEXTOPS["url_canonicalize"],
         expect=("Generate", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin",
                 "BroadcastHashJoin", "ArrowEvalPython", "BatchEvalPython"),
@@ -346,7 +343,7 @@ def main() -> None:
     # round-5: anchor extraction — per-row regex + one groupBy, no join
     audit(
         "anchor_agg",
-        _TEXT5["anchor_agg"],
+        TEXTOPS["anchor_agg"],
         expect=("Generate", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -355,21 +352,21 @@ def main() -> None:
     # source parser): exactly one MapInPandas over the binaryFile scan
     audit(
         "warc_roundtrip",
-        _TEXT5["warc_roundtrip"],
+        TEXTOPS["warc_roundtrip"],
         expect=("MapInPandas",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin"),
     )
     # round-5: template fingerprint + grouped HLL — pure agg shapes
     audit(
         "template_clusters",
-        _TEXT5["template_clusters"],
+        TEXTOPS["template_clusters"],
         expect=("HashAggregate",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin",
                 "BroadcastHashJoin", "ArrowEvalPython", "BatchEvalPython"),
     )
     audit(
         "hll_by_group",
-        _TEXT5["hll_by_group"],
+        TEXTOPS["hll_by_group"],
         expect=("HashAggregate",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -380,7 +377,7 @@ def main() -> None:
     # no Python stage and no nested-loop fallback
     audit(
         "bloom_semi_join",
-        _TEXT5["bloom_semi_join"],
+        TEXTOPS["bloom_semi_join"],
         expect=("xxhash64", "LeftSemi"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -391,22 +388,17 @@ def main() -> None:
     # files' parquet scan (two pruning layers), all JVM-side
     audit(
         "zorder_pruned_read",
-        _TEXT5["zorder_pruned_read"],
+        TEXTOPS["zorder_pruned_read"],
         expect=("PushedFilters: [", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
-    )
-
-    from hand_index_spark.entry_queries import (  # noqa: E402
-        GEO_QUERIES as _GEO5B,
-        TEXTOPS as _TEXT5B,
     )
 
     # distance-band join: ONE cell-key equi-join, exact integer refine —
     # no cross product, no broadcast-nested-loop, no Python stage
     audit(
         "distance_band_join",
-        _GEO5B["distance_band_join"],
+        GEO_QUERIES["distance_band_join"],
         expect=("Join",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -417,7 +409,7 @@ def main() -> None:
     # tiny sf0.01 side, at scale both sides shuffle on the cell key)
     audit(
         "segment_intersect_join",
-        _GEO5B["segment_intersect_join"],
+        GEO_QUERIES["segment_intersect_join"],
         expect=("Join",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -427,7 +419,7 @@ def main() -> None:
     # in this plan means the bracket pairing regressed to a self-join
     audit(
         "gapfill_interpolate",
-        _TEXT5B["gapfill_interpolate"],
+        TEXTOPS["gapfill_interpolate"],
         expect=("Window", "Generate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -437,7 +429,7 @@ def main() -> None:
     # shuffle apart from the scan — no exchange at all in this plan
     audit(
         "bpe_encode",
-        _TEXT5B["bpe_encode"],
+        TEXTOPS["bpe_encode"],
         expect=("[codegen id :",),
         forbid=("Exchange", "ArrowEvalPython", "BatchEvalPython"),
     )
@@ -447,7 +439,7 @@ def main() -> None:
     # avoid), no Python, every level a plain hash aggregate
     audit(
         "cell_pyramid",
-        _GEO5B["cell_pyramid"],
+        GEO_QUERIES["cell_pyramid"],
         expect=("HashAggregate", "Union"),
         forbid=("Expand", "CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -457,7 +449,7 @@ def main() -> None:
     # top-k; never a cross product, never Python
     audit(
         "knn_radius_join",
-        _GEO5B["knn_radius_join"],
+        GEO_QUERIES["knn_radius_join"],
         expect=("ShuffledHashJoin", "Window"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -466,7 +458,7 @@ def main() -> None:
     # geohash: pure codegen encode, no exchange, no Python
     audit(
         "geohash_encode",
-        _GEO5B["geohash_encode"],
+        GEO_QUERIES["geohash_encode"],
         expect=("[codegen id :",),
         forbid=("Exchange", "ArrowEvalPython", "BatchEvalPython"),
     )
@@ -475,7 +467,7 @@ def main() -> None:
     # join (same banding as the distance-band grid, in 1-D)
     audit(
         "interval_overlap_join",
-        _TEXT5B["interval_overlap_join"],
+        TEXTOPS["interval_overlap_join"],
         expect=("ShuffledHashJoin",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -485,21 +477,16 @@ def main() -> None:
     # codegen map work, no exchange, no Python
     audit(
         "consistent_hash_assign",
-        _TEXT5B["consistent_hash_assign"],
+        TEXTOPS["consistent_hash_assign"],
         expect=("[codegen id :",),
         forbid=("Exchange", "ArrowEvalPython", "BatchEvalPython"),
-    )
-
-    from hand_index_spark.entry_queries import (  # noqa: E402
-        GEO_QUERIES as _GEO5C,
-        TEXTOPS as _TEXT5C,
     )
 
     # geodesic band join: lat/lon grid candidates through ONE shuffled
     # hash join on the packed cell key; haversine refine stays codegen
     audit(
         "geodesic_band_join",
-        _GEO5C["geodesic_band_join"],
+        GEO_QUERIES["geodesic_band_join"],
         expect=("ShuffledHashJoin",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -508,7 +495,7 @@ def main() -> None:
     # quadkey: pure codegen encode — no exchange, no Python
     audit(
         "quadkey_encode",
-        _GEO5C["quadkey_encode"],
+        GEO_QUERIES["quadkey_encode"],
         expect=("[codegen id :",),
         forbid=("Exchange", "ArrowEvalPython", "BatchEvalPython"),
     )
@@ -517,7 +504,7 @@ def main() -> None:
     # hash aggregates only, never a cross product, never Python
     audit(
         "triangle_counts",
-        _TEXT5C["triangle_counts"],
+        TEXTOPS["triangle_counts"],
         expect=("Join", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -527,7 +514,7 @@ def main() -> None:
     # a checkpointed frontier (Scan ExistingRDD), no cross product
     audit(
         "sssp_weighted",
-        _TEXT5C["sssp_weighted"],
+        TEXTOPS["sssp_weighted"],
         expect=("HashAggregate", "Scan ExistingRDD"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -536,7 +523,7 @@ def main() -> None:
     # IDW: radius-kNN grid join + ordered-array fold — all JVM-side
     audit(
         "idw_interpolate",
-        _GEO5C["idw_interpolate"],
+        GEO_QUERIES["idw_interpolate"],
         expect=("ShuffledHashJoin",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -548,7 +535,7 @@ def main() -> None:
     # cross product or Python stage is forbidden
     audit(
         "morans_i_grid",
-        _GEO5C["morans_i_grid"],
+        GEO_QUERIES["morans_i_grid"],
         expect=("ShuffledHashJoin",),
         forbid=("CartesianProduct", "ArrowEvalPython", "BatchEvalPython"),
     )
@@ -557,7 +544,7 @@ def main() -> None:
     # map work — Generate with NO exchange, no Python
     audit(
         "sitemap_extract",
-        _TEXT5C["sitemap_extract"],
+        TEXTOPS["sitemap_extract"],
         expect=("Generate",),
         forbid=("Exchange", "ArrowEvalPython", "BatchEvalPython"),
     )
@@ -566,7 +553,7 @@ def main() -> None:
     # argmax — exact BIGINT slope ranks, zero Python
     audit(
         "d8_flow_dir",
-        _GEO5C["d8_flow_dir"],
+        GEO_QUERIES["d8_flow_dir"],
         expect=("ShuffledHashJoin", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -576,7 +563,7 @@ def main() -> None:
     # state (Scan ExistingRDD), last round declarative
     audit(
         "flow_accumulation",
-        _GEO5C["flow_accumulation"],
+        GEO_QUERIES["flow_accumulation"],
         expect=("HashAggregate", "Scan ExistingRDD"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -586,7 +573,7 @@ def main() -> None:
     # next-pointer table — log-round path composition, no Python
     audit(
         "hand_height",
-        _GEO5C["hand_height"],
+        GEO_QUERIES["hand_height"],
         expect=("Scan ExistingRDD",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -597,7 +584,7 @@ def main() -> None:
     # to a points-x-cells join
     audit(
         "kde_heatmap",
-        _GEO5C["kde_heatmap"],
+        GEO_QUERIES["kde_heatmap"],
         expect=("Generate", "HashAggregate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -606,7 +593,7 @@ def main() -> None:
     # cohort retention: two keyed aggregates + one equi-join
     audit(
         "cohort_retention",
-        _TEXT5C["cohort_retention"],
+        TEXTOPS["cohort_retention"],
         expect=("HashAggregate",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -616,7 +603,7 @@ def main() -> None:
     # join in the plan at all
     audit(
         "trajectory_length",
-        _GEO5C["trajectory_length"],
+        GEO_QUERIES["trajectory_length"],
         expect=("Window", "HashAggregate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -626,7 +613,7 @@ def main() -> None:
     # exploded token stream — no join, no Python, no HOF lambdas
     audit(
         "winnow_fingerprints",
-        _TEXT5C["winnow_fingerprints"],
+        TEXTOPS["winnow_fingerprints"],
         expect=("Window", "Generate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -636,7 +623,7 @@ def main() -> None:
     # back to documents for the substr cut — no cross product, no Python
     audit(
         "cdc_chunks",
-        _TEXT5C["cdc_chunks"],
+        TEXTOPS["cdc_chunks"],
         expect=("Window", "Generate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -647,7 +634,7 @@ def main() -> None:
     # no Python
     audit(
         "tfidf_cosine_pairs",
-        _TEXT5C["tfidf_cosine_pairs"],
+        TEXTOPS["tfidf_cosine_pairs"],
         expect=("ShuffledHashJoin", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -657,7 +644,7 @@ def main() -> None:
     # checkpointed edge list — no cross product, no Python
     audit(
         "kcore_nodes",
-        _TEXT5C["kcore_nodes"],
+        TEXTOPS["kcore_nodes"],
         expect=("HashAggregate", "Scan ExistingRDD"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -668,23 +655,19 @@ def main() -> None:
     # Python
     audit(
         "dbscan_clusters",
-        _GEO5C["dbscan_clusters"],
+        GEO_QUERIES["dbscan_clusters"],
         expect=("HashAggregate", "Scan ExistingRDD"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
     # round-5d terrain + text stages
-    from hand_index_spark.entry_queries import (  # noqa: E402
-        GEO_QUERIES as _GEO5D,
-        TEXTOPS as _TEXT5D,
-    )
 
     # hillshade: ONE neighbor-key shuffled hash join + kernel-folded
     # aggregate — no broadcast of the grid, no cross product, no Python
     audit(
         "hillshade_stats",
-        _GEO5D["hillshade_stats"],
+        GEO_QUERIES["hillshade_stats"],
         expect=("ShuffledHashJoin", "HashAggregate", "Generate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -693,7 +676,7 @@ def main() -> None:
     # overview pyramid: pure hierarchical aggregates — zero joins
     audit(
         "raster_overviews",
-        _GEO5D["raster_overviews"],
+        GEO_QUERIES["raster_overviews"],
         expect=("HashAggregate", "Union"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -703,7 +686,7 @@ def main() -> None:
     # the per-case segment array — no cross product, no Python
     audit(
         "contour_segments",
-        _GEO5D["contour_segments"],
+        GEO_QUERIES["contour_segments"],
         expect=("ShuffledHashJoin", "Generate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -713,7 +696,7 @@ def main() -> None:
     # single-partition global sort or window
     audit(
         "weighted_sample_mix",
-        _TEXT5D["weighted_sample_mix"],
+        TEXTOPS["weighted_sample_mix"],
         expect=("TakeOrderedAndProject",),
         forbid=("Window", "Sort ", "CartesianProduct",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -722,7 +705,7 @@ def main() -> None:
     # RAG chunking: explode + slice, no joins, no Python
     audit(
         "text_chunks",
-        _TEXT5D["text_chunks"],
+        TEXTOPS["text_chunks"],
         expect=("Generate",),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -732,7 +715,7 @@ def main() -> None:
     # cell key) + exact rational refine — no cross product, no Python
     audit(
         "snap_points",
-        _GEO5D["snap_points"],
+        GEO_QUERIES["snap_points"],
         expect=("ShuffledHashJoin", "Generate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -742,7 +725,7 @@ def main() -> None:
     # sum inside the aggregate — join-free, no Python
     audit(
         "geodesic_area",
-        _GEO5D["geodesic_area"],
+        GEO_QUERIES["geodesic_area"],
         expect=("HashAggregate",),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -755,14 +738,14 @@ def main() -> None:
     # cartesian is forbidden there.
     audit(
         "resample_traj",
-        _GEO5D["resample_traj"],
+        GEO_QUERIES["resample_traj"],
         expect=("HashAggregate", "Generate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
     audit(
         "contour_loops",
-        _GEO5D["contour_loops"],
+        GEO_QUERIES["contour_loops"],
         # at fixture scale AQE broadcasts the tiny checkpointed edge
         # frames; the scale-safety claim is the forbid list
         expect=("HashAggregate", "Scan ExistingRDD"),
@@ -774,28 +757,26 @@ def main() -> None:
     # is the broadcast of the 1-row observer elevation
     audit(
         "ray_viewshed",
-        _GEO5D["ray_viewshed"],
+        GEO_QUERIES["ray_viewshed"],
         expect=("Window", "PushedFilters"),
         forbid=("CartesianProduct", "SortMergeJoin", "ShuffledHashJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5E
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5E
-
     # hilbert encode: pure chained projections — a codec, so NO
-    # shuffle, NO join, NO Python anywhere in the plan
+    # shuffle, NO join or cross product, NO Python anywhere in the plan
     audit(
         "hilbert_encode",
-        _GEO5E["hilbert_encode"],
+        GEO_QUERIES["hilbert_encode"],
         expect=("[codegen id :",),
-        forbid=("Exchange", "Join", "ArrowEvalPython", "BatchEvalPython"),
+        forbid=("Exchange", "Join", "CartesianProduct", "ArrowEvalPython",
+                "BatchEvalPython"),
     )
     # strahler: per-round keyed shuffles over the EDGES (shuffled hash
     # join like the other hydrology recurrences), never a cross product
     audit(
         "strahler_order",
-        _GEO5E["strahler_order"],
+        GEO_QUERIES["strahler_order"],
         expect=("ShuffledHashJoin",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -804,14 +785,14 @@ def main() -> None:
     # partition sort per user stream, zero joins
     audit(
         "staypoint_detect",
-        _GEO5E["staypoint_detect"],
+        GEO_QUERIES["staypoint_detect"],
         expect=("Window",),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
     audit(
         "interval_coverage",
-        _TEXT5E["interval_coverage"],
+        TEXTOPS["interval_coverage"],
         expect=("Window", "HashAggregate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -820,7 +801,7 @@ def main() -> None:
     # onto the stream — no shuffle of the big side for the join
     audit(
         "mad_outliers",
-        _TEXT5E["mad_outliers"],
+        TEXTOPS["mad_outliers"],
         expect=("BroadcastHashJoin",),
         forbid=("SortMergeJoin", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -829,7 +810,7 @@ def main() -> None:
     # all — cost is |cover| * 9 at any scale
     audit(
         "cell_dilate_cover",
-        _GEO5E["cell_dilate_cover"],
+        GEO_QUERIES["cell_dilate_cover"],
         expect=("Generate", "HashAggregate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -839,7 +820,7 @@ def main() -> None:
     # never a cross product, zero Python
     audit(
         "watershed_label",
-        _GEO5E["watershed_label"],
+        GEO_QUERIES["watershed_label"],
         expect=("Scan ExistingRDD",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -848,26 +829,23 @@ def main() -> None:
     # must stay pure codegen (the bit-walk is chained projections)
     audit(
         "hilbert_pruned_read",
-        _GEO5E["hilbert_pruned_read"],
+        GEO_QUERIES["hilbert_pruned_read"],
         expect=("HashAggregate",),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5F
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5F
-
     # SCD2 + OD matrix: pure window pipelines, zero joins
     audit(
         "scd2_intervals",
-        _TEXT5F["scd2_intervals"],
+        TEXTOPS["scd2_intervals"],
         expect=("Window",),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
     audit(
         "od_matrix",
-        _GEO5F["od_matrix"],
+        GEO_QUERIES["od_matrix"],
         expect=("Window", "HashAggregate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -877,27 +855,25 @@ def main() -> None:
     # (ObjectHashAggregate on the collected list), zero Python
     audit(
         "prorate_cents",
-        _TEXT5F["prorate_cents"],
+        TEXTOPS["prorate_cents"],
         expect=("Window",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
     audit(
         "ewma_smooth",
-        _TEXT5F["ewma_smooth"],
+        TEXTOPS["ewma_smooth"],
         expect=("Aggregate",),
         forbid=("Join", "CartesianProduct", "Window", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
-
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5G
 
     # HITS: the final authority/hub join reads the CHECKPOINTED
     # iterates (never re-derives the edge subtree from parquet);
     # join-agg rounds only, no nested loops, no Python
     audit(
         "hits_scores",
-        _TEXT5G["hits_scores"],
+        TEXTOPS["hits_scores"],
         expect=("Scan ExistingRDD",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython", "Scan parquet"),
@@ -907,7 +883,7 @@ def main() -> None:
     # running-min), one hash aggregate on top
     audit(
         "cusum_changepoints",
-        _TEXT5G["cusum_changepoints"],
+        TEXTOPS["cusum_changepoints"],
         expect=("Window", "HashAggregate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -916,14 +892,11 @@ def main() -> None:
     # NEVER an all-pairs comparison
     audit(
         "fuzzy_name_join",
-        _TEXT5G["fuzzy_name_join"],
+        TEXTOPS["fuzzy_name_join"],
         expect=("HashAggregate",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
-
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5H
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5H
 
     # Sutherland-Hodgman tile clip: the whole 4-pass clip is ONE
     # codegen'd projection (the aggregate-fold form — the naive chained
@@ -931,7 +904,7 @@ def main() -> None:
     # zero Python; the only exchange is the final tile-keyed aggregate
     audit(
         "clip_to_tiles",
-        _GEO5H["clip_to_tiles"],
+        GEO_QUERIES["clip_to_tiles"],
         expect=("HashAggregate", "Generate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -942,7 +915,7 @@ def main() -> None:
     # row-at-a-time Python
     audit(
         "buffer_area",
-        _GEO5H["buffer_area"],
+        GEO_QUERIES["buffer_area"],
         expect=("FlatMapGroupsInPandas", "Generate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "BatchEvalPython"),
@@ -953,7 +926,7 @@ def main() -> None:
     # CartesianProduct or Python eval is forbidden
     audit(
         "dsir_weights",
-        _TEXT5H["dsir_weights"],
+        TEXTOPS["dsir_weights"],
         expect=("BroadcastHashJoin", "HashAggregate"),
         forbid=("CartesianProduct", "ArrowEvalPython", "BatchEvalPython"),
     )
@@ -963,15 +936,12 @@ def main() -> None:
     # from parquet), no nested loops, no Python
     audit(
         "label_prop_communities",
-        _TEXT5H["label_prop_communities"],
+        TEXTOPS["label_prop_communities"],
         expect=("Scan ExistingRDD",),
         forbid=("Scan parquet", "CartesianProduct",
                 "BroadcastNestedLoopJoin", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
-
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5I
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5I
 
     # sequence packing: the corpus-scale running sum must be the
     # BUCKET-partitioned window (windowspecdefinition(bucket...)), the
@@ -982,7 +952,7 @@ def main() -> None:
     # partition spec allowed is the #buckets-row offset frame.)
     audit(
         "pack_chunks",
-        _TEXT5I["pack_chunks"],
+        TEXTOPS["pack_chunks"],
         expect=("windowspecdefinition(bucket", "BroadcastHashJoin",
                 "Generate", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
@@ -992,7 +962,7 @@ def main() -> None:
     # union of the three lag frames — zero joins, zero Python
     audit(
         "acf_lags",
-        _TEXT5I["acf_lags"],
+        TEXTOPS["acf_lags"],
         expect=("Window", "HashAggregate", "Union"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1001,21 +971,18 @@ def main() -> None:
     # parquet scan, no joins, no Python
     audit(
         "triangulate_mesh",
-        _GEO5I["triangulate_mesh"],
+        GEO_QUERIES["triangulate_mesh"],
         expect=("Generate", "Range"),
         forbid=("Scan parquet", "Join", "CartesianProduct",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
-
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5J
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5J
 
     # token budgeting: the running sum partitions on lang (parallel),
     # totals attach via broadcast — no corpus-scale single-partition
     # window, no nested loops, no Python
     audit(
         "token_budget_mix",
-        _TEXT5J["token_budget_mix"],
+        TEXTOPS["token_budget_mix"],
         expect=("windowspecdefinition(lang", "BroadcastHashJoin",
                 "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
@@ -1025,7 +992,7 @@ def main() -> None:
     # list and the checkpointed LPA labels — never all-pairs, no Python
     audit(
         "modularity_score",
-        _TEXT5J["modularity_score"],
+        TEXTOPS["modularity_score"],
         expect=("HashAggregate",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1034,20 +1001,18 @@ def main() -> None:
     # no parquet scan, no joins, no Python
     audit(
         "gc_waypoints",
-        _GEO5J["gc_waypoints"],
+        GEO_QUERIES["gc_waypoints"],
         expect=("Generate", "Range"),
         forbid=("Scan parquet", "Join", "CartesianProduct",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
-
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5K
 
     # postings build: explode + distinct + ONE term-keyed aggregate
     # (sort_array inside the agg keeps it order-free) — no joins, no
     # Python
     audit(
         "postings_build",
-        _TEXT5K["postings_build"],
+        TEXTOPS["postings_build"],
         expect=("Generate", "HashAggregate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1057,7 +1022,7 @@ def main() -> None:
     # join is the final tiny per-lang doc-count attach; no Python
     audit(
         "merkle_root",
-        _TEXT5K["merkle_root"],
+        TEXTOPS["merkle_root"],
         expect=("HashAggregate",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1066,19 +1031,17 @@ def main() -> None:
     # struct-min election, no windows over the corpus, no Python
     audit(
         "survivorship_golden",
-        _TEXT5K["survivorship_golden"],
+        TEXTOPS["survivorship_golden"],
         expect=("HashAggregate",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5L
-
     # LTTB: user-partitioned windows + keyed join + struct-max argmax
     # — never all-pairs, no Python
     audit(
         "lttb_downsample",
-        _TEXT5L["lttb_downsample"],
+        TEXTOPS["lttb_downsample"],
         expect=("windowspecdefinition(user_id", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1088,7 +1051,7 @@ def main() -> None:
     # the only unpartitioned window is the per-bucket boundary frame
     audit(
         "encoding_advisor",
-        _TEXT5L["encoding_advisor"],
+        TEXTOPS["encoding_advisor"],
         expect=("windowspecdefinition(col_name", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1097,20 +1060,18 @@ def main() -> None:
     # the as-of idiom) + one aggregate — zero joins, no Python
     audit(
         "attribution_last_touch",
-        _TEXT5L["attribution_last_touch"],
+        TEXTOPS["attribution_last_touch"],
         expect=("windowspecdefinition(user_id", "HashAggregate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
-
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5M
 
     # bitmap algebra: word-keyed equi-join of the tiny word tables +
     # popcount aggregates; cardinalities attach via broadcast — never
     # a row-level join of the underlying doc sets, no Python
     audit(
         "bitmap_index_ops",
-        _TEXT5M["bitmap_index_ops"],
+        TEXTOPS["bitmap_index_ops"],
         expect=("HashAggregate", "BroadcastHashJoin"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1120,20 +1081,18 @@ def main() -> None:
     # frontier — no joins at all, no Python
     audit(
         "dominance_skyline",
-        _TEXT5M["dominance_skyline"],
+        TEXTOPS["dominance_skyline"],
         expect=("windowspecdefinition(bucket",),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
-
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5N
 
     # k-anonymity: two hash aggregates + a 1-row broadcast total +
     # bounded k explode — no nested loops beyond the 1-row scalar
     # attach, no Python
     audit(
         "k_anonymity_audit",
-        _TEXT5N["k_anonymity_audit"],
+        TEXTOPS["k_anonymity_audit"],
         expect=("HashAggregate", "Generate"),
         forbid=("CartesianProduct", "ArrowEvalPython", "BatchEvalPython"),
     )
@@ -1141,7 +1100,7 @@ def main() -> None:
     # the only nested loop is the deliberate 1x1 scalar join
     audit(
         "ab_test_ztest",
-        _TEXT5N["ab_test_ztest"],
+        TEXTOPS["ab_test_ztest"],
         expect=("HashAggregate",),
         forbid=("CartesianProduct", "ArrowEvalPython", "BatchEvalPython"),
     )
@@ -1150,19 +1109,17 @@ def main() -> None:
     # per-k rescans (exactly one parquet scan in the plan), no Python
     audit(
         "zipf_vocab_growth",
-        _TEXT5N["zipf_vocab_growth"],
+        TEXTOPS["zipf_vocab_growth"],
         expect=("HashAggregate", "Generate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5O
-
     # sequence mining: one keyed lead window + one hash aggregate —
     # zero joins, no Python
     audit(
         "event_bigram_mining",
-        _TEXT5O["event_bigram_mining"],
+        TEXTOPS["event_bigram_mining"],
         expect=("windowspecdefinition(user_id", "HashAggregate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1170,20 +1127,17 @@ def main() -> None:
     # histogram: ONE hash aggregate over a projection — nothing else
     audit(
         "value_histogram",
-        _TEXT5O["value_histogram"],
+        TEXTOPS["value_histogram"],
         expect=("HashAggregate",),
         forbid=("Join", "Window", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5P
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5P
-
     # confusion matrix: aggregates + one tiny per-class keyed join —
     # the voting rule stays in codegen (HOF filter), no Python
     audit(
         "langid_confusion",
-        _TEXT5P["langid_confusion"],
+        TEXTOPS["langid_confusion"],
         expect=("HashAggregate",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1192,7 +1146,7 @@ def main() -> None:
     # truth boxes derive from the same row), no windows, no Python
     audit(
         "iou_eval",
-        _GEO5P["iou_eval"],
+        GEO_QUERIES["iou_eval"],
         expect=("HashAggregate",),
         forbid=("Join", "Window", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1200,19 +1154,17 @@ def main() -> None:
     # calibration: projection + ONE aggregate — nothing else
     audit(
         "calibration_bins",
-        _TEXT5P["calibration_bins"],
+        TEXTOPS["calibration_bins"],
         expect=("HashAggregate",),
         forbid=("Join", "Window", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5Q
-
     # data contracts: one aggregate per check + the RI left join —
     # never all-pairs, no Python, no collect-driven loops
     audit(
         "data_quality_checks",
-        _TEXT5Q["data_quality_checks"],
+        TEXTOPS["data_quality_checks"],
         expect=("HashAggregate", "Union"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1221,20 +1173,18 @@ def main() -> None:
     # quantized BEFORE summation (order-free) — no joins, no windows
     audit(
         "column_entropy",
-        _TEXT5Q["column_entropy"],
+        TEXTOPS["column_entropy"],
         expect=("HashAggregate", "Union"),
         forbid=("Join", "Window", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
-
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5R
 
     # basket lift: distinct + user-keyed self-join (bounded: <=
     # |event types| rows per user) + aggregate + broadcast singles —
     # never a cross product, no Python
     audit(
         "basket_lift",
-        _TEXT5R["basket_lift"],
+        TEXTOPS["basket_lift"],
         expect=("HashAggregate", "BroadcastHashJoin"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1243,20 +1193,18 @@ def main() -> None:
     # the handful of source rows, never the corpus — no joins
     audit(
         "concentration_metrics",
-        _TEXT5R["concentration_metrics"],
+        TEXTOPS["concentration_metrics"],
         expect=("HashAggregate", "Window"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
-
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5S
 
     # quantile sketch: type-partitioned rank window + tiny bin-frame
     # cumsum + keyed joins of the 15-row target/estimate frames —
     # never all-pairs, no Python
     audit(
         "quantile_sketch",
-        _TEXT5S["quantile_sketch"],
+        TEXTOPS["quantile_sketch"],
         expect=("windowspecdefinition(event_type", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1265,18 +1213,16 @@ def main() -> None:
     # over the converted-users frame only — no joins, no Python
     audit(
         "time_to_convert",
-        _TEXT5S["time_to_convert"],
+        TEXTOPS["time_to_convert"],
         expect=("HashAggregate", "Window"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5T
-
     # readability: pure per-row projection — no joins, no windows
     audit(
         "readability_scores",
-        _TEXT5T["readability_scores"],
+        TEXTOPS["readability_scores"],
         expect=("Project",),
         forbid=("Join", "Window", "HashAggregate", "CartesianProduct",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1284,19 +1230,17 @@ def main() -> None:
     # fertility: per-row merge-chain projection + one lang aggregate
     audit(
         "tokenizer_fertility",
-        _TEXT5T["tokenizer_fertility"],
+        TEXTOPS["tokenizer_fertility"],
         expect=("HashAggregate",),
         forbid=("Join", "Window", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5U
-
     # linear trend: one event_type aggregate over exact BIGINT moments
     # (map-side partial agg) — no joins, no windows, no Python
     audit(
         "linear_trend",
-        _TEXT5U["linear_trend"],
+        TEXTOPS["linear_trend"],
         expect=("HashAggregate",),
         forbid=("Join", "Window", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1305,19 +1249,17 @@ def main() -> None:
     # the only join is the deliberate 9x1 scalar attach
     audit(
         "benford_digits",
-        _TEXT5U["benford_digits"],
+        TEXTOPS["benford_digits"],
         expect=("HashAggregate", "BroadcastNestedLoopJoin"),
         forbid=("SortMergeJoin", "ShuffledHashJoin", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5V
-
     # longest streak: user-keyed window + two hash aggregates — the
     # window never partitions wider than one user
     audit(
         "longest_streak",
-        _TEXT5V["longest_streak"],
+        TEXTOPS["longest_streak"],
         expect=("windowspecdefinition(user_id", "HashAggregate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1326,19 +1268,17 @@ def main() -> None:
     # broadcast left join of the observed cells — never a corpus join
     audit(
         "chisq_independence",
-        _TEXT5V["chisq_independence"],
+        TEXTOPS["chisq_independence"],
         expect=("HashAggregate", "BroadcastHashJoin"),
         forbid=("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5W
-
     # kendall tau: lang-keyed self-join over the 20-per-lang frame —
     # equi-keyed on lang (bounded 20x20 per group), never all-pairs
     audit(
         "kendall_tau",
-        _TEXT5W["kendall_tau"],
+        TEXTOPS["kendall_tau"],
         expect=("windowspecdefinition(lang", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1347,19 +1287,17 @@ def main() -> None:
     # — no joins, no Python
     audit(
         "holt_forecast",
-        _TEXT5W["holt_forecast"],
+        TEXTOPS["holt_forecast"],
         expect=("HashAggregate",),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5X
-
     # dtw: keyed aggregates + the 1-row reference-series broadcast;
     # the DP fold itself is pure Catalyst HOF — no Python anywhere
     audit(
         "dtw_distance",
-        _TEXT5X["dtw_distance"],
+        TEXTOPS["dtw_distance"],
         expect=("HashAggregate", "BroadcastNestedLoopJoin"),
         forbid=("SortMergeJoin", "ArrowEvalPython", "BatchEvalPython"),
     )
@@ -1367,19 +1305,17 @@ def main() -> None:
     # corpus itself never shuffles for the join
     audit(
         "zscore_normalize",
-        _TEXT5X["zscore_normalize"],
+        TEXTOPS["zscore_normalize"],
         expect=("HashAggregate", "BroadcastHashJoin"),
         forbid=("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5Y
-
     # areal interpolation: bounded 3x3 explode + one tile-keyed
     # aggregate — no joins at all, pure integers
     audit(
         "areal_interpolate",
-        _GEO5Y["areal_interpolate"],
+        GEO_QUERIES["areal_interpolate"],
         expect=("HashAggregate", "Generate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1388,20 +1324,18 @@ def main() -> None:
     # the reference polyline is built closed-form (no join needed)
     audit(
         "frechet_distance",
-        _GEO5Y["frechet_distance"],
+        GEO_QUERIES["frechet_distance"],
         expect=("HashAggregate", "windowspecdefinition(user_id"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
-
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5Z
 
     # toposort: checkpointed equi-join + max-agg rounds only (the bfs
     # shape); the visible plan is the final checkpointed state — the
     # per-round shape is the same equi-join + HashAggregate as bfs
     audit(
         "toposort_layers",
-        _TEXT5Z["toposort_layers"],
+        TEXTOPS["toposort_layers"],
         expect=("Scan ExistingRDD",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1410,19 +1344,17 @@ def main() -> None:
     # aggregate; the crosses are 1-row scalar attaches
     audit(
         "psi_drift",
-        _TEXT5Z["psi_drift"],
+        TEXTOPS["psi_drift"],
         expect=("HashAggregate", "BroadcastNestedLoopJoin"),
         forbid=("SortMergeJoin", "ShuffledHashJoin", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5AA
-
     # rrf: lang-partitioned rank windows + top-10 window — no joins
     # at all (both rankings come from one frame)
     audit(
         "rrf_fusion",
-        _TEXT5AA["rrf_fusion"],
+        TEXTOPS["rrf_fusion"],
         expect=("windowspecdefinition(lang",),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1431,19 +1363,17 @@ def main() -> None:
     # + final aggregate — no joins, pure integers
     audit(
         "roc_auc",
-        _TEXT5AA["roc_auc"],
+        TEXTOPS["roc_auc"],
         expect=("HashAggregate", "windowspecdefinition(lang"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5BB
-
     # prefix rollup: bounded <=3 explode + one prefix aggregate — no
     # joins at all
     audit(
         "path_prefix_rollup",
-        _TEXT5BB["path_prefix_rollup"],
+        TEXTOPS["path_prefix_rollup"],
         expect=("HashAggregate", "Generate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1452,19 +1382,17 @@ def main() -> None:
     # ~465 pairs per type) + rank window — never all-pairs over rows
     audit(
         "theil_sen_slope",
-        _TEXT5BB["theil_sen_slope"],
+        TEXTOPS["theil_sen_slope"],
         expect=("HashAggregate", "windowspecdefinition(event_type"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5CC
-
     # ndcg: two lang rank windows + one aggregate with ordered folds
     # — no joins
     audit(
         "ndcg_at_k",
-        _TEXT5CC["ndcg_at_k"],
+        TEXTOPS["ndcg_at_k"],
         expect=("windowspecdefinition(lang", "HashAggregate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1473,20 +1401,18 @@ def main() -> None:
     # pure integers
     audit(
         "backtest_mase",
-        _TEXT5CC["backtest_mase"],
+        TEXTOPS["backtest_mase"],
         expect=("HashAggregate", "windowspecdefinition(event_type"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
-
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5DD, TEXTOPS as _TEXT5DD
 
     # partition evolution: the readback is parquet scans + one
     # aggregate — no Python, no cross product (the union of the two
     # layouts is a plain unionByName)
     audit(
         "partition_evolution",
-        _GEO5DD["partition_evolution"],
+        GEO_QUERIES["partition_evolution"],
         expect=("HashAggregate", "Union"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1494,19 +1420,17 @@ def main() -> None:
     # l-diversity: one QI-group aggregate — no joins
     audit(
         "l_diversity_audit",
-        _TEXT5DD["l_diversity_audit"],
+        TEXTOPS["l_diversity_audit"],
         expect=("HashAggregate",),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5EE
-
     # sq8: posexplode + the 64-row per-dim stats broadcast back onto
     # the elements — the element stream never shuffles for the join
     audit(
         "sq8_quantize",
-        _TEXT5EE["sq8_quantize"],
+        TEXTOPS["sq8_quantize"],
         expect=("HashAggregate", "BroadcastHashJoin", "Generate"),
         forbid=("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1515,19 +1439,17 @@ def main() -> None:
     # joins, pure integers
     audit(
         "weighted_median",
-        _TEXT5EE["weighted_median"],
+        TEXTOPS["weighted_median"],
         expect=("windowspecdefinition(lang",),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5FF, TEXTOPS as _TEXT5FF
-
     # diameter: user-keyed self-join over <=48 capped points (bounded
     # 48x48 per group) + rank window — never corpus all-pairs
     audit(
         "point_diameter",
-        _GEO5FF["point_diameter"],
+        GEO_QUERIES["point_diameter"],
         expect=("windowspecdefinition(user_id",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1535,20 +1457,18 @@ def main() -> None:
     # twap: lead window + one aggregate — no joins, pure integers
     audit(
         "twap_value",
-        _TEXT5FF["twap_value"],
+        TEXTOPS["twap_value"],
         expect=("HashAggregate", "windowspecdefinition(user_id"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
-
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5GG, TEXTOPS as _TEXT5GG
 
     # neighbors: bounded 8-way explode over literal-shift bit sums —
     # whole-stage codegen ("codegen id" in the formatted plan), no
     # joins, no Python
     audit(
         "geohash_neighbors",
-        _GEO5GG["geohash_neighbors"],
+        GEO_QUERIES["geohash_neighbors"],
         expect=("Generate", "codegen id"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1557,19 +1477,17 @@ def main() -> None:
     # joins, pure integers
     audit(
         "markov_transitions",
-        _TEXT5GG["markov_transitions"],
+        TEXTOPS["markov_transitions"],
         expect=("HashAggregate", "windowspecdefinition(user_id"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5HH
-
     # spearman: two lang rank windows + one aggregate — O(n) per
     # group (vs kendall's bounded pairwise), no joins
     audit(
         "spearman_rho",
-        _TEXT5HH["spearman_rho"],
+        TEXTOPS["spearman_rho"],
         expect=("windowspecdefinition(lang", "HashAggregate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1578,19 +1496,17 @@ def main() -> None:
     # battery is GROUPS, never the corpus) — no joins
     audit(
         "fdr_bh",
-        _TEXT5HH["fdr_bh"],
+        TEXTOPS["fdr_bh"],
         expect=("HashAggregate", "Window"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5II
-
     # emd: one bin aggregate + ~20-row cumsum windows + final scalar
     # — no joins, pure integers
     audit(
         "emd_1d",
-        _TEXT5II["emd_1d"],
+        TEXTOPS["emd_1d"],
         expect=("HashAggregate", "Window"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1599,19 +1515,17 @@ def main() -> None:
     # ordered fold — no joins
     audit(
         "mutual_information",
-        _TEXT5II["mutual_information"],
+        TEXTOPS["mutual_information"],
         expect=("HashAggregate", "Window"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5JJ, TEXTOPS as _TEXT5JJ
-
     # rose: lag window + integer sector CASE + two aggregates — no
     # joins, no transcendentals
     audit(
         "bearing_rose",
-        _GEO5JJ["bearing_rose"],
+        GEO_QUERIES["bearing_rose"],
         expect=("HashAggregate", "windowspecdefinition(user_id"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1620,19 +1534,17 @@ def main() -> None:
     # no windows, pure integers
     audit(
         "clamped_balance",
-        _TEXT5JJ["clamped_balance"],
+        TEXTOPS["clamped_balance"],
         expect=("HashAggregate",),
         forbid=("Join", "Window", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5KK, TEXTOPS as _TEXT5KK
-
     # hrw: per-row bounded 16-node fold, pure projection — no joins,
     # no windows, no Python
     audit(
         "rendezvous_assign",
-        _TEXT5KK["rendezvous_assign"],
+        TEXTOPS["rendezvous_assign"],
         expect=("Project",),
         forbid=("Join", "Window", "HashAggregate", "CartesianProduct",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1641,19 +1553,17 @@ def main() -> None:
     # the corpus is touched only by the one-time icelite write
     audit(
         "zonemap_overlap_audit",
-        _GEO5KK["zonemap_overlap_audit"],
+        GEO_QUERIES["zonemap_overlap_audit"],
         expect=("HashAggregate", "BroadcastNestedLoopJoin"),
         forbid=("SortMergeJoin", "ShuffledHashJoin", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5LL, TEXTOPS as _TEXT5LL
-
     # cross-track: user-keyed anchor windows + rank window — no
     # joins, pure integers
     audit(
         "cross_track_dev",
-        _GEO5LL["cross_track_dev"],
+        GEO_QUERIES["cross_track_dev"],
         expect=("windowspecdefinition(user_id",),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1662,19 +1572,17 @@ def main() -> None:
     # grid + one scalar aggregate — no joins
     audit(
         "cohens_kappa",
-        _TEXT5LL["cohens_kappa"],
+        TEXTOPS["cohens_kappa"],
         expect=("HashAggregate", "Window"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5MM
-
     # power-law: bounded explode + two aggregates + one 13-row
     # ordered fold — no joins
     audit(
         "degree_powerlaw",
-        _TEXT5MM["degree_powerlaw"],
+        TEXTOPS["degree_powerlaw"],
         expect=("HashAggregate", "Generate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1683,19 +1591,17 @@ def main() -> None:
     # the corpus never shuffles for the join
     audit(
         "mode_impute",
-        _TEXT5MM["mode_impute"],
+        TEXTOPS["mode_impute"],
         expect=("HashAggregate", "BroadcastHashJoin"),
         forbid=("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5NN
-
     # concurrency: endpoint union + type-keyed cumsum + rank window —
     # no joins
     audit(
         "max_concurrency",
-        _TEXT5NN["max_concurrency"],
+        TEXTOPS["max_concurrency"],
         expect=("windowspecdefinition(event_type", "Union"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1704,19 +1610,17 @@ def main() -> None:
     # frame broadcast back — never a corpus shuffle join
     audit(
         "sprt_crossing",
-        _TEXT5NN["sprt_crossing"],
+        TEXTOPS["sprt_crossing"],
         expect=("windowspecdefinition(user_id", "BroadcastHashJoin"),
         forbid=("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5OO
-
     # kmv: bounded explode + lang rank window + the tiny kth/exact
     # frames joined — no corpus self-join, no Python
     audit(
         "kmv_distinct",
-        _TEXT5OO["kmv_distinct"],
+        TEXTOPS["kmv_distinct"],
         expect=("windowspecdefinition(lang", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1725,19 +1629,17 @@ def main() -> None:
     # 10-pair explode — never a corpus self-join
     audit(
         "audience_overlap",
-        _TEXT5OO["audience_overlap"],
+        TEXTOPS["audience_overlap"],
         expect=("HashAggregate", "Generate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5PP, TEXTOPS as _TEXT5PP
-
     # coverage gaps: closed-form universe + broadcast LEFT ANTI against
     # the dilated cell set — never universe x corpus
     audit(
         "coverage_gaps",
-        _GEO5PP["coverage_gaps"],
+        GEO_QUERIES["coverage_gaps"],
         expect=("BroadcastHashJoin", "LeftAnti"),
         forbid=("SortMergeJoin", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1745,19 +1647,17 @@ def main() -> None:
     # mix shift: one segment aggregate + the 1-row totals broadcast
     audit(
         "mix_shift",
-        _TEXT5PP["mix_shift"],
+        TEXTOPS["mix_shift"],
         expect=("HashAggregate", "BroadcastNestedLoopJoin"),
         forbid=("SortMergeJoin", "ShuffledHashJoin", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5QQ, TEXTOPS as _TEXT5QQ
-
     # hex: bounded 9-way candidate explode + per-point argmin window
     # + one bin aggregate — no joins, pure integers
     audit(
         "hex_bin",
-        _GEO5QQ["hex_bin"],
+        GEO_QUERIES["hex_bin"],
         expect=("Generate", "HashAggregate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1766,19 +1666,17 @@ def main() -> None:
     # joins, integer log2 via binary-string length
     audit(
         "latency_histogram",
-        _TEXT5QQ["latency_histogram"],
+        TEXTOPS["latency_histogram"],
         expect=("windowspecdefinition(event_type", "HashAggregate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5RR2
-
     # kwic: pure instr/substr projection + a 2-way union — no joins,
     # no windows, no regex backtracking
     audit(
         "kwic_concordance",
-        _TEXT5RR2["kwic_concordance"],
+        TEXTOPS["kwic_concordance"],
         expect=("Union", "Project"),
         forbid=("Join", "Window", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1787,19 +1685,17 @@ def main() -> None:
     # stats frame broadcast back
     audit(
         "feature_hashing",
-        _TEXT5RR2["feature_hashing"],
+        TEXTOPS["feature_hashing"],
         expect=("HashAggregate", "BroadcastHashJoin", "Generate"),
         forbid=("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5SS, TEXTOPS as _TEXT5SS
-
     # gdpr: post-delete readback aggregate + the 1-row changelog
     # scalar broadcast; exceptAll inside changes() is keyed hash aggs
     audit(
         "gdpr_forget",
-        _GEO5SS["gdpr_forget"],
+        GEO_QUERIES["gdpr_forget"],
         expect=("HashAggregate", "BroadcastNestedLoopJoin"),
         forbid=("CartesianProduct", "ArrowEvalPython", "BatchEvalPython"),
     )
@@ -1807,19 +1703,17 @@ def main() -> None:
     # must never shuffle
     audit(
         "star_revenue_rollup",
-        _TEXT5SS["star_revenue_rollup"],
+        TEXTOPS["star_revenue_rollup"],
         expect=("BroadcastHashJoin", "HashAggregate"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5TT
-
     # business days: one equi-join + order aggregate, closed-form
     # weekday CASE — no windows, no Python
     audit(
         "business_days",
-        _TEXT5TT["business_days"],
+        TEXTOPS["business_days"],
         expect=("HashAggregate",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1827,19 +1721,17 @@ def main() -> None:
     # heatmap: one 168-cell aggregate + the share window over cells
     audit(
         "dow_hour_heatmap",
-        _TEXT5TT["dow_hour_heatmap"],
+        TEXTOPS["dow_hour_heatmap"],
         expect=("HashAggregate", "Window"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5UU
-
     # control chart: daily + overall aggregates, overall broadcast
     # back onto the ~150 daily rows
     audit(
         "control_chart",
-        _TEXT5UU["control_chart"],
+        TEXTOPS["control_chart"],
         expect=("HashAggregate", "BroadcastHashJoin"),
         forbid=("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1848,19 +1740,17 @@ def main() -> None:
     # onto the corpus — the corpus never shuffles for the join
     audit(
         "winsorized_mean",
-        _TEXT5UU["winsorized_mean"],
+        TEXTOPS["winsorized_mean"],
         expect=("windowspecdefinition(event_type", "BroadcastHashJoin"),
         forbid=("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5VV
-
     # cidr: the 16-row block table broadcasts (the cross is the
     # deliberate bounded prefix probe) + longest-prefix rank window
     audit(
         "cidr_match",
-        _TEXT5VV["cidr_match"],
+        TEXTOPS["cidr_match"],
         expect=("windowspecdefinition(event_id", "HashAggregate"),
         forbid=("SortMergeJoin", "ShuffledHashJoin", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1869,19 +1759,17 @@ def main() -> None:
     # part frame (parts, never lineitems)
     audit(
         "abc_classification",
-        _TEXT5VV["abc_classification"],
+        TEXTOPS["abc_classification"],
         expect=("HashAggregate", "Window"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5WW, TEXTOPS as _TEXT5WW
-
     # copresence: distinct + one cell aggregate, NO pair join — the
     # count shortcut is the whole point
     audit(
         "copresence_pairs",
-        _GEO5WW["copresence_pairs"],
+        GEO_QUERIES["copresence_pairs"],
         expect=("HashAggregate",),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1889,19 +1777,17 @@ def main() -> None:
     # quantile transform: one rank window per type — no joins
     audit(
         "quantile_transform",
-        _TEXT5WW["quantile_transform"],
+        TEXTOPS["quantile_transform"],
         expect=("windowspecdefinition(event_type",),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5XX, TEXTOPS as _TEXT5XX
-
     # corridor: bounded 23-segment explode per sampled point + one
     # aggregate — no joins, division-free integer predicates
     audit(
         "corridor_membership",
-        _GEO5XX["corridor_membership"],
+        GEO_QUERIES["corridor_membership"],
         expect=("Generate", "HashAggregate"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1910,19 +1796,17 @@ def main() -> None:
     # ~30-row cumulative window
     audit(
         "new_vs_returning",
-        _TEXT5XX["new_vs_returning"],
+        TEXTOPS["new_vs_returning"],
         expect=("HashAggregate", "BroadcastHashJoin"),
         forbid=("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5YY
-
     # ohlc: ONE aggregate with min_by/max_by on the packed order key
     # — no windows, no joins
     audit(
         "ohlc_candles",
-        _TEXT5YY["ohlc_candles"],
+        TEXTOPS["ohlc_candles"],
         expect=("HashAggregate",),
         forbid=("Join", "Window", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1931,38 +1815,34 @@ def main() -> None:
     # daily rows
     audit(
         "top_movers",
-        _TEXT5YY["top_movers"],
+        TEXTOPS["top_movers"],
         expect=("HashAggregate", "windowspecdefinition(event_type"),
         forbid=("Join", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5ZZ
-
     # parity: both assignment plans + one url equi-join + method agg;
     # the Arrow stage is the deliberate kernel path
     audit(
         "assign_path_parity",
-        _GEO5ZZ["assign_path_parity"],
+        GEO_QUERIES["assign_path_parity"],
         expect=("HashAggregate",),
         forbid=("CartesianProduct", "BatchEvalPython"),
     )
     # method share: flagship output + the 1-row total broadcast
     audit(
         "method_share",
-        _GEO5ZZ["method_share"],
+        GEO_QUERIES["method_share"],
         expect=("HashAggregate", "BroadcastNestedLoopJoin"),
         forbid=("SortMergeJoin", "CartesianProduct", "BatchEvalPython"),
     )
-
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5AAA
 
     # kaplan-meier: one user-keyed aggregate, the 1-row horizon
     # broadcast back, then calendar-bounded window + one-group fold —
     # no data-sized joins, no Python
     audit(
         "kaplan_meier",
-        _TEXT5AAA["kaplan_meier"],
+        TEXTOPS["kaplan_meier"],
         expect=("HashAggregate", "BroadcastNestedLoopJoin"),
         forbid=("SortMergeJoin", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
@@ -1971,20 +1851,18 @@ def main() -> None:
     # customer-count ntile windows (small-dim path, like ntile_buckets)
     audit(
         "rfm_segments",
-        _TEXT5AAA["rfm_segments"],
+        TEXTOPS["rfm_segments"],
         expect=("HashAggregate", "BroadcastNestedLoopJoin", "Window"),
         forbid=("SortMergeJoin", "CartesianProduct", "ArrowEvalPython",
                 "BatchEvalPython"),
     )
-
-    from hand_index_spark.entry_queries import TEXTOPS as _TEXT5BBB
 
     # item_cf: one basket shuffle + HOF pair expansion (no corpus
     # self-join), support joins on the parts dim, top-5 window —
     # no Python, no cross join anywhere
     audit(
         "item_cf",
-        _TEXT5BBB["item_cf"],
+        TEXTOPS["item_cf"],
         expect=("HashAggregate", "Window"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -1993,19 +1871,17 @@ def main() -> None:
     # residuals — must never degrade to a cross product
     audit(
         "fifo_allocation",
-        _TEXT5BBB["fifo_allocation"],
+        TEXTOPS["fifo_allocation"],
         expect=("Window",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
     )
 
-    from hand_index_spark.entry_queries import GEO_QUERIES as _GEO5CCC, TEXTOPS as _TEXT5CCC
-
     # cells_compact: one corpus distinct + 4 cover-sized window rounds,
     # all Catalyst bit arithmetic — no joins, no Python
     audit(
         "cells_compact",
-        _GEO5CCC["cells_compact"],
+        GEO_QUERIES["cells_compact"],
         expect=("HashAggregate", "Window"),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -2014,7 +1890,7 @@ def main() -> None:
     # existing edges — never a cross product, no Python
     audit(
         "link_predict",
-        _TEXT5CCC["link_predict"],
+        TEXTOPS["link_predict"],
         expect=("HashAggregate",),
         forbid=("CartesianProduct", "BroadcastNestedLoopJoin",
                 "ArrowEvalPython", "BatchEvalPython"),
@@ -2024,6 +1900,7 @@ def main() -> None:
     # PARTITION filter (the reference hive-partitioned by h3 but never
     # pruned — SURVEY §4.1; this engine's fix must be visible in the plan)
     import json as _json
+    import shutil
     import tempfile
 
     from hand_index_spark.pipelines.build_index import build_index
@@ -2042,14 +1919,12 @@ def main() -> None:
         lambda _s, _d: kept,
         expect=("PartitionFilters: [h3_index", "PushedFilters:"),
     )
+    shutil.rmtree(root, ignore_errors=True)
 
-    out = ["# PLANS — physical-plan audit (auto-generated by scripts/plan_audit.py)\n"]
-    out.append("## Checks\n")
+    out = ["# PLANS — physical-plan audit checks (written by scripts/plan_audit.py)\n\n"]
     out.append("| query | property | ok |\n|---|---|---|\n")
     for name, prop, ok in checks:
         out.append(f"| {name} | `{prop}` | {'✅' if ok else '❌'} |\n")
-    for name, plan, ok in sections:
-        out.append(f"\n## {name} {'✅' if ok else '❌'}\n\n```\n{plan}\n```\n")
     with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.writelines(out)
     bad = [c for c in checks if not c[2]]
@@ -2057,6 +1932,7 @@ def main() -> None:
     for name, prop, _ in bad:
         print(f"FAIL: {name}: {prop}")
     spark.stop()
+    sys.exit(1 if bad else 0)
 
 
 if __name__ == "__main__":

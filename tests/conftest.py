@@ -21,4 +21,8 @@ def spark(tmp_path_factory):
         extra_conf={"spark.sql.warehouse.dir": wh},
     )
     yield s
-    s.stop()
+    from pyspark import SparkContext
+
+    # the scaling gate (last test) may already have shut the JVM down
+    if SparkContext._gateway is not None:
+        s.stop()

@@ -190,6 +190,104 @@ def test_salting_bounds_partition_skew(spark):
     ).collect()[0][0]
 
 
+def _cells_per_partition(df):
+    """{cell_id: number of Spark partitions holding it}."""
+    rows = (
+        df.withColumn("p", F.spark_partition_id())
+        .groupBy("cell_id")
+        .agg(F.countDistinct("p").alias("n"))
+        .collect()
+    )
+    return {r.cell_id: r.n for r in rows}
+
+
+def test_salted_repartition_fans_out_only_hot_cells(spark):
+    from hand_index_spark.operators.skew import salted_repartition
+
+    df = spark.range(4000).select(
+        (F.col("id") % 16).alias("cell_id"),
+        F.col("id").cast("string").alias("url"),
+    )
+    # an empty hot list salts no cell: each stays in one partition
+    none_hot = _cells_per_partition(salted_repartition(df, 16, hot_cells=[]))
+    assert set(none_hot.values()) == {1}
+    one_hot = _cells_per_partition(salted_repartition(df, 16, hot_cells=[3]))
+    assert one_hot.pop(3) > 1
+    assert set(one_hot.values()) == {1}
+
+
+def test_detect_hot_cells_is_reproducible(spark):
+    """A sampled sketch cuts the same hot list on every call."""
+    from hand_index_spark.operators.skew import detect_hot_cells
+
+    df = spark.range(200000).select(
+        F.pmod(F.xxhash64("id"), F.lit(1500)).alias("cell_id")
+    )
+    runs = [detect_hot_cells(df, quantile=0.99, sample_fraction=0.1) for _ in range(3)]
+    assert runs[0] and runs[0] == runs[1] == runs[2]
+
+
+def _files_per_dir(root: str) -> dict[str, int]:
+    """{h3_r0 value: parquet files} in the current assignments snapshot."""
+    import glob
+    import os
+
+    snap = IceliteTable(root, "assignments").current_snapshot()
+    data = os.path.join(root, "assignments", "data", snap["data_paths"][-1])
+    dirs = [d for d in os.listdir(data) if d.startswith("h3_r0=")]
+    return {
+        d.split("=", 1)[1]: len(glob.glob(f"{data}/{d}/*.parquet")) for d in dirs
+    }
+
+
+@pytest.fixture(scope="module")
+def one_page_per_cell(spark):
+    """(h3_r0, doc_id): the lowest doc id in each res-0 cell the geotag
+    reaches (~1.5k cells), collected so every use sees the same rows."""
+    from hand_index_spark.geo import cells as h3lite
+    from hand_index_spark.operators import encode as E
+    from hand_index_spark.pipelines.ingest_pages import PARTITION_COL, PARTITION_RES
+
+    geo = E.with_geotag(spark.range(20000).withColumnRenamed("id", "doc_id"))
+    cell = h3lite.encode_col(F.col("lat"), F.col("lon"), PARTITION_RES)
+    rows = geo.groupBy(cell.alias(PARTITION_COL)).agg(F.min("doc_id")).collect()
+    return sorted((int(c), int(d)) for c, d in rows)
+
+
+def _pages(spark, doc_ids, copies: int):
+    """``copies`` pages per doc id, told apart by url; a page's cell
+    follows from its doc id, its salt from its url."""
+    ids = spark.createDataFrame([(d,) for d in doc_ids], "doc_id long")
+    return ids.crossJoin(spark.range(copies).withColumnRenamed("id", "k")).select(
+        "doc_id", F.format_string("https://u%d.example/%d", "doc_id", "k").alias("url")
+    )
+
+
+def test_ingest_writes_one_file_per_cell(spark, one_page_per_cell, tmp_path):
+    """Uniform pages (no hot cell): 8 pages in each of 40 cells give
+    exactly one file per h3_r0 directory. Under 100 sampled cells the
+    0.99 cut is the largest count, so no cell can be flagged hot."""
+    root = str(tmp_path / "uniform")
+    ingest_pages(spark, _pages(spark, [d for _, d in one_page_per_cell[:40]], 8), root)
+    files = _files_per_dir(root)
+    assert len(files) == 40
+    assert set(files.values()) == {1}
+
+
+def test_ingest_fans_out_planted_hot_cell(spark, one_page_per_cell, tmp_path):
+    """One page in each res-0 cell plus 2,000 more in one planted cell:
+    only the planted cell's directory holds more than one file."""
+    (hot, hot_doc), *cold = one_page_per_cell
+    pages = _pages(spark, [d for _, d in cold], 1).unionByName(
+        _pages(spark, [hot_doc], 2000)
+    )
+    root = str(tmp_path / "planted")
+    ingest_pages(spark, pages, root)
+    files = _files_per_dir(root)
+    assert files.pop(str(hot)) > 1
+    assert len(files) > 1000 and set(files.values()) == {1}
+
+
 def test_ingest_mid_job_resume(spark, tmp_path):
     """Crash after stage 1 -> rerun completes only stage 2."""
     root = str(tmp_path / "resume")
