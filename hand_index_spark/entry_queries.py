@@ -74,7 +74,7 @@ def _q_cell_parent(spark, sf_dir):
     """Hierarchy invariant: res-9 cell truncated to res 5 == direct res-5
     encode (the oracle computes both directly)."""
     pts = _pts(spark, sf_dir)
-    c9 = h3lite.encode_col(F.col("lat"), F.col("lon"), 9)
+    c9 = h3lite.encode_col("lat", "lon", 9)
     pts = pts.withColumn("h3_r9", c9).withColumn(
         "h3_r5", h3lite.parent_col(F.col("h3_r9"), 5, 9)
     )

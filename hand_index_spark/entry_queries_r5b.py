@@ -337,7 +337,7 @@ def _q_cell_pyramid(spark, sf_dir):
 
     pts = E.with_geotag(web_pages_from_documents(spark, sf_dir))
     base = (
-        pts.select(h3lite.encode_col(F.col("lat"), F.col("lon"), 9).alias("cell"))
+        pts.select(h3lite.encode_col("lat", "lon", 9).alias("cell"))
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_pages"))
         .localCheckpoint(eager=True)

@@ -56,7 +56,7 @@ def _res_col():
 def _q_cells_compact(spark, sf_dir):
     pts = E.with_geotag(web_pages_from_documents(spark, sf_dir))
     cur = pts.select(
-        h3lite.encode_col(F.col("lat"), F.col("lon"), _LEAF_RES).alias("cell")
+        h3lite.encode_col("lat", "lon", _LEAF_RES).alias("cell")
     ).distinct()
     for r in range(_LEAF_RES, _MIN_RES, -1):
         at_r = cur.where(_res_col() == r).withColumn(

@@ -23,13 +23,20 @@ Resolution r cells are (1/2^r)° squares: r5 ≈ 3.5 km, r9 ≈ 217 m at the
 equator — comparable footprints to H3 res 5-9 hexagons. Parent =
 bit-truncation of row/col (the property the engine relies on).
 
-Every encoder here has THREE equivalent implementations kept in lock-step
-(asserted by tests/test_geo_kernels.py and the cells_encode/
-cell_parent driver oracles):
-  1. NumPy kernel (for pandas UDFs),
-  2. pure Catalyst Column expression (JVM-side, whole-stage codegen —
-     the hot path at 10^12 rows),
-  3. DuckDB SQL string (the correctness oracle).
+The cell encoder has TWO implementations kept in lock-step (asserted
+by tests/test_spark_ops.py, tests/test_geo_kernels.py and the
+cells_encode/cell_parent driver oracles):
+  1. NumPy kernel (:func:`encode`, for pandas UDFs and driver-side
+     indexes),
+  2. one SQL text (:func:`encode_sql`) that both engines parse: DuckDB
+     runs it as the correctness oracle, and Catalyst runs the same
+     string through :func:`encode_col` (JVM-side, whole-stage codegen —
+     the hot path at 10^12 rows). Spark types it ``bigint``, and it
+     agrees with the kernel on the edges too: poles, antimeridian,
+     -0.0, NaN (row/col 0, as Spark's floor-to-long gives) and exact
+     cell boundaries.
+The pandas-UDF form (operators.encode.with_cells_pandas) wraps the NumPy
+kernel and stays as a test reference.
 """
 
 from __future__ import annotations
@@ -54,8 +61,10 @@ def encode(lat: np.ndarray, lon: np.ndarray, res: int) -> np.ndarray:
     scale = float(1 << res)
     nrow = int(180 * (1 << res))
     ncol = int(360 * (1 << res))
-    row = np.clip(np.floor((lat + 90.0) * scale), 0, nrow - 1).astype(np.int64)
-    col = np.clip(np.floor((lon + 180.0) * scale), 0, ncol - 1).astype(np.int64)
+    # fmax/fmin rather than clip: a NaN coordinate lands in row/col 0,
+    # as Spark's floor-to-long does in :func:`encode_sql`
+    row = np.fmin(np.fmax(np.floor((lat + 90.0) * scale), 0), nrow - 1).astype(np.int64)
+    col = np.fmin(np.fmax(np.floor((lon + 180.0) * scale), 0), ncol - 1).astype(np.int64)
     return MODE_BIT | (np.int64(res) << np.int64(RES_SHIFT)) | (row << np.int64(ROW_SHIFT)) | col
 
 
@@ -136,27 +145,17 @@ def ring(cell: int, k: int = 1) -> np.ndarray:
 # -------------------------------------------------------- catalyst column
 
 
-def encode_col(lat: Column, lon: Column, res: int) -> Column:
-    """Pure-Column h3lite encoder — stays inside whole-stage codegen,
-    no Python in the loop. Bit-identical to :func:`encode`."""
-    scale = float(1 << res)
-    nrow = 180 * (1 << res)
-    ncol = 360 * (1 << res)
-    row = F.least(
-        F.greatest(F.floor((lat + F.lit(90.0)) * F.lit(scale)), F.lit(0)),
-        F.lit(nrow - 1),
-    ).cast("long")
-    col = F.least(
-        F.greatest(F.floor((lon + F.lit(180.0)) * F.lit(scale)), F.lit(0)),
-        F.lit(ncol - 1),
-    ).cast("long")
-    return (
-        F.lit(int(MODE_BIT))
-        .cast("long")
-        .bitwiseOR(F.lit(res << RES_SHIFT).cast("long"))
-        .bitwiseOR(F.shiftleft(row, ROW_SHIFT))
-        .bitwiseOR(col)
-    )
+def encode_col(lat: str | Column, lon: str | Column, res: int) -> Column:
+    """h3lite encoder as a Catalyst expression: the :func:`encode_sql`
+    text itself, parsed once, so oracle and engine run one string. Stays
+    inside whole-stage codegen, no Python in the loop; bit-identical to
+    :func:`encode`. ``lat``/``lon`` are column names (a plain
+    ``F.col(name)`` is accepted and read back as its name)."""
+    return F.expr(encode_sql(_col_sql(lat), _col_sql(lon), res))
+
+
+def _col_sql(c: str | Column) -> str:
+    return c if isinstance(c, str) else c._jc.toString()
 
 
 def parent_col(cell: Column, parent_res: int, child_res: int) -> Column:

@@ -29,6 +29,8 @@ rows — sentinel instead of NULL so the DuckDB oracle compares exactly).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -86,6 +88,15 @@ def build_tile_index(grid_res: int | None = None) -> PackedPolygonIndex:
     ]
     idx.knn_shortlist = _build_knn_shortlist(lookup, idx.vmean)
     return idx
+
+
+@functools.lru_cache(maxsize=None)
+def _default_tile_index() -> PackedPolygonIndex:
+    """The index :func:`assign_tiles` and :func:`assign_tiles_joined` use
+    when given none, built once per process (the build is ~150 ms of
+    pure Python per call). Private and never mutated: callers that want
+    an index to modify take a fresh one from :func:`build_tile_index`."""
+    return build_tile_index()
 
 
 def _build_knn_shortlist(lookup: np.ndarray, vmean: np.ndarray) -> np.ndarray:
@@ -373,7 +384,7 @@ def assign_tiles(
     materializes) a monotonic id.
     """
     if index is None:
-        index = build_tile_index()
+        index = _default_tile_index()
     if index_nbytes(index) > broadcast_limit_bytes:
         return assign_tiles_joined(
             df, spark, index, lat_col=lat_col, lon_col=lon_col,
@@ -420,18 +431,16 @@ def assign_tiles(
                 )
             return pd.DataFrame({"tile_id": tile_id, "mcode": mcode, "dist2": dist2})
 
-    out = (
-        df.withColumn("__a", _assign(F.col(lat_col), F.col(lon_col)))
-        .withColumn("tile_id", F.col("__a.tile_id"))
-        .withColumn(
-            "method",
-            F.when(F.col("__a.mcode") == 0, F.lit("pip")).otherwise(F.lit("knn")),
-        )
-        .withColumn("dist2", F.col("__a.dist2"))
-    )
+    # one projection; the optimizer evaluates the repeated UDF call once
+    a = _assign(F.col(lat_col), F.col(lon_col))
+    cols = {
+        "tile_id": a["tile_id"],
+        "method": F.when(a["mcode"] == 0, F.lit("pip")).otherwise(F.lit("knn")),
+        "dist2": a["dist2"],
+    }
     if with_s2:
-        out = out.withColumn("s2_cell", F.col("__a.s2_cell"))
-    return out.drop("__a")
+        cols["s2_cell"] = a["s2_cell"]
+    return df.withColumns(cols)
 
 
 # ----------------------------------------------- large-dimension path
@@ -520,7 +529,7 @@ def assign_tiles_joined(
     be recomputed differently on the two join branches).
     """
     if index is None:
-        index = build_tile_index()
+        index = _default_tile_index()
     if dim is None:
         dim = tile_dim_df(spark, index)
     lat, lon = F.col(lat_col), F.col(lon_col)

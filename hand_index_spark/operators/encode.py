@@ -7,9 +7,9 @@ plus an S2 cell (BASELINE.json:6).
 
 Two execution strategies, verified equal by tests/test_spark_ops.py:
 
-- :func:`with_cells` — pure Catalyst column expressions
-  (geo.cells.encode_col): stays inside whole-stage codegen, zero Python;
-  the default hot path for 10^12 rows.
+- :func:`with_cells` — pure Catalyst expressions parsed from the oracle
+  SQL text (geo.cells.encode_col), added in one projection: stays inside
+  whole-stage codegen, zero Python; the default hot path for 10^12 rows.
 - :func:`with_cells_pandas` — vectorized pandas UDF over Arrow batches
   (the mandated "vectorized pandas/Arrow UDF" form, BASELINE.json:15);
   same NumPy kernel, used where the surrounding stage is already in
@@ -45,7 +45,7 @@ def geotag_cols(doc_id: Column) -> tuple[Column, Column]:
 
 def with_geotag(df: DataFrame, doc_id_col: str = "doc_id") -> DataFrame:
     lat, lon = geotag_cols(F.col(doc_id_col).cast("long"))
-    return df.withColumn("lat", lat).withColumn("lon", lon)
+    return df.withColumns({"lat": lat, "lon": lon})
 
 
 def with_cells(
@@ -55,15 +55,13 @@ def with_cells(
     resolutions: tuple[int, ...] = DEFAULT_RESOLUTIONS,
 ) -> DataFrame:
     """Multi-resolution cell columns h3_r{res} + the partition key
-    ``cell_id`` (res PARTITION_RES), all JVM-side."""
-    lat, lon = F.col(lat_col), F.col(lon_col)
-    for res in resolutions:
-        df = df.withColumn(f"h3_r{res}", h3lite.encode_col(lat, lon, res))
-    if PARTITION_RES in resolutions:
-        df = df.withColumn("cell_id", F.col(f"h3_r{PARTITION_RES}"))
-    else:
-        df = df.withColumn("cell_id", h3lite.encode_col(lat, lon, PARTITION_RES))
-    return df
+    ``cell_id`` (res PARTITION_RES), all JVM-side in one projection."""
+    cols = {f"h3_r{res}": h3lite.encode_col(lat_col, lon_col, res) for res in resolutions}
+    # the expression itself, not a reference to h3_r{PARTITION_RES}: one
+    # withColumns cannot read its own outputs, and the optimizer
+    # substitutes such a reference into cell_id anyway
+    cols["cell_id"] = h3lite.encode_col(lat_col, lon_col, PARTITION_RES)
+    return df.withColumns(cols)
 
 
 @pandas_udf(LongType())

@@ -5,13 +5,14 @@ Spark restatement of the reference's two-phase filter:
   + optional partition-cell pruning *before* this operator runs;
 - exact phase (query_geojson.py:158-248): this operator — vectorized
   pandas UDFs over Arrow batches computing, per candidate polygon vs
-  the broadcast ROI: exact intersects, area, intersection area,
+  the ROI: exact intersects, area, intersection area,
   overlap%, contains/within flags, then the threshold mask
   ``contains | within | overlap_pct >= t`` (query_geojson.py:213-219,
   incl. the zero-area guard :194-196).
 
-The ROI is one small polygon (convex in all reference usage) —
-broadcast as plain NumPy; candidates stream through mapInPandas.
+The ROI is one small polygon (convex in all reference usage) — shipped
+as plain NumPy in the task closure; candidates stream through
+mapInPandas.
 """
 
 from __future__ import annotations
@@ -39,7 +40,9 @@ def refine_overlap(
     within_query. ``roi_ring`` must be in the same CRS as the stored
     geometry (EPSG:5070 in this engine, matching query_geojson.py:105).
     """
-    bcast = spark.sparkContext.broadcast(np.asarray(roi_ring, dtype=np.float64))
+    # the ring is a few hundred doubles at most: it rides in the closure,
+    # not in a broadcast that would stay in the BlockManager per query
+    roi = np.asarray(roi_ring, dtype=np.float64)
     out_schema = StructType(
         df.schema.fields
         + [
@@ -53,7 +56,6 @@ def refine_overlap(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        roi = bcast.value
         roi_area = abs(P.ring_area(roi))
         eps = 1e-9
         for pdf in batches:

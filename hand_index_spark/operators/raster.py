@@ -81,10 +81,9 @@ def tile_manifest(df: DataFrame, to_lonlat=None) -> DataFrame:
     else:
         lon, lat = cx, cy
     fp = fp.withColumn("lon", lon).withColumn("lat", lat)
-    for res in (5, 6, 7, 8, 9):
-        fp = fp.withColumn(
-            f"h3_r{res}", h3lite.encode_col(F.col("lat"), F.col("lon"), res)
-        )
+    fp = fp.withColumns(
+        {f"h3_r{res}": h3lite.encode_col("lat", "lon", res) for res in (5, 6, 7, 8, 9)}
+    )
     return (
         fp.withColumn("tile_id", F.sha2(F.concat_ws(",", "x0", "y0", "x2", "y2"), 256))
         .groupBy(

@@ -130,8 +130,7 @@ def spatial_join_points_polys(
     (minus the internal cell key). ``pip='convex'`` for convex rings
     (bit-identical to the broadcast kernel), ``'raycast'`` for general
     simple polygons."""
-    lat, lon = F.col(lat_col), F.col(lon_col)
-    p = points.withColumn("__pcell", h3lite.encode_col(lat, lon, res)).alias("p")
+    p = points.withColumn("__pcell", h3lite.encode_col(lat_col, lon_col, res)).alias("p")
     d = covering_cells_dim(polys, res, xmin, ymin, xmax, ymax).alias("d")
     j = p.join(d.hint("shuffle_hash"), F.col("p.__pcell") == F.col("d.cell"))
     plat = F.col(f"p.{lat_col}")

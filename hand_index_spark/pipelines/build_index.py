@@ -80,14 +80,9 @@ def build_catchments(
         merged.withColumn("lon", _albers_inv_lon(F.col("cx"), F.col("cy")))
         .withColumn("lat", _albers_inv_lat(F.col("cx"), F.col("cy")))
     )
-    for res in (5, 6, 7, 8, 9):
-        merged = merged.withColumn(
-            f"h3_r{res}", h3lite.encode_col(F.col("lat"), F.col("lon"), res)
-        )
-    merged = merged.withColumn(
-        "h3_index",
-        h3lite.encode_col(F.col("lat"), F.col("lon"), partition_res),
-    )
+    cells = {f"h3_r{res}": h3lite.encode_col("lat", "lon", res) for res in (5, 6, 7, 8, 9)}
+    cells["h3_index"] = h3lite.encode_col("lat", "lon", partition_res)
+    merged = merged.withColumns(cells)
     return (
         merged.withColumn("catchment_id", F.sha2(F.col("branch_path"), 256))
         .withColumn("hand_version_id", F.lit("fim100"))

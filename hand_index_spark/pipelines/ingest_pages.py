@@ -62,7 +62,7 @@ def ingest_pages(
         df = E.with_cells(df)
         df = df.withColumn(
             PARTITION_COL,
-            h3lite.encode_col(F.col("lat"), F.col("lon"), PARTITION_RES),
+            h3lite.encode_col("lat", "lon", PARTITION_RES),
         )
         # skew sketch BEFORE the assignment UDF: the cell key exists
         # already, and sampling a post-UDF frame still executes the UDF

@@ -69,8 +69,10 @@ def roi_candidates(
         lat_max + buf_cells * cs,
         partition_res,
     )
+    # one SQL text, not isin() over hundreds of literals (each literal is
+    # its own JVM round trip); the optimizer makes the same InSet filter
     pruned = catchments.filter(
-        F.col("h3_index").isin([int(c) for c in cells])
+        F.expr(f"h3_index IN ({', '.join(str(int(c)) for c in cells)})")
     )
     bx0, by0, bx1, by1 = P.bbox_of(ring5070)
     return pruned.filter(

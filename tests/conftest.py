@@ -26,3 +26,34 @@ def spark(tmp_path_factory):
     # the scaling gate (last test) may already have shut the JVM down
     if SparkContext._gateway is not None:
         s.stop()
+
+
+@pytest.fixture
+def jvm_commands(spark):
+    """``with jvm_commands() as n:`` counts into ``n[0]`` the Py4J
+    commands this thread sends to the JVM inside the block. Py4J's
+    finalizer thread, which releases JVM handles of freed Python objects
+    whenever it gets to them, is not counted."""
+    import threading
+    from contextlib import contextmanager
+
+    client = spark.sparkContext._gateway._gateway_client
+
+    @contextmanager
+    def count():
+        n = [0]
+        me = threading.get_ident()
+        send = client.send_command
+
+        def counting(*args, **kwargs):
+            if threading.get_ident() == me:
+                n[0] += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counting
+        try:
+            yield n
+        finally:
+            del client.send_command
+
+    return count

@@ -249,7 +249,7 @@ def one_page_per_cell(spark):
     from hand_index_spark.pipelines.ingest_pages import PARTITION_COL, PARTITION_RES
 
     geo = E.with_geotag(spark.range(20000).withColumnRenamed("id", "doc_id"))
-    cell = h3lite.encode_col(F.col("lat"), F.col("lon"), PARTITION_RES)
+    cell = h3lite.encode_col("lat", "lon", PARTITION_RES)
     rows = geo.groupBy(cell.alias(PARTITION_COL)).agg(F.min("doc_id")).collect()
     return sorted((int(c), int(d)) for c, d in rows)
 

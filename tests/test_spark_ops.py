@@ -29,6 +29,94 @@ def test_encode_strategies_agree(spark):
     assert (h3lite.encode(lat, lon, 5) == jvm.h3_r5.to_numpy()).all()
     assert (h3lite.encode(lat, lon, 9) == jvm.h3_r9.to_numpy()).all()
 
+    # edges: NaN, poles, antimeridian, -0.0, out of range, and points
+    # exactly on cell boundaries at every resolution checked
+    import duckdb
+    import pandas as pd
+
+    res_list = (0, 5, 9, 15)
+    nan, inf = float("nan"), float("inf")
+    pts = [
+        (nan, 0.0), (0.0, nan), (nan, nan), (90.0, 180.0), (-90.0, -180.0),
+        (90.0, -180.0), (-90.0, 180.0), (-0.0, -0.0), (0.0, -0.0), (-0.0, 0.0),
+        (91.0, 181.0), (-91.0, -181.0), (inf, -inf), (-inf, inf),
+        (np.nextafter(90.0, 0.0), np.nextafter(180.0, 0.0)),
+    ]
+    for res in res_list:
+        cs = 1.0 / (1 << res)
+        for k in (1, 3, 7):
+            pts += [(-90.0 + k * cs, -180.0 + k * cs), (90.0 - k * cs, 180.0 - k * cs)]
+            pts += [(np.nextafter(-90.0 + k * cs, -inf), np.nextafter(180.0 - k * cs, inf))]
+    edge = pd.DataFrame(pts, columns=["lat", "lon"])
+    got = (
+        E.with_cells(spark.createDataFrame(edge), resolutions=res_list)
+        .toPandas()
+    )
+    assert got.lat.equals(edge.lat) and got.lon.equals(edge.lon)
+    finite = np.isfinite(edge.lat) & np.isfinite(edge.lon)
+    con = duckdb.connect()
+    con.register("edge", edge[finite].reset_index(drop=True))
+    for res in res_list:
+        with np.errstate(invalid="ignore"):
+            want = h3lite.encode(edge.lat.to_numpy(), edge.lon.to_numpy(), res)
+        assert got[f"h3_r{res}"].dtype == np.int64
+        assert (got[f"h3_r{res}"].to_numpy() == want).all(), res
+        # the same SQL text in DuckDB (the oracle side) on the finite rows
+        duck = con.execute(
+            f"SELECT {h3lite.encode_sql('lat', 'lon', res)} FROM edge"
+        ).fetchnumpy()
+        assert (next(iter(duck.values())) == want[finite.to_numpy()]).all(), res
+
+
+def test_with_cells_adds_two_projections(spark):
+    """Geotag and cells each add one Project to the analyzed plan."""
+    df = spark.range(10).withColumnRenamed("id", "doc_id")
+
+    def projects(d):
+        return d._jdf.queryExecution().analyzed().toString().count("Project [")
+
+    assert projects(E.with_cells(E.with_geotag(df))) - projects(df) == 2
+
+
+def _perfbench_pages(spark, n=1000):
+    url = F.concat(F.lit("https://site"), F.col("doc_id").cast("string"))
+    return spark.range(n).withColumnRenamed("id", "doc_id").withColumn("url", url)
+
+
+def test_default_tile_index_is_cached(spark, monkeypatch):
+    """Two default assign_tiles calls share one index, built once; the
+    public builder still hands out a fresh object every call."""
+    builds, shipped = [], []
+    build = A.build_tile_index
+    monkeypatch.setattr(A, "build_tile_index", lambda: builds.append(1) or build())
+    sc = spark.sparkContext
+    bcast = sc.broadcast
+    monkeypatch.setattr(sc, "broadcast", lambda v: shipped.append(v) or bcast(v))
+    A._default_tile_index.cache_clear()
+    pages = E.with_geotag(_perfbench_pages(spark))
+    A.assign_tiles(pages, spark)
+    A.assign_tiles(pages, spark, with_s2=True)
+    assert len(builds) == 1 and len(shipped) == 2
+    assert shipped[0] is shipped[1] is A._default_tile_index()
+    assert build() is not build()
+
+
+def test_assign_plan_construction_round_trips(spark, jvm_commands):
+    """Building the benchmark-shaped assign frame stays a few hundred JVM
+    calls (339 here; 1,316 when each cell column was a hand-built Column
+    and every output column its own withColumn)."""
+    pages = _perfbench_pages(spark)
+
+    def build():
+        return A.assign_tiles(
+            E.with_cells(E.with_geotag(pages)), spark, pip="convex", with_s2=True
+        )
+
+    build()  # first call: index build and JVM function lookups
+    with jvm_commands() as n:
+        build()
+    assert n[0] < 500, n[0]
+
 
 def test_knn_grid_matches_full_bruteforce():
     idx = A.build_tile_index()
