@@ -3,6 +3,9 @@
 (query_geojson.py:250-340): -g GeoJSON ROI, -p index root, -t overlap
 threshold, -o output dir; prints the reference's stats dict (:314) as
 one JSON line and writes per-catchment partitioned results (:320-334).
+The partition-cell resolution is read from the index itself, so the
+query always prunes with cells of the resolution the index was built
+with.
 """
 
 from __future__ import annotations
@@ -18,8 +21,6 @@ def parse_args(argv=None):
     p.add_argument("-t", "--threshold", type=float, default=10.0,
                    help="overlap percentage threshold (query_geojson.py:213-219)")
     p.add_argument("-o", "--output-dir", required=True)
-    p.add_argument("--h3-resolution", type=int, default=0,
-                   help="partition resolution the index was built with")
     p.add_argument("--cpus", type=int, default=None, help="local[N] parallelism")
     return p.parse_args(argv)
 
@@ -27,6 +28,7 @@ def parse_args(argv=None):
 def main(argv=None, spark=None) -> dict:
     args = parse_args(argv)
 
+    from hand_index_spark.geo import cells as h3lite
     from hand_index_spark.pipelines.query_roi import roi_query, write_results
     from hand_index_spark.session import get_spark
     from hand_index_spark.tables.icelite import IceliteTable
@@ -40,6 +42,10 @@ def main(argv=None, spark=None) -> dict:
     hydro = IceliteTable(root, "hydrotables").read(spark)
     rem = IceliteTable(root, "rem_rasters").read(spark)
     crs = IceliteTable(root, "catchment_rasters").read(spark)
+    # every h3_index carries its resolution in bits 52-55; an empty index
+    # has nothing to prune, so any resolution serves it
+    first = catchments.select("h3_index").first()
+    res = int(h3lite.decompose(first[0])[0]) if first else 0
     kept, attrs, stats = roi_query(
         spark,
         catchments,
@@ -48,7 +54,7 @@ def main(argv=None, spark=None) -> dict:
         rem_rasters=rem,
         catchment_rasters=crs,
         overlap_threshold_pct=args.threshold,
-        partition_res=args.h3_resolution,
+        partition_res=res,
     )
     write_results(kept, attrs, args.output_dir)
     print(json.dumps({"stats": stats, "output_dir": args.output_dir}))

@@ -45,12 +45,11 @@ from .registry import GEO, TEXT, read_table as _t, register
 
 _LEAF_RES = 9
 _MIN_RES = 5
-_ROW_MASK = (1 << 26) - 1
-_MODE_BIT = 1 << 59
+_RES = h3lite.res_sql("cell")
 
 
 def _res_col():
-    return F.shiftright(F.col("cell"), 52).bitwiseAND(F.lit(15).cast("long"))
+    return F.expr(_RES)
 
 
 def _q_cells_compact(spark, sf_dir):
@@ -74,27 +73,28 @@ def _q_cells_compact(spark, sf_dir):
         _res_col().alias("res"),
         F.expr(
             f"shiftleft(CAST(1 AS BIGINT), CAST(2 * ({_LEAF_RES}"
-            " - ((cell >> 52) & 15)) AS INT))"
+            f" - {_RES}) AS INT))"
         ).alias("n_leaves"),
     )
 
 
 def _compact_round_sql(src: str, r: int) -> str:
     """One compaction round r -> r-1 as a CTE body over ``src``."""
-    par = (
-        f"(CAST({_MODE_BIT} AS BIGINT) | CAST({(r - 1) << 52} AS BIGINT)"
-        f" | (((((cell >> 26) & {_ROW_MASK}) >> 1)) << 26)"
-        f" | ((cell & {_ROW_MASK}) >> 1))"
+    mask = int(h3lite.ROW_MASK)
+    par = h3lite.pack_sql(
+        r - 1,
+        f"(((cell >> {h3lite.ROW_SHIFT}) & {mask}) >> 1)",
+        f"(cell & {mask}) >> 1",
     )
     return f"""
-      SELECT cell FROM {src} WHERE ((cell >> 52) & 15) <> {r}
+      SELECT cell FROM {src} WHERE {_RES} <> {r}
       UNION ALL
       SELECT DISTINCT CASE WHEN cnt = 4 THEN par ELSE cell END AS cell
       FROM (
         SELECT cell, par, count(*) OVER (PARTITION BY par) AS cnt
         FROM (
           SELECT cell, {par} AS par FROM {src}
-          WHERE ((cell >> 52) & 15) = {r}
+          WHERE {_RES} = {r}
         )
       )
     """
@@ -113,9 +113,9 @@ def _cells_compact_sql() -> str:
     body.append(
         f"""
         SELECT cell,
-               ((cell >> 52) & 15) AS res,
+               {_RES} AS res,
                (CAST(1 AS BIGINT) << CAST(2 * ({_LEAF_RES}
-                 - ((cell >> 52) & 15)) AS INTEGER)) AS n_leaves
+                 - {_RES}) AS INTEGER)) AS n_leaves
         FROM cur{_MIN_RES}
         """
     )

@@ -176,16 +176,34 @@ def parent_col(cell: Column, parent_res: int, child_res: int) -> Column:
 
 def encode_sql(lat_expr: str, lon_expr: str, res: int) -> str:
     """DuckDB SQL producing the identical cell id (the oracle side)."""
-    scale = float(1 << res)
-    nrow = 180 * (1 << res)
-    ncol = 360 * (1 << res)
-    row = (
-        f"LEAST(GREATEST(CAST(floor(({lat_expr} + 90.0) * {scale!r}) AS BIGINT), 0), {nrow - 1})"
+    return pack_sql(res, row_sql(lat_expr, res), col_sql(lon_expr, res))
+
+
+def row_sql(lat_expr: str, res: int) -> str:
+    """Clipped cell row of a latitude expression at ``res``."""
+    return (
+        f"LEAST(GREATEST(CAST(floor(({lat_expr} + 90.0) * {float(1 << res)!r})"
+        f" AS BIGINT), 0), {180 * (1 << res) - 1})"
     )
-    col = (
-        f"LEAST(GREATEST(CAST(floor(({lon_expr} + 180.0) * {scale!r}) AS BIGINT), 0), {ncol - 1})"
+
+
+def col_sql(lon_expr: str, res: int) -> str:
+    """Clipped cell column of a longitude expression at ``res``."""
+    return (
+        f"LEAST(GREATEST(CAST(floor(({lon_expr} + 180.0) * {float(1 << res)!r})"
+        f" AS BIGINT), 0), {360 * (1 << res) - 1})"
     )
+
+
+def pack_sql(res: int, row: str, col: str) -> str:
+    """Cell id at ``res`` from row and column expressions (the bit
+    layout in the module docstring)."""
     return (
         f"(CAST({int(MODE_BIT)} AS BIGINT) | CAST({res << RES_SHIFT} AS BIGINT)"
         f" | (({row}) << {ROW_SHIFT}) | ({col}))"
     )
+
+
+def res_sql(cell_expr: str) -> str:
+    """Resolution field of a cell id expression."""
+    return f"(({cell_expr} >> {RES_SHIFT}) & 15)"

@@ -8,7 +8,9 @@ flat NumPy arrays, shipped to executors via ``spark.sparkContext
 Python. Two access paths:
 
 - :meth:`query_point_candidates` — grid buckets keyed by h3lite cell of
-  the point: O(1) candidate lists for the PIP hot path;
+  the point: O(1) candidate lists (tile assignment probes its regular
+  grid instead, operators/assign.py; this probe is that path's test
+  reference);
 - :meth:`query_bbox` — vectorized bbox-overlap scan for polygon-vs-ROI
   prefilters (the viz envelope query, viz/query_visualization.py:150-156).
 

@@ -11,16 +11,16 @@ polygon-vs-ROI into point-vs-tile at web scale (BASELINE.json:6):
    reads ONLY (lat, lon) and returns a (tile_id, method, dist2) struct —
    every other column (html/text at web scale!) stays JVM-side, never
    crossing the Python boundary;
-3. candidate tiles come from O(1) grid-bucket probes; refinement is a
-   vectorized half-plane (convex) or ray-cast (general) PIP — no
-   per-row Python anywhere;
-4. points inside no tile fall back to **kNN**: for the regular tile
-   grid, exact nearest-centroid over the 7x7 cell neighborhood (O(1)
-   per point — the shape that scales to millions of tiles); generic
-   dimensions use a BLAS-shortlisted top-K re-ranked with the exact
-   oracle expression. Both paths produce the bit-exact oracle distance
-   and its ``ORDER BY dist2, tile_id`` tie-break (verified against full
-   brute force in tests/test_spark_ops.py).
+3. each point's one candidate tile comes from a regular-grid lookup
+   (tiles are disjoint subsets of their grid cells); refinement is a
+   vectorized half-plane PIP on that quad — no per-row Python anywhere;
+4. points inside no tile fall back to **kNN**: exact nearest centroid
+   over the 7x7 cell neighborhood (O(1) per point — the shape that
+   scales to millions of tiles), scanned through a per-cell shortlist
+   when the whole batch lies inside the grid's extent. It produces the
+   bit-exact oracle distance and its ``ORDER BY dist2, tile_id``
+   tie-break (verified against full brute force in
+   tests/test_spark_ops.py).
 
 Output columns: ``tile_id`` (long, never null), ``method`` ("pip"|"knn"),
 ``dist2`` (squared centroid distance in deg² for knn rows, -1.0 for pip
@@ -44,6 +44,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..geo import s2lite
 from ..geo.strtree import PackedPolygonIndex
 from ..tables import tilegrid as tg
 
@@ -60,11 +61,11 @@ _GRID_RING = 3  # 7x7 neighborhood; nearest live centroid provably inside
                 # for this grid's gap density (<=2 dead tiles per row)
 
 
-def build_tile_index(grid_res: int | None = None) -> PackedPolygonIndex:
+def build_tile_index() -> PackedPolygonIndex:
     """Packed index over the deterministic tile grid (driver-side),
     annotated with the regular-grid lookup + packed corner arrays."""
     ids, rings = tg.tile_ids_and_rings()
-    idx = PackedPolygonIndex(ids, rings, grid_res=grid_res)
+    idx = PackedPolygonIndex(ids, rings)
     lookup = np.full((tg.NR, tg.NC), -1, dtype=np.int32)
     for pos, tid in enumerate(ids):
         lookup[tid // tg.NC, tid % tg.NC] = pos
@@ -155,6 +156,14 @@ def _build_knn_shortlist(lookup: np.ndarray, vmean: np.ndarray) -> np.ndarray:
 # ------------------------------------------------------------------ kNN
 
 
+def _grid_rc(lat: np.ndarray, lon: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Clipped grid (row, col) of each point (the NumPy twin of
+    :func:`_cell_rc_cols`)."""
+    rc = np.clip(((lat - tg.LAT_MIN) / tg.H).astype(np.int64), 0, tg.NR - 1)
+    cc = np.clip(((lon - tg.LON_MIN) / tg.W).astype(np.int64), 0, tg.NC - 1)
+    return rc, cc
+
+
 def _knn_grid(
     index, lat: np.ndarray, lon: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -163,45 +172,28 @@ def _knn_grid(
     Candidates are generated in ascending tile_id order, so np.argmin's
     first-minimum == the oracle's ``ORDER BY dist2, tile_id``. Rows whose
     whole neighborhood is dead (impossible for in-extent points, guarded
-    anyway) fall back to the generic path.
+    anyway) fall back to :func:`_knn_topk`.
     """
-    lookup = index.grid_lookup
     cx, cy = index.vmean[:, 0], index.vmean[:, 1]
-    rc = np.clip(((lat - tg.LAT_MIN) / tg.H).astype(np.int64), 0, tg.NR - 1)
-    cc = np.clip(((lon - tg.LON_MIN) / tg.W).astype(np.int64), 0, tg.NC - 1)
-    sl = getattr(index, "knn_shortlist", None)
-    if sl is not None:
-        # the shortlist's domination proof needs the point inside its
-        # clipped cell's rectangle; out-of-extent points take the
-        # unpruned ring scan below (bit-equal either way)
-        in_ext = (
-            (lat >= tg.LAT_MIN) & (lat <= tg.LAT_MAX)
-            & (lon >= tg.LON_MIN) & (lon <= tg.LON_MAX)
+    rc, cc = _grid_rc(lat, lon)
+    sl = index.knn_shortlist
+    # the shortlist's domination proof needs the point inside its
+    # clipped cell's rectangle; a batch with any out-of-extent point
+    # takes the unpruned ring scan (bit-equal either way)
+    if sl is not None and (
+        (lat >= tg.LAT_MIN) & (lat <= tg.LAT_MAX)
+        & (lon >= tg.LON_MIN) & (lon <= tg.LON_MAX)
+    ).all():
+        pos = sl[rc * tg.NC + cc]  # (N, Kmax) ascending tile order
+    else:
+        off = np.arange(-_GRID_RING, _GRID_RING + 1, dtype=np.int64)
+        # (N, 7) row/col candidates, clipped (duplicates are harmless)
+        rr = np.clip(rc[:, None] + off[None, :], 0, tg.NR - 1)
+        ccand = np.clip(cc[:, None] + off[None, :], 0, tg.NC - 1)
+        # (N, 49) positions in row-major (ascending tile_id) order
+        pos = index.grid_lookup[rr[:, :, None], ccand[:, None, :]].reshape(
+            len(lat), -1
         )
-        if in_ext.all():
-            pos = sl[rc * tg.NC + cc]  # (N, Kmax) ascending tile order
-            alive = pos >= 0
-            safe = np.where(alive, pos, 0)
-            dx = lon[:, None] - cx[safe]
-            dy = lat[:, None] - cy[safe]
-            dist = dx * dx + dy * dy  # exact oracle expression
-            dist[~alive] = np.inf
-            j = np.argmin(dist, axis=1)
-            rows = np.arange(len(lat))
-            best = pos[rows, j].astype(np.int64)
-            d2 = dist[rows, j]
-            bad = best < 0
-            if bad.any():  # shortlist row empty — generic fallback
-                p, d = _knn_topk(lat[bad], lon[bad], cx, cy)
-                best[bad] = p
-                d2[bad] = d
-            return best, d2
-    off = np.arange(-_GRID_RING, _GRID_RING + 1, dtype=np.int64)
-    # (N, 7) row/col candidates, clipped (duplicates are harmless)
-    rr = np.clip(rc[:, None] + off[None, :], 0, tg.NR - 1)
-    ccand = np.clip(cc[:, None] + off[None, :], 0, tg.NC - 1)
-    # (N, 49) positions in row-major (ascending tile_id) order
-    pos = lookup[rr[:, :, None], ccand[:, None, :]].reshape(len(lat), -1)
     alive = pos >= 0
     safe = np.where(alive, pos, 0)
     dx = lon[:, None] - cx[safe]
@@ -213,7 +205,7 @@ def _knn_grid(
     best = pos[rows, j].astype(np.int64)
     d2 = dist[rows, j]
     bad = best < 0
-    if bad.any():  # neighborhood fully dead — generic fallback
+    if bad.any():  # no live candidate — brute-force fallback
         p, d = _knn_topk(lat[bad], lon[bad], cx, cy)
         best[bad] = p
         d2[bad] = d
@@ -223,8 +215,9 @@ def _knn_grid(
 def _knn_topk(
     lat: np.ndarray, lon: np.ndarray, cx: np.ndarray, cy: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Generic dimension: BLAS shortlist (algebraic -2 p·c + |c|²), then
-    exact re-rank of the tile_id-sorted top-K with the oracle expression."""
+    """Nearest centroid over every tile: BLAS shortlist (algebraic
+    -2 p·c + |c|²), then exact re-rank of the tile_id-sorted top-K with
+    the oracle expression."""
     t = len(cx)
     k = min(_KNN_TOPK, t)
     c2 = cx * cx + cy * cy  # shortlist scoring only, never output
@@ -260,20 +253,19 @@ def _assign_grid_pip(index, lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
     Tiles are subsets of their grid rects and rects are disjoint, so a
     point can only be inside the tile of its own cell — one lookup + one
     half-plane quad test per point, ~10x less memory traffic than the
-    generic candidate machinery (verified equal in
+    index's bucket probe (verified equal in
     tests/test_spark_ops.py::test_grid_fast_path_matches_generic).
     Returns poly positions (-1 = no hit).
     """
-    rc = np.clip(((lat - tg.LAT_MIN) / tg.H).astype(np.int64), 0, tg.NR - 1)
-    cc = np.clip(((lon - tg.LON_MIN) / tg.W).astype(np.int64), 0, tg.NC - 1)
+    rc, cc = _grid_rc(lat, lon)
     pos = index.grid_lookup[rc, cc].astype(np.int64)
     safe = np.where(pos >= 0, pos, 0)
     inside = pos >= 0
-    ex1, ey1 = getattr(index, "edge_x1", None), getattr(index, "edge_y1", None)
-    if ex1 is not None:
+    if index.edge_x1 is not None:
         # precomputed per-tile edge vectors (build_tile_index): the
         # differences were taken from the identical float64 corners, so
         # the half-plane sign is bit-identical to the corner form below
+        ex1, ey1 = index.edge_x1, index.edge_y1
         edx, edy = index.edge_dx, index.edge_dy
         for k in range(4):
             inside &= (
@@ -291,6 +283,13 @@ def _assign_grid_pip(index, lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
     return np.where(inside, pos, np.int64(-1))
 
 
+def _check_pip(pip: str) -> None:
+    """The tiles are convex quads, so the half-plane test is the only
+    PIP the kernel runs; ``pip`` stays a keyword for its callers."""
+    if pip != "convex":
+        raise ValueError(f"pip={pip!r}: tile assignment supports 'convex' only")
+
+
 def assign_batch(
     index: PackedPolygonIndex,
     lat: np.ndarray,
@@ -298,23 +297,16 @@ def assign_batch(
     pip: str = "convex",
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Pure-NumPy core: (tile_id, method_code 0=pip/1=knn, dist2)."""
+    _check_pip(pip)
     ids_arr = np.asarray(index.ids, dtype=np.int64)
-    if pip == "convex" and getattr(index, "grid_lookup", None) is not None:
-        assigned = _assign_grid_pip(index, lat, lon)
-    else:
-        assigned, _ = index.assign_points(lat, lon, pip=pip)
+    assigned = _assign_grid_pip(index, lat, lon)
     hit = assigned >= 0
     tile_id = np.where(hit, ids_arr[np.clip(assigned, 0, None)], np.int64(-1))
     mcode = (~hit).astype(np.int8)
     dist2 = np.full(len(lat), -1.0, dtype=np.float64)
     miss = ~hit
     if miss.any():
-        if getattr(index, "grid_lookup", None) is not None:
-            pos, d2 = _knn_grid(index, lat[miss], lon[miss])
-        else:
-            pos, d2 = _knn_topk(
-                lat[miss], lon[miss], index.vmean[:, 0], index.vmean[:, 1]
-            )
+        pos, d2 = _knn_grid(index, lat[miss], lon[miss])
         tile_id[miss] = ids_arr[pos]
         dist2[miss] = d2
     return tile_id, mcode, dist2
@@ -383,6 +375,7 @@ def assign_tiles(
     join path can reassemble rows by; without one it synthesizes (and
     materializes) a monotonic id.
     """
+    _check_pip(pip)
     if index is None:
         index = _default_tile_index()
     if index_nbytes(index) > broadcast_limit_bytes:
@@ -390,46 +383,29 @@ def assign_tiles(
             df, spark, index, lat_col=lat_col, lon_col=lon_col,
             with_s2=with_s2, key_col=key_col,
         )
+    from .encode import S2_LEVEL
+
     bcast = spark.sparkContext.broadcast(index)
 
-    if with_s2:
-        from ..geo import s2lite
-        from .encode import S2_LEVEL
-
-        @pandas_udf(_ASSIGN_S2_STRUCT)
-        def _assign(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-            la = lat.to_numpy(dtype=np.float64)
-            lo = lon.to_numpy(dtype=np.float64)
-            n = len(la)
-            tile_id = np.empty(n, np.int64)
-            mcode = np.empty(n, np.int8)
-            dist2 = np.empty(n, np.float64)
-            s2 = np.empty(n, np.int64)
-            for a in range(0, n, _BATCH_CHUNK):  # cache blocking (above)
-                b = min(a + _BATCH_CHUNK, n)
-                tile_id[a:b], mcode[a:b], dist2[a:b] = assign_batch(
-                    bcast.value, la[a:b], lo[a:b], pip=pip
-                )
-                s2[a:b] = s2lite.encode(la[a:b], lo[a:b], S2_LEVEL)
-            return pd.DataFrame(
-                {"tile_id": tile_id, "mcode": mcode, "dist2": dist2, "s2_cell": s2}
+    @pandas_udf(_ASSIGN_S2_STRUCT if with_s2 else _ASSIGN_STRUCT)
+    def _assign(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
+        la = lat.to_numpy(dtype=np.float64)
+        lo = lon.to_numpy(dtype=np.float64)
+        n = len(la)
+        tile_id = np.empty(n, np.int64)
+        mcode = np.empty(n, np.int8)
+        dist2 = np.empty(n, np.float64)
+        cols = {"tile_id": tile_id, "mcode": mcode, "dist2": dist2}
+        if with_s2:
+            s2 = cols["s2_cell"] = np.empty(n, np.int64)
+        for a in range(0, n, _BATCH_CHUNK):  # cache blocking (above)
+            b = min(a + _BATCH_CHUNK, n)
+            tile_id[a:b], mcode[a:b], dist2[a:b] = assign_batch(
+                bcast.value, la[a:b], lo[a:b]
             )
-    else:
-
-        @pandas_udf(_ASSIGN_STRUCT)
-        def _assign(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-            la = lat.to_numpy(dtype=np.float64)
-            lo = lon.to_numpy(dtype=np.float64)
-            n = len(la)
-            tile_id = np.empty(n, np.int64)
-            mcode = np.empty(n, np.int8)
-            dist2 = np.empty(n, np.float64)
-            for a in range(0, n, _BATCH_CHUNK):  # cache blocking (above)
-                b = min(a + _BATCH_CHUNK, n)
-                tile_id[a:b], mcode[a:b], dist2[a:b] = assign_batch(
-                    bcast.value, la[a:b], lo[a:b], pip=pip
-                )
-            return pd.DataFrame({"tile_id": tile_id, "mcode": mcode, "dist2": dist2})
+            if with_s2:
+                s2[a:b] = s2lite.encode(la[a:b], lo[a:b], S2_LEVEL)
+        return pd.DataFrame(cols)
 
     # one projection; the optimizer evaluates the repeated UDF call once
     a = _assign(F.col(lat_col), F.col(lon_col))
@@ -453,14 +429,6 @@ def tile_dim_df(spark: SparkSession, index: PackedPolygonIndex) -> DataFrame:
     this from a partitioned table (it IS the `tiles` side of the
     reference's spatial join, query_geojson.py:65-72) — the join path
     below only needs the columns, not where they came from."""
-    if getattr(index, "grid_lookup", None) is None or getattr(
-        index, "quad_corners", None
-    ) is None:
-        raise ValueError(
-            "tile_dim_df requires the regular-grid annotations "
-            "(build_tile_index); generic polygon dims join via their "
-            "own covering-cell table"
-        )
     ids = np.asarray(index.ids, dtype=np.int64)
     q = index.quad_corners  # (T, 4, 2) in ring order (sw, se, ne, nw)
     cols = {"cell_key": ids, "tile_id": ids}
@@ -495,7 +463,6 @@ def assign_tiles_joined(
     lon_col: str = "lon",
     with_s2: bool = False,
     key_col: str | None = None,
-    dim: DataFrame | None = None,
 ) -> DataFrame:
     """Tile assignment WITHOUT broadcasting the dimension: cell-key
     equi-joins against a partitioned tile dimension (VERDICT r3 item 5
@@ -530,8 +497,7 @@ def assign_tiles_joined(
     """
     if index is None:
         index = _default_tile_index()
-    if dim is None:
-        dim = tile_dim_df(spark, index)
+    dim = tile_dim_df(spark, index)
     lat, lon = F.col(lat_col), F.col(lon_col)
     r0, c0 = _cell_rc_cols(lat, lon)
     pts = df.withColumn("__ck", (r0 * F.lit(tg.NC) + c0).cast("long"))

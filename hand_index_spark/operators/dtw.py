@@ -26,10 +26,6 @@ from pyspark.sql import functions as F
 BIG = 1_000_000_000_000_000  # unreachable sentinel, overflow-safe
 
 
-def _big() -> str:
-    return f"CAST({BIG} AS BIGINT)"
-
-
 def _upto(lo: Column, hi: Column) -> Column:
     """[lo, ..., hi], empty when lo > hi (``sequence`` would count down)."""
     return F.when(lo <= hi, F.sequence(lo, hi)).otherwise(F.array_repeat(lo, 0))

@@ -8,9 +8,9 @@ rings, not just quads) joins against any point table through the
 h3lite cell lattice, entirely in Catalyst:
 
 1. **dimension side**: each polygon explodes to the lattice cells its
-   bbox covers at ``res`` (the closed-form row/col packing makes
-   "polyfill" a ``sequence() x sequence()`` double explode — pure
-   Column arithmetic, no driver-side cover_bbox call);
+   bbox covers at ``res`` (h3lite's closed-form row/col SQL text
+   makes "polyfill" a ``sequence() x sequence()`` double explode —
+   pure Catalyst arithmetic, no driver-side cover_bbox call);
 2. **equi-join** points (one ``encode_col`` cell each) to the covering
    cells — shuffle_hash on the cell key: both sides hash-partition,
    nothing broadcasts, AQE splits hot cells;
@@ -35,21 +35,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..geo import cells as h3lite
-from ..geo.cells import MODE_BIT, RES_SHIFT, ROW_SHIFT
-
-
-def _pack_cell(res: int, row: Column, col: Column) -> Column:
-    """Column twin of the h3lite bit layout (fields don't overlap, so
-    OR is plain addition)."""
-    return (
-        F.lit(int(MODE_BIT) + (res << RES_SHIFT)).cast("long")
-        + row * F.lit(1 << ROW_SHIFT)
-        + col
-    )
-
-
-def _clip_rc(v: Column, n: int) -> Column:
-    return F.least(F.greatest(v, F.lit(0)), F.lit(n - 1))
 
 
 def covering_cells_dim(
@@ -62,17 +47,14 @@ def covering_cells_dim(
 ) -> DataFrame:
     """Explode each polygon row to (original columns..., cell) for every
     lattice cell at ``res`` its bbox covers — Catalyst polyfill."""
-    scale = float(1 << res)
-    nrow = 180 * (1 << res)
-    ncol = 360 * (1 << res)
-    r0 = _clip_rc(F.floor((F.expr(ymin) + F.lit(90.0)) * F.lit(scale)).cast("long"), nrow)
-    r1 = _clip_rc(F.floor((F.expr(ymax) + F.lit(90.0)) * F.lit(scale)).cast("long"), nrow)
-    c0 = _clip_rc(F.floor((F.expr(xmin) + F.lit(180.0)) * F.lit(scale)).cast("long"), ncol)
-    c1 = _clip_rc(F.floor((F.expr(xmax) + F.lit(180.0)) * F.lit(scale)).cast("long"), ncol)
+    r0 = F.expr(h3lite.row_sql(ymin, res))
+    r1 = F.expr(h3lite.row_sql(ymax, res))
+    c0 = F.expr(h3lite.col_sql(xmin, res))
+    c1 = F.expr(h3lite.col_sql(xmax, res))
     return (
         polys.withColumn("__row", F.explode(F.sequence(r0, r1)))
         .withColumn("__col", F.explode(F.sequence(c0, c1)))
-        .withColumn("cell", _pack_cell(res, F.col("__row"), F.col("__col")))
+        .withColumn("cell", F.expr(h3lite.pack_sql(res, "__row", "__col")))
         .drop("__row", "__col")
     )
 

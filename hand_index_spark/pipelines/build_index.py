@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..geo import albers
 from ..geo import cells as h3lite
@@ -40,16 +40,14 @@ from ..tables.icelite import IceliteTable
 CATCHMENT_PARTITION_RES = 0  # ~1 deg cells; coarse like the reference default
 
 
-@pandas_udf(DoubleType())
-def _albers_inv_lon(x: pd.Series, y: pd.Series) -> pd.Series:
-    lon, _ = albers.inverse(x.to_numpy(np.float64), y.to_numpy(np.float64))
-    return pd.Series(lon)
-
-
-@pandas_udf(DoubleType())
-def _albers_inv_lat(x: pd.Series, y: pd.Series) -> pd.Series:
-    _, lat = albers.inverse(x.to_numpy(np.float64), y.to_numpy(np.float64))
-    return pd.Series(lat)
+@pandas_udf(
+    StructType(
+        [StructField("lon", DoubleType()), StructField("lat", DoubleType())]
+    )
+)
+def _albers_inv(x: pd.Series, y: pd.Series) -> pd.DataFrame:
+    lon, lat = albers.inverse(x.to_numpy(np.float64), y.to_numpy(np.float64))
+    return pd.DataFrame({"lon": lon, "lat": lat})
 
 
 def build_catchments(
@@ -76,10 +74,8 @@ def build_catchments(
     )
     deduped = src.join(F.broadcast(first_file), ["branch_path", "src_file"])
     merged = union_branches(deduped, simplify_tol=simplify_tol)
-    merged = (
-        merged.withColumn("lon", _albers_inv_lon(F.col("cx"), F.col("cy")))
-        .withColumn("lat", _albers_inv_lat(F.col("cx"), F.col("cy")))
-    )
+    ll = _albers_inv(F.col("cx"), F.col("cy"))
+    merged = merged.withColumns({"lon": ll["lon"], "lat": ll["lat"]})
     cells = {f"h3_r{res}": h3lite.encode_col("lat", "lon", res) for res in (5, 6, 7, 8, 9)}
     cells["h3_index"] = h3lite.encode_col("lat", "lon", partition_res)
     merged = merged.withColumns(cells)

@@ -59,13 +59,6 @@ def tile_corners(r: int, c: int) -> np.ndarray:
     )
 
 
-def tile_centroid(corners: np.ndarray) -> tuple[float, float]:
-    """Corner mean with explicit left-assoc order (matches the SQL)."""
-    cx = (corners[0, 0] + corners[1, 0] + corners[2, 0] + corners[3, 0]) * 0.25
-    cy = (corners[0, 1] + corners[1, 1] + corners[2, 1] + corners[3, 1]) * 0.25
-    return float(cx), float(cy)
-
-
 def tile_ids_and_rings() -> tuple[list[int], list[np.ndarray]]:
     """All live tiles: (tile_id = r*NC + c, quad ring)."""
     ids: list[int] = []

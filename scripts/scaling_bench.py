@@ -5,7 +5,9 @@ instruction: evidence with local[8] vs local[32] on the same input).
 
 Runs the flagship tile-assignment job at both parallelism levels on an
 identical synthesized input, reports throughput at each + scaling
-efficiency, and appends the table to BENCH/BASELINE.md.
+efficiency, and prints the measured row as one JSON line — that line is
+the record (tests/test_zz_scaling_gate.py parses it); the script writes
+no file.
 
 Efficiency = (T_8 / T_32) / (32/8); >= 0.8 is the target. Also asserts
 the outputs are identical at both levels (partitioning must not change
@@ -18,7 +20,6 @@ import json
 import os
 import sys
 import time
-from datetime import datetime, timezone
 
 
 def cpu_probe_mops() -> float:
@@ -140,7 +141,6 @@ def main() -> None:
     )
     print(f"outputs identical across parallelism levels: {identical}")
 
-    stamp = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
     row = {
         "rows": ROWS,
         "levels": f"local[{n}] vs local[{n4}] (best matched pair of {len(pairs)})",
@@ -154,25 +154,6 @@ def main() -> None:
         # sustain the 4N level during this window (see BENCH/NOTES.md)
         "cpu_mops_rounds": probes,
     }
-    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
-    path = os.path.join(ROOT, "BENCH", "BASELINE.md")
-    header_needed = not os.path.exists(path)
-    with open(path, "a") as f:
-        if header_needed:
-            f.write(
-                "# BENCH/BASELINE — measured numbers\n\n"
-                "Scaling criterion (BASELINE.json:2,14): same flagship\n"
-                "tile-assignment job, same input, at parallelism N vs 4N\n"
-                "(sandbox stand-in for N vs 4N executors); target\n"
-                "efficiency >= 0.8.\n\n"
-                "| when | rows | levels | t(N) s | t(4N) s | rows/s @N | rows/s @4N | efficiency | identical output |\n"
-                "|---|---|---|---|---|---|---|---|---|\n"
-            )
-        f.write(
-            f"| {stamp} | {row['rows']} | {row['levels']} | {row['t_n_sec']} | "
-            f"{row['t_4n_sec']} | {row['rows_per_sec_n']} | {row['rows_per_sec_4n']} | "
-            f"{row['efficiency']} | {row['identical_output']} |\n"
-        )
     print(json.dumps(row))
     assert identical, "outputs differ across parallelism levels"
     if efficiency < target:

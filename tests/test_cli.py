@@ -33,6 +33,21 @@ def test_build_then_query_cli_end_to_end(spark, tmp_path):
     assert snaps2 == {}
 
 
+def test_query_cli_reads_partition_resolution_from_index(spark, tmp_path):
+    """An index built at a non-default partition resolution is queried
+    with cells of that resolution, with no flag to keep in step."""
+    root = str(tmp_path / "index_r1")
+    build_index_main.main(["--output-dir", root, "--h3-resolution", "1"], spark=spark)
+    from hand_index_spark.tables.datagen import roi_geojson
+
+    gj = tmp_path / "roi.json"
+    gj.write_text(json.dumps(roi_geojson("within")))
+    stats = query_roi_main.main(
+        ["-g", str(gj), "-p", root, "-o", str(tmp_path / "results")], spark=spark
+    )
+    assert stats["final"] > 0
+
+
 def test_build_cli_refuses_foreign_output_dir(tmp_path):
     d = tmp_path / "occupied"
     d.mkdir()

@@ -101,6 +101,16 @@ def test_default_tile_index_is_cached(spark, monkeypatch):
     assert build() is not build()
 
 
+def test_assign_refuses_non_convex_pip(spark):
+    """The tiles are convex quads and the half-plane test is the only
+    PIP the kernel runs; any other mode fails when the plan is built."""
+    pages = E.with_geotag(_perfbench_pages(spark))
+    with pytest.raises(ValueError):
+        A.assign_tiles(pages, spark, pip="raycast")
+    with pytest.raises(ValueError):
+        A.assign_batch(A.build_tile_index(), np.zeros(1), np.zeros(1), pip="raycast")
+
+
 def test_assign_plan_construction_round_trips(spark, jvm_commands):
     """Building the benchmark-shaped assign frame stays a few hundred JVM
     calls (339 here; 1,316 when each cell column was a hand-built Column

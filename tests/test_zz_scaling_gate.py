@@ -9,8 +9,8 @@ single-shot measurement is meaningless on this demand-paged host). This
 test runs that protocol in a SUBPROCESS (its two differently-sized
 sessions can't share the suite fixture's JVM) and asserts the gate, so
 the criterion is re-proven by `pytest` every round instead of living in
-hand-curated BENCH rows. The script itself appends the evidence row to
-BENCH/BASELINE.md.
+hand-curated BENCH rows. The script prints the evidence row as its last
+JSON line; that line is the record.
 
 Host-weather note: the suite must not run anything concurrently with
 this test (a contended pair measured 0.787 in round 2). Row count is
@@ -80,9 +80,8 @@ def test_scaling_efficiency_gate():
         env=env,
     )
     tail = (proc.stdout or "")[-2500:] + (proc.stderr or "")[-800:]
-    # last JSON line carries the measured row the script appended to
-    # BENCH/BASELINE.md (printed before the gate assertion, so it is
-    # present even on failure)
+    # last JSON line carries the measured row (printed before the gate
+    # assertion, so it is present even on failure)
     row = None
     for line in proc.stdout.splitlines():
         if line.startswith("{"):
