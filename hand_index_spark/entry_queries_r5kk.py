@@ -13,10 +13,10 @@
   on Iceberg metadata — how many OTHER files' [min, max] ranges
   overlap each file's range on a sort column (overlap ⇒ a range
   query must open multiple files; the Iceberg "clustering depth"
-  signal). Reads the engine's own icelite zonemaps (real table
-  metadata, one file per lang partition by construction) and
-  cross-checks them against a plain relational oracle over the
-  source rows — metadata provably consistent with data.
+  signal). Reads the engine's own icelite zone maps from the
+  snapshot manifest (real table metadata, one file per lang
+  partition by construction) and cross-checks them against a plain
+  relational oracle over the source rows — metadata provably consistent with data.
 
 Contract as every batch: identical column names and bit-identical
 values between the Spark program and the DuckDB oracle.
@@ -120,7 +120,7 @@ def _q_zonemap_overlap_audit(spark, sf_dir):
     root = _fresh_dir("zm_audit_")
     t = IceliteTable(root, "docs")
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    # one file per lang partition => the zonemap row IS the per-lang
+    # one file per lang partition => the manifest entry IS the per-lang
     # min/max of the sort column
     t.write(
         d.repartition(1).sortWithinPartitions("lang"),
@@ -129,10 +129,10 @@ def _q_zonemap_overlap_audit(spark, sf_dir):
         lineage_key="doc_id",
         stats_cols=["n_chars"],
     )
-    zm = spark.read.parquet(t.zonemap_dir).select(
-        F.regexp_extract("file", r"lang=([^/]+)/", 1).alias("lang"),
-        F.col("min__n_chars").cast("long").alias("file_min"),
-        F.col("max__n_chars").cast("long").alias("file_max"),
+    zm = spark.createDataFrame(
+        [(f["path"].split("/lang=")[1].split("/")[0], *f["stats"]["n_chars"])
+         for f in t.current_snapshot()["files"]],
+        "lang string, file_min long, file_max long",
     )
     a = zm.alias("a")
     b = zm.alias("b")

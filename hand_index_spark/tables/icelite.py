@@ -13,10 +13,11 @@ the parts the north rule actually needs (BASELINE.json:6,14):
   reference's constraint-free staging table + upsert
   (load.py:62-64,190-196) and its refuse-to-overwrite guard
   (load.py:326-348).
-- **per-partition lineage rows**: every write records, per Spark
-  partition, (cell range, row count, checksum, wall-time) — appended to
+- **per-file lineage rows**: every write records, per committed file,
+  (cell range, row count, checksum, wall-time) — appended to
   ``_meta/lineage`` as parquet. The checksum is an order-insensitive
-  xxhash64 XOR so it is stable under shuffle nondeterminism.
+  xxhash64 XOR so it is stable under shuffle nondeterminism. The same
+  one pass gives the snapshot summary and the per-file zone maps.
 - **idempotent resume**: ``stage_done()`` checks whether a stage already
   committed a snapshot for the same (stage, input fingerprint); pipeline
   drivers skip completed stages mid-job (reference ``--skip-load``
@@ -25,7 +26,7 @@ the parts the north rule actually needs (BASELINE.json:6,14):
 Layout on disk::
 
     <root>/<table>/data/...(hive-partitioned parquet)...
-    <root>/<table>/_meta/snap-<n>.json
+    <root>/<table>/_meta/snap-<n>.json     (data_paths; files: [{path, stats: {col: [min, max]}}])
     <root>/<table>/_meta/current           (atomic pointer, rename-swapped)
     <root>/<table>/_meta/lineage/*.parquet
 """
@@ -33,10 +34,13 @@ Layout on disk::
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -61,7 +65,6 @@ class IceliteTable:
         self.data_dir = os.path.join(self.base, "data")
         self.meta_dir = os.path.join(self.base, "_meta")
         self.lineage_dir = os.path.join(self.meta_dir, "lineage")
-        self.zonemap_dir = os.path.join(self.meta_dir, "zonemaps")
         self.bloom_dir = os.path.join(self.meta_dir, "blooms")
         os.makedirs(self.meta_dir, exist_ok=True)
         os.makedirs(self.lineage_dir, exist_ok=True)
@@ -199,8 +202,15 @@ class IceliteTable:
         ``mode="append"`` keeps the previous snapshot's directories in
         the new manifest; ``"overwrite"`` replaces them (the old dirs
         stay on disk for snapshot time-travel until vacuumed).
+
+        ``stats_cols`` must be integer, floating or string columns (the
+        JSON manifest holds their min/max exactly), else ``ValueError``.
         """
         t0 = time.time()
+        stats_cols = stats_cols or []
+        bad = [c for c in stats_cols if df.schema[c].dataType.simpleString() not in _STATS_TYPES]
+        if bad:
+            raise ValueError(f"zone maps need integer, floating or string columns: {bad}")
         lineage_key = lineage_key or (partition_by[0] if partition_by else None)
         rel = f"d-{uuid.uuid4().hex}"
         out_dir = os.path.join(self.data_dir, rel)
@@ -209,47 +219,47 @@ class IceliteTable:
             w = w.partitionBy(*partition_by)
         w.parquet(out_dir)
         wall_ms = int((time.time() - t0) * 1000)
-        # lineage over the data as committed: one plan execution total
-        # (the write), and the checksum provably describes the bytes a
-        # reader will see — not a potentially re-executed upstream plan
+        # one pass over the data as committed (what a reader will see)
+        # gives lineage, zone maps and the summary: one row per file, so
+        # the grain is the data layout, not Spark's split packing
         spark = df.sparkSession
         committed = spark.read.parquet(out_dir)
         key = lineage_key if lineage_key in committed.columns else None
+        cell = F.col(key).cast("long") if key else F.lit(None).cast("long")
+        per_file = sorted(
+            committed.groupBy(F.input_file_name())
+            .agg(
+                F.min(cell),
+                F.max(cell),
+                F.count(F.lit(1)),
+                F.bit_xor(F.xxhash64(*[F.col(c) for c in committed.columns])),
+                *[f(c) for c in stats_cols for f in (F.min, F.max)],
+            )
+            .collect()
+        )
         pointer = "current" if branch is None else branch
         cur = self._head(pointer)
         if cur is None and branch is not None:
             cur = self.current_snapshot()  # new branch forks the published head
         sid = self._next_sid()
-        # lineage rows are written EXECUTOR-SIDE (no toPandas bridge —
-        # at millions of partitions the per-partition rows never touch
-        # the driver, VERDICT r2 item 8); write_id ties the rows to this
-        # write so the snapshot summary below cannot double-count if a
-        # crashed earlier attempt left orphan rows under the same sid
-        lin_df = (
-            _lineage_frame(committed, stage, key)
-            .withColumn("snapshot_id", F.lit(sid).cast("long"))
-            .withColumn("wall_ms_total", F.lit(wall_ms).cast("long"))
-            .withColumn("write_id", F.lit(rel))
+        # manifest-sized, so written from the driver like the snapshot,
+        # without a Spark job; partition_id is the file's rank
+        lineage = pa.Table.from_pylist(
+            [
+                dict(zip(_LINEAGE.names, (i, *r[:5], stage, sid, wall_ms, rel)))
+                for i, r in enumerate(per_file)
+            ],
+            schema=_LINEAGE,
         )
-        lin_df.write.mode("append").parquet(self.lineage_dir)
-        # zone maps: per-FILE column min/max, written executor-side like
-        # lineage (a groupBy on input_file_name — one row per committed
-        # file, so the frame is manifest-sized, never data-sized).
-        # read_pruned() later skips whole files whose [min,max] cannot
-        # intersect a predicate — Iceberg's data-skipping stats, rebuilt
-        if stats_cols:
-            aggs = []
-            for c in stats_cols:
-                aggs.append(F.min(c).alias(f"min__{c}"))
-                aggs.append(F.max(c).alias(f"max__{c}"))
-            os.makedirs(self.zonemap_dir, exist_ok=True)
-            (
-                committed.groupBy(F.input_file_name().alias("file"))
-                .agg(*aggs)
-                .withColumn("write_id", F.lit(rel))
-                .write.mode("append")
-                .parquet(self.zonemap_dir)
-            )
+        tmp = os.path.join(self.lineage_dir, f".{rel}.parquet")  # hidden from readers
+        pq.write_table(lineage, tmp)
+        os.replace(tmp, os.path.join(self.lineage_dir, f"{rel}.parquet"))
+        # per-file zone maps (read_pruned() skips a file whose [min, max]
+        # misses the range) and the write's xor checksum
+        files, checksum = [], 0
+        for r in per_file:
+            files.append({"path": r[0], "stats": dict(zip(stats_cols, zip(r[5::2], r[6::2])))})
+            checksum ^= r[4]
         # per-file Bloom indexes (Parquet's column bloom filters rebuilt
         # at the table layer): equality lookups on high-cardinality
         # unsorted columns, where min/max zone maps cannot prune. The
@@ -293,18 +303,6 @@ class IceliteTable:
                     schema="file string, col string, words array<long>, "
                     "write_id string",
                 ).write.mode("append").parquet(self.bloom_dir)
-        # snapshot summary from the tiny committed lineage table (one
-        # aggregate row to the driver, independent of partition count)
-        summ = (
-            spark.read.parquet(self.lineage_dir)
-            .filter(F.col("write_id") == rel)
-            .agg(
-                F.coalesce(F.sum("row_count"), F.lit(0)).alias("rows"),
-                F.count(F.lit(1)).alias("parts"),
-                F.expr("bit_xor(checksum)").alias("ck"),
-            )
-            .collect()[0]
-        )
         if mode == "append" and cur is not None:
             prev = cur.get("data_paths")
             if not prev:
@@ -316,6 +314,8 @@ class IceliteTable:
                     "existing data; rewrite it once with mode='overwrite'"
                 )
             data_paths = list(prev) + [rel]
+            # unknown (None) after a snapshot that predates the file list
+            files = cur["files"] + files if cur.get("files") is not None else None
         else:
             data_paths = [rel]
         snap = self._commit_snapshot(
@@ -325,19 +325,20 @@ class IceliteTable:
                 "schema": df.schema.jsonValue(),
                 "partition_by": partition_by or [],
                 "data_paths": data_paths,
-                "row_count": int(summ["rows"]),
-                "n_partitions": int(summ["parts"]),
+                "row_count": sum(r[3] for r in per_file),
+                "n_partitions": len(per_file),
                 "checksum": (
-                    format(int(summ["ck"]) & 0xFFFFFFFFFFFFFFFF, "016x")
-                    if summ["parts"]
+                    format(checksum & 0xFFFFFFFFFFFFFFFF, "016x")
+                    if per_file
                     else "0"
                 ),
                 "wall_ms": wall_ms,
-                "stats_cols": stats_cols or [],
+                "stats_cols": stats_cols,
                 "bloom_cols": bloom_cols or [],
                 "bloom_bits": bloom_bits,
                 "bloom_k": bloom_k,
                 "branch": branch,
+                "files": files,
             },
             pointer=pointer,
         )
@@ -487,10 +488,10 @@ class IceliteTable:
         self, spark: SparkSession, col: str, lo, hi
     ) -> tuple[list[str], int]:
         """(surviving file paths, total files) for ``col BETWEEN lo AND
-        hi`` against the current snapshot's zone maps. The zonemap frame
-        is manifest-sized; collecting the surviving FILE LIST to the
-        driver is the same planning step every table format performs
-        (Iceberg manifests, Delta logs) — data rows never move."""
+        hi`` against the current snapshot's zone maps. Planned on the
+        driver from the manifest's ``files`` list, as every table format
+        does (Iceberg manifests, Delta logs): no Spark job, and data
+        rows never move."""
         return self.pruned_files_multi(spark, [(col, lo, hi)])
 
     def pruned_files_multi(
@@ -501,27 +502,20 @@ class IceliteTable:
         conjunction that makes Z-order layouts (operators/zorder.py)
         skip all files outside a 2-D box, not just an x-stripe."""
         cur = self.current_snapshot()
-        if not cur or not cur.get("data_paths"):
-            raise ValueError("no snapshot / manifest to prune against")
-        stats = cur.get("stats_cols") or []
+        if not cur or cur.get("files") is None:
+            raise ValueError("no snapshot / file manifest to prune against")
         for col, _, _ in preds:
-            if col not in stats:
+            if col not in cur["stats_cols"]:
                 raise ValueError(
                     f"no zone maps for column {col!r} in the current "
                     f"snapshot; write(stats_cols=[{col!r}]) first"
                 )
-        zm = spark.read.parquet(self.zonemap_dir).filter(
-            F.col("write_id").isin(list(cur["data_paths"]))
-        )
-        total = zm.count()
-        cond = F.lit(True)
-        for col, lo, hi in preds:
-            cond = cond & (
-                (F.col(f"max__{col}") >= F.lit(lo))
-                & (F.col(f"min__{col}") <= F.lit(hi))
-            )
-        sel = zm.filter(cond).select("file").collect()
-        return [r["file"] for r in sel], total
+        files = cur["files"]
+        return [
+            f["path"]
+            for f in files
+            if all(_may_match(f["stats"], c, lo, hi) for c, lo, hi in preds)
+        ], len(files)
 
     def read_pruned(
         self, spark: SparkSession, col: str, lo, hi
@@ -795,29 +789,33 @@ class IceliteTable:
         )
 
 
-def _lineage_frame(df: DataFrame, stage: str, cell_col: str | None) -> DataFrame:
-    """Per-Spark-partition lineage: (stage, partition_id, cell_min,
-    cell_max, row_count, checksum, wall-clock handled by caller).
+_LINEAGE = pa.schema(
+    [("partition_id", pa.int32()), ("file", pa.string()), ("cell_min", pa.int64()),
+     ("cell_max", pa.int64()), ("row_count", pa.int64()), ("checksum", pa.int64()),
+     ("stage", pa.string()), ("snapshot_id", pa.int64()),
+     ("wall_ms_total", pa.int64()), ("write_id", pa.string())]
+)
 
-    The checksum is an order-insensitive aggregate (xor-like sum of
-    xxhash64 over all columns) so resume verification is stable under
-    shuffle order.
-    """
-    cols = [F.col(c) for c in df.columns]
-    h = F.xxhash64(*cols)
-    cell = F.col(cell_col).cast("long") if cell_col else F.lit(None).cast("long")
-    return (
-        df.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__h", h)
-        .withColumn("__cell", cell)
-        .groupBy("__pid")
-        .agg(
-            F.min("__cell").alias("cell_min"),
-            F.max("__cell").alias("cell_max"),
-            F.count(F.lit(1)).alias("row_count"),
-            # XOR-combine: order-insensitive AND overflow-free under ANSI
-            F.expr("bit_xor(__h)").alias("checksum"),
-        )
-        .withColumn("stage", F.lit(stage))
-        .withColumnRenamed("__pid", "partition_id")
-    )
+# zone-map value types whose min/max JSON holds exactly and Python orders
+# as Spark does (a collated string would not)
+_STATS_TYPES = ("tinyint", "smallint", "int", "bigint", "float", "double", "string")
+
+
+def _may_match(stats: dict, col: str, lo, hi) -> bool:
+    """Whether a file with zone maps ``stats`` can hold a row with
+    ``col BETWEEN lo AND hi``. A file with no stats for ``col`` (its
+    write recorded none) always can; an all-NULL column cannot."""
+    if col not in stats:
+        return True
+    mn, mx = stats[col]
+    return mn is not None and _le(lo, mx) and _le(mn, hi)
+
+
+def _le(a, b) -> bool:
+    """``a <= b`` in Spark's order: with a float on either side both
+    compare as doubles, and NaN sorts above every number."""
+    if isinstance(a, float) or isinstance(b, float):
+        a, b = float(a), float(b)
+        if math.isnan(a) or math.isnan(b):
+            return math.isnan(b)
+    return a <= b

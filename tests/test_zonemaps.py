@@ -177,3 +177,74 @@ def test_compaction_preserves_zonemaps(spark, tmp_path):
     files, total = t.pruned_files(spark, "k", 20_000, 20_499)
     assert total <= 4 and len(files) < total
     assert t.read_pruned(spark, "k", 20_000, 20_499).count() == 500
+
+
+# ------------------------------------------------- files without stats
+
+
+def test_pruned_read_keeps_files_written_without_stats(spark, tmp_path):
+    """A file whose write recorded no zone map for a column can never be
+    pruned on it: appending stats on a new column, or appending onto a
+    write that had no stats at all, must not hide the older rows."""
+    a = spark.range(0, 1000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+    b = spark.range(1000, 2000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+
+    t = IceliteTable(str(tmp_path), "newcol")
+    t.write(a.repartition(2), stats_cols=["k"])
+    t.write(b.repartition(2), stats_cols=["k", "v"], mode="append")
+    preds = [("k", 0, 1999), ("v", 0, 4000)]
+    full = t.read(spark).filter(
+        F.col("k").between(0, 1999) & F.col("v").between(0, 4000)
+    )
+    assert full.count() == 2000
+    assert t.read_pruned_multi(spark, preds).count() == 2000
+
+    u = IceliteTable(str(tmp_path), "nostats")
+    u.write(a.repartition(2))
+    u.write(b.repartitionByRange(2, "k"), stats_cols=["k"], mode="append")
+    files, total = u.pruned_files(spark, "k", 500, 1200)
+    assert total == 4 and len(files) == 3  # b's upper file is skipped
+    assert u.read_pruned(spark, "k", 500, 1200).count() == 701
+
+
+# ------------------------------------------- driver-side range pruning
+
+
+def test_driver_side_pruning_edge_values(spark, tmp_path):
+    """Pruning runs on the driver from the manifest and must agree with
+    Spark's own BETWEEN: NaN sorts above every number (and equals
+    itself), NULLs never match, and a file whose stats column is all
+    NULL cannot match at all."""
+    nan = float("nan")
+    rows = [
+        (0, 1.0, "apple"), (0, nan, "banana"), (0, None, None),
+        (1, None, "cherry"), (1, None, "date"),  # x all NULL
+        (2, 5.0, "fig"), (2, -3.5, "Zebra"),
+    ]
+    df = spark.createDataFrame(rows, "f int, x double, s string")
+    t = IceliteTable(str(tmp_path), "edge")
+    t.write(df.repartition("f"), partition_by=["f"], stats_cols=["x", "s"])
+
+    def rows_of(d):
+        return sorted(str(r) for r in d.select("f", "x", "s").collect())
+
+    for col, lo, hi in [
+        ("x", 0, 2), ("x", 2, nan), ("x", nan, nan), ("x", -10, -1.0),
+        ("x", 100, 200), ("x", -1e308, 1e308),
+        ("s", "a", "c"), ("s", "Z", "Zz"), ("s", "g", "z"),
+    ]:
+        want = rows_of(t.read(spark).filter(F.col(col).between(lo, hi)))
+        assert rows_of(t.read_pruned(spark, col, lo, hi)) == want, (col, lo, hi)
+
+    files, total = t.pruned_files(spark, "x", -1e308, 1e308)
+    assert total == 3 and not any("f=1/" in p for p in files)
+    files, _ = t.pruned_files(spark, "x", nan, nan)
+    assert len(files) == 1 and "f=0/" in files[0]
+
+
+def test_stats_col_of_inexact_type_is_refused(spark, tmp_path):
+    t = IceliteTable(str(tmp_path), "dates")
+    df = spark.range(3).select(F.col("id").alias("k"), F.current_date().alias("d"))
+    with pytest.raises(ValueError, match="integer, floating or string"):
+        t.write(df, stats_cols=["d"])
+    assert t.current_snapshot() is None
