@@ -9,10 +9,11 @@ discretization-safe comparisons), iterative graph clustering (via a
 recursive-CTE closure), stateful streaming (via batch parity), the
 no-broadcast join paths, temporal joins, sketches, and the icelite
 maintenance surface. Every query is one ``register(...)`` call in a
-registry module (hand_index_spark/registry.py); entry_queries.MODULES
-lists those modules, entry_queries.py and entry_queries_ext.py through
-entry_queries_r5ccc.py, in driver order. See COVERAGE.md for the
-operator -> query map.
+query module: the family modules of hand_index_spark/queries/ and the
+entry_queries*.py modules not yet regrouped. registry.ORDER lists all
+304 names once and is the only statement of their order
+(hand_index_spark/registry.py). See COVERAGE.md for the operator ->
+query map.
 
 Session requirements: NONE. Every query runs green under a bare
 ``SparkSession.builder.getOrCreate()`` — no Arrow coercion, default

@@ -16,8 +16,6 @@ Determinism rules used throughout:
 
 from __future__ import annotations
 
-from importlib import import_module
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -26,7 +24,8 @@ from .geo import cells as h3lite
 from .operators import assign as A
 from .operators import encode as E
 from .pipelines.assign_tiles import assignments, web_pages_from_documents
-from .registry import GEO, REL, TEXT, entries, read_table as _t, register
+from .queries.text import _EN, _ES, _en_list, _es_list
+from .registry import GEO, REL, TEXT, ordered, read_table as _t, register
 
 # --------------------------------------------------------------------------
 # helpers
@@ -622,10 +621,6 @@ register(
 )
 
 
-_EN = ("the", "and", "of", "is")
-_ES = ("el", "la", "de", "es")
-
-
 def _q_langid(spark, sf_dir):
     """Language-ID heuristic: marker-token voting."""
     d = _t(spark, sf_dir, "documents")
@@ -640,8 +635,6 @@ def _q_langid(spark, sf_dir):
     )
 
 
-_en_list = ", ".join(f"'{w}'" for w in _EN)
-_es_list = ", ".join(f"'{w}'" for w in _ES)
 register(
     TEXT,
     "langid",
@@ -663,30 +656,12 @@ register(
 
 
 # --------------------------------------------------------------------------
-# Every registry module, in driver order: this module's own queries, then
-# each batch. A new query is one register(...) call in its module; a new
-# module is one more name here. The family dicts fill in (module position,
-# registration order), never in import order.
+# The other query modules register their queries on import, in any order:
+# registry.ORDER alone fixes the order the dicts below are filled in.
 
-MODULES = (
-    "entry_queries", "entry_queries_ext", "entry_queries_r2", "entry_queries_r4",
-    "entry_queries_r5", "entry_queries_r5b", "entry_queries_r5c", "entry_queries_r5d",
-    "entry_queries_r5e", "entry_queries_r5f", "entry_queries_r5g", "entry_queries_r5h",
-    "entry_queries_r5i", "entry_queries_r5j", "entry_queries_r5k", "entry_queries_r5l",
-    "entry_queries_r5m", "entry_queries_r5n", "entry_queries_r5o", "entry_queries_r5p",
-    "entry_queries_r5q", "entry_queries_r5r", "entry_queries_r5s", "entry_queries_r5t",
-    "entry_queries_r5u", "entry_queries_r5v", "entry_queries_r5w", "entry_queries_r5x",
-    "entry_queries_r5y", "entry_queries_r5z", "entry_queries_r5aa",
-    "entry_queries_r5bb", "entry_queries_r5cc", "entry_queries_r5dd",
-    "entry_queries_r5ee", "entry_queries_r5ff", "entry_queries_r5gg",
-    "entry_queries_r5hh", "entry_queries_r5ii", "entry_queries_r5jj",
-    "entry_queries_r5kk", "entry_queries_r5ll", "entry_queries_r5mm",
-    "entry_queries_r5nn", "entry_queries_r5oo", "entry_queries_r5pp",
-    "entry_queries_r5qq", "entry_queries_r5rr", "entry_queries_r5ss",
-    "entry_queries_r5tt", "entry_queries_r5uu", "entry_queries_r5vv",
-    "entry_queries_r5ww", "entry_queries_r5xx", "entry_queries_r5yy",
-    "entry_queries_r5zz", "entry_queries_r5aaa", "entry_queries_r5bbb",
-    "entry_queries_r5ccc",
+from . import (  # noqa: E402,F401
+    entry_queries_ext, entry_queries_r2, entry_queries_r4, entry_queries_r5,
+    entry_queries_r5b, entry_queries_r5c, entry_queries_r5d, entry_queries_r5e, queries,
 )
 
 GEO_QUERIES: dict = {}
@@ -695,8 +670,6 @@ TEXTOPS: dict = {}
 ORACLES: dict[str, str] = {}
 
 _BY_FAMILY = {GEO: GEO_QUERIES, REL: RELATIONAL, TEXT: TEXTOPS}
-for _module in MODULES:
-    _qualified = import_module(f".{_module}", __package__).__name__
-    for _family, _name, _fn, _oracle in entries(_qualified):
-        _BY_FAMILY[_family][_name] = _fn
-        ORACLES[_name] = _oracle
+for _name, _family, _fn, _oracle in ordered():
+    _BY_FAMILY[_family][_name] = _fn
+    ORACLES[_name] = _oracle

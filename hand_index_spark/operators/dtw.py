@@ -1,7 +1,7 @@
 """Dynamic-time-warping folds as Catalyst expressions.
 
 ``dtw_dp_last(a, b)`` is the exact O(n*m) nested fold the declared
-``dtw_distance`` query runs (entry_queries_r5x.py): BIGINT |a_i-b_j|
+``dtw_distance`` query runs (queries/timeseries.py): BIGINT |a_i-b_j|
 cost, classic three-way recurrence, row-by-row over ``aggregate``.
 An empty side costs ``BIG`` (no alignment exists); both empty cost 0.
 

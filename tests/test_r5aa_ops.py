@@ -30,7 +30,7 @@ def test_rrf_oracle(spark, con):
 
 def test_rrf_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5AA
-    from hand_index_spark.entry_queries_r5aa import _RRF_OUT, _RRF_TOP
+    from hand_index_spark.queries.stats import _RRF_OUT, _RRF_TOP
 
     docs: dict = {}
     for lang, doc_id, text in con.sql(

@@ -1,5 +1,8 @@
 """Round-5aaa operators: Kaplan-Meier survival, RFM segmentation —
-python replays plus full oracle parity."""
+python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -76,17 +79,6 @@ def test_km_python_replay(spark, con):
     # at-risk counts strictly decrease along the curve
     risks = [rows[k].n_risk for k in sorted(rows)]
     assert all(a > b for a, b in zip(risks, risks[1:]))
-
-
-def test_rfm_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5AAA, TEXTOPS as TEXT5AAA
-
-    assert_match(
-        TEXT5AAA["rfm_segments"](spark, SF),
-        ORACLES5AAA["rfm_segments"],
-        con,
-        "rfm_segments",
-    )
 
 
 def test_rfm_python_replay(spark, con):

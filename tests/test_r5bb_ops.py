@@ -1,5 +1,8 @@
 """Round-5bb operators: URL path-prefix rollup, Theil-Sen robust
-slope — python replays plus full oracle parity."""
+slope — python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -17,17 +20,6 @@ def con():
     c = duck_con(SF)
     yield c
     c.close()
-
-
-def test_prefix_rollup_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5BB, TEXTOPS as TEXT5BB
-
-    assert_match(
-        TEXT5BB["path_prefix_rollup"](spark, SF),
-        ORACLES5BB["path_prefix_rollup"],
-        con,
-        "path_prefix_rollup",
-    )
 
 
 def test_prefix_rollup_python_replay(spark, con):

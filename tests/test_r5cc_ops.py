@@ -1,5 +1,8 @@
 """Round-5cc operators: NDCG@10 graded ranking eval, seasonal-naive
-MASE backtest — python replays plus full oracle parity."""
+MASE backtest — python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -32,7 +35,7 @@ def test_ndcg_oracle(spark, con):
 
 def test_ndcg_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5CC
-    from hand_index_spark.entry_queries_r5cc import _NDCG_K
+    from hand_index_spark.queries.stats import _NDCG_K
 
     docs: dict = {}
     for lang, doc_id in con.sql(
@@ -62,17 +65,6 @@ def test_ndcg_python_replay(spark, con):
         # NDCG is a proper ratio: 0 <= ndcg <= 1, and the ideal
         # ranking's own NDCG would be exactly 1
         assert 0.0 <= r.ndcg <= 1.0
-
-
-def test_mase_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5CC, TEXTOPS as TEXT5CC
-
-    assert_match(
-        TEXT5CC["backtest_mase"](spark, SF),
-        ORACLES5CC["backtest_mase"],
-        con,
-        "backtest_mase",
-    )
 
 
 def test_mase_python_replay(spark, con):

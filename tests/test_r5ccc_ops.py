@@ -1,5 +1,8 @@
 """Round-5ccc operators: H3-style cover compaction, graph link
-prediction — python replays plus full oracle parity."""
+prediction — python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -8,7 +11,7 @@ from collections import defaultdict
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -56,17 +59,6 @@ def _compact(leaves: set[int]) -> set[int]:
     return cur
 
 
-def test_cells_compact_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5CCC, ORACLES as ORACLES5CCC
-
-    assert_match(
-        GEO5CCC["cells_compact"](spark, SF),
-        ORACLES5CCC["cells_compact"],
-        con,
-        "cells_compact",
-    )
-
-
 def test_cells_compact_python_replay(spark, con):
     from hand_index_spark.entry_queries import GEO_QUERIES as GEO5CCC
 
@@ -101,17 +93,6 @@ def test_cells_compact_python_replay(spark, con):
             c = _parent(c)
             res -= 1
             assert c not in got
-
-
-def test_link_predict_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5CCC, TEXTOPS as TEXT5CCC
-
-    assert_match(
-        TEXT5CCC["link_predict"](spark, SF),
-        ORACLES5CCC["link_predict"],
-        con,
-        "link_predict",
-    )
 
 
 def test_link_predict_python_replay(spark, con):

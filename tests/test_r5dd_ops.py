@@ -1,11 +1,14 @@
 """Round-5dd operators: icelite partition-spec evolution, l-diversity
-privacy audit — python replays plus full oracle parity."""
+privacy audit — python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -15,17 +18,6 @@ def con():
     c = duck_con(SF)
     yield c
     c.close()
-
-
-def test_partition_evolution_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5DD, ORACLES as ORACLES5DD
-
-    assert_match(
-        GEO5DD["partition_evolution"](spark, SF),
-        ORACLES5DD["partition_evolution"],
-        con,
-        "partition_evolution",
-    )
 
 
 def test_partition_evolution_layout(spark, con):
@@ -59,20 +51,9 @@ def test_partition_evolution_layout(spark, con):
     assert n == con.sql("SELECT count(*) FROM documents").fetchone()[0]
 
 
-def test_l_diversity_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5DD, TEXTOPS as TEXT5DD
-
-    assert_match(
-        TEXT5DD["l_diversity_audit"](spark, SF),
-        ORACLES5DD["l_diversity_audit"],
-        con,
-        "l_diversity_audit",
-    )
-
-
 def test_l_diversity_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5DD
-    from hand_index_spark.entry_queries_r5dd import _L_MIN
+    from hand_index_spark.queries.relational import _L_MIN
 
     groups: dict = {}
     for lang, source, doc_id in con.sql(

@@ -1,5 +1,8 @@
 """Round-5ee operators: int8 scalar quantization, exact weighted
-median — python replays plus full oracle parity."""
+median — python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -17,17 +20,6 @@ def con():
     c = duck_con(SF)
     yield c
     c.close()
-
-
-def test_sq8_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5EE, TEXTOPS as TEXT5EE
-
-    assert_match(
-        TEXT5EE["sq8_quantize"](spark, SF),
-        ORACLES5EE["sq8_quantize"],
-        con,
-        "sq8_quantize",
-    )
 
 
 def test_sq8_python_replay(spark, con):

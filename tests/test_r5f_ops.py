@@ -1,13 +1,16 @@
 """Round-5f operators: SCD2 interval build, largest-remainder
 proration, EWMA left-fold smoothing, OD matrix — invariant tests
 (tiling, sum identity, fold replication, trip accounting) plus full
-oracle parity for each registered query."""
+oracle parity for each registered query.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -24,7 +27,7 @@ def con():
 
 def test_scd2_intervals_tile(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5F
-    from hand_index_spark.entry_queries_r5f import _SCD2_OPEN
+    from hand_index_spark.queries.relational import _SCD2_OPEN
 
     rows = TEXT5F["scd2_intervals"](spark, SF).collect()
     by_user: dict = {}
@@ -44,17 +47,6 @@ def test_scd2_intervals_tile(spark, con):
         for (f0, t0, a0), (f1, _t1, a1) in zip(ivs, ivs[1:]):
             assert t0 == f1  # intervals tile with no gap/overlap
             assert a0 != a1  # consecutive rows really changed
-
-
-def test_scd2_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5F, TEXTOPS as TEXT5F
-
-    assert_match(
-        TEXT5F["scd2_intervals"](spark, SF),
-        ORACLES5F["scd2_intervals"],
-        con,
-        "scd2_intervals",
-    )
 
 
 # --------------------------------------------------------------- proration
@@ -117,17 +109,6 @@ def test_prorate_matches_python_hamilton(spark, con):
         assert sum(want) == tc  # Hamilton identity, re-stated
 
 
-def test_prorate_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5F, TEXTOPS as TEXT5F
-
-    assert_match(
-        TEXT5F["prorate_cents"](spark, SF),
-        ORACLES5F["prorate_cents"],
-        con,
-        "prorate_cents",
-    )
-
-
 # -------------------------------------------------------------------- EWMA
 
 
@@ -152,23 +133,12 @@ def test_ewma_fold_replication(spark, con):
         assert e == acc, u  # bit-identical, not approx
 
 
-def test_ewma_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5F, TEXTOPS as TEXT5F
-
-    assert_match(
-        TEXT5F["ewma_smooth"](spark, SF),
-        ORACLES5F["ewma_smooth"],
-        con,
-        "ewma_smooth",
-    )
-
-
 # --------------------------------------------------------------------- OD
 
 
 def test_od_matrix_trip_accounting(spark, con):
     from hand_index_spark.entry_queries import GEO_QUERIES as GEO5F
-    from hand_index_spark.entry_queries_r5f import _OD_GAP_US
+    from hand_index_spark.queries.geo import _OD_GAP_US
 
     got = GEO5F["od_matrix"](spark, SF).toPandas()
     # total trips = per user (1 + number of gaps > GAP)
@@ -187,14 +157,3 @@ def test_od_matrix_trip_accounting(spark, con):
     ).fetchone()[0]
     assert got["n_trips"].sum() == want
     assert (got["n_trips"] > 0).all()
-
-
-def test_od_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5F, ORACLES as ORACLES5F
-
-    assert_match(
-        GEO5F["od_matrix"](spark, SF),
-        ORACLES5F["od_matrix"],
-        con,
-        "od_matrix",
-    )

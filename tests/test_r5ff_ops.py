@@ -1,5 +1,8 @@
 """Round-5ff operators: point-set diameter, time-weighted average —
-python replays plus full oracle parity."""
+python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -7,7 +10,7 @@ import math
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -19,20 +22,9 @@ def con():
     c.close()
 
 
-def test_diameter_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5FF, ORACLES as ORACLES5FF
-
-    assert_match(
-        GEO5FF["point_diameter"](spark, SF),
-        ORACLES5FF["point_diameter"],
-        con,
-        "point_diameter",
-    )
-
-
 def test_diameter_python_replay(spark, con):
     from hand_index_spark.entry_queries import GEO_QUERIES as GEO5FF
-    from hand_index_spark.entry_queries_r5ff import _DIAM_CAP
+    from hand_index_spark.queries.geo import _DIAM_CAP
 
     pts: dict = {}
     for u, eid in con.sql(
@@ -63,17 +55,6 @@ def test_diameter_python_replay(spark, con):
         # the diameter dominates every pairwise distance by definition
         # and is bounded by the grid's max extent
         assert r.diameter2 <= 3000 ** 2 + 4000 ** 2
-
-
-def test_twap_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5FF, TEXTOPS as TEXT5FF
-
-    assert_match(
-        TEXT5FF["twap_value"](spark, SF),
-        ORACLES5FF["twap_value"],
-        con,
-        "twap_value",
-    )
 
 
 def test_twap_python_replay(spark, con):

@@ -2,13 +2,16 @@
 blocked fuzzy entity resolution, stream-static enrichment join —
 kernel invariants (python HITS replay, CUSUM recursion vs closed form,
 blocking completeness vs brute force, stream == batch) plus full
-oracle parity for each registered query."""
+oracle parity for each registered query.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -25,7 +28,7 @@ def con():
 
 def test_hits_matches_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5G
-    from hand_index_spark.entry_queries_r5g import _HITS_FANOUT, _HITS_ITERS
+    from hand_index_spark.queries.graph import _HITS_FANOUT, _HITS_ITERS
 
     n = con.sql("SELECT count(*) FROM documents").fetchone()[0]
     ids = [r[0] for r in con.sql("SELECT doc_id FROM documents").fetchall()]
@@ -51,15 +54,6 @@ def test_hits_matches_python_replay(spark, con):
         assert r.hub == hub[r.doc_id]
 
 
-def test_hits_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5G, TEXTOPS as TEXT5G
-
-    assert_match(
-        TEXT5G["hits_scores"](spark, SF), ORACLES5G["hits_scores"], con,
-        "hits_scores",
-    )
-
-
 # ------------------------------------------------------------------ CUSUM
 
 
@@ -67,7 +61,7 @@ def test_cusum_closed_form_equals_recursion(spark, con):
     """The windowed closed form S_i = P_i - min(0, min P_j) must equal
     the textbook per-row recursion S_i = max(0, S_{i-1} + d_i)."""
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5G
-    from hand_index_spark.entry_queries_r5g import _CUSUM_H, _CUSUM_K
+    from hand_index_spark.queries.timeseries import _CUSUM_H, _CUSUM_K
 
     stream = con.sql(
         "SELECT user_id, CAST(floor(value * 100 + 0.5) AS BIGINT) AS x "
@@ -92,17 +86,6 @@ def test_cusum_closed_form_equals_recursion(spark, con):
         assert (r.n_alerts, r.max_s, r.n_events) == expect[r.user_id]
         fired += r.n_alerts
     assert fired > 0  # the threshold actually trips on the fixture
-
-
-def test_cusum_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5G, TEXTOPS as TEXT5G
-
-    assert_match(
-        TEXT5G["cusum_changepoints"](spark, SF),
-        ORACLES5G["cusum_changepoints"],
-        con,
-        "cusum_changepoints",
-    )
 
 
 # ----------------------------------------------------------- fuzzy join
@@ -143,17 +126,6 @@ def test_fuzzy_blocking_complete_vs_bruteforce(spark, con):
     assert all(r.lev == 1 for r in rows)
 
 
-def test_fuzzy_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5G, TEXTOPS as TEXT5G
-
-    assert_match(
-        TEXT5G["fuzzy_name_join"](spark, SF),
-        ORACLES5G["fuzzy_name_join"],
-        con,
-        "fuzzy_name_join",
-    )
-
-
 # --------------------------------------------------------- stream enrich
 
 
@@ -181,14 +153,3 @@ def test_stream_enrich_equals_batch(spark, con):
     assert len(batch) == len(got)
     for r in batch:
         assert got[(r.day, r.c_mktsegment)] == (r.n_events, r.sum_value)
-
-
-def test_stream_enrich_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5G, TEXTOPS as TEXT5G
-
-    assert_match(
-        TEXT5G["stream_enrich"](spark, SF),
-        ORACLES5G["stream_enrich"],
-        con,
-        "stream_enrich",
-    )

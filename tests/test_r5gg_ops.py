@@ -1,11 +1,14 @@
 """Round-5gg operators: geohash neighbor cells, Markov transition
-matrix — python replays plus full oracle parity."""
+matrix — python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -15,17 +18,6 @@ def con():
     c = duck_con(SF)
     yield c
     c.close()
-
-
-def test_neighbors_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5GG, ORACLES as ORACLES5GG
-
-    assert_match(
-        GEO5GG["geohash_neighbors"](spark, SF),
-        ORACLES5GG["geohash_neighbors"],
-        con,
-        "geohash_neighbors",
-    )
 
 
 def test_neighbors_properties(spark, con):
@@ -71,17 +63,6 @@ def test_neighbors_properties(spark, con):
         lat, _ = axes(c)
         if 0 < lat < n - 1:
             assert len(nbrs) == 8
-
-
-def test_markov_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5GG, TEXTOPS as TEXT5GG
-
-    assert_match(
-        TEXT5GG["markov_transitions"](spark, SF),
-        ORACLES5GG["markov_transitions"],
-        con,
-        "markov_transitions",
-    )
 
 
 def test_markov_python_replay(spark, con):

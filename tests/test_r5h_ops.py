@@ -2,14 +2,17 @@
 fold), Minkowski buffer via real hull construction, DSIR importance
 weights, label-propagation communities — kernel invariants
 (hand-computed clip areas on non-axis-aligned subjects, python LPA
-replay) plus full oracle parity for each registered query."""
+replay) plus full oracle parity for each registered query.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -114,15 +117,6 @@ def test_clip_plan_compiles_fast(spark):
     assert time.time() - t0 < 30
 
 
-def test_clip_to_tiles_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5H, ORACLES as ORACLES5H
-
-    assert_match(
-        GEO5H["clip_to_tiles"](spark, SF), ORACLES5H["clip_to_tiles"], con,
-        "clip_to_tiles",
-    )
-
-
 # ----------------------------------------------------------------- buffer
 
 
@@ -131,7 +125,7 @@ def test_buffer_area_mixed_area_identity(spark):
     closed-form Minkowski identity computed here in python on the same
     base rings (independent of the DuckDB oracle)."""
     from hand_index_spark.entry_queries import GEO_QUERIES as GEO5H
-    from hand_index_spark.entry_queries_r5h import _BUF_GROUPS, _BUF_R
+    from hand_index_spark.queries.geo import _BUF_GROUPS, _BUF_R
 
     rows = {r.group_id: r for r in GEO5H["buffer_area"](spark, SF).collect()}
     assert len(rows) == _BUF_GROUPS
@@ -153,25 +147,7 @@ def test_buffer_area_mixed_area_identity(spark):
         assert rows[g].buf_area2 == want
 
 
-def test_buffer_area_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5H, ORACLES as ORACLES5H
-
-    assert_match(
-        GEO5H["buffer_area"](spark, SF), ORACLES5H["buffer_area"], con,
-        "buffer_area",
-    )
-
-
 # ------------------------------------------------------------------- DSIR
-
-
-def test_dsir_weights_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5H, TEXTOPS as TEXT5H
-
-    assert_match(
-        TEXT5H["dsir_weights"](spark, SF), ORACLES5H["dsir_weights"], con,
-        "dsir_weights",
-    )
 
 
 def test_dsir_weights_sign_sanity(spark):
@@ -195,7 +171,7 @@ def test_dsir_weights_sign_sanity(spark):
 
 def test_label_prop_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5H
-    from hand_index_spark.entry_queries_r5h import _LPA_FANOUT, _LPA_ITERS
+    from hand_index_spark.queries.graph import _LPA_FANOUT, _LPA_ITERS
 
     n = con.sql("SELECT count(*) FROM documents").fetchone()[0]
     ids = [r[0] for r in con.sql("SELECT doc_id FROM documents").fetchall()]
@@ -225,14 +201,3 @@ def test_label_prop_python_replay(spark, con):
     assert len(rows) == n
     for r in rows:
         assert r.community == lbl[r.doc_id], r
-
-
-def test_label_prop_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5H, TEXTOPS as TEXT5H
-
-    assert_match(
-        TEXT5H["label_prop_communities"](spark, SF),
-        ORACLES5H["label_prop_communities"],
-        con,
-        "label_prop_communities",
-    )

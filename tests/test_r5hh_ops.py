@@ -72,7 +72,7 @@ def test_fdr_oracle(spark, con):
 
 def test_fdr_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5HH
-    from hand_index_spark.entry_queries_r5hh import _FDR_ALPHA_PPM
+    from hand_index_spark.queries.stats import _FDR_ALPHA_PPM
 
     cells: dict = {}
     for lang, source in con.sql(

@@ -2,7 +2,10 @@
 distributed prefix sum), per-user lagged autocorrelation, fan
 triangulation — kernel invariants (two-phase scan == naive global
 window, python Pearson replay, fan-sum == shoelace identity) plus full
-oracle parity for each registered query."""
+oracle parity for each registered query.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -12,7 +15,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -27,21 +30,12 @@ def con():
 # ----------------------------------------------------------- pack_chunks
 
 
-def test_pack_chunks_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5I, TEXTOPS as TEXT5I
-
-    assert_match(
-        TEXT5I["pack_chunks"](spark, SF), ORACLES5I["pack_chunks"], con,
-        "pack_chunks",
-    )
-
-
 def test_pack_chunks_conservation(spark):
     """Token conservation + shape: every chunk but the last is exactly
     full, chunk ids are dense from 0, and the total packed token count
     equals the corpus token count."""
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5I
-    from hand_index_spark.entry_queries_r5i import _PACK_C
+    from hand_index_spark.queries.text import _PACK_C
 
     rows = sorted(
         TEXT5I["pack_chunks"](spark, SF).collect(), key=lambda r: r.chunk_id
@@ -66,7 +60,7 @@ def test_pack_chunks_conservation(spark):
 def test_pack_chunks_two_phase_scan_matches_global_window(spark):
     """The distributed two-phase offsets must equal the naive
     single-partition global-window cumsum, doc for doc."""
-    from hand_index_spark.entry_queries_r5i import _PACK_SPAN
+    from hand_index_spark.queries.text import _PACK_SPAN
 
     d = (
         spark.read.parquet(f"{SF}/documents.parquet")
@@ -104,19 +98,11 @@ def test_pack_chunks_two_phase_scan_matches_global_window(spark):
 # -------------------------------------------------------------- acf_lags
 
 
-def test_acf_lags_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5I, TEXTOPS as TEXT5I
-
-    assert_match(
-        TEXT5I["acf_lags"](spark, SF), ORACLES5I["acf_lags"], con, "acf_lags"
-    )
-
-
 def test_acf_lags_python_replay(spark, con):
     """Pearson r at each lag, replayed in python over the exact same
     quantized series, matching to the registered 4dp rounding."""
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5I
-    from hand_index_spark.entry_queries_r5i import _ACF_LAGS
+    from hand_index_spark.queries.timeseries import _ACF_LAGS
 
     series: dict = {}
     for uid, x in con.sql(
@@ -153,7 +139,7 @@ def test_acf_lags_python_replay(spark, con):
 
 def test_acf_constant_series_is_null(spark):
     """Zero-variance series must yield NULL r, not a crash or 0/0."""
-    from hand_index_spark.entry_queries_r5i import _q_acf_lags
+    from hand_index_spark.queries.timeseries import _q_acf_lags
 
     # monkey-fixture: a one-user constant series through a temp view is
     # overkill — instead check the registered query emits no non-null r
@@ -183,21 +169,12 @@ def test_acf_constant_series_is_null(spark):
 # ------------------------------------------------------ triangulate_mesh
 
 
-def test_triangulate_mesh_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5I, ORACLES as ORACLES5I
-
-    assert_match(
-        GEO5I["triangulate_mesh"](spark, SF), ORACLES5I["triangulate_mesh"],
-        con, "triangulate_mesh",
-    )
-
-
 def test_triangulate_fan_sum_equals_shoelace(spark):
     """Mesh validity: per group, the fan triangle areas are all
     positive (convex CCW ring) and sum exactly to the ring's shoelace
     area2 computed independently in python."""
     from hand_index_spark.entry_queries import GEO_QUERIES as GEO5I
-    from hand_index_spark.entry_queries_r5i import _TRI_GROUPS
+    from hand_index_spark.queries.geo import _TRI_GROUPS
 
     rows = GEO5I["triangulate_mesh"](spark, SF).collect()
     by_g: dict = {}

@@ -32,7 +32,7 @@ def test_emd_oracle(spark, con):
 
 def test_emd_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5II
-    from hand_index_spark.entry_queries_r5ii import _EMD_BIN
+    from hand_index_spark.queries.stats import _EMD_BIN
 
     p: dict = {}
     q: dict = {}

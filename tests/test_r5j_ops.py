@@ -1,7 +1,10 @@
 """Round-5j operators: per-language token budgeting, Newman modularity
 of the LPA partition, great-circle slerp waypoints — kernel invariants
 (greedy-maximal budget fill, python modularity replay, on-great-circle
-geometry checks) plus full oracle parity for each registered query."""
+geometry checks) plus full oracle parity for each registered query.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -9,7 +12,7 @@ import math
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -24,23 +27,12 @@ def con():
 # ------------------------------------------------------- token budgeting
 
 
-def test_token_budget_mix_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5J, TEXTOPS as TEXT5J
-
-    assert_match(
-        TEXT5J["token_budget_mix"](spark, SF),
-        ORACLES5J["token_budget_mix"],
-        con,
-        "token_budget_mix",
-    )
-
-
 def test_token_budget_greedy_maximal(spark, con):
     """Per language: the kept set respects the 30% cap AND is maximal
     under the longest-first order (adding the next-ranked doc would
     break the cap)."""
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5J
-    from hand_index_spark.entry_queries_r5j import _BUDGET_PCT10
+    from hand_index_spark.queries.text import _BUDGET_PCT10
 
     rows = {r.lang: r for r in TEXT5J["token_budget_mix"](spark, SF).collect()}
     series: dict = {}
@@ -65,22 +57,11 @@ def test_token_budget_greedy_maximal(spark, con):
 # ----------------------------------------------------------- modularity
 
 
-def test_modularity_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5J, TEXTOPS as TEXT5J
-
-    assert_match(
-        TEXT5J["modularity_score"](spark, SF),
-        ORACLES5J["modularity_score"],
-        con,
-        "modularity_score",
-    )
-
-
 def test_modularity_python_replay(spark, con):
     """Replay LPA + modularity entirely in python; all integer pieces
     must match, and Q must land in [-1/2, 1]."""
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5J
-    from hand_index_spark.entry_queries_r5h import _LPA_FANOUT, _LPA_ITERS
+    from hand_index_spark.queries.graph import _LPA_FANOUT, _LPA_ITERS
 
     n = con.sql("SELECT count(*) FROM documents").fetchone()[0]
     ids = [r[0] for r in con.sql("SELECT doc_id FROM documents").fetchall()]
@@ -129,7 +110,7 @@ def test_modularity_python_replay(spark, con):
 def test_modularity_row_no_int32_overflow(spark):
     """At two_m = 46341 the int32 product two_m^2 wraps; the long
     operands must give the exact integers and the oracle's dtypes."""
-    from hand_index_spark.entry_queries_r5j import _modularity_row
+    from hand_index_spark.queries.graph import _modularity_row
 
     two_m, within, sum_deg2 = 46341, 46000, 123456789
     sums = spark.createDataFrame(
@@ -172,22 +153,13 @@ def _unit(lat, lon):
 def test_gc_routes_non_degenerate():
     """Fixture guarantee: no route is zero-length or antipodal (slerp
     would divide by sin(0) or sin(pi))."""
-    from hand_index_spark.entry_queries_r5j import _GC_ROUTES
+    from hand_index_spark.queries.geo import _GC_ROUTES
 
     for rid in range(_GC_ROUTES):
         lat1, lon1, lat2, lon2 = _route_endpoints(rid)
         a, b = _unit(lat1, lon1), _unit(lat2, lon2)
         dot = sum(x * y for x, y in zip(a, b))
         assert -0.999 < dot < 0.999, (rid, dot)
-
-
-def test_gc_waypoints_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5J, ORACLES as ORACLES5J
-
-    assert_match(
-        GEO5J["gc_waypoints"](spark, SF), ORACLES5J["gc_waypoints"], con,
-        "gc_waypoints",
-    )
 
 
 def test_gc_waypoints_on_great_circle(spark):

@@ -1,5 +1,8 @@
 """Round-5jj operators: bearing rose, clamped running balance —
-python replays plus full oracle parity."""
+python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -7,7 +10,7 @@ import math
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -35,17 +38,6 @@ def _sector(dx, dy):
     if dx < 0 and 2 * abs(dy) <= (-dx):
         return 6
     return 7
-
-
-def test_rose_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5JJ, ORACLES as ORACLES5JJ
-
-    assert_match(
-        GEO5JJ["bearing_rose"](spark, SF),
-        ORACLES5JJ["bearing_rose"],
-        con,
-        "bearing_rose",
-    )
 
 
 def test_rose_python_replay(spark, con):
@@ -84,17 +76,6 @@ def test_rose_python_replay(spark, con):
     for u, pts in tracks.items():
         if u in rows:
             assert rows[u].n_steps <= len(pts) - 1
-
-
-def test_balance_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5JJ, TEXTOPS as TEXT5JJ
-
-    assert_match(
-        TEXT5JJ["clamped_balance"](spark, SF),
-        ORACLES5JJ["clamped_balance"],
-        con,
-        "clamped_balance",
-    )
 
 
 def test_balance_python_replay(spark, con):

@@ -1,7 +1,10 @@
 """Round-5k operators: inverted-index postings build, per-language
 Merkle corpus root, golden-record survivorship — kernel invariants
 (python Merkle replay, single-byte avalanche, posting-head membership,
-survivorship election replay) plus full oracle parity."""
+survivorship election replay) plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -9,7 +12,7 @@ import hashlib
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -24,20 +27,11 @@ def con():
 # --------------------------------------------------------- postings
 
 
-def test_postings_build_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5K, TEXTOPS as TEXT5K
-
-    assert_match(
-        TEXT5K["postings_build"](spark, SF), ORACLES5K["postings_build"],
-        con, "postings_build",
-    )
-
-
 def test_postings_head_is_sorted_prefix(spark, con):
     """Every reported head is the ascending prefix of the term's true
     posting list, and df counts distinct docs (replayed in python)."""
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5K
-    from hand_index_spark.entry_queries_r5k import _POST_MIN_DF
+    from hand_index_spark.queries.text import _POST_MIN_DF
 
     truth: dict = {}
     for doc_id, text in con.sql("SELECT doc_id, text FROM documents").fetchall():
@@ -73,18 +67,9 @@ def _python_merkle(leaves: list[str], rounds: int) -> str:
     return level[0]
 
 
-def test_merkle_root_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5K, TEXTOPS as TEXT5K
-
-    assert_match(
-        TEXT5K["merkle_root"](spark, SF), ORACLES5K["merkle_root"], con,
-        "merkle_root",
-    )
-
-
 def test_merkle_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5K
-    from hand_index_spark.entry_queries_r5k import _MERKLE_ROUNDS
+    from hand_index_spark.queries.storage import _MERKLE_ROUNDS
 
     by_lang: dict = {}
     for lang, text in con.sql(
@@ -112,17 +97,6 @@ def test_merkle_avalanche():
 
 
 # ----------------------------------------------------- survivorship
-
-
-def test_survivorship_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5K, TEXTOPS as TEXT5K
-
-    assert_match(
-        TEXT5K["survivorship_golden"](spark, SF),
-        ORACLES5K["survivorship_golden"],
-        con,
-        "survivorship_golden",
-    )
 
 
 def test_survivorship_election_replay(spark, con):

@@ -1,11 +1,14 @@
 """Round-5kk operators: rendezvous hashing, zonemap overlap audit —
-python replays plus full oracle parity."""
+python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -17,20 +20,9 @@ def con():
     c.close()
 
 
-def test_hrw_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5KK, TEXTOPS as TEXT5KK
-
-    assert_match(
-        TEXT5KK["rendezvous_assign"](spark, SF),
-        ORACLES5KK["rendezvous_assign"],
-        con,
-        "rendezvous_assign",
-    )
-
-
 def test_hrw_python_replay_and_minimal_disruption(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5KK
-    from hand_index_spark.entry_queries_r5kk import _HRW_DROP, _HRW_MOD, _HRW_NODES
+    from hand_index_spark.queries.storage import _HRW_DROP, _HRW_MOD, _HRW_NODES
 
     def pick(d, nodes):
         best = None
@@ -101,20 +93,9 @@ print("FIXED" if small == big5 else "STILL_BUGGY")
         pytest.fail(
             "DuckDB list_reduce chunk bug appears FIXED — the "
             "rendezvous_assign oracle can be simplified back to the "
-            "fold form (entry_queries_r5kk._hrw_sql)."
+            "fold form (queries.storage._hrw_sql)."
         )
     assert "STILL_BUGGY" in proc.stdout, proc.stdout + proc.stderr
-
-
-def test_zonemap_audit_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5KK, ORACLES as ORACLES5KK
-
-    assert_match(
-        GEO5KK["zonemap_overlap_audit"](spark, SF),
-        ORACLES5KK["zonemap_overlap_audit"],
-        con,
-        "zonemap_overlap_audit",
-    )
 
 
 def test_zonemap_audit_python_replay(spark, con):

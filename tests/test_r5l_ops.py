@@ -1,13 +1,16 @@
 """Round-5l operators: LTTB downsampling, storage-encoding advisor,
 last-touch attribution — kernel invariants (python LTTB replay with
 exact integer areas, closed-form advice on known layouts, python
-attribution replay) plus full oracle parity."""
+attribution replay) plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -22,21 +25,12 @@ def con():
 # --------------------------------------------------------------- LTTB
 
 
-def test_lttb_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5L, TEXTOPS as TEXT5L
-
-    assert_match(
-        TEXT5L["lttb_downsample"](spark, SF), ORACLES5L["lttb_downsample"],
-        con, "lttb_downsample",
-    )
-
-
 def test_lttb_python_replay(spark, con):
     """Replay the bucket-mean LTTB selection in python with the same
     cleared-denominator integer areas; every selected point must
     match, and the endpoint buckets must keep first/last points."""
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5L
-    from hand_index_spark.entry_queries_r5l import _LTTB_B
+    from hand_index_spark.queries.timeseries import _LTTB_B
 
     series: dict = {}
     for uid, y in con.sql(
@@ -87,21 +81,12 @@ def test_lttb_python_replay(spark, con):
 # ------------------------------------------------------------ advisor
 
 
-def test_encoding_advisor_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5L, TEXTOPS as TEXT5L
-
-    assert_match(
-        TEXT5L["encoding_advisor"](spark, SF), ORACLES5L["encoding_advisor"],
-        con, "encoding_advisor",
-    )
-
-
 def test_encoding_advisor_known_layouts(spark, con):
     """Closed forms on this datagen: o_orderkey is dense (runs = n,
     max_delta = 1 -> DELTA); o_block has runs = ceil(n/512) -> RLE;
     o_custkey is shuffled -> PLAIN."""
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5L
-    from hand_index_spark.entry_queries_r5l import _ENC_SPAN
+    from hand_index_spark.queries.storage import _ENC_SPAN
 
     n = con.sql("SELECT count(*) FROM orders").fetchone()[0]
     rows = {r.col_name: r for r in TEXT5L["encoding_advisor"](spark, SF).collect()}
@@ -117,20 +102,9 @@ def test_encoding_advisor_known_layouts(spark, con):
 # -------------------------------------------------------- attribution
 
 
-def test_attribution_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5L, TEXTOPS as TEXT5L
-
-    assert_match(
-        TEXT5L["attribution_last_touch"](spark, SF),
-        ORACLES5L["attribution_last_touch"],
-        con,
-        "attribution_last_touch",
-    )
-
-
 def test_attribution_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5L
-    from hand_index_spark.entry_queries_r5l import _ATTR_HORIZON_US
+    from hand_index_spark.queries.relational import _ATTR_HORIZON_US
 
     per_user: dict = {}
     for uid, us, eid, et, cents in con.sql(

@@ -1,5 +1,8 @@
 """Round-5ll operators: cross-track deviation, Cohen's kappa —
-python replays plus full oracle parity."""
+python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -17,17 +20,6 @@ def con():
     c = duck_con(SF)
     yield c
     c.close()
-
-
-def test_xtrack_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5LL, ORACLES as ORACLES5LL
-
-    assert_match(
-        GEO5LL["cross_track_dev"](spark, SF),
-        ORACLES5LL["cross_track_dev"],
-        con,
-        "cross_track_dev",
-    )
 
 
 def test_xtrack_python_replay(spark, con):

@@ -1,14 +1,17 @@
 """Round-5m operators: bitmap-index set algebra, JSONL round-trip,
 Pareto skyline — kernel invariants (python set-algebra replay,
 byte-exact text survival through JSONL, brute-force dominance replay,
-local-pass == global-pass) plus full oracle parity."""
+local-pass == global-pass) plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -21,15 +24,6 @@ def con():
 
 
 # --------------------------------------------------------------- bitmap
-
-
-def test_bitmap_index_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5M, TEXTOPS as TEXT5M
-
-    assert_match(
-        TEXT5M["bitmap_index_ops"](spark, SF), ORACLES5M["bitmap_index_ops"],
-        con, "bitmap_index_ops",
-    )
 
 
 def test_bitmap_index_set_replay(spark, con):
@@ -57,21 +51,12 @@ def test_bitmap_index_set_replay(spark, con):
 # ---------------------------------------------------------------- jsonl
 
 
-def test_jsonl_roundtrip_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5M, TEXTOPS as TEXT5M
-
-    assert_match(
-        TEXT5M["jsonl_roundtrip"](spark, SF), ORACLES5M["jsonl_roundtrip"],
-        con, "jsonl_roundtrip",
-    )
-
-
 def test_jsonl_preserves_text_bytes(spark, con):
     """Row-level guarantee behind the checksum: every doc's text comes
     back byte-identical through the JSONL cycle (the brief's
     byte-identical-text-per-url invariant applied to the sink)."""
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5M
-    from hand_index_spark.entry_queries_r5m import _JSONL_DIR
+    from hand_index_spark.queries.storage import _JSONL_DIR
     import os
 
     TEXT5M["jsonl_roundtrip"](spark, SF).collect()  # writes the fixture
@@ -90,17 +75,6 @@ def test_jsonl_preserves_text_bytes(spark, con):
 
 
 # -------------------------------------------------------------- skyline
-
-
-def test_skyline_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5M, TEXTOPS as TEXT5M
-
-    assert_match(
-        TEXT5M["dominance_skyline"](spark, SF),
-        ORACLES5M["dominance_skyline"],
-        con,
-        "dominance_skyline",
-    )
 
 
 def test_skyline_brute_force_replay(spark, con):

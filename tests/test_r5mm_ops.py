@@ -1,5 +1,8 @@
 """Round-5mm operators: degree power-law fit, group-mode imputation
-— python replays plus full oracle parity."""
+— python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -7,7 +10,7 @@ import math
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -17,17 +20,6 @@ def con():
     c = duck_con(SF)
     yield c
     c.close()
-
-
-def test_powerlaw_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5MM, TEXTOPS as TEXT5MM
-
-    assert_match(
-        TEXT5MM["degree_powerlaw"](spark, SF),
-        ORACLES5MM["degree_powerlaw"],
-        con,
-        "degree_powerlaw",
-    )
 
 
 def test_powerlaw_python_replay(spark, con):
@@ -60,17 +52,6 @@ def test_powerlaw_python_replay(spark, con):
     assert abs(r.sum_ln_cnt - round(sy, 6)) < 1e-9
     slope = (k * sxy - sx * sy) / (k * sxx - sx * sx)
     assert r.slope_micro == math.floor(1e6 * slope)
-
-
-def test_impute_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5MM, TEXTOPS as TEXT5MM
-
-    assert_match(
-        TEXT5MM["mode_impute"](spark, SF),
-        ORACLES5MM["mode_impute"],
-        con,
-        "mode_impute",
-    )
 
 
 def test_impute_python_replay(spark, con):

@@ -1,7 +1,10 @@
 """Round-5n operators: k-anonymity audit, A/B two-proportion z-test,
 Heaps-law vocabulary growth — kernel invariants (python risk replay,
 scipy-free z replay, first-occurrence growth replay) plus full oracle
-parity."""
+parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -24,20 +27,9 @@ def con():
 # ------------------------------------------------------------ k-anonymity
 
 
-def test_k_anonymity_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5N, TEXTOPS as TEXT5N
-
-    assert_match(
-        TEXT5N["k_anonymity_audit"](spark, SF),
-        ORACLES5N["k_anonymity_audit"],
-        con,
-        "k_anonymity_audit",
-    )
-
-
 def test_k_anonymity_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5N
-    from hand_index_spark.entry_queries_r5n import _KS
+    from hand_index_spark.queries.relational import _KS
 
     classes: dict = {}
     for lang, src, dec in con.sql(
@@ -74,7 +66,7 @@ def test_ab_ztest_oracle(spark, con):
 
 def test_ab_ztest_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5N
-    from hand_index_spark.entry_queries_r5n import _AB_VALUE_MIN
+    from hand_index_spark.queries.stats import _AB_VALUE_MIN
 
     conv: dict = {}
     for uid, et, v in con.sql(
@@ -101,23 +93,12 @@ def test_ab_ztest_python_replay(spark, con):
 # --------------------------------------------------------- vocab growth
 
 
-def test_vocab_growth_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5N, TEXTOPS as TEXT5N
-
-    assert_match(
-        TEXT5N["zipf_vocab_growth"](spark, SF),
-        ORACLES5N["zipf_vocab_growth"],
-        con,
-        "zipf_vocab_growth",
-    )
-
-
 def test_vocab_growth_python_replay(spark, con):
     """First-occurrence growth: vocab(k) = |{terms first seen in docs
     0..k-1}|; vocab and tokens are both monotone in k and the
     type/token ratio falls (Heaps sublinearity on this corpus)."""
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5N
-    from hand_index_spark.entry_queries_r5n import _GROWTH_KS
+    from hand_index_spark.queries.text import _GROWTH_KS
 
     first: dict = {}
     tokens_at: dict = {k: 0 for k in _GROWTH_KS}

@@ -1,5 +1,8 @@
 """Round-5nn operators: sweep-line max concurrency, SPRT barrier
-crossing — python replays plus full oracle parity."""
+crossing — python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -17,20 +20,9 @@ def con():
     c.close()
 
 
-def test_concurrency_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5NN, TEXTOPS as TEXT5NN
-
-    assert_match(
-        TEXT5NN["max_concurrency"](spark, SF),
-        ORACLES5NN["max_concurrency"],
-        con,
-        "max_concurrency",
-    )
-
-
 def test_concurrency_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5NN
-    from hand_index_spark.entry_queries_r5nn import _SESSION_US
+    from hand_index_spark.queries.timeseries import _SESSION_US
 
     sweeps: dict = {}
     for et, us, eid in con.sql(
@@ -72,7 +64,7 @@ def test_sprt_oracle(spark, con):
 
 def test_sprt_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5NN
-    from hand_index_spark.entry_queries_r5nn import _SPRT_DOWN, _SPRT_UP
+    from hand_index_spark.queries.stats import _SPRT_DOWN, _SPRT_UP
 
     walks: dict = {}
     for u, eid in con.sql(

@@ -1,5 +1,8 @@
 """Round-5o operators: event-bigram sequence mining, exact equi-width
-value histogram — python replays plus full oracle parity."""
+value histogram — python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -17,20 +20,9 @@ def con():
     c.close()
 
 
-def test_event_bigram_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5O, TEXTOPS as TEXT5O
-
-    assert_match(
-        TEXT5O["event_bigram_mining"](spark, SF),
-        ORACLES5O["event_bigram_mining"],
-        con,
-        "event_bigram_mining",
-    )
-
-
 def test_event_bigram_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5O
-    from hand_index_spark.entry_queries_r5o import _MINE_MIN_SUPPORT
+    from hand_index_spark.queries.timeseries import _MINE_MIN_SUPPORT
 
     seqs: dict = {}
     for uid, et in con.sql(
@@ -68,7 +60,7 @@ def test_value_histogram_conservation(spark, con):
     """Bin counts and sums must reconstruct the per-type totals, and
     every bin's min/max must stay inside the bin's bounds."""
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5O
-    from hand_index_spark.entry_queries_r5o import _HIST_W
+    from hand_index_spark.queries.stats import _HIST_W
 
     rows = TEXT5O["value_histogram"](spark, SF).collect()
     totals: dict = {}

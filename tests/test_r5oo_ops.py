@@ -1,5 +1,8 @@
 """Round-5oo operators: KMV distinct sketch, audience overlap —
-python replays plus full oracle parity."""
+python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -30,7 +33,7 @@ def test_kmv_oracle(spark, con):
 
 def test_kmv_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5OO
-    from hand_index_spark.entry_queries_r5oo import _KMV_K, _KMV_M
+    from hand_index_spark.queries.stats import _KMV_K, _KMV_M
 
     per_lang: dict = {}
     for lang, doc_id in con.sql(
@@ -61,20 +64,9 @@ def test_kmv_python_replay(spark, con):
     }
 
 
-def test_overlap_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5OO, TEXTOPS as TEXT5OO
-
-    assert_match(
-        TEXT5OO["audience_overlap"](spark, SF),
-        ORACLES5OO["audience_overlap"],
-        con,
-        "audience_overlap",
-    )
-
-
 def test_overlap_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5OO
-    from hand_index_spark.entry_queries_r5oo import _TYPES
+    from hand_index_spark.queries.relational import _TYPES
 
     audiences: dict = {t: set() for t in _TYPES}
     for u, et in con.sql(

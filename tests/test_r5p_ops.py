@@ -1,6 +1,9 @@
 """Round-5p operators: model-evaluation family — langid confusion
 matrix, bbox IoU report, calibration bins — python replays, metric
-identities, plus full oracle parity."""
+identities, plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -21,22 +24,11 @@ def con():
 # ------------------------------------------------------------ confusion
 
 
-def test_langid_confusion_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5P, TEXTOPS as TEXT5P
-
-    assert_match(
-        TEXT5P["langid_confusion"](spark, SF),
-        ORACLES5P["langid_confusion"],
-        con,
-        "langid_confusion",
-    )
-
-
 def test_langid_confusion_identities(spark, con):
     """Supports sum to the corpus size; tp <= min(support, pred_count);
     recall_ppm is exactly 1e6*tp//support; the matrix agrees with a
     python replay of the voting rule."""
-    from hand_index_spark.entry_queries import _EN, _ES
+    from hand_index_spark.queries.text import _EN, _ES
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5P
 
     truth: dict = {}
@@ -70,14 +62,6 @@ def test_langid_confusion_identities(spark, con):
 
 
 # ------------------------------------------------------------------ IoU
-
-
-def test_iou_eval_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5P, ORACLES as ORACLES5P
-
-    assert_match(
-        GEO5P["iou_eval"](spark, SF), ORACLES5P["iou_eval"], con, "iou_eval"
-    )
 
 
 def test_iou_eval_python_replay(spark, con):
@@ -125,7 +109,7 @@ def test_calibration_tracks_scores(spark):
     positive rate must increase with the bin and sit within 15 points
     of the bin's mean score (loose — 500 docs/10 bins is noisy)."""
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5P
-    from hand_index_spark.entry_queries_r5p import _CAL_BINS
+    from hand_index_spark.queries.stats import _CAL_BINS
 
     rows = sorted(
         TEXT5P["calibration_bins"](spark, SF).collect(), key=lambda r: r.bin

@@ -1,5 +1,8 @@
 """Round-5pp operators: spatial coverage gaps, mix-shift
-decomposition — python replays plus full oracle parity."""
+decomposition — python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -7,7 +10,7 @@ import math
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -19,20 +22,9 @@ def con():
     c.close()
 
 
-def test_gaps_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5PP, ORACLES as ORACLES5PP
-
-    assert_match(
-        GEO5PP["coverage_gaps"](spark, SF),
-        ORACLES5PP["coverage_gaps"],
-        con,
-        "coverage_gaps",
-    )
-
-
 def test_gaps_python_replay(spark, con):
     from hand_index_spark.entry_queries import GEO_QUERIES as GEO5PP
-    from hand_index_spark.entry_queries_r5pp import _GAP_CELL
+    from hand_index_spark.queries.geo import _GAP_CELL
 
     def tdiv(a, b):
         # Spark `div` and DuckDB `//` both truncate toward zero
@@ -62,17 +54,6 @@ def test_gaps_python_replay(spark, con):
         for dy in (-1, 0, 1):
             for dx in (-1, 0, 1):
                 assert (cy + dy, cx + dx) not in cells
-
-
-def test_mix_shift_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5PP, TEXTOPS as TEXT5PP
-
-    assert_match(
-        TEXT5PP["mix_shift"](spark, SF),
-        ORACLES5PP["mix_shift"],
-        con,
-        "mix_shift",
-    )
 
 
 def test_mix_shift_python_replay(spark, con):

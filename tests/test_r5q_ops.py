@@ -1,6 +1,9 @@
 """Round-5q operators: declarative data-quality checks, column entropy
 profiling — python replays, a seeded-violation test, plus full oracle
-parity."""
+parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -24,17 +27,6 @@ def con():
 # ------------------------------------------------------------- contracts
 
 
-def test_data_quality_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5Q, TEXTOPS as TEXT5Q
-
-    assert_match(
-        TEXT5Q["data_quality_checks"](spark, SF),
-        ORACLES5Q["data_quality_checks"],
-        con,
-        "data_quality_checks",
-    )
-
-
 def test_data_quality_clean_fixture_passes(spark):
     """The shipped TPC-H-ish data satisfies all five contracts."""
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5Q
@@ -47,7 +39,7 @@ def test_data_quality_clean_fixture_passes(spark):
 def test_data_quality_detects_seeded_violations(spark, tmp_path):
     """Break every contract in a copy of the tables; each check must
     count the exact number of seeded violations."""
-    from hand_index_spark.entry_queries_r5q import _q_data_quality_checks
+    from hand_index_spark.queries.relational import _q_data_quality_checks
 
     o = spark.read.parquet(f"{SF}/orders.parquet")
     c = spark.read.parquet(f"{SF}/customer.parquet")

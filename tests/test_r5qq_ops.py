@@ -1,5 +1,8 @@
 """Round-5qq operators: hexagonal binning, log2 latency histogram —
-python replays plus full oracle parity."""
+python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -17,20 +20,9 @@ def con():
     c.close()
 
 
-def test_hex_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5QQ, ORACLES as ORACLES5QQ
-
-    assert_match(
-        GEO5QQ["hex_bin"](spark, SF),
-        ORACLES5QQ["hex_bin"],
-        con,
-        "hex_bin",
-    )
-
-
 def test_hex_python_replay(spark, con):
     from hand_index_spark.entry_queries import GEO_QUERIES as GEO5QQ
-    from hand_index_spark.entry_queries_r5qq import _HEX_H, _HEX_W
+    from hand_index_spark.queries.geo import _HEX_H, _HEX_W
 
     def assign(x, y):
         best = None

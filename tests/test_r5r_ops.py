@@ -1,11 +1,14 @@
 """Round-5r operators: market-basket lift, concentration metrics —
-python replays and metric identities plus full oracle parity."""
+python replays and metric identities plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -15,15 +18,6 @@ def con():
     c = duck_con(SF)
     yield c
     c.close()
-
-
-def test_basket_lift_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5R, TEXTOPS as TEXT5R
-
-    assert_match(
-        TEXT5R["basket_lift"](spark, SF), ORACLES5R["basket_lift"], con,
-        "basket_lift",
-    )
 
 
 def test_basket_lift_python_replay(spark, con):
@@ -55,17 +49,6 @@ def test_basket_lift_python_replay(spark, con):
         assert r.lift_ppm == 1000000 * n * nb // (singles[r.a] * singles[r.b])
         # identity: confidence = lift * P(b)
         assert r.confidence_ppm <= 1000000
-
-
-def test_concentration_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5R, TEXTOPS as TEXT5R
-
-    assert_match(
-        TEXT5R["concentration_metrics"](spark, SF),
-        ORACLES5R["concentration_metrics"],
-        con,
-        "concentration_metrics",
-    )
 
 
 def test_concentration_python_replay(spark, con):

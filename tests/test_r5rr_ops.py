@@ -1,11 +1,14 @@
 """Round-5rr operators: KWIC concordance, feature hashing — python
-replays plus full oracle parity."""
+replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -17,20 +20,9 @@ def con():
     c.close()
 
 
-def test_kwic_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5RR, TEXTOPS as TEXT5RR
-
-    assert_match(
-        TEXT5RR["kwic_concordance"](spark, SF),
-        ORACLES5RR["kwic_concordance"],
-        con,
-        "kwic_concordance",
-    )
-
-
 def test_kwic_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5RR
-    from hand_index_spark.entry_queries_r5rr import _KWIC_CTX, _KWIC_TERM
+    from hand_index_spark.queries.text import _KWIC_CTX, _KWIC_TERM
 
     t, C, L = _KWIC_TERM, _KWIC_CTX, len(_KWIC_TERM)
     expect = {}
@@ -62,20 +54,9 @@ def test_kwic_python_replay(spark, con):
     assert all(h == t for (_, _, h, _) in rows.values())
 
 
-def test_feature_hashing_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5RR, TEXTOPS as TEXT5RR
-
-    assert_match(
-        TEXT5RR["feature_hashing"](spark, SF),
-        ORACLES5RR["feature_hashing"],
-        con,
-        "feature_hashing",
-    )
-
-
 def test_feature_hashing_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5RR
-    from hand_index_spark.entry_queries_r5rr import _FH_DIMS
+    from hand_index_spark.queries.text import _FH_DIMS
 
     def dim(tok):
         return (len(tok) * 31 + ord(tok[0]) * 7 + ord(tok[-1])) % _FH_DIMS

@@ -1,6 +1,9 @@
 """Round-5s operators: mergeable quantile sketch with carried error,
 time-to-convert survival metrics — python replays and the
-error-bounded-by-bin-width guarantee plus full oracle parity."""
+error-bounded-by-bin-width guarantee plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -32,7 +35,7 @@ def test_quantile_sketch_error_bound_and_replay(spark, con):
     nearest-rank quantile (the sketch's guarantee), and both sides
     replay exactly in python."""
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5S
-    from hand_index_spark.entry_queries_r5s import _QS_PCTS, _QS_W
+    from hand_index_spark.queries.stats import _QS_PCTS, _QS_W
 
     series: dict = {}
     for et, cents in con.sql(
@@ -63,15 +66,6 @@ def test_quantile_sketch_error_bound_and_replay(spark, con):
         assert r.est_cents == est
         assert r.err_cents == est - exact
         assert 0 < r.err_cents <= _QS_W  # the guarantee
-
-
-def test_time_to_convert_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5S, TEXTOPS as TEXT5S
-
-    assert_match(
-        TEXT5S["time_to_convert"](spark, SF), ORACLES5S["time_to_convert"],
-        con, "time_to_convert",
-    )
 
 
 def test_time_to_convert_python_replay(spark, con):

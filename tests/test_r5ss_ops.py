@@ -1,7 +1,10 @@
 """Round-5ss operators: GDPR forget-user, star revenue rollup —
 python replays plus full oracle parity. Also pins the icelite.delete
 column-order fix (the anti-join used to move the join key first,
-breaking positional exceptAll in changes())."""
+breaking positional exceptAll in changes()).
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -9,7 +12,7 @@ import math
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -21,20 +24,9 @@ def con():
     c.close()
 
 
-def test_gdpr_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5SS, ORACLES as ORACLES5SS
-
-    assert_match(
-        GEO5SS["gdpr_forget"](spark, SF),
-        ORACLES5SS["gdpr_forget"],
-        con,
-        "gdpr_forget",
-    )
-
-
 def test_gdpr_python_replay(spark, con):
     from hand_index_spark.entry_queries import GEO_QUERIES as GEO5SS
-    from hand_index_spark.entry_queries_r5ss import _FORGET_USER
+    from hand_index_spark.queries.storage import _FORGET_USER
 
     after: dict = {}
     n_victim = 0
@@ -81,17 +73,6 @@ def test_delete_preserves_column_order(spark, tmp_path):
     n42 = e.where(e.user_id == 42).count()
     assert counts.get("delete", 0) == n42
     assert counts.get("insert", 0) == 0
-
-
-def test_star_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5SS, TEXTOPS as TEXT5SS
-
-    assert_match(
-        TEXT5SS["star_revenue_rollup"](spark, SF),
-        ORACLES5SS["star_revenue_rollup"],
-        con,
-        "star_revenue_rollup",
-    )
 
 
 def test_star_python_replay(spark, con):

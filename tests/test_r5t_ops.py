@@ -1,5 +1,8 @@
 """Round-5t operators: Flesch readability, BPE tokenizer fertility —
-python replays plus full oracle parity."""
+python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -8,7 +11,7 @@ import re
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -18,17 +21,6 @@ def con():
     c = duck_con(SF)
     yield c
     c.close()
-
-
-def test_readability_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5T, TEXTOPS as TEXT5T
-
-    assert_match(
-        TEXT5T["readability_scores"](spark, SF),
-        ORACLES5T["readability_scores"],
-        con,
-        "readability_scores",
-    )
 
 
 def test_readability_python_replay(spark, con):
@@ -52,17 +44,6 @@ def test_readability_python_replay(spark, con):
     assert len(rows) == con.sql(
         "SELECT count(*) FROM documents WHERE length(text) >= 1"
     ).fetchone()[0]
-
-
-def test_fertility_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5T, TEXTOPS as TEXT5T
-
-    assert_match(
-        TEXT5T["tokenizer_fertility"](spark, SF),
-        ORACLES5T["tokenizer_fertility"],
-        con,
-        "tokenizer_fertility",
-    )
 
 
 def test_fertility_python_replay(spark, con):

@@ -1,5 +1,8 @@
 """Round-5tt operators: business-day arithmetic, dow x hour heatmap
-— python replays plus full oracle parity."""
+— python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -7,7 +10,7 @@ import datetime
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -43,17 +46,6 @@ def test_bdays_kernel():
             assert _bdays(a, b) == expect, (a, b)
 
 
-def test_business_days_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5TT, TEXTOPS as TEXT5TT
-
-    assert_match(
-        TEXT5TT["business_days"](spark, SF),
-        ORACLES5TT["business_days"],
-        con,
-        "business_days",
-    )
-
-
 def test_business_days_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5TT
 
@@ -83,17 +75,6 @@ def test_business_days_python_replay(spark, con):
         # 5/7 envelope: bdays never exceeds calendar days and is at
         # least floor(5/7) of them minus the weekend remainder slack
         assert r.max_business_days <= r.max_cal_days
-
-
-def test_heatmap_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5TT, TEXTOPS as TEXT5TT
-
-    assert_match(
-        TEXT5TT["dow_hour_heatmap"](spark, SF),
-        ORACLES5TT["dow_hour_heatmap"],
-        con,
-        "dow_hour_heatmap",
-    )
 
 
 def test_heatmap_python_replay(spark, con):

@@ -81,7 +81,7 @@ def test_benford_oracle(spark, con):
 
 def test_benford_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5U
-    from hand_index_spark.entry_queries_r5u import _BENFORD_PPM
+    from hand_index_spark.queries.stats import _BENFORD_PPM
 
     counts = [0] * 10
     total = 0

@@ -1,5 +1,8 @@
 """Round-5v operators: gaps-and-islands longest streak, chi-square
-independence grid — python replays plus full oracle parity."""
+independence grid — python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -17,17 +20,6 @@ def con():
     c = duck_con(SF)
     yield c
     c.close()
-
-
-def test_longest_streak_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5V, TEXTOPS as TEXT5V
-
-    assert_match(
-        TEXT5V["longest_streak"](spark, SF),
-        ORACLES5V["longest_streak"],
-        con,
-        "longest_streak",
-    )
 
 
 def test_longest_streak_python_replay(spark, con):

@@ -1,5 +1,8 @@
 """Round-5vv operators: CIDR longest-prefix match, ABC Pareto
-classification — python replays plus full oracle parity."""
+classification — python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -7,7 +10,7 @@ import math
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -19,20 +22,9 @@ def con():
     c.close()
 
 
-def test_cidr_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5VV, TEXTOPS as TEXT5VV
-
-    assert_match(
-        TEXT5VV["cidr_match"](spark, SF),
-        ORACLES5VV["cidr_match"],
-        con,
-        "cidr_match",
-    )
-
-
 def test_cidr_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5VV
-    from hand_index_spark.entry_queries_r5vv import _cidr_rows
+    from hand_index_spark.queries.relational import _cidr_rows
 
     blocks = _cidr_rows()
     agg: dict = {}
@@ -63,17 +55,6 @@ def test_cidr_python_replay(spark, con):
         shift = 32 - plen
         assert lo >> shift == net >> shift
         assert hi >> shift == net >> shift
-
-
-def test_abc_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5VV, TEXTOPS as TEXT5VV
-
-    assert_match(
-        TEXT5VV["abc_classification"](spark, SF),
-        ORACLES5VV["abc_classification"],
-        con,
-        "abc_classification",
-    )
 
 
 def test_abc_python_replay(spark, con):

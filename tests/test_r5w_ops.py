@@ -1,5 +1,8 @@
 """Round-5w operators: Kendall tau rank agreement, Holt double
-exponential smoothing — python replays plus full oracle parity."""
+exponential smoothing — python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -32,7 +35,7 @@ def test_kendall_tau_oracle(spark, con):
 
 def test_kendall_tau_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5W
-    from hand_index_spark.entry_queries_r5w import _TAU_K
+    from hand_index_spark.queries.stats import _TAU_K
 
     docs: dict = {}
     for lang, doc_id, text in con.sql(
@@ -64,17 +67,6 @@ def test_kendall_tau_python_replay(spark, con):
         tau = (conc - disc) / r.n_pairs
         assert r.tau_micro == math.floor(1e6 * tau)
         assert -1_000_000 <= r.tau_micro <= 1_000_000
-
-
-def test_holt_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5W, TEXTOPS as TEXT5W
-
-    assert_match(
-        TEXT5W["holt_forecast"](spark, SF),
-        ORACLES5W["holt_forecast"],
-        con,
-        "holt_forecast",
-    )
 
 
 def test_holt_python_replay(spark, con):

@@ -1,5 +1,8 @@
 """Round-5ww operators: spatiotemporal co-presence, quantile
-transform — python replays plus full oracle parity."""
+transform — python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -19,17 +22,6 @@ def con():
     c.close()
 
 
-def test_copresence_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5WW, ORACLES as ORACLES5WW
-
-    assert_match(
-        GEO5WW["copresence_pairs"](spark, SF),
-        ORACLES5WW["copresence_pairs"],
-        con,
-        "copresence_pairs",
-    )
-
-
 def _tdiv(a, b):
     """Truncating integer division — BOTH Spark's `div` and DuckDB's
     `//` truncate toward zero on negatives (python's // floors)."""
@@ -39,7 +31,7 @@ def _tdiv(a, b):
 
 def test_copresence_python_replay(spark, con):
     from hand_index_spark.entry_queries import GEO_QUERIES as GEO5WW
-    from hand_index_spark.entry_queries_r5ww import _CP_CELL
+    from hand_index_spark.queries.geo import _CP_CELL
 
     cells: dict = {}
     for u, eid, us in con.sql(

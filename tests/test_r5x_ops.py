@@ -1,5 +1,8 @@
 """Round-5x operators: DTW series similarity, z-score normalization —
-python replays plus full oracle parity."""
+python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -39,17 +42,6 @@ def _dtw(a, b):
             new.append(abs(av - b[j - 1]) + min(prev[j], new[j - 1], prev[j - 1]))
         prev = new
     return prev[len(b)]
-
-
-def test_dtw_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5X, TEXTOPS as TEXT5X
-
-    assert_match(
-        TEXT5X["dtw_distance"](spark, SF),
-        ORACLES5X["dtw_distance"],
-        con,
-        "dtw_distance",
-    )
 
 
 def test_dtw_python_replay(spark, con):

@@ -1,11 +1,14 @@
 """Round-5xx operators: route-corridor membership, new-vs-returning
-— python replays plus full oracle parity."""
+— python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -17,20 +20,9 @@ def con():
     c.close()
 
 
-def test_corridor_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5XX, ORACLES as ORACLES5XX
-
-    assert_match(
-        GEO5XX["corridor_membership"](spark, SF),
-        ORACLES5XX["corridor_membership"],
-        con,
-        "corridor_membership",
-    )
-
-
 def test_corridor_python_replay(spark, con):
     from hand_index_spark.entry_queries import GEO_QUERIES as GEO5XX
-    from hand_index_spark.entry_queries_r5xx import _COR_D2, _COR_M, _COR_MOD
+    from hand_index_spark.queries.geo import _COR_D2, _COR_M, _COR_MOD
 
     segs = []
     for k in range(1, _COR_M):
@@ -72,17 +64,6 @@ def test_corridor_python_replay(spark, con):
             assert f == (dist2 <= _COR_D2 + 1e-6), (d, ax, ay)
     assert any(r.in_corridor for r in rows.values())
     assert not all(r.in_corridor for r in rows.values())
-
-
-def test_nvr_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5XX, TEXTOPS as TEXT5XX
-
-    assert_match(
-        TEXT5XX["new_vs_returning"](spark, SF),
-        ORACLES5XX["new_vs_returning"],
-        con,
-        "new_vs_returning",
-    )
 
 
 def test_nvr_python_replay(spark, con):

@@ -1,11 +1,14 @@
 """Round-5y operators: areal interpolation, discrete Frechet distance
-— python replays plus full oracle parity."""
+— python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 TILE = 64
@@ -16,17 +19,6 @@ def con():
     c = duck_con(SF)
     yield c
     c.close()
-
-
-def test_areal_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5Y, ORACLES as ORACLES5Y
-
-    assert_match(
-        GEO5Y["areal_interpolate"](spark, SF),
-        ORACLES5Y["areal_interpolate"],
-        con,
-        "areal_interpolate",
-    )
 
 
 def test_areal_python_replay_and_conservation(spark, con):
@@ -82,20 +74,9 @@ def _frechet(a, b):
     return prev[len(b)]
 
 
-def test_frechet_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5Y, ORACLES as ORACLES5Y
-
-    assert_match(
-        GEO5Y["frechet_distance"](spark, SF),
-        ORACLES5Y["frechet_distance"],
-        con,
-        "frechet_distance",
-    )
-
-
 def test_frechet_python_replay(spark, con):
     from hand_index_spark.entry_queries import GEO_QUERIES as GEO5Y
-    from hand_index_spark.entry_queries_r5y import _FR_CAP, _FR_M
+    from hand_index_spark.queries.geo import _FR_CAP, _FR_M
 
     b = [((40000 + (j * 977) % 3000), ((j * 1409) % 4000 - 2000))
          for j in range(1, _FR_M + 1)]

@@ -1,5 +1,8 @@
 """Round-5yy operators: OHLC candles with VWAP, top movers — python
-replays plus full oracle parity."""
+replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -7,7 +10,7 @@ import math
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -17,17 +20,6 @@ def con():
     c = duck_con(SF)
     yield c
     c.close()
-
-
-def test_ohlc_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5YY, TEXTOPS as TEXT5YY
-
-    assert_match(
-        TEXT5YY["ohlc_candles"](spark, SF),
-        ORACLES5YY["ohlc_candles"],
-        con,
-        "ohlc_candles",
-    )
 
 
 def test_ohlc_python_replay(spark, con):
@@ -62,20 +54,9 @@ def test_ohlc_python_replay(spark, con):
         assert 1000 * r.low_c <= r.vwap_milli <= 1000 * r.high_c
 
 
-def test_movers_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5YY, TEXTOPS as TEXT5YY
-
-    assert_match(
-        TEXT5YY["top_movers"](spark, SF),
-        ORACLES5YY["top_movers"],
-        con,
-        "top_movers",
-    )
-
-
 def test_movers_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5YY
-    from hand_index_spark.entry_queries_r5yy import _MOVERS_K
+    from hand_index_spark.queries.timeseries import _MOVERS_K
 
     daily: dict = {}
     for et, us, v in con.sql(

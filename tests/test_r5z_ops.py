@@ -1,5 +1,8 @@
 """Round-5z operators: DAG topological layering, PSI distribution
-drift — python replays plus full oracle parity."""
+drift — python replays plus full oracle parity.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -19,20 +22,9 @@ def con():
     c.close()
 
 
-def test_toposort_oracle(spark, con):
-    from hand_index_spark.entry_queries import ORACLES as ORACLES5Z, TEXTOPS as TEXT5Z
-
-    assert_match(
-        TEXT5Z["toposort_layers"](spark, SF),
-        ORACLES5Z["toposort_layers"],
-        con,
-        "toposort_layers",
-    )
-
-
 def test_toposort_python_replay(spark, con):
     from hand_index_spark.entry_queries import TEXTOPS as TEXT5Z
-    from hand_index_spark.entry_queries_r5z import _TOPO_LEVELS
+    from hand_index_spark.queries.graph import _TOPO_LEVELS
 
     L = _TOPO_LEVELS
     n = con.sql("SELECT count(*) FROM documents").fetchone()[0]

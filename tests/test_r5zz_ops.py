@@ -1,5 +1,8 @@
 """Round-5zz operators (session closer): assignment-path parity,
-method share — oracle parity plus the parity invariant itself."""
+method share — oracle parity plus the parity invariant itself.
+
+Plain oracle parity of each query is
+tests/test_driver_contract.py::test_query_vs_oracle."""
 
 from __future__ import annotations
 
@@ -7,7 +10,7 @@ import math
 
 import pytest
 
-from tests.compare_util import assert_match, duck_con
+from tests.compare_util import duck_con
 
 SF = "/root/testdata/sf0.01"
 
@@ -17,17 +20,6 @@ def con():
     c = duck_con(SF)
     yield c
     c.close()
-
-
-def test_parity_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5ZZ, ORACLES as ORACLES5ZZ
-
-    assert_match(
-        GEO5ZZ["assign_path_parity"](spark, SF),
-        ORACLES5ZZ["assign_path_parity"],
-        con,
-        "assign_path_parity",
-    )
 
 
 def test_parity_invariant(spark, con):
@@ -41,17 +33,6 @@ def test_parity_invariant(spark, con):
     assert all(r.n_matching == r.n_pages for r in rows)
     n_docs = con.sql("SELECT count(*) FROM documents").fetchone()[0]
     assert sum(r.n_pages for r in rows) == n_docs
-
-
-def test_method_share_oracle(spark, con):
-    from hand_index_spark.entry_queries import GEO_QUERIES as GEO5ZZ, ORACLES as ORACLES5ZZ
-
-    assert_match(
-        GEO5ZZ["method_share"](spark, SF),
-        ORACLES5ZZ["method_share"],
-        con,
-        "method_share",
-    )
 
 
 def test_method_share_properties(spark, con):

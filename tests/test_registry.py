@@ -1,6 +1,7 @@
-"""The one query registry: every query registered once, the driver order
-and the 304 oracle strings pinned byte for byte, and neither depends on
-which registry module a process happens to import first."""
+"""The one query registry: every query registered once and listed once in
+registry.ORDER, the driver order and the 304 oracle strings pinned byte
+for byte, and neither depends on which query module a process happens to
+import first."""
 
 from __future__ import annotations
 
@@ -42,10 +43,14 @@ def test_oracle_strings_pinned():
     assert hashlib.sha256(items.encode()).hexdigest() == ORACLES_SHA256
 
 
-def test_order_independent_of_import_order():
-    """Tests import private helpers straight from round modules; a module
+@pytest.mark.parametrize(
+    "first", ["hand_index_spark.entry_queries_r5d", "hand_index_spark.queries.text"],
+    ids=lambda m: m.rsplit(".", 1)[1],
+)
+def test_order_independent_of_import_order(first):
+    """Tests import private helpers straight from query modules; a module
     imported before the entry point must not move up the driver order."""
-    code = "import hand_index_spark.entry_queries_r5d\n" + _DIGESTS
+    code = f"import {first}\n" + _DIGESTS
     out = subprocess.run(
         [sys.executable, "-c", code],
         cwd=Path(__file__).resolve().parents[1],
@@ -54,10 +59,23 @@ def test_order_independent_of_import_order():
     assert out == [QUERIES_SHA256, ORACLES_SHA256]
 
 
-def test_duplicate_name_raises():
-    def _q(spark, sf_dir):
-        return None
+def _q(spark, sf_dir):
+    return None
 
+
+def test_unlisted_registration_raises(monkeypatch):
+    monkeypatch.setattr(registry, "_QUERIES", dict(registry._QUERIES))
+    with pytest.raises(ValueError, match="not_in_order"):
+        registry.register(registry.GEO, "not_in_order", _q, "SELECT 1")
+
+
+def test_listed_but_unregistered_raises(monkeypatch):
+    monkeypatch.setattr(registry, "ORDER", registry.ORDER + ("never_registered",))
+    with pytest.raises(ValueError, match="never_registered"):
+        registry.ordered()
+
+
+def test_duplicate_name_raises():
     with pytest.raises(ValueError, match="tile_assign"):
         registry.register(registry.GEO, "tile_assign", _q, "SELECT 1")
     assert GEO_QUERIES["tile_assign"] is not _q

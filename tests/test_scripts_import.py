@@ -1,7 +1,8 @@
-"""The tools in scripts/ are run by hand, not by the suite, so a rename
-in the package would break them silently. Compile each one and resolve
-every ``hand_index_spark`` name it imports, at module level or inside
-a function, without starting Spark."""
+"""The tools in scripts/ and the bench tools bench.py and bench_extra.py
+are run by hand, not by the suite, so a rename in the package would
+break them silently. Compile each one and resolve every
+``hand_index_spark`` name it imports, at module level or inside a
+function, without starting Spark."""
 
 from __future__ import annotations
 
@@ -13,7 +14,8 @@ from pathlib import Path
 
 import pytest
 
-SCRIPTS = sorted((Path(__file__).resolve().parents[1] / "scripts").glob("*.py"))
+ROOT = Path(__file__).resolve().parents[1]
+SCRIPTS = sorted((ROOT / "scripts").glob("*.py")) + [ROOT / "bench.py", ROOT / "bench_extra.py"]
 
 
 def package_imports(path: Path) -> list[tuple[str, str | None]]:
